@@ -11,8 +11,9 @@ import org.apache.spark.sql.graft.Bridge
 /** Lowers a [[GraftTable]] V2 relation onto the catalog's NATIVE read
   * plan — the plan `BranchCatalog.scanSnapshot` builds (tiered manifest
   * planning, footer-stats + hidden-partition pruning, MOR tombstone
-  * anti-joins, then a plain parquet [[org.apache.spark.sql.DataFrame]]
-  * scan) — so `spark.sql("SELECT ... FROM lake.main.t WHERE ...")` runs
+  * anti-joins, then a `LogicalRelation(HadoopFsRelation)` parquet scan
+  * whose file index is the planned list itself, served from manifest
+  * data, so splicing a plan never lists files or runs a listing job) — so `spark.sql("SELECT ... FROM lake.main.t WHERE ...")` runs
   * the SAME physical plan as the Scala API: vectorized parquet +
   * whole-stage codegen, with the query's own predicates reaching the
   * manifest pruner. Without this rule the table still reads correctly

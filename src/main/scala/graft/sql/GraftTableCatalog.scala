@@ -792,7 +792,9 @@ case class GraftTable(
 
   /** The catalog's native scan of this pinned snapshot: tiered manifest
     * planning + footer-stats pruning on `filter`, MOR tombstone
-    * anti-joins, then a plain vectorized parquet scan. */
+    * anti-joins, then a vectorized parquet scan of the planned files
+    * served from manifest data ([[graft.wap.ManifestFileIndex]] — Spark
+    * does not list them). */
   def scanDF(spark: SparkSession, filter: Option[Column]): DataFrame =
     new BranchCatalog(spark, root).scanSnapshot(tableName, snapshotId, filter)
 

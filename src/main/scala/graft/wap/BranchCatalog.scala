@@ -928,18 +928,48 @@ class BranchCatalog(
     else
       spark.read.schema(manifestEntrySchema).json(paths: _*)
 
-  /** All data files of a snapshot. Manifests are independent files, so
-    * a many-commit table reads them concurrently (remote-store latency,
-    * not bandwidth, dominates metadata reads). */
+  /** All data files of a snapshot, in manifest order. Manifests are
+    * independent files, so a many-commit table reads them concurrently
+    * on [[BranchCatalog.metaIo]] (remote-store latency, not bandwidth,
+    * dominates metadata reads). */
   def filesOf(snap: Snapshot): Seq[DataFileMeta] =
     if (snap.manifests.size <= 4) snap.manifests.flatMap(m => readManifest(m.path))
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = snap.manifests.map(m => Future(readManifest(m.path)))
-      Await.result(Future.sequence(fs), 120.seconds).flatten
+    else BranchCatalog.metaIo(snap.manifests)(m => readManifest(m.path)).flatten
+
+  /** The one read of catalog-planned parquet files: a [[org.apache.spark
+    * .sql.execution.datasources.HadoopFsRelation]] over a
+    * [[ManifestFileIndex]] of `files` (path, manifest byte length), so
+    * Spark neither lists nor stats them — no driver status calls and no
+    * parallel-listing job above 32 paths. Each path is re-qualified
+    * against its own filesystem from its bare path, which is the form the
+    * filesystem's listing returns (`file:///…` on local disk), so
+    * `_metadata.file_path`, `input_file_name()` and `inputFiles` stay
+    * byte-identical to a `spark.read.parquet(paths)` read. A length
+    * of 0 (pre-r8 entries) falls back to one status call for that file,
+    * so the relation's size — what broadcast and AQE decisions read — is
+    * never understated. */
+  private[graft] def readFiles(schema: StructType, files: Seq[(String, Long)]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val located = files.map { case (p, len) =>
+      val path = new Path(p)
+      val pfs = path.getFileSystem(conf)
+      val q = Path.getPathWithoutSchemeAndAuthority(path)
+        .makeQualified(pfs.getUri, pfs.getWorkingDirectory)
+      (q, if (len > 0L) len else pfs.getFileStatus(q).getLen)
     }
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        ManifestFileIndex(located), partitionSchema = new StructType(),
+        dataSchema = org.apache.spark.sql.graft.Bridge.asNullable(schema)
+          .asInstanceOf[StructType],
+        bucketSpec = None,
+        fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        options = Map.empty)(spark))
+  }
+
+  /** (path, byte length) of manifest entries — [[readFiles]]' input. */
+  private def sized(files: Seq[DataFileMeta]): Seq[(String, Long)] =
+    files.map(f => f.path -> f.bytes)
 
   /** Write a DataFrame batch as immutable parquet files; return their
     * metadata — row counts AND per-column min/max/null stats, all read
@@ -959,12 +989,7 @@ class BranchCatalog(
     * is preserved. */
   private def footerMetas(sts: Seq[org.apache.hadoop.fs.FileStatus]): Seq[DataFileMeta] =
     if (sts.length <= 1) sts.map(footerMeta)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.sequence(sts.map(st => Future(footerMeta(st)))), 120.seconds)
-    }
+    else BranchCatalog.metaIo(sts)(footerMeta)
 
   /** Hidden-partitioned write: ONE job writes the batch hash-grouped into
     * nested `__pv<i>=<value>` subdirectories, one level per transform
@@ -1852,9 +1877,8 @@ class BranchCatalog(
     // ---- CHECK constraints: the one step that must read data ----
     if (tableProperties(table, branch).keys
         .exists(_.startsWith(BranchCatalog.ConstraintPrefix))) {
-      val df = spark.read
-        .schema(BranchCatalog.readSchema(schema, cur.evo.copy(idlessFiles = true)))
-        .parquet(paths: _*)
+      val df = readFiles(
+        BranchCatalog.readSchema(schema, cur.evo.copy(idlessFiles = true)), sized(metas0))
       // the same fused guard every write path uses: any violating row
       // raises with the constraint name BEFORE anything commits
       constraintGuard(df, table, branch).count()
@@ -2150,8 +2174,10 @@ class BranchCatalog(
     * columnar reader exactly as the reference's
     * `scan(row_filter=..., selected_fields=...)`. When `filter` is given,
     * files whose footer min/max stats prove the predicate false are
-    * pruned BEFORE Spark lists them (manifest-level pruning), and the
-    * filter is also applied row-level for exactness. */
+    * pruned from the plan (manifest-level pruning), and the filter is
+    * also applied row-level for exactness. Spark never lists the planned
+    * files: [[readFiles]] hands them over with their manifest sizes, so
+    * building the scan runs no Spark job. */
   def scan(table: String, branch: String = "main", filter: Option[Column] = None): DataFrame = {
     val refs = currentRefs()
     val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
@@ -2165,49 +2191,46 @@ class BranchCatalog(
     * from the manifest refs): beyond [[distributedMetaThreshold]] files,
     * manifests are read and stats-pruned as a SPARK JOB
     * ([[manifestEntries]] + [[mayMatchCol]]) and only the surviving
-    * paths return to the driver; below it, the driver path avoids the
-    * job-launch latency. Either way the driver never materializes
-    * per-file stats for a large table. */
+    * (path, bytes) pairs return to the driver; below it, the driver path
+    * avoids the job-launch latency. Either way the driver never
+    * materializes per-file stats for a large table, and the planned files
+    * reach Spark through [[readFiles]], never through a listing. */
   def scanSnapshot(table: String, snapshotId: String, filter: Option[Column] = None): DataFrame = {
     val snap = loadSnapshot(table, snapshotId)
     if (snap.deleteManifests.isEmpty) scanPlain(snap, filter)
     else scanWithDeletes(table, snap, filter)
   }
 
-  /** The tombstone-free scan path (see [[scanSnapshot]] for the tiering).
-    * `withLineage` attaches each row's physical position
-    * (`_metadata.file_path` / `_metadata.row_index` as the
+  /** The tombstone-free scan path (see [[scanSnapshot]] for the tiering):
+    * the planned files read through [[readFiles]]. `withLineage` attaches
+    * each row's physical position (`_metadata.file_path` /
+    * `_metadata.row_index` as the
     * [[BranchCatalog.PosPathCol]]/[[BranchCatalog.PosIdxCol]] columns) —
     * the probe side of position-delete application. */
   private def scanPlain(
       snap: Snapshot, filter: Option[Column], withLineage: Boolean = false): DataFrame = {
     val schema = StructType.fromDDL(snap.schemaDdl)
     val totalFiles = snap.manifests.map(_.fileCount).sum
-    val paths: Seq[String] =
+    val files: Seq[(String, Long)] =
       if (totalFiles > distributedMetaThreshold) {
         distributedPrunedPaths(snap, filter, schema)
-      } else {
-        val files = filter match {
-          case Some(cond) =>
-            val kept = manifestsFor(snap, filter, schema)
-            pruneFiles(filesOf(snap.copy(manifests = kept)), cond, schema,
-              specsOf(snap.partitionSpec),
-              Some(new BloomProbe(kept)))
-          case None => filesOf(snap)
-        }
-        files.map(_.path)
-      }
+      } else sized(filter match {
+        case Some(cond) =>
+          val kept = manifestsFor(snap, filter, schema)
+          pruneFiles(filesOf(snap.copy(manifests = kept)), cond, schema,
+            specsOf(snap.partitionSpec),
+            Some(new BloomProbe(kept)))
+        case None => filesOf(snap)
+      })
     val lineageSchema =
       if (!withLineage) schema
       else StructType(schema.fields ++ BranchCatalog.posDeleteSchema.fields)
     val df =
-      if (paths.isEmpty)
+      if (files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], lineageSchema)
       else {
-        val raw = spark.read
-          .schema(BranchCatalog.readSchema(schema, snap.evo))
-          .parquet(paths: _*)
+        val raw = readFiles(BranchCatalog.readSchema(schema, snap.evo), files)
         if (!withLineage) raw
         else raw.select(org.apache.spark.sql.functions.col("*"),
           org.apache.spark.sql.functions.col("_metadata.file_path")
@@ -2321,17 +2344,17 @@ class BranchCatalog(
       s"$table has pending equality tombstones — lineage scans need " +
         "materialized rows (compactDataFiles first)")
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val paths = filesOf(snap.copy(deleteManifests = Nil)).map(_.path)
+    val files = filesOf(snap.copy(deleteManifests = Nil))
     val readSchema = StructType(
       BranchCatalog.readSchema(schema, snap.evo).fields ++ Seq(
         org.apache.spark.sql.types.StructField(BranchCatalog.RowIdCol, LongType),
         org.apache.spark.sql.types.StructField(BranchCatalog.LastSeqCol, LongType)))
-    if (paths.isEmpty)
+    if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(schema.fields ++ Seq(
           org.apache.spark.sql.types.StructField("_row_id", LongType),
           org.apache.spark.sql.types.StructField("_last_updated_seq", LongType))))
-    val raw = spark.read.schema(readSchema).parquet(paths: _*)
+    val raw = readFiles(readSchema, sized(files))
       .select(col("*"),
         barePath(col("_metadata.file_path")).as("__lin_path"),
         col("_metadata.row_index").as("__lin_idx"))
@@ -2340,8 +2363,7 @@ class BranchCatalog(
       if (posDels.isEmpty) raw
       else {
         val sidecars = posDels.flatMap(m => readManifest(m.path))
-        val pd = spark.read.schema(BranchCatalog.posDeleteSchema)
-          .parquet(sidecars.map(_.path): _*)
+        val pd = readFiles(BranchCatalog.posDeleteSchema, sized(sidecars))
           .select(barePath(col(BranchCatalog.PosPathCol)).as("__lin_path"),
             col(BranchCatalog.PosIdxCol).as("__lin_idx"))
         raw.join(pd, Seq("__lin_path", "__lin_idx"), "left_anti")
@@ -2478,13 +2500,12 @@ class BranchCatalog(
       require(cur.deleteManifests.forall(_.posDelete),
         s"$table has pending equality tombstones with row lineage on — unreachable")
       val schema = StructType.fromDDL(cur.schemaDdl)
-      val paths = filesOf(cur.copy(deleteManifests = Nil)).map(_.path)
-      if (paths.isEmpty)
+      val files = filesOf(cur.copy(deleteManifests = Nil))
+      if (files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           lineageReadSchema(schema, cur))
       else {
-        val raw = spark.read.schema(lineageReadSchema(schema, cur))
-          .parquet(paths: _*)
+        val raw = readFiles(lineageReadSchema(schema, cur), sized(files))
           .select(col("*"),
             col("_metadata.file_path").as(BranchCatalog.PosPathCol),
             col("_metadata.row_index").as(BranchCatalog.PosIdxCol))
@@ -2505,8 +2526,7 @@ class BranchCatalog(
           if (posDels.isEmpty) dec
           else {
             val sidecars = posDels.flatMap(m => readManifest(m.path))
-            val pd = spark.read.schema(BranchCatalog.posDeleteSchema)
-              .parquet(sidecars.map(_.path): _*).alias("__pd")
+            val pd = readFiles(BranchCatalog.posDeleteSchema, sized(sidecars)).alias("__pd")
             dec.alias("__dt").join(pd,
               col(s"__dt.${BranchCatalog.PosPathCol}") === col(s"__pd.${BranchCatalog.PosPathCol}") &&
                 col(s"__dt.${BranchCatalog.PosIdxCol}") === col(s"__pd.${BranchCatalog.PosIdxCol}"),
@@ -2603,8 +2623,7 @@ class BranchCatalog(
       if (posDels.isEmpty) afterEq
       else {
         val posFiles = posDels.flatMap(m => readManifest(m.path))
-        val pd = spark.read.schema(BranchCatalog.posDeleteSchema)
-          .parquet(posFiles.map(_.path): _*)
+        val pd = readFiles(BranchCatalog.posDeleteSchema, sized(posFiles))
         afterEq.join(pd,
             Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
           .drop(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
@@ -3267,16 +3286,12 @@ class BranchCatalog(
   }
 
   /** The distributed planning path: manifest entries read + stats-pruned
-    * by executors; only surviving paths come back. */
+    * by executors; only the surviving (path, bytes) pairs come back. */
   private[wap] def distributedPrunedPaths(
-      snap: Snapshot, filter: Option[Column], schema: StructType): Seq[String] =
-    distributedPrunedFiles(snap, filter, schema).map(_._1)
-
-  private def distributedPrunedFiles(
       snap: Snapshot, filter: Option[Column], schema: StructType): Seq[(String, Long)] =
     distributedPrunedFilesPv(snap, filter, schema).map(f => (f._1, f._2))
 
-  /** As [[distributedPrunedFiles]], also carrying each file's hidden-
+  /** As [[distributedPrunedPaths]], also carrying each file's hidden-
     * partition transform value (None for unpartitioned files) — the
     * storage-partitioned-join planner groups on it. */
   private def distributedPrunedFilesPv(
@@ -3433,7 +3448,7 @@ class BranchCatalog(
         val sub = snap.copy(manifests = ms, deleteManifests = Nil)
         val dataFiles: Seq[(String, Long)] =
           if (ms.map(_.fileCount).sum > distributedMetaThreshold)
-            distributedPrunedFiles(sub, cond, schema)
+            distributedPrunedPaths(sub, cond, schema)
           else {
             val fs = cond match {
               case Some(c) =>
@@ -4026,8 +4041,7 @@ class BranchCatalog(
         val fresh: Map[String, Map[String, String]] =
           if (files.isEmpty) missing.map(_ -> Map.empty[String, String]).toMap
           else {
-            val df = spark.read.schema(BranchCatalog.readSchema(schema, snap.evo))
-              .parquet(files.map(_.path): _*)
+            val df = readFiles(BranchCatalog.readSchema(schema, snap.evo), sized(files))
               .select(col("_metadata.file_path").as("__p") +:
                 missing.map(c => col(c).cast("long").as(c)): _*)
             val rows = df.groupBy(col("__p"))
@@ -4126,9 +4140,7 @@ class BranchCatalog(
         val utcString = org.apache.spark.sql.graft.Bridge.column(
           Cast(org.apache.spark.sql.graft.Bridge.expression(col(column)),
             StringType, Some("UTC")))
-        val partials = spark.read
-          .schema(BranchCatalog.readSchema(schema, snap.evo))
-          .parquet(files.map(_.path): _*)
+        val partials = readFiles(BranchCatalog.readSchema(schema, snap.evo), sized(files))
           .select(input_file_name().as("f"), utcString.as("v"))
           .as[(String, String)]
           .mapPartitions { it =>
@@ -4242,9 +4254,7 @@ class BranchCatalog(
       } else {
         computed += 1
         val files = readManifest(m.path)
-        val df = spark.read
-          .schema(BranchCatalog.readSchema(schema, snap.evo))
-          .parquet(files.map(_.path): _*)
+        val df = readFiles(BranchCatalog.readSchema(schema, snap.evo), sized(files))
         val row = df.agg(
           hll_sketch_agg(col(cols.head).cast("string")).as(cols.head),
           cols.tail.map(c => hll_sketch_agg(col(c).cast("string")).as(c)): _*).head
@@ -4952,7 +4962,7 @@ class BranchCatalog(
     val files = delta.flatMap(m => readManifest(m.path))
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(BranchCatalog.readSchema(schema, head.evo)).parquet(files.map(_.path): _*)
+    else readFiles(BranchCatalog.readSchema(schema, head.evo), sized(files))
   }
 
   /** Incremental read between two snapshots (the Iceberg
@@ -5045,8 +5055,7 @@ class BranchCatalog(
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(schema.fields :+
             org.apache.spark.sql.types.StructField("__w", org.apache.spark.sql.types.IntegerType)))
-      else spark.read.schema(BranchCatalog.readSchema(schema, to.evo))
-        .parquet(fs.map(_.path): _*)
+      else readFiles(BranchCatalog.readSchema(schema, to.evo), sized(fs))
         .select(cols.map(col) :+ lit(w).as("__w"): _*)
     val diff = side(removed, -1).unionByName(side(added, 1))
       .groupBy(cols.map(col): _*).agg(fsum(col("__w")).as("__d"))
@@ -5088,18 +5097,20 @@ class BranchCatalog(
         "field ids — rows cannot be compared across the change")
     val schema = StructType.fromDDL(to.schemaDdl)
     val cols = schema.fieldNames.toSeq
-    val fromPaths = filesOf(from).map(_.path)
-    val toPaths = filesOf(to).map(_.path)
-    val removed = fromPaths.filterNot(toPaths.toSet)
-    val added = toPaths.filterNot(fromPaths.toSet)
-    def decoded(paths: Seq[String], snap: Snapshot, tag: String): DataFrame = {
+    val fromFiles = filesOf(from)
+    val toFiles = filesOf(to)
+    val fromPaths = fromFiles.map(_.path).toSet
+    val toPaths = toFiles.map(_.path).toSet
+    val removed = fromFiles.filterNot(f => toPaths(f.path))
+    val added = toFiles.filterNot(f => fromPaths(f.path))
+    def decoded(files: Seq[DataFileMeta], snap: Snapshot, tag: String): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, coalesce}
       val readSchema = lineageReadSchema(schema, snap)
-      if (paths.isEmpty)
+      if (files.isEmpty)
         return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(schema.fields.map(f => f.copy(name = s"$tag${f.name}")) :+
             StructField(s"${tag}id", LongType)))
-      spark.read.schema(readSchema).parquet(paths: _*)
+      readFiles(readSchema, sized(files))
         .select(col("*"),
           barePath(col("_metadata.file_path")).as("__lin_path"),
           col("_metadata.row_index").as("__lin_idx"))
@@ -5168,7 +5179,7 @@ class BranchCatalog(
       .filterNot(f => fromFiles.contains(f.path))
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(BranchCatalog.readSchema(schema, to.evo)).parquet(files.map(_.path): _*)
+    else readFiles(BranchCatalog.readSchema(schema, to.evo), sized(files))
   }
 
   /** Time travel by TIMESTAMP (Iceberg `TIMESTAMP AS OF`): scan the last
@@ -5507,8 +5518,7 @@ class BranchCatalog(
       else {
         // W73: survivors carry their row ids into the rewrite output
         // (delete never updates a surviving row, so last_seq carries too)
-        val raw = spark.read.schema(lineageReadSchema(schema, cur))
-          .parquet(rewriteFiles.map(_.path): _*)
+        val raw = readFiles(lineageReadSchema(schema, cur), sized(rewriteFiles))
         val survivors = withMaterializedLineage(raw,
           cur.copy(manifests = perManifest.collect {
             case (m, _, r, _) if r.nonEmpty => m }))
@@ -5621,7 +5631,7 @@ class BranchCatalog(
     val posFilesWritten: Seq[DataFileMeta] =
       if (markFiles.isEmpty) Nil
       else {
-        val marked = spark.read.schema(BranchCatalog.readSchema(schema, cur.evo)).parquet(markFiles.map(_.path): _*)
+        val marked = readFiles(BranchCatalog.readSchema(schema, cur.evo), sized(markFiles))
           .filter(coalesce(cond, lit(false)))
           .select(
             fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
@@ -5630,8 +5640,7 @@ class BranchCatalog(
         val fresh =
           if (priorFiles.isEmpty) marked
           else marked.join(
-            spark.read.schema(BranchCatalog.posDeleteSchema)
-              .parquet(priorFiles.map(_.path): _*),
+            readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles)),
             Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
         val written = writeDataFiles(table, fresh, Map.empty)
         val (live, empty) = written.partition(_.rows > 0)
@@ -5684,8 +5693,7 @@ class BranchCatalog(
           val droppedNorm = droppedFiles.map(f => new Path(f.path).toUri.getPath).toSet
           // per-path counts: bounded by the table's file count, same order
           // as the manifest lists the driver already holds
-          spark.read.schema(BranchCatalog.posDeleteSchema)
-            .parquet(priorFiles.map(_.path): _*)
+          readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles))
             .groupBy(fcol(BranchCatalog.PosPathCol)).count().collect()
             .filter(r => droppedNorm.contains(new Path(r.getString(0)).toUri.getPath))
             .map(_.getLong(1)).sum
@@ -5743,8 +5751,7 @@ class BranchCatalog(
     // positions, minus positions a prior pending sidecar already
     // suppressed (those versions are not current — their replacements,
     // if any, sit in later files this scan also covers)
-    val marked = spark.read.schema(lineageReadSchema(schema, cur))
-      .parquet(markFiles.map(_.path): _*)
+    val marked = readFiles(lineageReadSchema(schema, cur), sized(markFiles))
       .select(fcol("*"),
         fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
         fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
@@ -5753,8 +5760,7 @@ class BranchCatalog(
     val fresh =
       if (priorFiles.isEmpty) marked
       else marked.join(
-        spark.read.schema(BranchCatalog.posDeleteSchema)
-          .parquet(priorFiles.map(_.path): _*),
+        readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles)),
         Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
 
     val posFilesWritten = {
@@ -5850,8 +5856,7 @@ class BranchCatalog(
     if (affectedFiles.isEmpty)
       return UpdateResult(cur, 0L, 0L, totalFiles)
 
-    val scanRaw = spark.read.schema(lineageReadSchema(schema, cur))
-      .parquet(affectedFiles.map(_.path): _*)
+    val scanRaw = readFiles(lineageReadSchema(schema, cur), sized(affectedFiles))
     // W73: carried rows keep (row id, last seq); UPDATED rows keep their
     // id but get last_seq = NULL — the null inherits the NEW manifest's
     // sequence at read (the Iceberg v3 null-means-this-commit rule)
@@ -6063,8 +6068,7 @@ class BranchCatalog(
           // inserted rows are SOURCE rows — fresh ids (the Iceberg v3
           // MAY-reassign path for keyed replacement: the pairing is by
           // key, not row identity)
-          val scanRaw = spark.read.schema(lineageReadSchema(schema, cur))
-            .parquet(affectedFiles.map(_.path): _*)
+          val scanRaw = readFiles(lineageReadSchema(schema, cur), sized(affectedFiles))
           val scan = withMaterializedLineage(scanRaw,
             cur.copy(manifests = perManifest.collect {
               case (m, a, _) if a.nonEmpty => m }))
@@ -6268,8 +6272,7 @@ class BranchCatalog(
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             lineageReadSchema(schema, cur))
         else withMaterializedLineage(
-          spark.read.schema(lineageReadSchema(schema, cur))
-            .parquet(affectedFiles.map(_.path): _*),
+          readFiles(lineageReadSchema(schema, cur), sized(affectedFiles)),
           cur.copy(manifests = perManifest.collect {
             case (m, a, _) if a.nonEmpty => m }))
       val joined = targetScan
@@ -6366,9 +6369,7 @@ class BranchCatalog(
           if (bsFiles.isEmpty) (Seq.empty[DataFileMeta], 0L, 0L)
           else {
             val scan = withMaterializedLineage(
-              spark.read
-                .schema(lineageReadSchema(schema, cur))
-                .parquet(bsFiles.map(_.path): _*),
+              readFiles(lineageReadSchema(schema, cur), sized(bsFiles)),
               cur)
             val bsFires = bySource.map {
               case (MergeClause.NotMatchedBySourceUpdate(c, _), i) =>
@@ -6527,8 +6528,7 @@ class BranchCatalog(
               StructField(BranchCatalog.PosPathCol, StringType),
               StructField(BranchCatalog.PosIdxCol, LongType))))
         else {
-          val raw = spark.read.schema(lineageReadSchema(schema, cur))
-            .parquet(markFiles.map(_.path): _*)
+          val raw = readFiles(lineageReadSchema(schema, cur), sized(markFiles))
             .select(fcol("*"),
               fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
               fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
@@ -6546,8 +6546,7 @@ class BranchCatalog(
           val priorFiles = cur.deleteManifests.flatMap(d => readManifest(d.path))
           if (priorFiles.isEmpty) dec
           else dec.join(
-            spark.read.schema(BranchCatalog.posDeleteSchema)
-              .parquet(priorFiles.map(_.path): _*),
+            readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles)),
             Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
         }
 
@@ -7176,8 +7175,8 @@ class BranchCatalog(
     val newScFiles = newSidecarManifests.flatMap(m => readManifest(m.path))
       .sortBy(_.path)
     val newSc = newScFiles.map(f => plain(f.path))
-    val fromSc = from.deleteManifests.flatMap(m => readManifest(m.path))
-      .map(f => plain(f.path)).sorted
+    val fromScFiles = from.deleteManifests.flatMap(m => readManifest(m.path))
+    val fromSc = fromScFiles.map(f => plain(f.path)).sorted
     def canonS(p: String): String =
       p.replaceFirst("^[a-zA-Z0-9+.-]+:", "").replaceFirst("^/+", "/")
     // CARRIED files the new sidecars reference: rows deleted in-window
@@ -7190,8 +7189,7 @@ class BranchCatalog(
         val carried = toFiles.filter(f => fromPaths.contains(f.path))
         if (carried.isEmpty) Nil
         else {
-          val referenced = spark.read.schema(BranchCatalog.posDeleteSchema)
-            .parquet(newSc: _*)
+          val referenced = readFiles(BranchCatalog.posDeleteSchema, sized(newScFiles))
             .select(BranchCatalog.PosPathCol).distinct()
             .collect().map(r => canonS(r.getString(0))).toSet
           carried.filter(f => referenced.contains(canonS(plain(f.path)))).sortBy(_.path)
@@ -7218,17 +7216,15 @@ class BranchCatalog(
         s"WHERE ${if (exists) "EXISTS" else "NOT EXISTS"} ${scMatch(scPaths)}"
     /** Rows of `files` minus/inside the sidecar marks, counted in Spark
       * (the metadata row sums are no longer exact once sidecars apply). */
-    def countAgainst(files: Seq[DataFileMeta], scPaths: Seq[String],
+    def countAgainst(files: Seq[DataFileMeta], scFiles: Seq[DataFileMeta],
         keepMarked: Boolean): Long =
       if (files.isEmpty) 0L
       else {
         import org.apache.spark.sql.functions.{col => fcol}
-        val raw = spark.read.schema(StructType.fromDDL(to.schemaDdl))
-          .parquet(files.map(_.path): _*)
+        val raw = readFiles(StructType.fromDDL(to.schemaDdl), sized(files))
           .select(fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
             fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
-        val pd = spark.read.schema(BranchCatalog.posDeleteSchema)
-          .parquet(scPaths: _*)
+        val pd = readFiles(BranchCatalog.posDeleteSchema, sized(scFiles))
         raw.join(pd, Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
           if (keepMarked) "left_semi" else "left_anti").count()
       }
@@ -7265,12 +7261,12 @@ class BranchCatalog(
            else Seq(sidecarLeg("delete", carriedE, newSc, exists = true)))
         val nIns =
           if (newSc.isEmpty) insE.map(_.rows).sum
-          else countAgainst(inserts, newSc, keepMarked = false)
+          else countAgainst(inserts, newScFiles, keepMarked = false)
         val nDel =
           (if (fromSc.isEmpty) delE.map(_.rows).sum
-           else countAgainst(deletes, fromSc, keepMarked = false)) +
+           else countAgainst(deletes, fromScFiles, keepMarked = false)) +
             (if (carriedE.isEmpty) 0L
-             else countAgainst(carriedTargets, newSc, keepMarked = true))
+             else countAgainst(carriedTargets, newScFiles, keepMarked = true))
         (s"CREATE OR REPLACE VIEW ${table}_changes_export AS\n" +
           legs.mkString("\nUNION ALL\n") + ";\n",
           None, nIns, nDel)
@@ -7411,14 +7407,13 @@ class BranchCatalog(
         val fileSchema = spark.read.parquet(delFiles.map(_.path): _*).schema
         val keyCols = if (d.keyCols.nonEmpty) d.keyCols else fileSchema.fieldNames.toSeq
         val dataFiles = filesOf(cur.copy(manifests = covered, deleteManifests = Nil))
-        val data = spark.read.schema(BranchCatalog.readSchema(schema, cur.evo))
-          .parquet(dataFiles.map(_.path): _*)
+        val data = readFiles(BranchCatalog.readSchema(schema, cur.evo), sized(dataFiles))
           .select(keyCols.map(fcol) ++ Seq(
             fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
             fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol)): _*)
         // key files keep their WRITE-time types; cast to the table's
         // declared types so a widening evolution still matches
-        val keys = spark.read.schema(fileSchema).parquet(delFiles.map(_.path): _*)
+        val keys = readFiles(fileSchema, sized(delFiles))
           .select(keyCols.map(c => fcol(c).cast(schema(c).dataType).as(c)): _*)
           .distinct()
         Some(data.join(keys, keyCols)
@@ -7446,7 +7441,7 @@ class BranchCatalog(
     val fresh =
       if (priorPos.isEmpty) marked
       else marked.join(
-        spark.read.schema(BranchCatalog.posDeleteSchema).parquet(priorPos.map(_.path): _*),
+        readFiles(BranchCatalog.posDeleteSchema, sized(priorPos)),
         Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
     val posFiles = {
       val written = writeDataFiles(table, fresh, Map.empty)
@@ -7499,7 +7494,7 @@ class BranchCatalog(
       s"$table@$branch has pending EQUALITY tombstones — CALL " +
         "convert_equality_deletes first (position sidecars fold, equality keys do not)")
     if (cur.deleteManifests.isEmpty) return cur
-    val sidecarPaths = cur.deleteManifests.flatMap(m => readManifest(m.path)).map(_.path)
+    val sidecars = cur.deleteManifests.flatMap(m => readManifest(m.path))
     import spark.implicits._
     // live-path side stays a distributed manifest-entry frame above the
     // threshold; sidecar paths come from _metadata.file_path (URI form)
@@ -7510,8 +7505,7 @@ class BranchCatalog(
         manifestEntries(cur).select(fcol("path"))
       else filesOf(cur).map(_.path).toDF("path"))
         .select(barePath(fcol("path")).as("__live"))
-    val folded = spark.read.schema(BranchCatalog.posDeleteSchema)
-      .parquet(sidecarPaths: _*)
+    val folded = readFiles(BranchCatalog.posDeleteSchema, sized(sidecars))
       .dropDuplicates(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
       .join(liveDf,
         barePath(fcol(BranchCatalog.PosPathCol)) === fcol("__live"), "left_semi")
@@ -7607,8 +7601,7 @@ class BranchCatalog(
     if (affectedFiles.size <= 1) return cur // nothing to fold
 
     val compactInput = withMaterializedLineage(
-      spark.read.schema(lineageReadSchema(schema, cur))
-        .parquet(affectedFiles.map(_.path): _*),
+      readFiles(lineageReadSchema(schema, cur), sized(affectedFiles)),
       cur.copy(manifests = perManifest.collect { case (m, a, _) if a.nonEmpty => m }))
     val rewritten = writeTableFiles(table,
       compactInput.repartition(targetFiles), spec, ids = cur.evo.fieldIds)
@@ -7692,8 +7685,7 @@ class BranchCatalog(
     // means "stop when the fold no longer reduces the file count"
     if (smallFiles.size <= outFiles) return None
     val packInput = withMaterializedLineage(
-      spark.read.schema(lineageReadSchema(schema, cur))
-        .parquet(smallFiles.map(_.path): _*),
+      readFiles(lineageReadSchema(schema, cur), sized(smallFiles)),
       cur.copy(manifests = perManifest.collect { case (m, sm, _) if sm.nonEmpty => m }))
     val rewritten = writeTableFiles(table,
       packInput.repartition(outFiles), spec, ids = cur.evo.fieldIds)
@@ -8345,6 +8337,35 @@ object BranchCatalog {
   /** StructField metadata key Spark's parquet writer/reader use for
     * field ids (`ParquetUtils.FIELD_ID_METADATA_KEY`). */
   val FieldIdKey = "parquet.field.id"
+
+  /** Bounded pool for concurrent driver metadata reads (manifests,
+    * footers). Daemon threads that time out when idle, so it never holds
+    * a JVM open; its tasks never wait on the pool themselves, so a
+    * bounded size cannot deadlock. */
+  private lazy val metaIoPool: scala.concurrent.ExecutionContextExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = new java.util.concurrent.ThreadPoolExecutor(16, 16,
+      30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-meta-io-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    scala.concurrent.ExecutionContext.fromExecutorService(pool)
+  }
+
+  /** `xs.map(read)` with the reads run concurrently on [[metaIoPool]].
+    * Order is preserved. The wait has no deadline: a slow store is slow,
+    * not failed, and a failed read surfaces as its own exception (an
+    * IOException stays an IOException). */
+  private[wap] def metaIo[A, B](xs: Seq[A])(read: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future, blocking}
+    implicit val ec: scala.concurrent.ExecutionContext = metaIoPool
+    val all = Future.sequence(xs.map(x => Future(read(x))))
+    blocking(Await.result(all, scala.concurrent.duration.Duration.Inf))
+  }
 
   /** Driver-side metadata parse accounting (profiling; see WapProfile).
     * Counts MISSES of the caches below — the JSON actually read+parsed. */
