@@ -244,8 +244,8 @@ case class GraftCdcSidecarPartition(
   * changes, classified per commit by the r13 snapshot operation tag:
   *
   *  - CONTENT-NEUTRAL commits ([[SnapshotOp.contentNeutral]]: data/
-  *    manifest compaction, z-order, partition rewrite, schema-only) are
-  *    SKIPPED — a 100 TB compaction is changelog-silent instead of a
+  *    manifest/sidecar compaction, z-order, partition rewrite, tombstone
+  *    conversion, schema- and layout-only changes) are SKIPPED — a 100 TB compaction is changelog-silent instead of a
   *    full-table delete+insert storm.
   *  - Appends emit their added files as `insert` rows.
   *  - Copy-on-write DML emits removed files as `delete` and added files

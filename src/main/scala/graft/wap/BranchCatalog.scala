@@ -261,9 +261,11 @@ case class Snapshot(
     /** Columns this snapshot's files are GLOBALLY sorted on (range-
       * disjoint files in manifest order, rows sorted within each) — set
       * ONLY by the unpartitioned [[BranchCatalog.compactDataFilesSorted]]
-      * rewrite, whose repartitionByRange layout guarantees it. Every
-      * other commit constructs its snapshot without the field, so any
-      * later append/DML conservatively clears it. Consumers: the
+      * rewrite, whose repartitionByRange layout guarantees it. The
+      * commit kernel ([[BranchCatalog]]'s `childOf`) clears it on every
+      * other child, so any later append/DML conservatively drops it
+      * ([[BranchCatalog.renameColumn]] renames it, [[BranchCatalog
+      * .enableRowLineage]] keeps it — neither moves data). Consumers: the
       * connector's ORDER BY ... LIMIT (top-k) pushdown plans only the
       * covering file prefix/suffix. */
     sortOrder: Seq[String] = Nil,
@@ -282,29 +284,65 @@ case class Snapshot(
       * json4s fills it for old metadata). */
     evo: SchemaEvo = SchemaEvo(),
     /** What KIND of commit produced this snapshot (the Iceberg snapshot
-      * `operation` field, r13): `append`, `overwrite`, `delete`,
-      * `delete-pos`, `delete-mor`, `update`, `upsert`, `upsert-mor`,
-      * `merge`, `publish`, `cherrypick`, `create`, `schema`, or one of
-      * the CONTENT-NEUTRAL rewrites `compact`, `compact-manifests`,
-      * `compact-sorted`, `compact-zorder`, `rewrite-partition`. The CDC
-      * stream ([[graft.sql.GraftCdcMicroBatchStream]]) keys on the
-      * neutral set to skip logically-silent rewrites; `""` (pre-r13
-      * metadata — json4s default) is conservatively treated as
-      * content-changing. Surfaces as `$snapshots.operation`. */
+      * `operation` field, r13): the [[SnapshotOp.name]] of one of the
+      * declared [[SnapshotOp]]s. The CDC stream
+      * ([[graft.sql.GraftCdcMicroBatchStream]]) keys on
+      * [[SnapshotOp.contentNeutral]] to skip logically-silent rewrites;
+      * `""` (pre-r13 metadata — json4s default) is conservatively treated
+      * as content-changing. Surfaces as `$snapshots.operation`. */
     op: String = "",
     /** Row-lineage state (W73): disabled by default; [[BranchCatalog
       * .enableRowLineage]] turns it on and every later commit advances
-      * the high-water mark. Carried by every commit constructor. */
+      * the high-water mark. The commit kernel carries it from the parent
+      * and advances it by the rows of the manifests it stamps. */
     lin: RowLin = RowLin())
 
+/** One declared commit kind: the tag it stamps on [[Snapshot.op]] and
+  * whether it is CONTENT-NEUTRAL — its LOGICAL table content (the scan
+  * output) is provably identical to its parent's: data/manifest/sidecar
+  * re-layout, tombstone materialization or conversion (the deletes were
+  * logical at their OWN commit), and metadata-only schema or layout
+  * changes. A CDC reader skips neutral commits. */
+final class SnapshotOp private (val name: String, val contentNeutral: Boolean)
+
+/** The op vocabulary: every snapshot a catalog writes carries one of these
+  * tags. */
 object SnapshotOp {
-  /** Commits whose LOGICAL table content (the scan output) is provably
-    * identical to their parent's: data/manifest re-layout, tombstone
-    * materialization (the deletes were logical at their OWN commit), and
-    * metadata-only schema changes. A CDC reader skips them. */
-  val contentNeutral: Set[String] = Set(
-    "create", "schema", "compact", "compact-manifests",
-    "compact-sorted", "compact-zorder", "rewrite-partition")
+  private def op(name: String, neutral: Boolean = false) = new SnapshotOp(name, neutral)
+  val Create = op("create", neutral = true)
+  val Append = op("append")
+  val AddFiles = op("add-files")
+  val Overwrite = op("overwrite")
+  val Replace = op("replace")
+  val Delete = op("delete")
+  val DeletePos = op("delete-pos")
+  val DeleteMor = op("delete-mor")
+  val Update = op("update")
+  val UpdatePos = op("update-pos")
+  val Upsert = op("upsert")
+  val UpsertMor = op("upsert-mor")
+  val Merge = op("merge")
+  val MergePos = op("merge-pos")
+  val Publish = op("publish")
+  val Cherrypick = op("cherrypick")
+  val Schema = op("schema", neutral = true)
+  val EvolveSpec = op("evolve-spec", neutral = true)
+  val Compact = op("compact", neutral = true)
+  val CompactManifests = op("compact-manifests", neutral = true)
+  val CompactSorted = op("compact-sorted", neutral = true)
+  val CompactZOrder = op("compact-zorder", neutral = true)
+  val RewritePartition = op("rewrite-partition", neutral = true)
+  val ConvertTombstones = op("convert-tombstones", neutral = true)
+  val CompactPosDeletes = op("compact-pos-deletes", neutral = true)
+
+  val all: Seq[SnapshotOp] = Seq(Create, Append, AddFiles, Overwrite, Replace,
+    Delete, DeletePos, DeleteMor, Update, UpdatePos, Upsert, UpsertMor, Merge,
+    MergePos, Publish, Cherrypick, Schema, EvolveSpec, Compact, CompactManifests,
+    CompactSorted, CompactZOrder, RewritePartition, ConvertTombstones,
+    CompactPosDeletes)
+
+  /** The tags of the content-neutral ops. */
+  val contentNeutral: Set[String] = all.filter(_.contentNeutral).map(_.name).toSet
 }
 
 /** One global aggregate [[BranchCatalog.metaAggregate]] can answer from
@@ -609,6 +647,7 @@ class BranchCatalog(
       * For S3-style stores, pass a [[ConditionalPutRefsStore]] so the
       * commit maps to a conditional put (If-None-Match) instead. */
     refsBackend: Option[RefsStore] = None) {
+  import BranchCatalog.Change
   private implicit val fmts: Formats = DefaultFormats
   private val rootPath = new Path(root)
   // resolved once per instance: getFileSystem consults the Hadoop
@@ -625,10 +664,8 @@ class BranchCatalog(
         .map(n => n.stripPrefix("refs-").stripSuffix(".json").toLong)
     }
     override def read(version: Long): String = readString(refsPath(version))
-    override def commit(version: Long, content: String): Boolean = {
-      fs.mkdirs(rootPath)
-      writeString(refsPath(version), content, overwriteExisting = false)
-    }
+    override def commit(version: Long, content: String): Boolean =
+      writeString(refsPath(version), content)
   })
 
   /** Count of manifests parsed ON THE DRIVER — observability for tests
@@ -644,10 +681,10 @@ class BranchCatalog(
     * destination exists) into place. Creating the target directly and
     * then writing would let a concurrent reader observe an empty/partial
     * JSON between create and close — the race that intermittently broke
-    * racing committers. Returns false when the target already exists
-    * (= lost the commit race). */
-  private def writeString(p: Path, s: String, overwriteExisting: Boolean): Boolean = {
-    require(!overwriteExisting, "catalog metadata files are immutable")
+    * racing committers. Parent directories are created as needed.
+    * Returns false only when the target already exists (= lost the
+    * commit race); every other I/O error propagates as itself. */
+  private def writeString(p: Path, s: String): Boolean = {
     val qualified = fs.makeQualified(p)
     if ("file" == qualified.toUri.getScheme) {
       // local fast path: plain nio. Going through the Hadoop
@@ -663,8 +700,6 @@ class BranchCatalog(
         java.nio.file.Files.write(nioTmp, s.getBytes(StandardCharsets.UTF_8))
         try { java.nio.file.Files.createLink(nio, nioTmp); true }
         catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } catch {
-        case _: java.io.IOException => false
       } finally {
         try { java.nio.file.Files.deleteIfExists(nioTmp); () }
         catch { case _: Exception => () }
@@ -674,11 +709,10 @@ class BranchCatalog(
       try {
         val out = fs.create(tmp, false)
         try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-        // HDFS-style rename: atomic, returns false if destination exists
-        fs.rename(tmp, p)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: java.io.IOException => false
+        // HDFS-style rename: atomic; an existing destination makes it
+        // return false (or, on some stores, raise)
+        try fs.rename(tmp, p)
+        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
       } finally {
         try { if (fs.exists(tmp)) fs.delete(tmp, false) } catch { case _: Exception => () }
       }
@@ -745,21 +779,29 @@ class BranchCatalog(
 
   /** Optimistic commit: transform the latest refs, attempt to publish the
     * next version through the [[RefsStore]] (atomic create-if-absent /
-    * conditional put); on a lost race, re-read and retry. */
-  private def commitRefs(update: Refs => Refs, maxRetries: Int = 50): Refs = {
+    * conditional put); on a lost race, re-read and retry, up to
+    * [[BranchCatalog.MaxCommitRetries]] times. */
+  private def commitRefs(update: Refs => Refs): Refs =
+    commitRefsFor(refs => (update(refs), ()))._1
+
+  /** [[commitRefs]] for an update that also yields a result: returns the
+    * committed refs with the result of the attempt that won. */
+  private def commitRefsFor[A](update: Refs => (Refs, A)): (Refs, A) = {
     var attempt = 0
-    while (attempt < maxRetries) {
+    while (attempt < BranchCatalog.MaxCommitRetries) {
       val cur = currentRefs()
-      val next = update(cur).copy(version = cur.version + 1)
+      val (updated, result) = update(cur)
+      val next = updated.copy(version = cur.version + 1)
       if (refsStore.commit(next.version, Serialization.write(next)))
-        return next
+        return (next, result)
       attempt += 1
       // jittered backoff: spinning losers re-collide on the next version
       // forever under contention; the jitter spreads committers out
       Thread.sleep(math.min(2L << math.min(attempt, 5), 40L) +
         java.util.concurrent.ThreadLocalRandom.current().nextLong(15L))
     }
-    throw new IllegalStateException(s"refs commit lost $maxRetries races at $root")
+    throw new IllegalStateException(
+      s"refs commit lost ${BranchCatalog.MaxCommitRetries} races at $root")
   }
 
   // ---- snapshots + manifests --------------------------------------------
@@ -803,8 +845,7 @@ class BranchCatalog(
     if (fs.exists(snapPath(table, id))) Some(loadSnapshot(table, id)) else None
 
   private[wap] def writeSnapshot(table: String, s: Snapshot): Unit = {
-    fs.mkdirs(new Path(rootPath, s"tables/${physDir(table)}/meta"))
-    require(writeString(snapPath(table, s.id), Serialization.write(s), overwriteExisting = false),
+    require(writeString(snapPath(table, s.id), Serialization.write(s)),
       s"snapshot ${s.id} already exists for $table")
     // the committer is the next reader of its own snapshot: pre-populate
     BranchCatalog.snapCache.put(snapPath(table, s.id).toString, s)
@@ -829,8 +870,7 @@ class BranchCatalog(
       else files0.zip(files0.scanLeft(0L)(_ + _.rows))
         .map { case (f, off) => f.copy(firstRowId = off) }
     val p = new Path(rootPath, s"tables/${physDir(table)}/meta/manifest-${UUID.randomUUID().toString.take(16)}.json")
-    fs.mkdirs(p.getParent)
-    require(writeString(p, Serialization.write(files), overwriteExisting = false),
+    require(writeString(p, Serialization.write(files)),
       s"manifest ${p.getName} already exists for $table")
     // NOT pre-populated into the manifest cache: the cache is strictly
     // read-through, so the first consultation of any manifest always
@@ -1193,23 +1233,25 @@ class BranchCatalog(
             "generated columns derive from plain columns only (no chains)")
       }
     }
-    val snap = Snapshot(newId(), None, Seq.empty, schema.toDDL,
-      System.currentTimeMillis(), fmt,
-      evo = SchemaEvo.forSchema(schema).copy(writeDefaults = canonDefaults,
-        generated = generated),
-      op = "create")
-    writeSnapshot(table, snap)
     commitRefs { refs =>
       val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
       require(!b.views.contains(table), s"a view named $table exists on $branch")
       require(dir != table || !refs.tableDirs.values.exists(_ == table),
         s"a concurrent rename/clone claimed $table as a directory key — retry the create")
       if (b.tables.contains(table)) refs
-      else refs.copy(
-        branches = refs.branches.updated(branch,
-          b.copy(tables = b.tables.updated(table, snap.id))),
-        tableDirs =
-          if (dir != table) refs.tableDirs.updated(table, dir) else refs.tableDirs)
+      else {
+        // the lineage's root: the one snapshot no parent derives
+        val root = Snapshot(newId(), None, Seq.empty, schema.toDDL,
+          System.currentTimeMillis(), fmt,
+          evo = SchemaEvo.forSchema(schema).copy(writeDefaults = canonDefaults,
+            generated = generated),
+          op = SnapshotOp.Create.name)
+        refs.copy(
+          branches = refs.branches.updated(branch,
+            b.copy(tables = publish(table, root, b.tables))),
+          tableDirs =
+            if (dir != table) refs.tableDirs.updated(table, dir) else refs.tableDirs)
+      }
     }
     dirAlias.remove(table)
     true
@@ -1649,22 +1691,10 @@ class BranchCatalog(
     val newFiles = writeDataFiles(table, arranged,
       head.map(_.evo.fieldIds).getOrElse(Map.empty))
     val manifest = writeManifest(table, newFiles, aligned.schema)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val parentId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val parent = loadSnapshot(table, parentId)
-      val s = parent.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, parent, s, Seq(manifest))
-      committed = Snapshot(newId(), Some(parentId), parent.manifests ++ stamped,
-        if (parent.schemaDdl.nonEmpty) parent.schemaDdl else df.schema.toDDL,
-        System.currentTimeMillis(), parent.partitionSpec, parent.deleteManifests, s,
-        evo = parent.evo, op = "append", lin = lin2)
-      writeSnapshot(table, committed)
-      withEpochStamp(refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id)))), epochStamp)
+    commitTable(table, branch, None, epochStamp = epochStamp) { (parent, _) =>
+      Some(Change(SnapshotOp.Append, Seq(manifest), _.copy(
+        schemaDdl = if (parent.schemaDdl.nonEmpty) parent.schemaDdl else df.schema.toDDL)))
     }
-    committed
   }
 
   /** METADATA-ONLY file import (W82 — Iceberg's `add_files`/`migrate`
@@ -1894,20 +1924,9 @@ class BranchCatalog(
 
     // ---- one O(files-imported) commit, shaped exactly like an append ----
     val manifest = writeManifest(table, metas, schema)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during add_files")
-      val s = cur.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, s, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), cur.manifests ++ stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec,
-        cur.deleteManifests, s,
-        evo = cur.evo.copy(idlessFiles = true), op = "add-files", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "add_files") { (_, _) =>
+      Some(Change(SnapshotOp.AddFiles, Seq(manifest),
+        c => c.copy(evo = c.evo.copy(idlessFiles = true))))
     }
     AddFilesResult(committed, metas.size.toLong, metas.map(_.rows).sum,
       metas.map(_.bytes).sum, pvProven)
@@ -2045,22 +2064,10 @@ class BranchCatalog(
     // batch committed alongside it
     val delManifest = writeManifest(table, keyFiles, schema)
       .copy(asOf = Some(curId), keyCols = keyCols)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during MOR upsert")
-      val s = cur.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, s, Seq(dataManifest))
-      committed = Snapshot(newId(), Some(curId), cur.manifests ++ stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec,
-        cur.deleteManifests :+ delManifest.copy(seq = s), s, evo = cur.evo,
-        op = "upsert-mor", lin = lin2)
-      writeSnapshot(table, committed)
-      withEpochStamp(refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id)))), epochStamp)
+    commitTable(table, branch, Some(cur), "MOR upsert", epochStamp) { (_, _) =>
+      Some(Change(SnapshotOp.UpsertMor, Seq(dataManifest), c =>
+        c.copy(deleteManifests = c.deleteManifests :+ delManifest.copy(seq = c.seq))))
     }
-    committed
   }
 
   /** APPLY one CDC batch — rows carrying `_change_type` insert/delete
@@ -2144,28 +2151,15 @@ class BranchCatalog(
       if (keyFiles.isEmpty) None
       else Some(writeManifest(table, keyFiles, schema)
         .copy(asOf = Some(curId), keyCols = keyCols))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during CDC apply")
-      val s = cur.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, s, dataManifest.toSeq)
-      committed = Snapshot(newId(), Some(curId),
-        cur.manifests ++ stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec,
-        cur.deleteManifests ++ delManifest.map(_.copy(seq = s)).toSeq, s,
-        evo = cur.evo, lin = lin2,
-        op = (dataManifest, delManifest) match {
-          case (Some(_), Some(_)) => "upsert-mor"
-          case (Some(_), None) => "append"
-          case _ => "delete-mor"
-        })
-      writeSnapshot(table, committed)
-      withEpochStamp(refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id)))), epochStamp)
+    val op = (dataManifest, delManifest) match {
+      case (Some(_), Some(_)) => SnapshotOp.UpsertMor
+      case (Some(_), None) => SnapshotOp.Append
+      case _ => SnapshotOp.DeleteMor
     }
-    committed
+    commitTable(table, branch, Some(cur), "CDC apply", epochStamp) { (_, _) =>
+      Some(Change(op, dataManifest.toSeq, c =>
+        c.copy(deleteManifests = c.deleteManifests ++ delManifest.map(_.copy(seq = c.seq)))))
+    }
   }
 
   /** reference app.py:201-246 run_quality_checks scan: resolve
@@ -2241,34 +2235,89 @@ class BranchCatalog(
     filter.fold(df)(df.filter)
   }
 
-  // ---- row lineage (W73 — Iceberg v3 row tracking) ----------------------
+  // ---- the commit kernel -------------------------------------------------
 
-  /** Stamp a commit's NEW data manifests with the commit sequence AND,
-    * once lineage is enabled, consecutive row-id bases from the parent's
-    * high-water mark. Ranges advance by each manifest's TOTAL row count
-    * (gaps allowed — a rewrite-carried row still consumes its slot), so
-    * ids are unique and stable, never dense. Call INSIDE the refs-commit
-    * closure (or with the head pinned by a concurrent-commit guard) —
-    * a lost optimistic race restamps against the fresh parent. */
-  /** Allocate row-id ranges for `ms` from the table's GLOBAL counter in
-    * `refs` ([[Refs.rowIds]] — Iceberg v3 `next-row-id`). Runs INSIDE the
+  /** The derivation rule: a child of `parent` gets a fresh id, `parent`
+    * as its parent, now as its commit time and `parent.seq + 1` as its
+    * sequence; it carries the manifests, delete manifests, schema,
+    * partition spec, column-identity state and row lineage, and clears
+    * the sort contracts (only a sorting rewrite can vouch for them). */
+  private def childOf(parent: Snapshot, op: SnapshotOp): Snapshot =
+    parent.copy(id = newId(), parentId = Some(parent.id),
+      committedAtMillis = System.currentTimeMillis(), seq = parent.seq + 1,
+      sortOrder = Nil, sortWithinPartitions = Nil, op = op.name)
+
+  /** `change` applied to `parent`: the edited child with the fresh
+    * manifests stamped with its sequence and appended. Once lineage is
+    * enabled (W73) they also get consecutive row-id bases from the
+    * table's GLOBAL counter in `refs` ([[Refs.rowIds]] — Iceberg v3
+    * `next-row-id`), seeded max-wise by the child's own high-water mark
+    * (metadata written before the counter moved global; the mark
+    * [[enableRowLineage]] sets). Ranges advance by each manifest's TOTAL
+    * row count (gaps allowed — a rewrite-carried row still consumes its
+    * slot), so ids are unique and stable, never dense. Runs INSIDE the
     * refs-commit closure, so a lost race re-allocates from the winner's
     * high-water mark: ranges are unique across every branch and every
-    * racing committer. `parent.lin.next` seeds the counter max-wise
-    * (metadata written before the counter moved global). Returns the refs
-    * with the advanced counter — the caller must commit THAT refs. */
-  private def stampLineage(refs: Refs, table: String, parent: Snapshot, s: Long,
-      ms: Seq[ManifestRef]): (Refs, Seq[ManifestRef], RowLin) =
-    if (!parent.lin.enabled) (refs, ms.map(_.copy(seq = s)), parent.lin)
+    * racing committer. Returns the refs with the advanced counter — the
+    * caller must commit THAT refs. */
+  private def derive(refs: Refs, table: String, parent: Snapshot,
+      change: Change): (Refs, Snapshot) = {
+    val child = change.edit(childOf(parent, change.op))
+    if (!child.lin.enabled)
+      (refs, child.copy(manifests = child.manifests ++ change.fresh.map(_.copy(seq = child.seq))))
     else {
       val key = physDir(table)
-      var next = math.max(refs.rowIds.getOrElse(key, 0L), parent.lin.next)
-      val stamped = ms.map { m =>
-        val r = m.copy(seq = s, firstRowId = next); next += m.rows; r
+      var next = math.max(refs.rowIds.getOrElse(key, 0L), child.lin.next)
+      val stamped = change.fresh.map { m =>
+        val r = m.copy(seq = child.seq, firstRowId = next); next += m.rows; r
       }
-      (refs.copy(rowIds = refs.rowIds.updated(key, next)), stamped,
-        RowLin(enabled = true, next = next))
+      (refs.copy(rowIds = refs.rowIds.updated(key, next)),
+        child.copy(manifests = child.manifests ++ stamped, lin = RowLin(enabled = true, next = next)))
     }
+  }
+
+  /** A full rewrite's child: no kept manifest or tombstone survives, and
+    * every file carries current names and field ids again. */
+  private def fullRewrite(c: Snapshot): Snapshot =
+    c.copy(manifests = Nil, deleteManifests = Nil, evo = c.evo.afterFullRewrite)
+
+  /** The write-and-point step: writes `child` and points `table` at it. */
+  private def publish(table: String, child: Snapshot,
+      tables: Map[String, String]): Map[String, String] = {
+    writeSnapshot(table, child)
+    tables.updated(table, child.id)
+  }
+
+  /** Commits `table`'s next snapshot on `branch` in one refs swap and
+    * returns it. With `expect` — the head the operation planned against —
+    * a head that moved since refuses as a concurrent commit `during` the
+    * operation; without it the commit rebases onto the fresh head.
+    * `change` sees that head and its branch's state, and may refuse
+    * (throw) or return None to commit nothing (the head is returned).
+    * `epochStamp` lands in the same swap ([[withEpochStamp]]). */
+  private def commitTable(table: String, branch: String, expect: Option[Snapshot],
+      during: String = "", epochStamp: Option[(String, Long)] = None)(
+      change: (Snapshot, BranchState) => Option[Change]): Snapshot =
+    commitRefsFor { refs =>
+      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
+      val head = expect match {
+        case Some(e) =>
+          require(b.tables.get(table).contains(e.id),
+            s"concurrent commit on $table@$branch during $during")
+          e
+        case None => loadSnapshot(table,
+          b.tables.getOrElse(table, sys.error(s"no table $table on $branch")))
+      }
+      change(head, b) match {
+        case None => (refs, head)
+        case Some(c) =>
+          val (refs2, child) = derive(refs, table, head, c)
+          (withEpochStamp(refs2.copy(branches = refs2.branches.updated(branch,
+            b.copy(tables = publish(table, child, b.tables)))), epochStamp), child)
+      }
+    }._2
+
+  // ---- row lineage (W73 — Iceberg v3 row tracking) ----------------------
 
   /** Normalize a path for joining manifest metadata against Spark's
     * `_metadata.file_path` (which always carries a scheme). */
@@ -2383,13 +2432,9 @@ class BranchCatalog(
     * data file is read or written, O(manifests) metadata IO. Every later
     * commit assigns ranges automatically; copy-on-write rewrites then
     * MATERIALIZE carried rows' ids into their outputs. Idempotent. */
-  def enableRowLineage(table: String, branch: String = "main"): Snapshot = {
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val curId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val cur = loadSnapshot(table, curId)
-      if (cur.lin.enabled) { committed = cur; refs }
+  def enableRowLineage(table: String, branch: String = "main"): Snapshot =
+    commitTable(table, branch, None) { (cur, _) =>
+      if (cur.lin.enabled) None
       else {
         // POSITION sidecars may stay pending (a suppressed position is
         // still a position — scans, rewrites and changelogs all handle
@@ -2405,25 +2450,15 @@ class BranchCatalog(
           next += m.rows
           ref
         }
-        committed = Snapshot(newId(), Some(curId), stamped, cur.schemaDdl,
-          System.currentTimeMillis(), cur.partitionSpec,
-          cur.deleteManifests, cur.seq + 1,
+        // the kernel seeds the GLOBAL counter ([[Refs.rowIds]]) from this
+        // mark in the same swap, max-wise (another branch may have
+        // enabled/allocated already): every branch allocates above this
+        // table's historical rows. No data moves, so sort contracts hold.
+        Some(Change(SnapshotOp.Schema, edit = _.copy(manifests = stamped,
           sortOrder = cur.sortOrder, sortWithinPartitions = cur.sortWithinPartitions,
-          evo = cur.evo, op = "schema", lin = RowLin(enabled = true, next = next))
-        writeSnapshot(table, committed)
-        // seed the GLOBAL counter ([[Refs.rowIds]]) in the same swap:
-        // every branch allocates above this table's historical rows.
-        // max-fold — another branch may have enabled/allocated already
-        val key = physDir(table)
-        refs.copy(
-          rowIds = refs.rowIds.updated(key,
-            math.max(refs.rowIds.getOrElse(key, 0L), next)),
-          branches = refs.branches.updated(branch,
-            b.copy(tables = b.tables.updated(table, committed.id))))
+          lin = RowLin(enabled = true, next = next))))
       }
     }
-    committed
-  }
 
   /** The manifest with per-entry row-id OFFSETS guaranteed: identity when
     * the entries already carry them (everything written since W73),
@@ -2438,7 +2473,7 @@ class BranchCatalog(
         .map { case (f, off) => f.copy(firstRowId = off) }
       val p = new Path(rootPath,
         s"tables/${physDir(table)}/meta/manifest-${UUID.randomUUID().toString.take(16)}.json")
-      require(writeString(p, Serialization.write(withOff), overwriteExisting = false),
+      require(writeString(p, Serialization.write(withOff)),
         s"manifest ${p.getName} already exists for $table")
       m.copy(path = p.toString)
     }
@@ -2633,6 +2668,12 @@ class BranchCatalog(
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
   }
 
+  /** Copy-on-write DML refuses while tombstones are pending: the two
+    * delete representations never interleave. */
+  private def requireNoTombstones(table: String, branch: String, cur: Snapshot): Unit =
+    require(cur.deleteManifests.isEmpty,
+      s"$table@$branch has pending MOR tombstones — materialize with compactDataFiles before copy-on-write DML")
+
   /** The [[maxPendingTombstones]] gate shared by the MOR commit paths. */
   private def requireTombstoneHeadroom(
       table: String, branch: String, cur: Snapshot, op: String): Unit =
@@ -2686,21 +2727,10 @@ class BranchCatalog(
     // applies to data committed BEFORE it, never to later appends
     val delManifest = writeManifest(table, delFiles, tschema)
       .copy(asOf = Some(curId), keyCols = keys.schema.fieldNames.toSeq)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during MOR delete")
-      val s = cur.seq + 1
-      committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec,
-        cur.deleteManifests :+ delManifest.copy(seq = s), s, evo = cur.evo,
-        op = "delete-mor", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    commitTable(table, branch, Some(cur), "MOR delete") { (_, _) =>
+      Some(Change(SnapshotOp.DeleteMor, edit = c =>
+        c.copy(deleteManifests = c.deleteManifests :+ delManifest.copy(seq = c.seq))))
     }
-    committed
   }
 
   /** Replace table@branch's CURRENT content with `df` in one commit (SQL
@@ -2753,25 +2783,15 @@ class BranchCatalog(
     val checked = constraintGuard(df, table, branch)
     val manifest = writeManifest(table,
       writeTableFiles(table, checked, fields, ids = evo.fieldIds), df.schema)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during replace")
-      val s = cur.seq + 1
-      // lineage-enabled tables keep tracking: every replaced row is an
-      // INSERT and draws a fresh id (the replaced rows' ids retire with
-      // their snapshot — reachable via time travel, never reused)
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, s, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), stamped,
-        df.schema.toDDL, System.currentTimeMillis(),
-        if (specs.isEmpty) None else Some(PartitionSpec.formatMulti(specs)),
-        Nil, s, evo = evo, op = "replace", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    // lineage-enabled tables keep tracking: every replaced row is an
+    // INSERT and draws a fresh id (the replaced rows' ids retire with
+    // their snapshot — reachable via time travel, never reused)
+    commitTable(table, branch, Some(cur), "replace") { (_, _) =>
+      Some(Change(SnapshotOp.Replace, Seq(manifest), c => fullRewrite(c).copy(
+        schemaDdl = df.schema.toDDL,
+        partitionSpec = if (specs.isEmpty) None else Some(PartitionSpec.formatMulti(specs)),
+        evo = evo)))
     }
-    committed
   }
 
   def overwrite(table: String, df: DataFrame, branch: String = "main"): Snapshot = {
@@ -2784,22 +2804,10 @@ class BranchCatalog(
     val manifest = writeManifest(table, writeTableFiles(table, aligned,
       specsOf(cur.partitionSpec), ids = cur.evo.fieldIds),
       aligned.schema)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during overwrite")
-      val s = cur.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, s, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), stamped,
-        if (cur.schemaDdl.nonEmpty) cur.schemaDdl else df.schema.toDDL,
-        System.currentTimeMillis(), cur.partitionSpec, Nil, s,
-        evo = cur.evo.afterFullRewrite, op = "overwrite", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    commitTable(table, branch, Some(cur), "overwrite") { (_, _) =>
+      Some(Change(SnapshotOp.Overwrite, Seq(manifest), c => fullRewrite(c).copy(
+        schemaDdl = if (cur.schemaDdl.nonEmpty) cur.schemaDdl else df.schema.toDDL)))
     }
-    committed
   }
 
   /** Multi-table ATOMIC commit (the transactional surface the reference
@@ -2840,15 +2848,14 @@ class BranchCatalog(
       txn: TableTransaction, branch: String): Map[String, Snapshot] = {
     val staged = txn.staged()
     if (staged.isEmpty) return Map.empty
-    var out = Map.empty[String, Snapshot]
-    commitRefs { refs =>
-      out = Map.empty // retry-safe: rebuilt against the fresh refs
+    commitRefsFor { refs =>
       val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
       var tables = b.tables
       var refsAcc = refs
+      var out = Map.empty[String, Snapshot]
       for ((table, st) <- staged) {
-        val parentId = tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-        val parent = loadSnapshot(table, parentId)
+        val parent = loadSnapshot(table,
+          tables.getOrElse(table, sys.error(s"no table $table on $branch")))
         require(parent.schemaDdl == st.schemaDdl,
           s"schema of $table changed during the transaction — aborting the whole commit")
         // the bound counts pending + STAGED generations: one transaction
@@ -2860,22 +2867,15 @@ class BranchCatalog(
             s"generations (bound $maxPendingTombstones) — materialize with " +
             "compactDataFiles first")
         if (st.deletes.nonEmpty) requireNoLineage(table, branch, parent, "transactional deleteKeys")
-        val s = parent.seq + 1
-        val (refs2, stamped, lin2) = stampLineage(refsAcc, table, parent, s, st.appends)
+        val op = if (st.deletes.isEmpty) SnapshotOp.Append else SnapshotOp.DeleteMor
+        val (refs2, snap) = derive(refsAcc, table, parent, Change(op, st.appends, c =>
+          c.copy(deleteManifests = c.deleteManifests ++ st.deletes.map(_.copy(seq = c.seq)))))
         refsAcc = refs2
-        val snap = Snapshot(newId(), Some(parentId),
-          parent.manifests ++ stamped,
-          parent.schemaDdl, System.currentTimeMillis(), parent.partitionSpec,
-          parent.deleteManifests ++ st.deletes.map(_.copy(seq = s)), s,
-          evo = parent.evo, lin = lin2,
-          op = if (st.deletes.isEmpty) "append" else "delete-mor")
-        writeSnapshot(table, snap)
-        tables = tables.updated(table, snap.id)
+        tables = publish(table, snap, tables)
         out += table -> snap
       }
-      refsAcc.copy(branches = refs.branches.updated(branch, b.copy(tables = tables)))
-    }
-    out
+      (refsAcc.copy(branches = refs.branches.updated(branch, b.copy(tables = tables))), out)
+    }._2
   }
 
   private[wap] case class StagedTable(
@@ -3847,13 +3847,11 @@ class BranchCatalog(
             dstSnapOpt.map(_.deleteManifests.map(_.path)).getOrElse(Nil)
           if (added.nonEmpty || dropsFromDst || dstSnapOpt.isEmpty ||
               srcSchemaChanged || srcLinTurnedOn || delsChanged) {
-            val merged = Snapshot(
-              newId(),
-              dstSnapOpt.map(_.id),
-              mergedManifests,
-              schemaWinner.schemaDdl,
-              System.currentTimeMillis(),
-              mergeSpecRegistries(table,
+            val merged = childOf(dstSnapOpt.getOrElse(srcSnap), SnapshotOp.Publish).copy(
+              parentId = dstSnapOpt.map(_.id),
+              manifests = mergedManifests,
+              schemaDdl = schemaWinner.schemaDdl,
+              partitionSpec = mergeSpecRegistries(table,
                 dstSnapOpt.flatMap(_.partitionSpec), srcSnap.partitionSpec),
               // max over both ancestries + 1 keeps the sequence monotone
               // on the merged lineage, so a tombstone committed later on
@@ -3904,9 +3902,8 @@ class BranchCatalog(
                   renamedFiles = mergedRenamed,
                   idlessFiles = mergedIdless)
               },
-              op = "publish", lin = mergedLin)
-            writeSnapshot(table, merged)
-            dstTables = dstTables.updated(table, merged.id)
+              lin = mergedLin)
+            dstTables = publish(table, merged, dstTables)
             srcTables = srcTables.updated(table, merged.id)
             srcBase = srcBase.updated(table, merged.id)
           } else {
@@ -4705,12 +4702,8 @@ class BranchCatalog(
     * unsupported (a drop+add pair is exactly that, with the documented
     * data loss). */
   def evolveSchema(table: String, newSchema: StructType, branch: String = "main",
-      defaults: Map[String, String] = Map.empty): Snapshot = {
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val curId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val cur = loadSnapshot(table, curId)
+      defaults: Map[String, String] = Map.empty): Snapshot =
+    commitTable(table, branch, None) { (cur, b) =>
       val old = StructType.fromDDL(cur.schemaDdl)
       // default case-insensitive Spark SQL cannot resolve a table whose
       // schema holds case-duplicate names — refuse to ever commit one
@@ -4740,8 +4733,7 @@ class BranchCatalog(
         }
         // a dropped declared-sort column would brick every later append
         // (writeOrderOf refuses unknown columns at write time)
-        refs.branches.get(branch).flatMap(_.tableProps.get(table))
-          .getOrElse(Map.empty[String, String])
+        b.tableProps.get(table).getOrElse(Map.empty[String, String])
           .get(BranchCatalog.WriteOrderKey).foreach { v =>
             val orderCols = v.split(",").map(_.trim).filter(_.nonEmpty)
             dropped.find(d => orderCols.exists(_.equalsIgnoreCase(d))).foreach(d =>
@@ -4786,16 +4778,8 @@ class BranchCatalog(
         evolvedEvo(cur.evo, StructType.fromDDL(cur.schemaDdl), newSchema)) {
         case (e, (c, sql)) => e.withAddDefault(c, sql, cur.seq + 1)
       }
-      committed = Snapshot(newId(), Some(curId), cur.manifests, newSchema.toDDL,
-        System.currentTimeMillis(), cur.partitionSpec, cur.deleteManifests, cur.seq + 1,
-        evo = evolved,
-        op = "schema", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+      Some(Change(SnapshotOp.Schema, edit = _.copy(schemaDdl = newSchema.toDDL, evo = evolved)))
     }
-    committed
-  }
 
   /** Field-id bookkeeping for a by-name add/drop/widen evolution: dropped
     * columns retire their ids (never reused — [[SchemaEvo.fieldIdSeq]]),
@@ -4834,26 +4818,14 @@ class BranchCatalog(
     * history (Iceberg v3 semantics — `write-default` is mutable,
     * `initial-default` is set once at ADD COLUMN). */
   def setColumnDefault(table: String, col: String, default: Option[String],
-      branch: String = "main"): Snapshot = {
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val curId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val cur = loadSnapshot(table, curId)
+      branch: String = "main"): Snapshot =
+    commitTable(table, branch, None) { (cur, _) =>
       val schema = StructType.fromDDL(cur.schemaDdl)
       val field = schema.fields.find(_.name == col).getOrElse(
         sys.error(s"no column $col in $table"))
       val canon = default.map(canonicalDefault(col, field.dataType, _))
-      committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec, cur.deleteManifests,
-        cur.seq + 1, evo = cur.evo.withWriteDefault(col, canon), op = "schema",
-        lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+      Some(Change(SnapshotOp.Schema, edit = c => c.copy(evo = c.evo.withWriteDefault(col, canon))))
     }
-    committed
-  }
 
   /** RENAME COLUMN as one metadata commit (W58 — no data rewritten): the
     * column keeps its FIELD ID, the schema gets the new name, and every
@@ -4869,12 +4841,8 @@ class BranchCatalog(
     * until a compaction rewrites; foreign-engine export also refuses
     * until then (external readers match by name). */
   def renameColumn(
-      table: String, from: String, to: String, branch: String = "main"): Snapshot = {
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val curId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val cur = loadSnapshot(table, curId)
+      table: String, from: String, to: String, branch: String = "main"): Snapshot =
+    commitTable(table, branch, None) { (cur, _) =>
       val schema = StructType.fromDDL(cur.schemaDdl)
       require(schema.fieldNames.contains(from), s"no column $from in $table")
       require(!schema.fieldNames.contains(to), s"column $to already exists in $table")
@@ -4915,18 +4883,13 @@ class BranchCatalog(
         }
       val newSchema = StructType(schema.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      committed = Snapshot(newId(), Some(curId), cur.manifests, newSchema.toDDL,
-        System.currentTimeMillis(), cur.partitionSpec, cur.deleteManifests, cur.seq + 1,
-        // the data is unchanged, so sort contracts survive under the new name
-        sortOrder = cur.sortOrder.map(c => if (c == from) to else c),
-        sortWithinPartitions = cur.sortWithinPartitions.map(c => if (c == from) to else c),
-        evo = cur.evo.rename(from, to), op = "schema", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+      // the data is unchanged, so sort contracts survive under the new name
+      def renamed(cols: Seq[String]) = cols.map(c => if (c == from) to else c)
+      Some(Change(SnapshotOp.Schema, edit = _.copy(schemaDdl = newSchema.toDDL,
+        sortOrder = renamed(cur.sortOrder),
+        sortWithinPartitions = renamed(cur.sortWithinPartitions),
+        evo = cur.evo.rename(from, to))))
     }
-    committed
-  }
 
   /** The branch's schema CHANGE points, oldest first: (snapshotId, DDL)
     * whenever the schema differs from the parent's — the schema history
@@ -5270,20 +5233,15 @@ class BranchCatalog(
     require(snap.deleteManifests.map(_.path) == parent.deleteManifests.map(_.path),
       s"$snapshotId changed MOR tombstones — only append commits cherry-pick")
     val added = snap.manifests.filterNot(m => parentPaths.contains(m.path))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(into, sys.error(s"no branch $into"))
-      val headId = b.tables.getOrElse(table, sys.error(s"no table $table on $into"))
-      val head = loadSnapshot(table, headId)
+    commitTable(table, into, None) { (head, _) =>
       require(head.schemaDdl == snap.schemaDdl,
         s"schema of $snapshotId diverged from $table@$into — evolve first")
       require(head.partitionSpec == snap.partitionSpec,
         s"partition layout of $snapshotId diverged from $table@$into")
       val headPaths = head.manifests.map(_.path).toSet
       val fresh = added.filterNot(m => headPaths.contains(m.path))
-      if (fresh.isEmpty) { committed = head; refs }
+      if (fresh.isEmpty) None
       else {
-        val s = head.seq + 1
         // cherry-picked manifests keep their bases VERBATIM (the global
         // counter already reserved those ranges at the original commit,
         // so no target-side allocation can collide) — consistent with
@@ -5291,17 +5249,10 @@ class BranchCatalog(
         // rewrite. Only bases never assigned (source committed before
         // lineage was on) allocate fresh.
         val (withBase, unstamped) = fresh.partition(_.firstRowId >= 0L)
-        val (refs2, stamped, lin2) = stampLineage(refs, table, head, s, unstamped)
-        committed = Snapshot(newId(), Some(headId),
-          head.manifests ++ withBase.map(_.copy(seq = s)) ++ stamped, head.schemaDdl,
-          System.currentTimeMillis(), head.partitionSpec, head.deleteManifests, s,
-          evo = head.evo, op = "cherrypick", lin = lin2)
-        writeSnapshot(table, committed)
-        refs2.copy(branches = refs.branches.updated(into,
-          b.copy(tables = b.tables.updated(table, committed.id))))
+        Some(Change(SnapshotOp.Cherrypick, unstamped, c =>
+          c.copy(manifests = c.manifests ++ withBase.map(_.copy(seq = c.seq)))))
       }
     }
-    committed
   }
 
   /** Checkpointed incremental consumption of a table (the batch mirror
@@ -5435,24 +5386,13 @@ class BranchCatalog(
       advisoryOrder = head.map(_ => writeOrderOf(table, branch, aligned.schema))
         .getOrElse(Nil))
     val manifest = writeManifest(table, newFiles, aligned.schema)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val parentId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val parent = loadSnapshot(table, parentId)
+    commitTable(table, branch, None, epochStamp = epochStamp) { (parent, _) =>
       require(parent.partitionSpec.forall(_ == specFmt),
         s"concurrent partition-spec change on $table@$branch during append")
-      val s = parent.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, parent, s, Seq(manifest))
-      committed = Snapshot(newId(), Some(parentId), parent.manifests ++ stamped,
-        if (parent.schemaDdl.nonEmpty) parent.schemaDdl else df.schema.toDDL,
-        System.currentTimeMillis(), Some(specFmt),
-        parent.deleteManifests, s, evo = parent.evo, op = "append", lin = lin2)
-      writeSnapshot(table, committed)
-      withEpochStamp(refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id)))), epochStamp)
+      Some(Change(SnapshotOp.Append, Seq(manifest), _.copy(
+        schemaDdl = if (parent.schemaDdl.nonEmpty) parent.schemaDdl else df.schema.toDDL,
+        partitionSpec = Some(specFmt))))
     }
-    committed
   }
 
   /** Row-level DELETE, copy-on-write (the catalog-API table op the
@@ -5547,20 +5487,9 @@ class BranchCatalog(
       if (kept.nonEmpty) Seq(writeManifest(table, kept, schema)) else Seq.empty
     val rowsDeleted =
       droppedFiles.map(_.rows).sum + rewriteFiles.map(_.rows).sum - kept.map(_.rows).sum
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during delete")
-      require(cur.deleteManifests.isEmpty,
-        s"$table@$branch has pending MOR tombstones — materialize with compactDataFiles before copy-on-write DML")
-      val (refs2, stampedFresh, lin2) = stampLineage(refs, table, cur, newSeq, freshManifest)
-      committed = Snapshot(newId(), Some(curId), carried ++ stampedFresh, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec, seq = newSeq, evo = cur.evo,
-        op = "delete", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "delete") { (_, _) =>
+      requireNoTombstones(table, branch, cur)
+      Some(Change(SnapshotOp.Delete, freshManifest, _.copy(manifests = carried)))
     }
     DeleteResult(committed, rowsDeleted,
       rewriteFiles.size.toLong,
@@ -5668,18 +5597,9 @@ class BranchCatalog(
           posDelete = true))
     if (droppedFiles.isEmpty && posManifest.isEmpty)
       return DeleteResult(cur, 0L, 0L, totalFiles) // every mark already pending
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during positional delete")
-      committed = Snapshot(newId(), Some(curId), newManifests, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec,
-        deleteManifests = cur.deleteManifests ++ posManifest.toSeq, seq = newSeq,
-        evo = cur.evo, op = "delete-pos", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "positional delete") { (_, _) =>
+      Some(Change(SnapshotOp.DeletePos, edit = c => c.copy(manifests = newManifests,
+        deleteManifests = c.deleteManifests ++ posManifest.toSeq)))
     }
     // rowsDeleted must not re-count rows a PRIOR pending sidecar already
     // suppressed in the metadata-dropped files (stacked positional deletes
@@ -5801,20 +5721,9 @@ class BranchCatalog(
       .copy(asOf = Some(curId),
         keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
         posDelete = true)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during positional update")
-      val s = cur.seq + 1
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, s, Seq(dataManifest))
-      committed = Snapshot(newId(), Some(curId), cur.manifests ++ stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec,
-        deleteManifests = cur.deleteManifests :+ posManifest.copy(seq = s), seq = s,
-        evo = cur.evo, op = "update-pos", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "positional update") { (_, _) =>
+      Some(Change(SnapshotOp.UpdatePos, Seq(dataManifest), c =>
+        c.copy(deleteManifests = c.deleteManifests :+ posManifest.copy(seq = c.seq))))
     }
     UpdateResult(committed, rowsUpdated, 0L, totalFiles)
   }
@@ -5891,20 +5800,9 @@ class BranchCatalog(
       }
     val freshManifest =
       if (rewritten.nonEmpty) Seq(writeManifest(table, rewritten, schema)) else Seq.empty
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during update")
-      require(cur.deleteManifests.isEmpty,
-        s"$table@$branch has pending MOR tombstones — materialize with compactDataFiles before copy-on-write DML")
-      val (refs2, stampedFresh, lin2) = stampLineage(refs, table, cur, newSeq, freshManifest)
-      committed = Snapshot(newId(), Some(curId), carried ++ stampedFresh, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec, seq = newSeq, evo = cur.evo,
-        op = "update", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "update") { (_, _) =>
+      requireNoTombstones(table, branch, cur)
+      Some(Change(SnapshotOp.Update, freshManifest, _.copy(manifests = carried)))
     }
     UpdateResult(committed, rowsUpdated,
       affectedFiles.size.toLong, totalFiles - affectedFiles.size)
@@ -6089,20 +5987,9 @@ class BranchCatalog(
         }
       val freshManifest =
         if (rewritten.nonEmpty) Seq(writeManifest(table, rewritten, schema)) else Seq.empty
-      var committed: Snapshot = null
-      commitRefs { refs =>
-        val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-        require(b.tables.get(table).contains(curId),
-          s"concurrent commit on $table@$branch during upsert")
-        require(cur.deleteManifests.isEmpty,
-          s"$table@$branch has pending MOR tombstones — materialize with compactDataFiles before copy-on-write DML")
-        val (refs2, stampedFresh, lin2) = stampLineage(refs, table, cur, newSeq, freshManifest)
-        committed = Snapshot(newId(), Some(curId), carried ++ stampedFresh, cur.schemaDdl,
-          System.currentTimeMillis(), cur.partitionSpec, seq = newSeq, evo = cur.evo,
-          op = "upsert", lin = lin2)
-        writeSnapshot(table, committed)
-        refs2.copy(branches = refs.branches.updated(branch,
-          b.copy(tables = b.tables.updated(table, committed.id))))
+      val committed = commitTable(table, branch, Some(cur), "upsert") { (_, _) =>
+        requireNoTombstones(table, branch, cur)
+        Some(Change(SnapshotOp.Upsert, freshManifest, _.copy(manifests = carried)))
       }
       UpsertResult(committed, rowsReplaced, rowsInserted,
         affectedFiles.size.toLong, totalFiles - affectedFiles.size)
@@ -6425,21 +6312,9 @@ class BranchCatalog(
         val freshManifest =
           if (allRewritten.nonEmpty) Seq(writeManifest(table, allRewritten, schema))
           else Seq.empty
-        var committed: Snapshot = null
-        commitRefs { refs =>
-          val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-          require(b.tables.get(table).contains(curId),
-            s"concurrent commit on $table@$branch during merge")
-          require(cur.deleteManifests.isEmpty,
-            s"$table@$branch has pending MOR tombstones — materialize with compactDataFiles before copy-on-write DML")
-          val (refs2, stampedFresh, lin2) = stampLineage(refs, table, cur, newSeq, freshManifest)
-          committed = Snapshot(newId(), Some(curId), manifestKeeps ++ stampedFresh,
-            cur.schemaDdl,
-            System.currentTimeMillis(), cur.partitionSpec, seq = newSeq, evo = cur.evo,
-            op = "merge", lin = lin2)
-          writeSnapshot(table, committed)
-          refs2.copy(branches = refs.branches.updated(branch,
-            b.copy(tables = b.tables.updated(table, committed.id))))
+        val committed = commitTable(table, branch, Some(cur), "merge") { (_, _) =>
+          requireNoTombstones(table, branch, cur)
+          Some(Change(SnapshotOp.Merge, freshManifest, _.copy(manifests = manifestKeeps)))
         }
         MergeIntoResult(committed, nUpd + nBsUpd, nDel + nBsDel + droppedRows, nIns,
           affectedFiles.size.toLong + bsFiles.size,
@@ -6640,19 +6515,9 @@ class BranchCatalog(
             .copy(asOf = Some(curId), seq = newSeq,
               keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
               posDelete = true))
-        var committed: Snapshot = null
-        commitRefs { refs =>
-          val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-          require(b.tables.get(table).contains(curId),
-            s"concurrent commit on $table@$branch during positional merge")
-          val (refs2, stamped, lin2) = stampLineage(refs, table, cur, newSeq, dataManifests)
-          committed = Snapshot(newId(), Some(curId), cur.manifests ++ stamped,
-            cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec,
-            deleteManifests = cur.deleteManifests ++ posManifest.toSeq, seq = newSeq,
-            evo = cur.evo, op = "merge-pos", lin = lin2)
-          writeSnapshot(table, committed)
-          refs2.copy(branches = refs.branches.updated(branch,
-            b.copy(tables = b.tables.updated(table, committed.id))))
+        val committed = commitTable(table, branch, Some(cur), "positional merge") { (_, _) =>
+          Some(Change(SnapshotOp.MergePos, dataManifests,
+            c => c.copy(deleteManifests = c.deleteManifests ++ posManifest.toSeq)))
         }
         MergeIntoResult(committed, nUpd, nDel, nIns, 0L, totalFiles)
       } finally { actioned.unpersist(); () }
@@ -6678,12 +6543,8 @@ class BranchCatalog(
     * [[rewritePartitioned]] remains the compacting variant that puts ALL
     * content under the new layout in one rewrite. */
   def addPartitionField(
-      table: String, spec: PartitionSpec, branch: String = "main"): Snapshot = {
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val curId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val cur = loadSnapshot(table, curId)
+      table: String, spec: PartitionSpec, branch: String = "main"): Snapshot =
+    commitTable(table, branch, None) { (cur, _) =>
       val schema = StructType.fromDDL(cur.schemaDdl)
       require(schema.fieldNames.contains(spec.column),
         s"no column ${spec.column} in $table")
@@ -6692,16 +6553,9 @@ class BranchCatalog(
         s"${spec.format} is already an active partition field of $table")
       val nextId = fields.map(_.id).maxOption.getOrElse(-1) + 1
       val next = fields :+ PartitionSpec.SpecField(spec, nextId, active = true)
-      committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-        System.currentTimeMillis(), Some(PartitionSpec.formatFields(next)),
-        cur.deleteManifests, cur.seq + 1, evo = cur.evo, op = "evolve-spec",
-        lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+      Some(Change(SnapshotOp.EvolveSpec,
+        edit = _.copy(partitionSpec = Some(PartitionSpec.formatFields(next)))))
     }
-    committed
-  }
 
   /** METADATA-ONLY `DROP PARTITION FIELD`: the field stops routing new
     * writes but STAYS in the registry as a retired entry — files written
@@ -6711,12 +6565,8 @@ class BranchCatalog(
     * serialized transform ("day(ts)") or, when unambiguous, by source
     * column name. */
   def dropPartitionField(
-      table: String, field: String, branch: String = "main"): Snapshot = {
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      val curId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
-      val cur = loadSnapshot(table, curId)
+      table: String, field: String, branch: String = "main"): Snapshot =
+    commitTable(table, branch, None) { (cur, _) =>
       val fields = specsOf(cur.partitionSpec)
       val matching = fields.filter(f =>
         f.active && (f.spec.format == field || f.spec.column == field))
@@ -6728,16 +6578,9 @@ class BranchCatalog(
           s"pass the serialized transform (${matching.map(_.spec.format).mkString(", ")})")
       val next = fields.map(f =>
         if (f.id == matching.head.id) f.copy(active = false) else f)
-      committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-        System.currentTimeMillis(), Some(PartitionSpec.formatFields(next)),
-        cur.deleteManifests, cur.seq + 1, evo = cur.evo, op = "evolve-spec",
-        lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+      Some(Change(SnapshotOp.EvolveSpec,
+        edit = _.copy(partitionSpec = Some(PartitionSpec.formatFields(next)))))
     }
-    committed
-  }
 
   /** Union two sides' partition-field registries for a publish merge.
     * Field ids are stable and never reused WITHIN a lineage, so agreeing
@@ -6785,21 +6628,10 @@ class BranchCatalog(
         PartitionSpec.SpecField(sp, i, active = true) },
       ids = cur.evo.fieldIds)
     val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during partition rewrite")
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, cur.seq + 1, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), stamped,
-        cur.schemaDdl, System.currentTimeMillis(),
-        Some(PartitionSpec.formatMulti(specs)), seq = cur.seq + 1,
-        evo = cur.evo.afterFullRewrite, op = "rewrite-partition", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    commitTable(table, branch, Some(cur), "partition rewrite") { (_, _) =>
+      Some(Change(SnapshotOp.RewritePartition, Seq(manifest), c =>
+        fullRewrite(c).copy(partitionSpec = Some(PartitionSpec.formatMulti(specs)))))
     }
-    committed
   }
 
   // ---- maintenance: compaction + snapshot expiry ------------------------
@@ -7362,15 +7194,8 @@ class BranchCatalog(
         (folded.copy(seq = ms.map(_.seq).max), ms)
       }
     val folded = foldedWithSrc.map(_._1)
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId), s"concurrent commit on $table@$branch during compaction")
-      committed = Snapshot(newId(), Some(curId), folded, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec, cur.deleteManifests, cur.seq + 1,
-        evo = cur.evo, op = "compact-manifests", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch, b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
+      Some(Change(SnapshotOp.CompactManifests, edit = _.copy(manifests = folded)))
     }
     // manifest folding keeps the files, so bloom sidecars merge over
     foldedWithSrc.foreach { case (nm, ms) => carryBloomSidecars(nm.path, ms.map(_.path)) }
@@ -7420,56 +7245,31 @@ class BranchCatalog(
           .select(fcol(BranchCatalog.PosPathCol), fcol(BranchCatalog.PosIdxCol)))
       }
     }
-    if (parts.isEmpty) { // every tombstone covers nothing: just drop them
-      var committed: Snapshot = null
-      commitRefs { refs =>
-        val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-        require(b.tables.get(table).contains(curId),
-          s"concurrent commit on $table@$branch during tombstone conversion")
-        committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-          System.currentTimeMillis(), cur.partitionSpec,
-          cur.deleteManifests.filter(_.posDelete), cur.seq + 1,
-          evo = cur.evo, op = "convert-tombstones", lin = cur.lin)
-        writeSnapshot(table, committed)
-        refs.copy(branches = refs.branches.updated(branch,
-          b.copy(tables = b.tables.updated(table, committed.id))))
+    // tombstones that cover nothing just drop
+    val posManifest = if (parts.isEmpty) None else {
+      val marked = parts.reduce(_ unionByName _).distinct()
+      val priorPos = cur.deleteManifests.filter(_.posDelete).flatMap(m => readManifest(m.path))
+      val fresh =
+        if (priorPos.isEmpty) marked
+        else marked.join(
+          readFiles(BranchCatalog.posDeleteSchema, sized(priorPos)),
+          Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
+      val posFiles = {
+        val written = writeDataFiles(table, fresh, Map.empty)
+        val (live, empty) = written.partition(_.rows > 0)
+        empty.foreach(f => fs.delete(new Path(f.path), false))
+        live
       }
-      return committed
-    }
-    val marked = parts.reduce(_ unionByName _).distinct()
-    val priorPos = cur.deleteManifests.filter(_.posDelete).flatMap(m => readManifest(m.path))
-    val fresh =
-      if (priorPos.isEmpty) marked
-      else marked.join(
-        readFiles(BranchCatalog.posDeleteSchema, sized(priorPos)),
-        Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
-    val posFiles = {
-      val written = writeDataFiles(table, fresh, Map.empty)
-      val (live, empty) = written.partition(_.rows > 0)
-      empty.foreach(f => fs.delete(new Path(f.path), false))
-      live
-    }
-    val newSeq = cur.seq + 1
-    val posManifest =
       if (posFiles.isEmpty) None
       else Some(writeManifest(table, posFiles, BranchCatalog.posDeleteSchema)
-        .copy(asOf = Some(curId), seq = newSeq,
+        .copy(asOf = Some(curId), seq = cur.seq + 1,
           keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
           posDelete = true))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during tombstone conversion")
-      committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec,
-        cur.deleteManifests.filter(_.posDelete) ++ posManifest.toSeq, newSeq,
-        evo = cur.evo, op = "convert-tombstones", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
     }
-    committed
+    commitTable(table, branch, Some(cur), "tombstone conversion") { (_, _) =>
+      Some(Change(SnapshotOp.ConvertTombstones, edit = _.copy(
+        deleteManifests = cur.deleteManifests.filter(_.posDelete) ++ posManifest.toSeq)))
+    }
   }
 
   /** Fold ALL pending POSITION-delete sidecars into ONE generation
@@ -7517,20 +7317,10 @@ class BranchCatalog(
         .copy(asOf = Some(curId), seq = newSeq,
           keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
           posDelete = true))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during position-delete compaction")
-      committed = Snapshot(newId(), Some(curId), cur.manifests, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec,
-        deleteManifests = posManifest.toSeq, seq = newSeq,
-        evo = cur.evo, op = "compact-pos-deletes", lin = cur.lin)
-      writeSnapshot(table, committed)
-      refs.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    commitTable(table, branch, Some(cur), "position-delete compaction") { (_, _) =>
+      Some(Change(SnapshotOp.CompactPosDeletes,
+        edit = _.copy(deleteManifests = posManifest.toSeq)))
     }
-    committed
   }
 
   /** Small-file compaction: rewrite table@branch's data into `targetFiles`
@@ -7546,16 +7336,8 @@ class BranchCatalog(
       rewriteScan(table, curId).repartition(targetFiles),
       specsOf(cur.partitionSpec), ids = cur.evo.fieldIds)
     val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId), s"concurrent commit on $table@$branch during compaction")
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, cur.seq + 1, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec, seq = cur.seq + 1,
-        evo = cur.evo.afterFullRewrite, op = "compact", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch, b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
+      Some(Change(SnapshotOp.Compact, Seq(manifest), fullRewrite))
     }
     carryBloomIndexes(table, cur, branch)
     committed
@@ -7614,18 +7396,8 @@ class BranchCatalog(
         else None
       }
     val freshManifest = Seq(writeManifest(table, rewritten, schema))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during compaction")
-      val (refs2, stampedFresh, lin2) = stampLineage(refs, table, cur, newSeq, freshManifest)
-      committed = Snapshot(newId(), Some(curId), carried ++ stampedFresh, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec, seq = newSeq, evo = cur.evo,
-        op = "compact", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
+      Some(Change(SnapshotOp.Compact, freshManifest, _.copy(manifests = carried)))
     }
     carryBloomIndexes(table, cur, branch)
     committed
@@ -7698,18 +7470,8 @@ class BranchCatalog(
         else None
       }
     val freshManifest = Seq(writeManifest(table, rewritten, schema))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId),
-        s"concurrent commit on $table@$branch during compaction")
-      val (refs2, stampedFresh, lin2) = stampLineage(refs, table, cur, newSeq, freshManifest)
-      committed = Snapshot(newId(), Some(curId), carried ++ stampedFresh, cur.schemaDdl,
-        System.currentTimeMillis(), cur.partitionSpec, seq = newSeq, evo = cur.evo,
-        op = "compact", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch,
-        b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
+      Some(Change(SnapshotOp.Compact, freshManifest, _.copy(manifests = carried)))
     }
     carryBloomIndexes(table, cur, branch)
     Some(committed)
@@ -8033,22 +7795,14 @@ class BranchCatalog(
         writeTableFiles(table, data, ps, sortCols = clusterBy, ids = cur.evo.fieldIds)
     }
     val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId), s"concurrent commit on $table@$branch during compaction")
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, cur.seq + 1, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec, seq = cur.seq + 1,
-        // only the UNPARTITIONED rewrite's range layout guarantees the
-        // global file order sortOrder promises; the partitioned rewrite
-        // sorts within partition VALUES (one file per value), which is
-        // exactly the per-partition contract sortWithinPartitions records
+    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
+      // only the UNPARTITIONED rewrite's range layout guarantees the
+      // global file order sortOrder promises; the partitioned rewrite
+      // sorts within partition VALUES (one file per value), which is
+      // exactly the per-partition contract sortWithinPartitions records
+      Some(Change(SnapshotOp.CompactSorted, Seq(manifest), c => fullRewrite(c).copy(
         sortOrder = if (spec.isEmpty) clusterBy else Nil,
-        sortWithinPartitions = if (spec.nonEmpty) clusterBy else Nil,
-        evo = cur.evo.afterFullRewrite, op = "compact-sorted", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch, b.copy(tables = b.tables.updated(table, committed.id))))
+        sortWithinPartitions = if (spec.nonEmpty) clusterBy else Nil)))
     }
     carryBloomIndexes(table, cur, branch)
     committed
@@ -8099,16 +7853,8 @@ class BranchCatalog(
       .drop("__z") // projection: range layout + intra-partition order survive
     val rewritten = writeTableFiles(table, arranged, Nil, ids = cur.evo.fieldIds)
     val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    var committed: Snapshot = null
-    commitRefs { refs =>
-      val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
-      require(b.tables.get(table).contains(curId), s"concurrent commit on $table@$branch during compaction")
-      val (refs2, stamped, lin2) = stampLineage(refs, table, cur, cur.seq + 1, Seq(manifest))
-      committed = Snapshot(newId(), Some(curId), stamped,
-        cur.schemaDdl, System.currentTimeMillis(), cur.partitionSpec, seq = cur.seq + 1,
-        evo = cur.evo.afterFullRewrite, op = "compact-zorder", lin = lin2)
-      writeSnapshot(table, committed)
-      refs2.copy(branches = refs.branches.updated(branch, b.copy(tables = b.tables.updated(table, committed.id))))
+    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
+      Some(Change(SnapshotOp.CompactZOrder, Seq(manifest), fullRewrite))
     }
     carryBloomIndexes(table, cur, branch)
     committed
@@ -8337,6 +8083,19 @@ object BranchCatalog {
   /** StructField metadata key Spark's parquet writer/reader use for
     * field ids (`ParquetUtils.FIELD_ID_METADATA_KEY`). */
   val FieldIdKey = "parquet.field.id"
+
+  /** Lost refs-commit races a commit retries before giving up. */
+  private val MaxCommitRetries = 50
+
+  /** What one commit changes on the head it lands on (the catalog's
+    * `commitTable`): its op tag, the FRESH data manifests it adds
+    * (stamped and appended after the child's kept manifests, which
+    * default to the parent's), and `edit` — every other difference,
+    * stated as a copy over the child the derivation rule gives
+    * (`childOf`). */
+  private final case class Change(
+      op: SnapshotOp, fresh: Seq[ManifestRef] = Nil,
+      edit: Snapshot => Snapshot = identity)
 
   /** Bounded pool for concurrent driver metadata reads (manifests,
     * footers). Daemon threads that time out when idle, so it never holds

@@ -155,6 +155,43 @@ class CdcStreamSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  test("folding pending position sidecars is changelog-silent") {
+    val (lake, cat) = register()
+    cat.createTableIfNotExists("t", slice(0, 1).schema)
+    cat.append("t", slice(0, 10))
+    cat.deleteWherePositional("t", col("doc_id") === 1) // before the stream start
+    val q = startStream(lake, "t", s"cdc$n")
+    try {
+      q.processAllAvailable()
+      cat.deleteWherePositional("t", col("doc_id") === 2)
+      cat.deleteWherePositional("t", col("doc_id") === 3)
+      q.processAllAvailable()
+      assert(sink(s"cdc$n").count() == 2)
+      val folded = cat.compactPositionDeletes("t")
+      assert(folded.op == "compact-pos-deletes" && folded.deleteManifests.size == 1)
+      q.processAllAvailable()
+      assert(sink(s"cdc$n").count() == 2, "the folded sidecar re-deletes nothing")
+    } finally q.stop()
+  }
+
+  test("converting pre-stream equality tombstones to sidecars is changelog-silent") {
+    import spark.implicits._
+    val (lake, cat) = register()
+    cat.createTableIfNotExists("t", slice(0, 1).schema)
+    cat.append("t", slice(0, 10))
+    cat.deleteKeysMOR("t", Seq(4L, 5L).toDF("doc_id"))
+    val q = startStream(lake, "t", s"cdc$n")
+    try {
+      q.processAllAvailable()
+      assert(cat.convertTombstonesToPositional("t").op == "convert-tombstones")
+      q.processAllAvailable()
+      assert(sink(s"cdc$n").count() == 0, "the tombstoned rows were deleted before the start")
+      cat.deleteWherePositional("t", col("doc_id") === 6)
+      q.processAllAvailable()
+      assert(sink(s"cdc$n").select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(6L))
+    } finally q.stop()
+  }
+
   test("equality-tombstone commits refuse; content-neutral materialization stays silent") {
     import spark.implicits._
     val (lake, cat) = register()

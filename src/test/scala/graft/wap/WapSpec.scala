@@ -12,6 +12,23 @@ class WapSpec extends SparkSpecBase {
   private def freshCatalog() =
     new BranchCatalog(spark, Files.createTempDirectory("wap-spec").toString)
 
+  test("a metadata write failing for any reason but an existing target surfaces its own I/O error") {
+    val schema = StructType.fromDDL("id BIGINT")
+    // a directory name past NAME_MAX cannot be created: the snapshot
+    // write must report that, not claim the snapshot already exists
+    val e1 = intercept[java.nio.file.FileSystemException] {
+      freshCatalog().createTableIfNotExists("t" * 300, schema)
+    }
+    assert(!e1.getMessage.contains("already exists"))
+    // the refs commit: an I/O error is not a lost race, so it neither
+    // retries nor reports one
+    val root = Files.createTempDirectory("wap-spec").resolve("r" * 300).toString
+    val e2 = intercept[java.nio.file.FileSystemException] {
+      new BranchCatalog(spark, root).createBranch("b")
+    }
+    assert(!e2.getMessage.contains("races"))
+  }
+
   test("create table, append, scan round-trips rows") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 50)
