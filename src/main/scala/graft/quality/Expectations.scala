@@ -1,16 +1,28 @@
 package graft.quality
 
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.functions._
+
+import graft.wap.MetaAgg
 
 /** Data-quality expectations — the audit step of WAP (reference
   * app.py:201-246 checks IsNull on one column; quality_app.py:42-77
   * computes row/null counts). Widened into a composable suite.
   *
-  * Every expectation compiles to a *violation-count aggregate column*, so
-  * an arbitrary suite runs as ONE Spark job in ONE pass with map-side
-  * partial aggregation — at 100 TB the audit costs a single scan no matter
-  * how many checks are attached.
+  * A suite is answered from metadata first, else by one aggregation pass.
+  * [[Audit.fromMetadata]] decides `NotNull` and `RowCountMin` from exact
+  * manifest row and null counts, with no Spark job, as the reference's
+  * PyIceberg scan plans an IsNull filter against its manifests. Any other
+  * suite goes to [[Audit.run]]: every expectation compiles to a
+  * *violation-count aggregate column*, so an arbitrary suite is ONE
+  * aggregation over ONE pass of the data with map-side partial
+  * aggregation (two Spark jobs under AQE: the map stage and the result
+  * stage) — at 100 TB the audit costs a single scan no matter how many
+  * checks are attached.
   */
 sealed trait Expect {
   def name: String
@@ -66,7 +78,7 @@ case class AuditReport(rows: Long, checks: Seq[CheckResult]) {
 
 object Audit {
 
-  /** Run the whole suite in a single aggregation pass. */
+  /** Run the whole suite in a single aggregation pass over `df`. */
   def run(df: DataFrame, expects: Seq[Expect]): AuditReport = {
     val aggs = count(lit(1)).as("__rows") +:
       expects.zipWithIndex.map { case (e, i) => coalesce(e.violations, lit(0L)).cast("long").as(s"__v$i") }
@@ -77,6 +89,47 @@ object Audit {
       CheckResult(e.name, v == 0L, v)
     })
   }
+
+  /** The suite's report from exact metadata aggregates, or None when a
+    * check needs the data. `answer` evaluates [[MetaAgg]]s over the
+    * audited rows, or refuses with None (as
+    * [[graft.wap.BranchCatalog.metaAggregateDelta]] does whenever the
+    * metadata is not exact). `NotNull(c)` counts `CountStar - CountCol(c)`
+    * violations and `RowCountMin(n)` one when `CountStar < n`; any other
+    * expectation returns None. `NotNull` is answered only for a plain
+    * column name: an expression or nested path (`upper(x)`, `s.a`) keeps
+    * the scan, and `answer` must refuse a name that is not exactly a
+    * top-level field, so an unknown or dropped column still fails
+    * analysis there. The report equals [[run]]'s over the same rows. */
+  def fromMetadata(
+      expects: Seq[Expect], answer: Seq[MetaAgg] => Option[Seq[Any]]): Option[AuditReport] = {
+    val decidable = expects.forall {
+      case NotNull(c) => plainColumn(c)
+      case _: RowCountMin => true
+      case _ => false
+    }
+    val cols = expects.collect { case NotNull(c) => c }.distinct
+    if (!decidable) None
+    else answer(MetaAgg.CountStar +: cols.map(MetaAgg.CountCol)).map { values =>
+      val counts = values.map(_.asInstanceOf[Long])
+      val rows = counts.head
+      val nonNull = cols.zip(counts.tail).toMap
+      val violations = expects.collect {
+        case NotNull(c) => rows - nonNull(c)
+        case RowCountMin(n) => if (rows < n) 1L else 0L
+      }
+      AuditReport(rows, expects.zip(violations).map { case (e, v) =>
+        CheckResult(e.name, v == 0L, v)
+      })
+    }
+  }
+
+  /** Does `expr(c)` read exactly the top-level column named `c`? */
+  private def plainColumn(c: String): Boolean =
+    Try(CatalystSqlParser.parseExpression(c)).toOption.exists {
+      case UnresolvedAttribute(Seq(n)) => n == c
+      case _ => false
+    }
 
   /** Report as a DataFrame (check_name, passed, violations) for dashboards
     * and the driver's oracle compare. */

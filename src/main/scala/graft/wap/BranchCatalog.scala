@@ -345,14 +345,14 @@ object SnapshotOp {
   val contentNeutral: Set[String] = all.filter(_.contentNeutral).map(_.name).toSet
 }
 
-/** One global aggregate [[BranchCatalog.metaAggregate]] can answer from
-  * snapshot metadata alone. */
 /** Row-lineage state of a snapshot (W73 — Iceberg v3 row tracking):
   * `next` is the catalog-assigned first-row-id high-water mark on this
   * table lineage; every commit that adds data manifests advances it by
   * their TOTAL row count (gaps allowed, ids never reused). */
 case class RowLin(enabled: Boolean = false, next: Long = 0L)
 
+/** One global aggregate [[BranchCatalog.metaAggregate]] can answer from
+  * snapshot metadata alone. */
 sealed trait MetaAgg
 object MetaAgg {
   case object CountStar extends MetaAgg
@@ -2189,11 +2189,13 @@ class BranchCatalog(
     * avoids the job-launch latency. Either way the driver never
     * materializes per-file stats for a large table, and the planned files
     * reach Spark through [[readFiles]], never through a listing. */
-  def scanSnapshot(table: String, snapshotId: String, filter: Option[Column] = None): DataFrame = {
-    val snap = loadSnapshot(table, snapshotId)
+  def scanSnapshot(table: String, snapshotId: String, filter: Option[Column] = None): DataFrame =
+    scanOf(table, loadSnapshot(table, snapshotId), filter)
+
+  /** The rows of `snap`: its tombstones and sidecars applied when it has any. */
+  private def scanOf(table: String, snap: Snapshot, filter: Option[Column]): DataFrame =
     if (snap.deleteManifests.isEmpty) scanPlain(snap, filter)
     else scanWithDeletes(table, snap, filter)
-  }
 
   /** The tombstone-free scan path (see [[scanSnapshot]] for the tiering):
     * the planned files read through [[readFiles]]. `withLineage` attaches
@@ -4313,21 +4315,45 @@ class BranchCatalog(
     *    fine);
     *  - types whose stats don't fold (decimal, binary, nested).
     * Empty tables / all-null columns answer (count 0 / NULL extremum),
-    * matching SQL semantics. */
+    * matching SQL semantics; a column the snapshot's schema does not
+    * name (unknown, dropped, nested path) refuses. */
   def metaAggregate(
       table: String, snapshotId: String, aggs: Seq[MetaAgg]): Option[Seq[Any]] = {
     val snap = loadSnapshot(table, snapshotId)
+    metaAggregateOf(table, snap, snap.manifests, aggs)
+  }
+
+  /** [[metaAggregate]] over only the data `branch` added since it forked
+    * from main ([[scanBranchDelta]]'s rows): the WAP audit's metadata
+    * answer. Same refusals — in particular any pending tombstone or
+    * position sidecar on the branch head refuses, so a delta whose rows
+    * the head suppresses is always counted by the scan. */
+  def metaAggregateDelta(
+      table: String, branch: String, aggs: Seq[MetaAgg]): Option[Seq[Any]] = {
+    val (head, delta) = branchDelta(table, branch)
+    metaAggregateOf(table, head, delta, aggs)
+  }
+
+  /** The one exactness proof behind [[metaAggregate]] and
+    * [[metaAggregateDelta]]: `aggs` over the rows of `manifests`, read
+    * under `snap`'s schema and tombstones. */
+  private def metaAggregateOf(table: String, snap: Snapshot,
+      manifests: Seq[ManifestRef], aggs: Seq[MetaAgg]): Option[Seq[Any]] = {
     if (snap.deleteManifests.nonEmpty) return None
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val live = snap.manifests.filter(_.rows > 0)
+    val live = manifests.filter(_.rows > 0)
     if (live.exists(_.statsV < 2)) {
       if (aggs.forall(_ == MetaAgg.CountStar)) // row sums are exact at any statsV
-        return Some(aggs.map(_ => snap.manifests.map(_.rows).sum))
+        return Some(aggs.map(_ => manifests.map(_.rows).sum))
       return None
     }
-    val totalRows = snap.manifests.map(_.rows).sum
+    val totalRows = manifests.map(_.rows).sum
+    // an unknown name would otherwise "answer" whenever no live manifest
+    // exists to refuse it (an empty delta) or a dropped column's old
+    // stats survive in the manifests
     def nullsOf(c: String): Option[Long] =
-      if (live.forall(_.nullCounts.contains(c))) Some(live.map(_.nullCounts(c)).sum)
+      if (schema.fieldNames.contains(c) && live.forall(_.nullCounts.contains(c)))
+        Some(live.map(_.nullCounts(c)).sum)
       else None
     def extremum(c: String, takeMin: Boolean): Option[Any] = for {
       f <- schema.fields.find(_.name == c)
@@ -4911,21 +4937,27 @@ class BranchCatalog(
     * is what makes write-audit-publish O(batch) instead of O(table) —
     * at 100 TB, auditing every commit by re-scanning the whole table is
     * the difference between seconds and hours. Pure metadata diff; no
-    * file listing. */
+    * file listing. The delta is read as the head snapshot restricted to
+    * the delta manifests, so the head's pending tombstones and position
+    * sidecars apply to it: rows the branch deleted are not in the delta.
+    * [[Wap]]'s audit answers from [[metaAggregateDelta]] first and runs
+    * an aggregate over this scan only when the metadata cannot answer
+    * exactly. */
   def scanBranchDelta(table: String, branch: String): DataFrame = {
-    val refs = currentRefs()
-    val b = refs.branches.getOrElse(branch, sys.error(s"no branch $branch"))
+    val (head, delta) = branchDelta(table, branch)
+    scanOf(table, head.copy(manifests = delta), None)
+  }
+
+  /** The branch head of `table` and the data manifests it holds that its
+    * fork base on main does not — the one definition of a branch delta. */
+  private def branchDelta(table: String, branch: String): (Snapshot, Seq[ManifestRef]) = {
+    val b = currentRefs().branches.getOrElse(branch, sys.error(s"no branch $branch"))
     val headId = b.tables.getOrElse(table, sys.error(s"no table $table on $branch"))
     val head = loadSnapshot(table, headId)
     val baseManifests = b.baseOfMain.get(table)
       .map(loadSnapshot(table, _).manifests.map(_.path).toSet)
       .getOrElse(Set.empty)
-    val delta = head.manifests.filterNot(m => baseManifests.contains(m.path))
-    val schema = StructType.fromDDL(head.schemaDdl)
-    val files = delta.flatMap(m => readManifest(m.path))
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else readFiles(BranchCatalog.readSchema(schema, head.evo), sized(files))
+    (head, head.manifests.filterNot(m => baseManifests.contains(m.path)))
   }
 
   /** Incremental read between two snapshots (the Iceberg

@@ -123,9 +123,20 @@ object AuditScope {
   *
   *  1. WRITE: create table if missing; fork an isolated branch from main;
   *     append the batch there. Main readers cannot see it.
-  *  2. AUDIT: scan the table back *in the branch* (exactly as the
+  *  2. AUDIT: read the table back *in the branch* (exactly as the
   *     reference re-reads via the catalog rather than trusting the input
-  *     batch, app.py:210-215) and run the expectation suite in one pass.
+  *     batch, app.py:210-215), metadata first: a suite of `NotNull` and
+  *     `RowCountMin` checks is answered from the audited manifests' exact
+  *     row and null counts ([[Audit.fromMetadata]] over
+  *     [[BranchCatalog.metaAggregateDelta]], or over
+  *     [[BranchCatalog.metaAggregate]] of the branch head in full-table
+  *     scope) with no Spark job, as the reference's PyIceberg scan plans
+  *     its IsNull filter against manifest null counts. Any other check,
+  *     a non-exact manifest (imported files) or a pending tombstone or
+  *     position sidecar on the branch runs the suite as one aggregation
+  *     pass over the scanned scope instead; the delta scan applies the
+  *     branch's sidecars, so rows the branch deleted are not audited.
+  *     Cross checks always read the scanned scope.
   *  3. PUBLISH: on pass, merge the branch into main (pure metadata
   *     commit) and drop it; on fail, leave the branch for inspection and
   *     fire the alerter.
@@ -282,11 +293,16 @@ object Wap {
       auditScope: AuditScope, alerter: Alerter,
       dropBranchOnPublish: Boolean,
       epochStamp: Option[(String, Long)] = None): WapResult = {
-    val audited = auditScope match {
-      case AuditScope.Delta => catalog.scanBranchDelta(table, branchName)
-      case AuditScope.FullTable => catalog.scan(table, branchName)
+    // the scan is planned even when the metadata answers (planning reads
+    // metadata only): it is the fallback's and the cross checks' input
+    val (audited, answer) = auditScope match {
+      case AuditScope.Delta => (catalog.scanBranchDelta(table, branchName),
+        (aggs: Seq[MetaAgg]) => catalog.metaAggregateDelta(table, branchName, aggs))
+      case AuditScope.FullTable => (catalog.scan(table, branchName),
+        (aggs: Seq[MetaAgg]) => catalog.snapshotIdOf(table, branchName)
+          .flatMap(catalog.metaAggregate(table, _, aggs)))
     }
-    val base = Audit.run(audited, checks)
+    val base = Audit.fromMetadata(checks, answer).getOrElse(Audit.run(audited, checks))
     val report = base.copy(checks = base.checks ++ crossChecks.map(_.run(audited)))
 
     if (report.passed) {

@@ -16,6 +16,25 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   protected lazy val duckdbAvailable: Boolean = SparkSpecBase.duckdb
 
   override def afterAll(): Unit = {} // shared session — never stop it
+
+  /** Spark jobs submitted while `body` runs on this thread. Job events
+    * reach the status tracker asynchronously, so a control job is run
+    * last in the same group: once it shows, every earlier one has. */
+  protected def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try {
+      val r = body
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val seen = sc.statusTracker.getJobIdsForGroup(group).length
+      assert(seen >= 1, "the control job never reached the status tracker")
+      (r, seen - 1)
+    } finally sc.clearJobGroup()
+  }
 }
 
 object SparkSpecBase {

@@ -1,7 +1,6 @@
 package graft.wap
 
 import java.nio.file.Files
-import java.util.UUID
 
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, Row}
@@ -36,25 +35,6 @@ class ManifestReadSpec extends SparkSpecBase {
 
   private def headFiles(cat: BranchCatalog): Seq[DataFileMeta] =
     cat.filesOf(cat.snapshotMeta("t", cat.snapshotIdOf("t").get).copy(deleteManifests = Nil))
-
-  /** Spark jobs submitted while `body` runs on this thread. Job events
-    * reach the status tracker asynchronously, so a control job is run
-    * last in the same group: once it shows, every earlier one has. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${UUID.randomUUID()}"
-    sc.setJobGroup(group, "job count", interruptOnCancel = false)
-    try {
-      val r = body
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      val seen = sc.statusTracker.getJobIdsForGroup(group).length
-      assert(seen >= 1, "the control job never reached the status tracker")
-      (r, seen - 1)
-    } finally sc.clearJobGroup()
-  }
 
   private def relations(df: DataFrame): Seq[HadoopFsRelation] =
     df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }

@@ -193,6 +193,27 @@ class WapSpec extends SparkSpecBase {
     assert(r2.report.failed.head.violations == 10)
   }
 
+  test("delta audit leaves out rows the branch deleted by position, then publishes") {
+    val cat = freshCatalog()
+    def rows(lo: Long, nulls: Long) = spark.range(lo, lo + 100, 1, 2).select(col("id"),
+      when(col("id") < lo + nulls, lit(null).cast("string"))
+        .otherwise(concat(lit("v"), col("id"))).as("x"))
+    cat.createTableIfNotExists("t", rows(0, 0).schema)
+    cat.append("t", rows(0, 0))
+    cat.createBranch("b")
+    cat.append("t", rows(100, 5), "b")
+    // positional DML on the branch, audit, publish (W78)
+    cat.deleteWherePositional("t", col("x").isNull, "b")
+    assert(cat.scanBranchDelta("t", "b").count() == 95)
+    val alerter = new BufferAlerter
+    val r = Wap.auditAndPublish(cat, "t", "b", Seq(NotNull("x")), Nil,
+      AuditScope.Delta, alerter, dropBranchOnPublish = true)
+    assert(r.published && alerter.alerts.isEmpty, s"refused: ${r.report}")
+    assert(r.report.rows == 95)
+    assert(cat.scan("t").count() == 195)
+    assert(cat.scan("t").filter(col("x").isNull).count() == 0)
+  }
+
   test("audit suite runs as a single job and reports per-check violations") {
     val orders = Tables.orders(spark, sfDir)
     val report = Audit.run(orders, Seq(
