@@ -8,35 +8,31 @@ import org.apache.spark.sql.graft.Bridge
 import graft.functions._
 
 /** SQL registration for graft's native expressions (SURVEY §3) and the
-  * catalog scan-lowering rules, so every operator AND every lake table
-  * is reachable from `spark.sql` as well as the Column API:
+  * catalog's SQL rules, so every operator AND every lake table is
+  * reachable from `spark.sql` as well as the Column API:
   *
   *  - at session BUILD time: `spark.sql.extensions=graft.GraftExtensions`
   *    or `SparkSession.builder().withExtensions(new GraftExtensions)`
   *  - on an EXISTING session: `GraftFunctions.register(spark)` (functions
   *    only — optimizer rules can only bind at session build, which is why
-  *    [[GraftSession.configure]] sets the extensions conf; without them
-  *    catalog tables still read correctly through the V1Scan fallback)
+  *    [[GraftSession.configure]] sets the extensions conf)
+  *
+  * Lake-table reads need no extension: every session plans them through
+  * the catalog's connector scan ([[graft.sql.GraftTable.newScanBuilder]]).
+  * The extensions add the filtered metadata aggregate, job-free planning
+  * of pushed metadata aggregates, SQL UPDATE/MERGE, branch-versioned
+  * views and the partition-evolution DDL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name), builder))
     }
-    // filter-adjacent lowering inside the operator fixed point (predicates
-    // reach the manifest pruner), then a once-per-query sweep for bare
-    // relations before V2 scan planning — see GraftScanLowering's scaladoc
-    // the agg rule must see Aggregate(Filter(rel)) BEFORE the scan rule
-    // lowers the Filter inside the same fixed-point batch (W81 filtered
-    // metadata aggregates); refusals are memoized so re-iterations are
-    // metadata-free
+    // filtered metadata-only aggregates (W81) — the one aggregate shape
+    // DSv2 pushdown cannot reach (see GraftAggLowering)
     ext.injectOptimizerRule(new graft.sql.GraftAggLowering(_))
-    ext.injectOptimizerRule(new graft.sql.GraftScanLowering(_))
-    // metadata-only global aggregates must see the bare relation, so the
-    // agg rule is injected BEFORE the bare-relation sweep (pre-CBO rules
-    // run in injection order)
-    ext.injectPreCBORule(new graft.sql.GraftAggLowering(_))
-    ext.injectPreCBORule(new graft.sql.GraftBareScanLowering(_))
+    // a pushed metadata aggregate answers on the driver, with no Spark job
+    ext.injectPlannerStrategy(_ => graft.sql.GraftMetaAggStrategy)
     // SQL UPDATE / MERGE INTO on catalog tables lower onto the native
     // row-level ops (updateWhere / mergeInto) — see GraftDmlLowering
     ext.injectResolutionRule(new graft.sql.GraftDmlLowering(_))

@@ -36,7 +36,7 @@ object GraftSession {
       b: SparkSession.Builder,
       shufflePartitions: Int = 32
   ): SparkSession.Builder = b
-    // native functions + catalog scan lowering (optimizer rules bind at
+    // native functions + catalog SQL rules (optimizer rules bind at
     // session build only; GraftTableCatalog instances are configured per
     // catalog name at runtime via spark.sql.catalog.<name>[.root])
     .config("spark.sql.extensions", mergedExtensions(b))

@@ -296,7 +296,7 @@ object SparkEntry {
     "wap_pos_update" ->
       """SELECT (SELECT count(*) FROM documents WHERE doc_id < 200) AS n_rows, (SELECT CAST(sum(n_chars + CASE WHEN n_chars % 7 = 0 THEN 10000 ELSE 0 END) AS BIGINT) FROM documents WHERE doc_id < 200) AS sum_chars, (SELECT count(*) FROM documents WHERE doc_id < 20) AS n_xx, (SELECT count(*) FROM documents WHERE doc_id < 200 AND n_chars % 7 = 0) AS rows_updated_1, (SELECT count(*) FROM documents WHERE doc_id < 20) AS rows_updated_2, true AS zero_rewrites, true AS materialized_clean""",
     "wap_agg_groupby" ->
-      """SELECT lang, count(*) AS n, count(source) AS n_src, CAST(min(doc_id) AS BIGINT) AS min_id, CAST(max(n_chars) AS BIGINT) AS max_chars, CAST(sum(n_chars) AS BIGINT) AS sum_chars, CAST(sum(n_chars) AS DOUBLE) / count(n_chars) AS avg_chars, true AS ext_meta_only, true AS v2_pushed, true AS paths_agree, true AS zero_data_io FROM documents WHERE doc_id < 260 GROUP BY lang""",
+      """SELECT lang, count(*) AS n, count(source) AS n_src, CAST(min(doc_id) AS BIGINT) AS min_id, CAST(max(n_chars) AS BIGINT) AS max_chars, CAST(sum(n_chars) AS BIGINT) AS sum_chars, CAST(sum(n_chars) AS DOUBLE) / count(n_chars) AS avg_chars, true AS v2_pushed, true AS zero_data_io FROM documents WHERE doc_id < 260 GROUP BY lang""",
     "wap_agg_filtered" ->
       """SELECT (SELECT count(*) FROM documents WHERE doc_id < 260 AND lang = 'en') AS n, (SELECT CAST(min(doc_id) AS BIGINT) FROM documents WHERE doc_id < 260 AND lang = 'en') AS min_id, (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents WHERE doc_id < 260 AND lang = 'en') AS sum_chars, (SELECT CAST(sum(n_chars) AS DOUBLE) / count(n_chars) FROM documents WHERE doc_id < 260 AND lang = 'en') AS avg_chars, (SELECT count(*) FROM documents WHERE doc_id < 260 AND lang <> 'en') AS grouped_total, true AS filtered_meta_only, true AS grouped_meta_only, true AS fallback_sound""",
     "wap_pos_merge" ->
@@ -316,7 +316,7 @@ object SparkEntry {
     "wap_stream_sink" ->
       """SELECT (SELECT count(*) FROM documents WHERE doc_id < 200) AS n_rows, (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents WHERE doc_id < 200) AS sum_chars, (SELECT count(DISTINCT doc_id) FROM documents WHERE doc_id < 200) AS n_docs, (SELECT count(*) FROM documents WHERE doc_id < 150 OR (doc_id >= 200 AND doc_id < 300)) AS q_rows, CAST(1 AS BIGINT) AS n_stream_keys, CAST(2 AS BIGINT) AS last_epoch""",
     "wap_sql_scan" ->
-      """SELECT (SELECT count(*) FROM documents WHERE doc_id >= 50 AND doc_id < 200) AS n_rows, (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents WHERE doc_id >= 50 AND doc_id < 200) AS sum_chars, (SELECT count(*) FROM documents WHERE doc_id < 100) AS v1_rows, (SELECT count(*) FROM documents WHERE doc_id < 215) AS wip_rows, true AS lowered_native, true AS manifest_pruned""",
+      """SELECT (SELECT count(*) FROM documents WHERE doc_id >= 50 AND doc_id < 200) AS n_rows, (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents WHERE doc_id >= 50 AND doc_id < 200) AS sum_chars, (SELECT count(*) FROM documents WHERE doc_id < 100) AS v1_rows, (SELECT count(*) FROM documents WHERE doc_id < 215) AS wip_rows, true AS native_batch_scan, true AS manifest_pruned""",
     "wap_meta_tables" ->
       """SELECT CAST(3 AS BIGINT) AS n_snapshots, (SELECT count(*) FROM documents WHERE doc_id < 200) AS head_rows, CAST(2 AS BIGINT) AS n_files, (SELECT count(*) FROM documents WHERE doc_id < 200) AS rows_from_files, CAST(3 AS BIGINT) AS n_heads, true AS head_current""",
     "wap_sql_dml" ->
@@ -336,7 +336,7 @@ object SparkEntry {
     "wap_sql_changes" ->
       """SELECT (SELECT count(*) FROM documents WHERE doc_id >= 100 AND doc_id < 200) AS delta_rows, (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents WHERE doc_id >= 100 AND doc_id < 200) AS delta_chars, (SELECT count(*) FROM documents WHERE doc_id >= 100 AND doc_id < 160) AS window_rows, (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents WHERE doc_id >= 100 AND doc_id < 160) AS window_chars, CAST(0 AS BIGINT) AS empty_rows, true AS window_pruned""",
     "wap_agg_pushdown" ->
-      """SELECT (SELECT count(*) FROM documents WHERE doc_id < 200) AS n_rows, (SELECT CAST(min(doc_id) AS BIGINT) FROM documents WHERE doc_id < 200) AS min_id, (SELECT CAST(max(doc_id) AS BIGINT) FROM documents WHERE doc_id < 200) AS max_id, (SELECT min(lang) FROM documents WHERE doc_id < 200) AS min_lang, (SELECT max(lang) FROM documents WHERE doc_id < 200) AS max_lang, (SELECT count(lang) FROM documents WHERE doc_id < 200) AS n_lang, true AS ext_meta_only, true AS v2_pushed, true AS paths_agree, true AS zero_data_io""",
+      """SELECT (SELECT count(*) FROM documents WHERE doc_id < 200) AS n_rows, (SELECT CAST(min(doc_id) AS BIGINT) FROM documents WHERE doc_id < 200) AS min_id, (SELECT CAST(max(doc_id) AS BIGINT) FROM documents WHERE doc_id < 200) AS max_id, (SELECT min(lang) FROM documents WHERE doc_id < 200) AS min_lang, (SELECT max(lang) FROM documents WHERE doc_id < 200) AS max_lang, (SELECT count(lang) FROM documents WHERE doc_id < 200) AS n_lang, true AS v2_pushed, true AS zero_data_io""",
     // __EXPORT_DIR__ is substituted by Verify at dump time with the
     // actual export dir for the SF being verified (WapQueries.exportDir)
     "wap_export" ->

@@ -1149,10 +1149,11 @@ object WapQueries {
     * read it back ENTIRELY through `spark.sql` — a predicated aggregate
     * on main, a `VERSION AS OF` read of the first commit, and a branch
     * namespace read — plus two plan-derived gates: the filtered SQL read
-    * lowered onto a NATIVE parquet scan (no DSv2 row boundary) and its
-    * file list was manifest-pruned below the table's file count before
-    * Spark listed anything. Oracle: plain SQL over the source slices
-    * (time travel = the first commit's predicate). */
+    * plans the connector's NATIVE batch scan (graft file splits read as
+    * columnar batches — no per-row DSv2 boundary) and its planned files
+    * were manifest-pruned below the table's file count. Oracle: plain SQL
+    * over the source slices (time travel = the first commit's
+    * predicate). */
   def wapSqlScan(spark: SparkSession, dir: String): DataFrame = {
     val tmp = Files.createTempDirectory("graft-wap-sql").toString
     val cat = new BranchCatalog(spark, tmp)
@@ -1179,38 +1180,31 @@ object WapQueries {
     val filtered = spark.sql(
       s"SELECT count(*) AS n_rows, CAST(sum(n_chars) AS BIGINT) AS sum_chars " +
         s"FROM $lake.main.documents WHERE doc_id >= 50")
-    // gates on the OPTIMIZED LOGICAL plan (the physical root is an AQE
-    // wrapper whose subtree collect() does not traverse): lowering left a
-    // native file relation and no DSv2 scan, and its file list was
-    // manifest-pruned below the table's file count before Spark listed
-    // anything (doc_id >= 50 proves half the clustered files absent)
-    val optimized = filtered.queryExecution.optimizedPlan
-    val fileRels = optimized.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
-    }.collect { case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation => f }
-    val loweredNative = fileRels.nonEmpty && optimized.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => s
-    }.isEmpty
-    val manifestPruned =
-      fileRels.exists(_.location.inputFiles.length < cat.dataFiles("documents").size)
+    // gates on the physical plan: the read is a batch scan over graft
+    // file splits that reads columnar, and its planned files were
+    // manifest-pruned below the table's file count (doc_id >= 50 proves
+    // half the clustered files absent)
+    val scans = batchScans(filtered)
+    val parts = scans.flatMap(_.inputPartitions)
+    val nativeBatchScan = scans.nonEmpty && scans.forall(_.supportsColumnar) &&
+      parts.nonEmpty && parts.forall(_.isInstanceOf[graft.sql.GraftFilesPartition])
+    val manifestPruned = plannedFiles(filtered) < cat.dataFiles("documents").size
 
     filtered
       .crossJoin(spark.sql(
         s"SELECT count(*) AS v1_rows FROM $lake.main.documents VERSION AS OF '${s1.id}'"))
       .crossJoin(spark.sql(s"SELECT count(*) AS wip_rows FROM $lake.wip.documents"))
       .select(col("n_rows"), col("sum_chars"), col("v1_rows"), col("wip_rows"),
-        lit(loweredNative).as("lowered_native"), lit(manifestPruned).as("manifest_pruned"))
+        lit(nativeBatchScan).as("native_batch_scan"),
+        lit(manifestPruned).as("manifest_pruned"))
   }
 
   /** Metadata-only global aggregates end-to-end (W44): `SELECT count(*),
     * count(c), min(c), max(c) FROM t` answered from per-manifest stats
-    * with ZERO data-file IO on BOTH read paths — the extension-session
-    * rule ([[graft.sql.GraftAggLowering]]: plan collapses to a one-row
-    * projection, no relation at all) and the vanilla DSv2
-    * `SupportsPushDownAggregates` route ([[graft.sql.GraftScanBuilder]]:
-    * complete pushdown onto the one-row metadata scan). The zero-IO
-    * claim is proven PHYSICALLY: the data files are deleted from disk
+    * with ZERO data-file IO — the DSv2 `SupportsPushDownAggregates` route
+    * ([[graft.sql.GraftScanBuilder]]: complete pushdown onto the local
+    * metadata scan, no batch scan planned). The zero-IO claim is proven
+    * PHYSICALLY: the data files are deleted from disk
     * and the aggregates still answer. Bounds survive manifest folding
     * (compactManifests runs mid-flow). Oracle: the same aggregates in
     * DuckDB over documents with doc_id < 200. */
@@ -1231,27 +1225,9 @@ object WapQueries {
         s"CAST(max(doc_id) AS BIGINT) AS max_id, min(lang) AS min_lang, " +
         s"max(lang) AS max_lang, count(lang) AS n_lang FROM $lake.main.documents"
 
-    // extension path: the optimized plan must hold NO relation at all
-    // (one-row projection of literals)
-    val ext = spark.sql(sqlText)
-    val extMetaOnly = ext.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => s
-    }.isEmpty
-    val extRow = ext.collect().head
-
-    // vanilla connector path: complete pushdown onto the metadata scan
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    val (v2Row, v2Pushed) =
-      try {
-        val q = spark.sql(sqlText)
-        val pushed = q.queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.scan
-        }.exists(_.description().contains("PushedAggregation: metadata-only"))
-        (q.collect().head, pushed)
-      } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    val q = spark.sql(sqlText)
+    val v2Pushed = metaAggPushed(q)
+    val row = q.collect().head
 
     // the zero-IO proof: data files physically gone, metadata still answers
     def wipe(f: java.io.File): Unit = {
@@ -1261,24 +1237,46 @@ object WapQueries {
     val ghostRow = spark.sql(sqlText).collect().head
 
     import spark.implicits._
-    Seq((extRow.getLong(0), extRow.getLong(1), extRow.getLong(2),
-      extRow.getString(3), extRow.getString(4), extRow.getLong(5)))
+    Seq((row.getLong(0), row.getLong(1), row.getLong(2),
+      row.getString(3), row.getString(4), row.getLong(5)))
       .toDF("n_rows", "min_id", "max_id", "min_lang", "max_lang", "n_lang")
       .select(col("*"),
-        lit(extMetaOnly).as("ext_meta_only"),
         lit(v2Pushed).as("v2_pushed"),
-        lit(extRow == v2Row).as("paths_agree"),
-        lit(extRow == ghostRow).as("zero_data_io"))
+        lit(row == ghostRow).as("zero_data_io"))
   }
+
+  /** The DSv2 batch scans of `df`'s physical plan, looking through the
+    * AQE wrapper (whose subtree `collect` does not traverse). */
+  private def batchScans(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
+    (df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }).collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+
+  /** How many data files the graft batch scans of `df` planned. */
+  private def plannedFiles(df: DataFrame): Int =
+    batchScans(df).flatMap(_.inputPartitions)
+      .map { case graft.sql.GraftFilesPartition(fs) => fs.size; case _ => 0 }.sum
+
+  /** The metadata-only plan gate of the aggregate-pushdown queries: the
+    * whole aggregate was pushed into the graft scan builder (its scan
+    * reports the metadata-only aggregation) and no batch scan was
+    * planned. */
+  private def metaAggPushed(q: DataFrame): Boolean =
+    q.queryExecution.optimizedPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s.scan
+    }.exists(_.description().contains("PushedAggregation: metadata-only")) &&
+      batchScans(q).isEmpty
 
   /** Metadata-only GROUP BY aggregates (W79): `SELECT lang, count(*),
     * count(source), min/max(...) FROM t GROUP BY lang` on an
     * identity-partitioned table answered from manifest-entry stats —
     * every file is partition-homogeneous by construction, so the fold
-    * splits per group losslessly with ZERO data IO, on BOTH read paths
-    * (extension [[graft.sql.GraftAggLowering]] → LocalRelation; vanilla
-    * connector → multi-row [[graft.sql.GraftMetaAggScan]]). The
-    * zero-IO proof deletes the data files and re-answers. Oracle: the
+    * splits per group losslessly with ZERO data IO (complete DSv2
+    * pushdown onto the multi-row local metadata scan). The zero-IO proof
+    * deletes the data files and re-answers. Oracle: the
     * same GROUP BY in plain SQL. */
   def wapAggGroupby(spark: SparkSession, dir: String): DataFrame = {
     val tmp = Files.createTempDirectory("graft-wap-aggby").toString
@@ -1301,24 +1299,9 @@ object WapQueries {
         s"sum(n_chars) AS sum_chars, avg(n_chars) AS avg_chars " +
         s"FROM $lake.main.documents GROUP BY lang"
 
-    val ext = spark.sql(sqlText)
-    val extMetaOnly = ext.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => s
-    }.isEmpty
-    val extRows = ext.collect().toSeq
-
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    val (v2Rows, v2Pushed) =
-      try {
-        val q = spark.sql(sqlText)
-        val pushed = q.queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.scan
-        }.exists(_.description().contains("PushedAggregation: metadata-only"))
-        (q.collect().toSeq, pushed)
-      } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    val q = spark.sql(sqlText)
+    val v2Pushed = metaAggPushed(q)
+    val rows = q.collect().toSeq
 
     def wipe(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
@@ -1327,14 +1310,12 @@ object WapQueries {
     val ghostRows = spark.sql(sqlText).collect().toSeq
 
     import spark.implicits._
-    extRows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+    rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6)))
       .toDF("lang", "n", "n_src", "min_id", "max_chars", "sum_chars", "avg_chars")
       .select(col("*"),
-        lit(extMetaOnly).as("ext_meta_only"),
         lit(v2Pushed).as("v2_pushed"),
-        lit(extRows.toSet == v2Rows.toSet).as("paths_agree"),
-        lit(extRows.toSet == ghostRows.toSet).as("zero_data_io"))
+        lit(rows.toSet == ghostRows.toSet).as("zero_data_io"))
   }
 
   /** Filtered metadata aggregates (W81): a WHERE over the
@@ -1421,11 +1402,9 @@ object WapQueries {
         case p => p
       }).collect { case s: ShuffleExchangeLike => s }.isEmpty
 
-    val saved = Seq("spark.graft.sql.lowering",
-      "spark.sql.sources.v2.bucketing.enabled",
+    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
       .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.graft.sql.lowering", "false")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1479,11 +1458,9 @@ object WapQueries {
     spark.conf.set(s"spark.sql.catalog.$lake", classOf[graft.sql.GraftTableCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$lake.root", tmp)
 
-    val saved = Seq("spark.graft.sql.lowering",
-      "spark.sql.sources.v2.bucketing.enabled",
+    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
       .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.graft.sql.lowering", "false")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1869,40 +1846,19 @@ object WapQueries {
     val lake = "lake_" + tmp.replaceAll("[^a-zA-Z0-9]", "").takeRight(16)
     spark.conf.set(s"spark.sql.catalog.$lake", classOf[graft.sql.GraftTableCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$lake.root", tmp)
-    def plannedFiles(df: DataFrame): Int = {
-      val plan = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      plan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.flatMap(_.inputPartitions)
-        .map { case graft.sql.GraftFilesPartition(fs) => fs.size; case _ => 0 }.sum
-    }
-    // the V1 lowering fast path bypasses DSv2 pushdown — turn it off so
-    // this row exercises (and pins) the real TopN/Limit connector path,
-    // exactly like LimitPushdownSpec
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val asc = spark.sql(
-        s"SELECT doc_id, n_chars FROM $lake.main.documents ORDER BY doc_id LIMIT 5")
-      val desc = spark.sql(
-        s"SELECT doc_id, n_chars FROM $lake.main.documents ORDER BY doc_id DESC LIMIT 5")
-      val plain = spark.sql(s"SELECT doc_id FROM $lake.main.documents LIMIT 5")
-      val gates = (plannedFiles(asc) == 1, plannedFiles(desc) == 1,
-        plannedFiles(plain) == 1 && plain.collect().length == 5)
-      asc.withColumn("ord", lit("asc"))
-        .unionByName(desc.withColumn("ord", lit("desc")))
-        .select(col("doc_id"), col("n_chars"), col("ord"),
-          lit(gates._1).as("asc_one_file"),
-          lit(gates._2).as("desc_one_file"),
-          lit(gates._3).as("plain_limit_prefix"))
-        // materialize BEFORE the conf flips back: the driver's noop/
-        // parquet write must not re-plan through the lowered path with
-        // stale gate literals
-        .trackedLocalCheckpoint()
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    val asc = spark.sql(
+      s"SELECT doc_id, n_chars FROM $lake.main.documents ORDER BY doc_id LIMIT 5")
+    val desc = spark.sql(
+      s"SELECT doc_id, n_chars FROM $lake.main.documents ORDER BY doc_id DESC LIMIT 5")
+    val plain = spark.sql(s"SELECT doc_id FROM $lake.main.documents LIMIT 5")
+    val gates = (plannedFiles(asc) == 1, plannedFiles(desc) == 1,
+      plannedFiles(plain) == 1 && plain.collect().length == 5)
+    asc.withColumn("ord", lit("asc"))
+      .unionByName(desc.withColumn("ord", lit("desc")))
+      .select(col("doc_id"), col("n_chars"), col("ord"),
+        lit(gates._1).as("asc_one_file"),
+        lit(gates._2).as("desc_one_file"),
+        lit(gates._3).as("plain_limit_prefix"))
   }
 
   /** Orphan-file removal end-to-end (W53): two committed batches plus a

@@ -249,11 +249,8 @@ class GraftMicroBatchStream(
     GraftPartitions.binPack(spark, files)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val readFunc = Bridge.parquetReadFunc(spark, tableSchema, requiredSchema, pushed)
-    new GraftReaderFactory(readFunc,
-      Bridge.parquetBatchReadFunc(spark, tableSchema, requiredSchema, pushed))
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftReaderFactory(spark, tableSchema, requiredSchema, pushed)
 
   /** Checkpoint state lives with Spark; the only driver state to drop is
     * the initial-load anchor's cached file list — once the batch ending
@@ -274,33 +271,40 @@ class GraftMicroBatchStream(
   * micro-batch stream and the native batch scan. */
 private[sql] object GraftPartitions {
 
-  /** Pack `files` into partitions by byte size (maxPartitionBytes budget
-    * + per-file open cost, FileSourceScanExec's sizing): one task per
-    * FILE would launch millions of tiny tasks on a 100 TB table. Order
-    * is preserved. A recorded size of 0 (pre-r8 metadata) falls back to
-    * one getFileStatus call. */
+  /** Pack `files` into partitions by byte size: one task per FILE would
+    * launch millions of tiny tasks on a 100 TB table. The split budget is
+    * Spark's own `FilePartition.maxSplitBytes` (maxPartitionBytes, shrunk
+    * to total bytes over the default parallelism so a small table still
+    * spreads over every core) and the packing rule is
+    * `FilePartition.getFilePartitions`' (a partition closes when the next
+    * file's bytes would overflow it; each file also costs the open cost),
+    * so a catalog read plans as many tasks as a `spark.read.parquet` of
+    * the same files. Files are never split, and order is preserved. A
+    * recorded size of 0 (pre-r8 metadata) falls back to one
+    * getFileStatus call. */
   def binPack(spark: SparkSession, files: Seq[(String, Long)]): Array[InputPartition] =
     packs(spark, files).map(GraftFilesPartition(_): InputPartition).toArray
 
   /** The raw size-packed file groups, for callers wrapping them in a
     * different partition shape (the CDC stream's typed partitions). */
   def packs(spark: SparkSession, files: Seq[(String, Long)]): Seq[Seq[(String, Long)]] = {
-    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf
-    val maxBytes = conf.filesMaxPartitionBytes
-    val openCost = conf.filesOpenCostInBytes
+    val openCost = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.filesOpenCostInBytes
+    val sized = files.map { case (path, bytes) =>
+      path -> (if (bytes > 0) bytes else fileLength(spark, path))
+    }
+    val maxBytes = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(spark, sized.map(_._2 + openCost).sum)
     val bins = Vector.newBuilder[Seq[(String, Long)]]
     var bin = Vector.newBuilder[(String, Long)]
     var binBytes = 0L
     var binEmpty = true
-    for ((path, bytes) <- files) {
-      val len = if (bytes > 0) bytes else fileLength(spark, path)
-      val cost = len + openCost
-      if (!binEmpty && binBytes + cost > maxBytes) {
+    for ((path, len) <- sized) {
+      if (!binEmpty && binBytes + len > maxBytes) {
         bins += bin.result()
         bin = Vector.newBuilder[(String, Long)]; binBytes = 0L; binEmpty = true
       }
-      bin += (path -> len); binBytes += cost; binEmpty = false
+      bin += (path -> len); binBytes += len + openCost; binEmpty = false
     }
     if (!binEmpty) bins += bin.result()
     bins.result()
@@ -313,17 +317,15 @@ private[sql] object GraftPartitions {
 }
 
 private[sql] class GraftReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow],
-    /** When present, partitions are read COLUMNAR: whole vectorized
-      * batches cross the DSv2 boundary and Spark's codegen'd
-      * ColumnarToRow takes over — no per-row iteration on this side.
-      * None when the read schema cannot batch (nested types). */
-    batchFunc: Option[PartitionedFile => Iterator[
-      org.apache.spark.sql.vectorized.ColumnarBatch]] = None)
+    /** Right: partitions are read COLUMNAR — whole vectorized batches
+      * cross the DSv2 boundary and Spark's codegen'd ColumnarToRow takes
+      * over, no per-row iteration on this side. Left: rows, when the read
+      * schema cannot batch (nested types). */
+    read: Either[PartitionedFile => Iterator[InternalRow],
+      PartitionedFile => Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]])
   extends PartitionReaderFactory {
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    batchFunc.isDefined
+  override def supportColumnarReads(partition: InputPartition): Boolean = read.isRight
 
   private def filesOf(partition: InputPartition): Seq[(String, Long)] =
     partition match {
@@ -334,20 +336,29 @@ private[sql] class GraftReaderFactory(
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[
       org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val f = batchFunc.get
+    val f = read.toOption.get
     GraftReaderFactory.reader(filesOf(partition).iterator.flatMap { case (path, len) =>
       f(Bridge.partitionedFile(path, len))
     })
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val f = read.swap.toOption.get
     GraftReaderFactory.reader(filesOf(partition).iterator.flatMap { case (path, len) =>
-      Bridge.flattenBatches(readFunc(Bridge.partitionedFile(path, len)))
+      Bridge.flattenBatches(f(Bridge.partitionedFile(path, len)))
     })
   }
 }
 
 private[sql] object GraftReaderFactory {
+  /** Columnar when the read schema batches, else rows. Spark uses one
+    * reader per scan, and building one broadcasts the hadoop conf, so
+    * only that one is built. */
+  def apply(spark: SparkSession, dataSchema: StructType, required: StructType,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): GraftReaderFactory =
+    new GraftReaderFactory(Bridge.parquetBatchReadFunc(spark, dataSchema, required, filters)
+      .toRight(Bridge.parquetReadFunc(spark, dataSchema, required, filters)))
+
   def reader[T](it: Iterator[T]): PartitionReader[T] =
     new PartitionReader[T] {
       private var current: T = _

@@ -53,16 +53,13 @@ object GraftRuntimePrune {
     // bucketing conf defaults ON, which would make this fully-covered
     // bucket table plan keyed and test nothing.
     val saved = Seq(
-      "spark.graft.sql.lowering",
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.optimizer.dynamicPartitionPruning.useStats",
       "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio")
       .map(k => k -> spark.conf.getOption(k)).toMap
     val (nRows, sumChars, dppPlanned, planBefore, planAfter, nKeys) =
       try {
-        // connector path (no lowering to a V1 file relation) + a benefit
-        // heuristic that does not depend on tiny-test-table stats
-        spark.conf.set("spark.graft.sql.lowering", "false")
+        // a benefit heuristic that does not depend on tiny-test-table stats
         spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
         spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
         spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "10.0")

@@ -41,17 +41,17 @@ import graft.wap.BranchCatalog
   * at analysis time, so one query referencing a table twice sees ONE
   * snapshot (the same isolation `scan` gives the Scala API).
   *
-  * Reads resolve through two paths:
-  *  - with [[graft.GraftExtensions]] installed (any session built via
-  *    [[graft.GraftSession.configure]]), [[GraftScanLowering]] replaces
-  *    the V2 relation with the catalog's NATIVE parquet plan before scan
-  *    planning — manifest stats pruning from the query's own predicates,
-  *    then Spark's vectorized columnar reader + whole-stage codegen, and
-  *    MOR tombstone anti-joins, identical to `BranchCatalog.scan`;
-  *  - without extensions, [[GraftTable.newScanBuilder]] serves a
-  *    [[V1Scan]] fallback: pushed filters still reach the manifest
-  *    pruner, but rows cross a per-row conversion boundary — correct on
-  *    any vanilla session, slower than the lowered path.
+  * Reads take one path in every session, with or without
+  * [[graft.GraftExtensions]]: [[GraftTable.newScanBuilder]] plans a
+  * [[GraftBatchScan]] — pushed and runtime filters reach the manifest
+  * pruner, files bin-pack into Spark-sized splits, readers are Spark's
+  * vectorized parquet readers (columnar batches cross the DSv2
+  * boundary), and pending MOR tombstones are anti-probed per row. An
+  * unfiltered aggregate the snapshot metadata answers exactly is pushed
+  * whole into the builder and plans as a local scan of driver-computed
+  * rows (with no Spark job at all under [[graft.GraftExtensions]]).
+  * Only the metadata tables (`t$snapshots`, `t$files`, ...) — small
+  * frames built on the driver — read through a [[V1Scan]].
   *
   * Writes: `INSERT INTO` / `INSERT OVERWRITE` (and therefore CTAS)
   * commit through the ordinary catalog write path — but only on BRANCH
@@ -445,7 +445,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     // — the SQL surface of W70: lowered onto `graft.constraint.<name>`
     // properties. Spark's AddCheckConstraintExec has ALREADY validated
     // existing rows against the predicate before calling here (its scan
-    // is why GraftScanLowering protects the AddCheckConstraint subtree);
+    // runs over the connector scan of this table);
     // every later write then enforces the stored constraint row-level,
     // so NOT ENFORCED is refused rather than recorded-and-ignored.
     val constraintProps: Map[String, String] = changes.collect {
@@ -730,7 +730,7 @@ object GraftTableCatalog {
 }
 
 /** One pinned (branch, snapshot) of a catalog table. Pure metadata — the
-  * read plan is built on demand by [[scanDF]]. */
+  * read plan is built on demand by [[newScanBuilder]]. */
 case class GraftTable(
     root: String, branch: String, tableName: String,
     snapshotId: String, tableSchema: StructType,
@@ -790,14 +790,6 @@ case class GraftTable(
           : org.apache.spark.sql.connector.catalog.constraints.Constraint
     }.sortBy(_.name()).toArray
 
-  /** The catalog's native scan of this pinned snapshot: tiered manifest
-    * planning + footer-stats pruning on `filter`, MOR tombstone
-    * anti-joins, then a vectorized parquet scan of the planned files
-    * served from manifest data ([[graft.wap.ManifestFileIndex]] — Spark
-    * does not list them). */
-  def scanDF(spark: SparkSession, filter: Option[Column]): DataFrame =
-    new BranchCatalog(spark, root).scanSnapshot(tableName, snapshotId, filter)
-
   /** The connector read path. Read options:
     *  - `graft.changes.from` (+ optional `graft.changes.to`, default =
     *    this pinned snapshot): serve the INCREMENTAL append delta of the
@@ -805,9 +797,7 @@ case class GraftTable(
     *    surface of [[BranchCatalog.changedFilesBetween]] (W27/W46):
     *    {{{ spark.read.option("graft.changes.from", id).table("lake.main.t") }}}
     *    Pushed filters prune WITHIN the window; pending MOR tombstones
-    *    refuse loudly (deltas are append-granular). Extension sessions
-    *    keep the relation on this connector path (lowering skips
-    *    windowed reads).
+    *    refuse loudly (deltas are append-granular).
     *  - `maxFilesPerTrigger`: streaming admission control. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // window endpoints by snapshot id, or (the Delta startingTimestamp
@@ -1283,7 +1273,6 @@ private class GraftScanBuilder(
     import org.apache.spark.sql.connector.expressions.aggregate.{Avg, Count, CountStar, Max, Min, Sum}
     import org.apache.spark.sql.connector.expressions.NamedReference
     val spark = SparkSession.active
-    if (!spark.conf.get("spark.graft.sql.metaAgg", "true").toBoolean) return None
     // a changes-window read aggregates the DELTA, never the snapshot
     if (changes.isDefined) return None
     if (pushed.nonEmpty) return None
@@ -1348,7 +1337,7 @@ private class GraftScanBuilder(
     * readers anti-probe per-executor key-set builds
     * ([[GraftMorReaderFactory]]) — no per-row V1 boundary between
     * compactions. A pushed metadata aggregate short-circuits to the
-    * one-row [[GraftMetaAggScan]] instead. */
+    * local [[GraftMetaAggScan]] instead. */
   override def build(): Scan = aggAnswer match {
     case Some((schema, values)) => new GraftMetaAggScan(t, schema, values)
     case None =>
@@ -1356,53 +1345,49 @@ private class GraftScanBuilder(
   }
 }
 
-/** The one-row scan serving a completely-pushed metadata aggregate: the
-  * "SELECT count(*), min(x) FROM <100 TB table>" plan reads NOTHING —
-  * one partition, one [[org.apache.spark.sql.catalyst.InternalRow]]
-  * computed on the driver from O(manifests) snapshot metadata. */
+/** The local scan serving a completely-pushed metadata aggregate: the
+  * "SELECT count(*), min(x) FROM <100 TB table>" plan reads NOTHING.
+  * Its catalyst-internal rows (one for a global aggregate, one per group
+  * for a pushed GROUP BY — W79) are computed on the driver from
+  * O(manifests) snapshot metadata, and Spark plans them as a
+  * `LocalTableScanExec` — no partition is read. Spark's result
+  * projection above it still runs as a one-task job unless
+  * [[GraftMetaAggStrategy]] folds it into the local rows (graft
+  * sessions). */
 private[sql] class GraftMetaAggScan(
-    t: GraftTable, aggSchema: StructType, rows: Seq[Array[Any]])
-  extends Scan with org.apache.spark.sql.connector.read.Batch {
+    t: GraftTable, aggSchema: StructType, values: Seq[Array[Any]])
+  extends org.apache.spark.sql.connector.read.LocalScan {
   override def readSchema(): StructType = aggSchema
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
   override def description(): String =
     s"graft ${t.branch}.${t.tableName} @ ${t.snapshotId} " +
       s"PushedAggregation: metadata-only [${aggSchema.fieldNames.mkString(", ")}]"
-  override def planInputPartitions(): Array[
-      org.apache.spark.sql.connector.read.InputPartition] =
-    Array(GraftMetaAggPartition(rows))
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new GraftMetaAggReaderFactory
+  override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
+    values.map(v => new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(v.clone())
+      : org.apache.spark.sql.catalyst.InternalRow).toArray
 }
 
-/** Carries the catalyst-internal aggregate rows (UTF8String is
-  * Externalizable; primitives box) to the single reader — one row for a
-  * global aggregate, one per group for a pushed GROUP BY (W79). */
-private[sql] case class GraftMetaAggPartition(rows: Seq[Array[Any]])
-  extends org.apache.spark.sql.connector.read.InputPartition
-
-private[sql] class GraftMetaAggReaderFactory
-  extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-  override def createReader(p: org.apache.spark.sql.connector.read.InputPartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.catalyst.InternalRow] =
-    new org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.catalyst.InternalRow] {
-      private val it = p.asInstanceOf[GraftMetaAggPartition].rows.iterator
-      private var cur: Array[Any] = _
-      override def next(): Boolean = if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): org.apache.spark.sql.catalyst.InternalRow =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(cur.clone())
-      override def close(): Unit = ()
-    }
+/** Plans the projection Spark puts over a pushed metadata aggregate
+  * (result aliases and casts) as one [[org.apache.spark.sql.execution
+  * .LocalTableScanExec]] of the projected rows. Without it the
+  * projection runs as a one-task Spark job over the local scan; with it
+  * `collect` reads the rows on the driver and no Spark job runs. */
+private[graft] object GraftMetaAggStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+  import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+  import org.apache.spark.sql.execution.SparkPlan
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Project(list, org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
+        _, scan: GraftMetaAggScan, output, _, _)) if list.forall(_.deterministic) =>
+      val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(list, output)
+      Seq(org.apache.spark.sql.execution.LocalTableScanExec(
+        list.map(_.toAttribute), scan.rows().toSeq.map(r => project(r).copy()), None))
+    case _ => Nil
+  }
 }
 
-/** The native read path of a pinned snapshot: manifest-pruned,
+/** The read path of a pinned snapshot, in every session: manifest-pruned,
   * bin-packed parquet splits through Spark's own reader — no V1 per-row
-  * conversion boundary even WITHOUT the optimizer lowering rules (a
-  * vanilla session reading a graft catalog gets this plan), and
-  * planner-visible statistics (row count, byte size, ANALYZE NDV).
+  * conversion boundary — and planner-visible statistics (row count, byte
+  * size, ANALYZE NDV).
   *
   * Pending MOR tombstones ride the SAME scan: files are planned per
   * coverage epoch ([[BranchCatalog.plannedMorEpochs]] — the identical
@@ -1556,7 +1541,8 @@ private[sql] class GraftBatchScan(
       org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     runtime = predicates.flatMap(p =>
       org.apache.spark.sql.graft.Bridge.predicateToV1(p))
-    morEpochsCache = null // re-plan under the narrowed condition
+    // re-plan under the narrowed condition
+    morEpochsCache = null; partitionsCache = null; readerCache = null
   }
 
   /** Planned once per (runtime-filter state) on the driver: None =
@@ -1584,13 +1570,35 @@ private[sql] class GraftBatchScan(
 
   override def readSchema(): StructType = required
   override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-  override def description(): String = changes match {
-    case Some((from, to)) =>
-      s"graft ${t.branch}.${t.tableName} changes $from..$to"
-    case None => s"graft ${t.branch}.${t.tableName} @ ${t.snapshotId}"
+  override def description(): String = {
+    val read = changes match {
+      case Some((from, to)) => s"graft ${t.branch}.${t.tableName} changes $from..$to"
+      case None => s"graft ${t.branch}.${t.tableName} @ ${t.snapshotId}"
+    }
+    if (pushed.isEmpty) read else s"$read PushedFilters: [${pushed.mkString(", ")}]"
   }
 
+  /** Partitions and reader factory, planned once per runtime-filter
+    * state: Spark plans one query's scan more than once (AQE re-creates
+    * the BatchScanExec, whose partitions and reader factory are lazy per
+    * instance), and each plan costs manifest pruning and a reader build.
+    * Invalidated by [[filter]]. */
+  @volatile private var partitionsCache: Array[
+    org.apache.spark.sql.connector.read.InputPartition] = null
+  @volatile private var readerCache: org.apache.spark.sql.connector.read.PartitionReaderFactory = null
+
   override def planInputPartitions(): Array[
+      org.apache.spark.sql.connector.read.InputPartition] = {
+    if (partitionsCache == null) partitionsCache = planPartitions()
+    partitionsCache
+  }
+
+  override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory = {
+    if (readerCache == null) readerCache = readerFactory()
+    readerCache
+  }
+
+  private def planPartitions(): Array[
       org.apache.spark.sql.connector.read.InputPartition] = changes match {
     case Some((from, to)) =>
       GraftPartitions.binPack(spark, new BranchCatalog(spark, t.root)
@@ -1630,7 +1638,9 @@ private[sql] class GraftBatchScan(
       }.toArray
   }
 
-  override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory = {
+  private def readerFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory = {
+    // a scan pruned to no file reads nothing: skip the reader build
+    if (planInputPartitions().isEmpty) return new GraftReaderFactory(Right(_ => Iterator.empty))
     val bridge = org.apache.spark.sql.graft.Bridge
     // pushed INTO the parquet reader too: per-file row-group/page
     // skipping below the manifest-level file pruning (at 100 TB a kept
@@ -1640,9 +1650,7 @@ private[sql] class GraftBatchScan(
     // re-checks runtime DPP keys.
     val readerFilters = (pushed ++ runtime).toSeq
     morEpochs match {
-      case None => new GraftReaderFactory(
-        bridge.parquetReadFunc(spark, t.tableSchema, required, readerFilters),
-        bridge.parquetBatchReadFunc(spark, t.tableSchema, required, readerFilters))
+      case None => GraftReaderFactory(spark, t.tableSchema, required, readerFilters)
       case Some(epochs) =>
         val groups = epochs.flatMap(_._2).map(g => specOf(g).id -> g).toMap
         // positional groups key on physical (path, row-index) lineage —

@@ -13,8 +13,8 @@ import graft.wap.BranchCatalog
   * `spark.read.option("graft.changes.from", id)` serves the append
   * delta of a window — the DataFrame surface of
   * [[BranchCatalog.changedFilesBetween]] — with in-window pruning, and
-  * every rule that could silently widen the window (scan lowering,
-  * metadata aggregates) refuses windowed relations. */
+  * every path that could silently widen the window (metadata
+  * aggregates) refuses windowed relations. */
 class ChangesReadSpec extends SparkSpecBase {
 
   private var n = 0
@@ -57,8 +57,8 @@ class ChangesReadSpec extends SparkSpecBase {
       .option("graft.changes.to", s2.id).table(s"$lake.main.t")
     assert(window.count() == docs(100, 160).count())
 
-    // the windowed relation stays on the connector batch scan (lowering
-    // it to the snapshot plan would silently return the whole table)
+    // the windowed relation plans the window's batch scan (the snapshot
+    // plan would silently return the whole table)
     val scan = batchScan(delta)
     assert(scan.isDefined && scan.get.scan.description().contains("changes"),
       s"windowed read must keep the connector scan:\n${delta.queryExecution.executedPlan}")

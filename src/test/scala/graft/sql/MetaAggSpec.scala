@@ -3,19 +3,19 @@ package graft.sql
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpecBase, Tables}
 import graft.wap.BranchCatalog
 
-/** Metadata-only global aggregates (W44): `SELECT count(*), count(c),
-  * min(c), max(c) FROM t` answered from per-manifest stats with ZERO
-  * data-file IO, on BOTH read paths — the extension-session optimizer
-  * rule ([[GraftAggLowering]]) and the vanilla-session DSv2
-  * `SupportsPushDownAggregates` route ([[GraftMetaAggScan]]) — with
-  * every non-exact shape refused onto the ordinary scan. */
+/** Metadata-only aggregates (W44/W79/W80/W81): `SELECT count(*),
+  * count(c), min(c), max(c) FROM t` answered from per-manifest stats with
+  * ZERO data-file IO — unfiltered global and GROUP BY shapes through the
+  * DSv2 `SupportsPushDownAggregates` route (the local
+  * [[GraftMetaAggScan]]), filtered ones through [[GraftAggLowering]] —
+  * with every non-exact shape refused onto the ordinary batch scan. */
 class MetaAggSpec extends SparkSpecBase {
 
   private var n = 0
@@ -37,24 +37,30 @@ class MetaAggSpec extends SparkSpecBase {
           (col("doc_id") % 100).cast("int")).as("d"),
         lit(null).cast("string").as("all_null"))
 
-  /** Scan nodes of the physical plan, looking THROUGH the AQE wrapper
-    * (aggregates carry exchanges, so Spark wraps them in
-    * AdaptiveSparkPlanExec, which `collect` treats as a leaf). */
-  private def scansOf(df: DataFrame): Seq[Any] = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    plan.collect {
-      case s: FileSourceScanExec => s
-      case b: BatchScanExec => b
-    }
+  /** The physical plan, looking THROUGH the AQE wrapper (aggregates
+    * carry exchanges, so Spark wraps them in AdaptiveSparkPlanExec, which
+    * `collect` treats as a leaf). */
+  private def physical(df: DataFrame) = df.queryExecution.executedPlan match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      a.executedPlan
+    case p => p
   }
 
+  /** The graft batch scans of the physical plan. */
+  private def scansOf(df: DataFrame): Seq[BatchScanExec] =
+    physical(df).collect { case b: BatchScanExec if b.scan.isInstanceOf[GraftBatchScan] => b }
+
+  /** Metadata-only: no batch scan, the answer is a local table scan. */
   private def assertMetaOnly(df: DataFrame): Unit =
-    assert(scansOf(df).isEmpty,
+    assert(scansOf(df).isEmpty && physical(df).collect { case l: LocalTableScanExec => l }.nonEmpty,
       s"expected a metadata-only plan, got:\n${df.queryExecution.executedPlan}")
+
+  /** The aggregate was pushed whole into the scan builder: the optimized
+    * plan reads the local [[GraftMetaAggScan]]. */
+  private def pushedMeta(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan
+    }.exists(_.isInstanceOf[GraftMetaAggScan])
 
   test("extension path: count/min/max answered from metadata, zero scans") {
     val (lake, root, cat) = register()
@@ -71,11 +77,14 @@ class MetaAggSpec extends SparkSpecBase {
          |  min(all_null) AS min_an, count(*) + 1 AS n1
          |FROM $lake.main.docs""".stripMargin)
     assertMetaOnly(q)
+    assert(pushedMeta(q))
     val exp = d.agg(count(lit(1)), count(col("src")), count(col("all_null")),
       min(col("doc_id")), max(col("doc_id")), min(col("lang")), max(col("lang")),
       min(col("d")), max(col("d")), min(col("all_null")),
       count(lit(1)) + 1).collect().head
-    assert(q.collect().head == exp)
+    val (got, jobs) = jobsDuring(q.collect().head)
+    assert(got == exp)
+    assert(jobs == 0, s"a metadata-answered aggregate must run no Spark job, ran $jobs")
 
     // ...and it truly reads nothing: data files gone, answers remain
     val dataDir = new java.io.File(s"$root/tables/docs/data")
@@ -124,25 +133,23 @@ class MetaAggSpec extends SparkSpecBase {
     val d = docs(120)
     cat.createTableIfNotExists("docs", d.schema)
     cat.append("docs", d)
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val q = spark.sql(
-        s"SELECT count(*) AS n, count(src) AS s, min(lang) AS a, max(doc_id) AS b " +
-          s"FROM $lake.main.docs")
-      val batch = q.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      assert(batch.nonEmpty && batch.head.scan.isInstanceOf[GraftMetaAggScan],
-        s"expected the metadata-aggregate scan, got:\n${q.queryExecution.executedPlan}")
-      val exp = d.agg(count(lit(1)), count(col("src")), min(col("lang")),
-        max(col("doc_id"))).collect().head
-      assert(q.collect().head == exp)
+    val q = spark.sql(
+      s"SELECT count(*) AS n, count(src) AS s, min(lang) AS a, max(doc_id) AS b " +
+        s"FROM $lake.main.docs")
+    assert(pushedMeta(q),
+      s"expected the metadata-aggregate scan, got:\n${q.queryExecution.optimizedPlan}")
+    assertMetaOnly(q)
+    val exp = d.agg(count(lit(1)), count(col("src")), min(col("lang")),
+      max(col("doc_id"))).collect().head
+    val (got, jobs) = jobsDuring(q.collect().head)
+    assert(got == exp)
+    assert(jobs == 0, s"the local metadata scan must run no Spark job, ran $jobs")
 
-      // a filtered aggregate must NOT reach the metadata path
-      val qf = spark.sql(
-        s"SELECT count(*) FROM $lake.main.docs WHERE doc_id < 50")
-      val fb = qf.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      assert(fb.forall(!_.scan.isInstanceOf[GraftMetaAggScan]))
-      assert(qf.collect().head.getLong(0) == d.filter(col("doc_id") < 50).count())
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    // a filtered aggregate must NOT reach the metadata scan
+    val qf = spark.sql(
+      s"SELECT count(*) FROM $lake.main.docs WHERE doc_id < 50")
+    assert(!pushedMeta(qf) && scansOf(qf).nonEmpty)
+    assert(qf.collect().head.getLong(0) == d.filter(col("doc_id") < 50).count())
   }
 
   test("non-exact shapes refuse onto the real scan and stay correct") {
@@ -198,27 +205,22 @@ class MetaAggSpec extends SparkSpecBase {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1).toSeq
 
-    // extension path: the whole aggregate folds to a LocalRelation
+    // SQL: complete GROUP BY pushdown onto the multi-row local scan
     val q = spark.sql(sql)
+    assert(pushedMeta(q),
+      s"expected the metadata-aggregate scan, got:\n${q.queryExecution.optimizedPlan}")
     assertMetaOnly(q)
     val got = q.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1).toSeq
     assert(got == exp)
 
-    // vanilla connector path: complete GROUP BY pushdown onto the
-    // multi-row metadata scan
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val qv = spark.sql(sql)
-      val batch = qv.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      assert(batch.nonEmpty && batch.head.scan.isInstanceOf[GraftMetaAggScan],
-        s"expected the metadata-aggregate scan, got:\n${qv.queryExecution.executedPlan}")
-      val gotV = qv.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .sortBy(_._1).toSeq
-      assert(gotV == exp)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    // the catalog API folds the same groups
+    import graft.wap.MetaAgg._
+    val byApi = cat.metaAggregateBy("docs", cat.snapshotIdOf("docs").get, Seq("lang"),
+      Seq(CountStar, CountCol("src"), MinCol("doc_id"), MaxCol("n_chars"))).get
+      .map(r => (r(0).toString, r(1), r(2), r(3), r(4))).sortBy(_._1).toSeq
+    assert(byApi == exp)
   }
 
   test("W79: clustered appends prove homogeneity without a spec; null groups roll up") {
@@ -302,17 +304,14 @@ class MetaAggSpec extends SparkSpecBase {
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(gotBy == expBy)
 
-    // vanilla connector: complete Sum/Avg pushdown onto the metadata scan
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val qv = spark.sql(s"SELECT lang, sum(n_chars) AS s, avg(n_chars) AS a " +
-        s"FROM $lake.main.docs GROUP BY lang")
-      val batch = qv.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      assert(batch.nonEmpty && batch.head.scan.isInstanceOf[GraftMetaAggScan],
-        s"expected the metadata-aggregate scan, got:\n${qv.queryExecution.executedPlan}")
-      assert(qv.collect().map(r =>
-        r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap == expBy)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    assert(pushedMeta(byLang))
+
+    // the catalog API folds the same sums and averages
+    import graft.wap.MetaAgg._
+    val byApi = cat.metaAggregateBy("docs", cat.snapshotIdOf("docs").get, Seq("lang"),
+      Seq(SumCol("n_chars"), AvgCol("n_chars"))).get
+      .map(r => r(0).toString -> (r(1), r(2))).toMap
+    assert(byApi == expBy)
   }
 
   test("W80: freshness gate — unsummed appends refuse; maintain re-sums; NULL and double shapes") {
@@ -432,9 +431,9 @@ class MetaAggSpec extends SparkSpecBase {
     assertMetaOnly(spark.sql(s"SELECT count(*) FROM $lake.main.docs"))
   }
 
-  test("wap_agg_pushdown lifecycle query passes all four plan gates") {
+  test("wap_agg_pushdown lifecycle query passes its metadata-only and zero-IO gates") {
     val row = graft.operators.WapQueries.wapAggPushdown(spark, sfDir).collect().head
-    for (c <- Seq("ext_meta_only", "v2_pushed", "paths_agree", "zero_data_io"))
+    for (c <- Seq("v2_pushed", "zero_data_io"))
       assert(row.getAs[Boolean](c), c)
     assert(row.getAs[Long]("n_rows") ==
       Tables.documents(spark, sfDir).filter(col("doc_id") < 200).count())

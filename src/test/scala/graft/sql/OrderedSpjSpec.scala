@@ -30,13 +30,11 @@ class OrderedSpjSpec extends SparkSpecBase {
 
   private def withSpjConfs[T](body: => T): T = {
     val saved = Seq(
-      "spark.graft.sql.lowering" -> spark.conf.getOption("spark.graft.sql.lowering"),
       "spark.sql.sources.v2.bucketing.enabled" ->
         spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled"),
       "spark.sql.autoBroadcastJoinThreshold" ->
         spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold"),
       "spark.sql.adaptive.enabled" -> spark.conf.getOption("spark.sql.adaptive.enabled"))
-    spark.conf.set("spark.graft.sql.lowering", "false")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

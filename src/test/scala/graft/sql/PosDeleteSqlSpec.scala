@@ -91,22 +91,19 @@ class PosDeleteSqlSpec extends SparkSpecBase {
 
     val expect = docs.filter(col("doc_id") < 80 &&
       !(col("doc_id") >= 10 && col("doc_id") < 15))
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val q = spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.t ORDER BY doc_id")
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("BatchScan"), s"expected the native batch scan, got:\n$plan")
-      assert(!plan.contains("ExistingRDD") && !plan.contains("RowDataSourceScan"),
-        s"positional-pending read must not drop to a per-row scan:\n$plan")
-      assert(q.collect().map(_.getLong(0)).toSeq ==
-        expect.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
-      // count(*), a selective predicate, and a projection that needs no
-      // lineage columns all read through the same positional reader
-      assert(spark.sql(s"SELECT count(*) FROM $lake.main.t").head.getLong(0) ==
-        expect.count())
-      assert(spark.sql(s"SELECT lang FROM $lake.main.t WHERE doc_id = 12").collect().isEmpty)
-      assert(spark.sql(s"SELECT lang FROM $lake.main.t WHERE doc_id = 20").collect().length == 1)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    val q = spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.t ORDER BY doc_id")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("BatchScan"), s"expected the native batch scan, got:\n$plan")
+    assert(!plan.contains("ExistingRDD") && !plan.contains("RowDataSourceScan"),
+      s"positional-pending read must not drop to a per-row scan:\n$plan")
+    assert(q.collect().map(_.getLong(0)).toSeq ==
+      expect.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
+    // count(*), a selective predicate, and a projection that needs no
+    // lineage columns all read through the same positional reader
+    assert(spark.sql(s"SELECT count(*) FROM $lake.main.t").head.getLong(0) ==
+      expect.count())
+    assert(spark.sql(s"SELECT lang FROM $lake.main.t WHERE doc_id = 12").collect().isEmpty)
+    assert(spark.sql(s"SELECT lang FROM $lake.main.t WHERE doc_id = 20").collect().length == 1)
 
     // default mode (no property) stays copy-on-write: a second table
     val (lake2, cat2) = register()
@@ -207,7 +204,7 @@ class PosDeleteSqlSpec extends SparkSpecBase {
     assert(err.getMessage.contains("write.merge.mode"))
   }
 
-  test("extension-session read (lowering on) applies sidecars identically") {
+  test("SQL read applies sidecars written through the Scala API") {
     val (lake, cat) = register()
     val docs = Tables.documents(spark, sfDir).select("doc_id", "lang", "n_chars")
     cat.createTableIfNotExists("t", docs.schema)

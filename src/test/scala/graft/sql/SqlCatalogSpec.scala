@@ -4,7 +4,8 @@ import java.nio.file.Files
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpecBase, Tables}
@@ -24,6 +25,23 @@ class SqlCatalogSpec extends SparkSpecBase {
     (name, new BranchCatalog(spark, root))
   }
 
+  /** The graft batch scans in `df`'s physical plan, and how many data
+    * files they planned. */
+  private def graftScans(df: DataFrame): (Seq[BatchScanExec], Int) = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = plan.collect {
+      case b: BatchScanExec if b.scan.isInstanceOf[GraftBatchScan] => b
+    }
+    scans -> scans.flatMap(_.inputPartitions).map {
+      case GraftFilesPartition(fs) => fs.size
+      case GraftKeyedFilesPartition(fs, _) => fs.size
+      case _ => 0
+    }.sum
+  }
+
   private def utc(ms: Long): String =
     DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss.SSS")
       .withZone(ZoneOffset.UTC).format(Instant.ofEpochMilli(ms))
@@ -40,16 +58,17 @@ class SqlCatalogSpec extends SparkSpecBase {
     val q = spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.docs WHERE doc_id = 33")
     assert(q.collect().map(_.getLong(0)).toSeq == Seq(33L))
 
-    // the lowered plan IS a native parquet scan (vectorized + codegen),
-    // not a DSv2 row-conversion boundary…
-    val scans = q.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
-    assert(scans.nonEmpty, "lowering must produce a native parquet scan")
-    // …its file list was manifest-pruned BEFORE Spark listed anything…
-    assert(scans.head.relation.location.inputFiles.length < totalFiles,
-      "the SQL predicate must reach the footer-stats pruner")
-    // …and the residual filter + projection push into the parquet reader
+    // the plan IS the graft batch scan reading vectorized batches, not a
+    // per-row DSv2 boundary…
+    val (scans, nFiles) = graftScans(q)
+    assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
+      s"expected the columnar graft batch scan, got:\n${q.queryExecution.executedPlan}")
+    // …its planned files were manifest-pruned…
+    assert(nFiles < totalFiles, "the SQL predicate must reach the footer-stats pruner")
+    // …and the filter + projection push into the scan's parquet readers
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("doc_id"))
+    assert(scans.head.scan.readSchema().fieldNames.toSeq == Seq("doc_id", "n_chars"))
   }
 
   test("branch namespaces, SHOW TABLES/NAMESPACES, CREATE NAMESPACE") {
@@ -114,22 +133,41 @@ class SqlCatalogSpec extends SparkSpecBase {
       s"SELECT count(*) FROM $lake.main.t WHERE doc_id IN (5, 17)").head.getLong(0) == 1)
   }
 
-  test("V1Scan fallback (lowering disabled) returns identical results") {
+  test("a SQL read returns the rows catalog.scan returns for the same snapshot") {
     val (lake, cat) = register()
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 40)
     cat.createTableIfNotExists("t", docs.schema)
     cat.appendClustered("t", docs, Seq("doc_id"), files = 4)
+    val snap = cat.snapshotIdOf("t").get
 
-    val sql = s"SELECT doc_id, n_chars FROM $lake.main.t WHERE doc_id >= 20 ORDER BY doc_id"
-    val fast = spark.sql(sql).collect().map(_.toSeq)
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val viaConnector = spark.sql(sql)
-      assert(viaConnector.queryExecution.executedPlan
-        .collect { case s: FileSourceScanExec => s }.isEmpty,
-        "with lowering off the read must go through the DSv2 connector path")
-      assert(viaConnector.collect().map(_.toSeq).toSeq == fast.toSeq)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    val viaSql = spark.sql(
+      s"SELECT doc_id, n_chars FROM $lake.main.t WHERE doc_id >= 20 ORDER BY doc_id")
+    assert(graftScans(viaSql)._1.nonEmpty, "the SQL read must plan the graft batch scan")
+    val viaScan = cat.scanSnapshot("t", snap, Some(col("doc_id") >= 20))
+      .select("doc_id", "n_chars").orderBy("doc_id")
+    assert(viaSql.collect().map(_.toSeq).toSeq == viaScan.collect().map(_.toSeq).toSeq)
+    assert(viaSql.count() == 20)
+  }
+
+  test("a many-small-file SQL read plans as many input partitions as spark.read.parquet") {
+    val (lake, cat) = register()
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 480)
+    cat.createTableIfNotExists("t", docs.schema)
+    cat.appendClustered("t", docs, Seq("doc_id"), files = 48)
+    val paths = cat.dataFiles("t").map(_.path)
+    assert(paths.size >= 40, s"expected many small files, got ${paths.size}")
+
+    val (scans, nFiles) = graftScans(spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.t"))
+    assert(nFiles == paths.size)
+    val viaSql = scans.head.inputPartitions.length
+    val viaParquet = spark.read.parquet(paths: _*).select("doc_id", "n_chars")
+      .rdd.getNumPartitions
+    // Spark sizes splits from total bytes over the default parallelism,
+    // so small files spread over every core instead of packing into one
+    // maxPartitionBytes budget
+    assert(viaSql == viaParquet,
+      s"SQL read planned $viaSql input partitions, spark.read.parquet $viaParquet")
+    assert(viaSql == spark.sparkContext.defaultParallelism)
   }
 
   test("pending MOR tombstones read through the native batch scan (connector path)") {
@@ -147,31 +185,28 @@ class SqlCatalogSpec extends SparkSpecBase {
 
     val viaScala = cat.scan("t").select("doc_id", "n_chars")
       .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val q = spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.t ORDER BY doc_id")
-      val rows = q.collect()
-      // the whole point: NO per-row V1/RDD boundary between compactions —
-      // the connector read is the native DSv2 batch scan
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("BatchScan"), s"expected the native batch scan, got:\n$plan")
-      assert(!plan.contains("ExistingRDD") && !plan.contains("RowDataSourceScan"),
-        s"MOR-pending read must not drop to a per-row scan:\n$plan")
-      assert(rows.map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString).toSeq ==
-        viaScala.toSeq, "connector MOR read must equal the Scala scan")
-      assert(rows.map(_.getLong(0)).count(_ == 5L) == 1, "re-appended key visible once")
-      assert(!rows.map(_.getLong(0)).contains(17L) && !rows.map(_.getLong(0)).contains(23L))
+    val q = spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.t ORDER BY doc_id")
+    val rows = q.collect()
+    // the whole point: NO per-row V1/RDD boundary between compactions —
+    // the connector read is the native DSv2 batch scan
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("BatchScan"), s"expected the native batch scan, got:\n$plan")
+    assert(!plan.contains("ExistingRDD") && !plan.contains("RowDataSourceScan"),
+      s"MOR-pending read must not drop to a per-row scan:\n$plan")
+    assert(rows.map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString).toSeq ==
+      viaScala.toSeq, "connector MOR read must equal the Scala scan")
+    assert(rows.map(_.getLong(0)).count(_ == 5L) == 1, "re-appended key visible once")
+    assert(!rows.map(_.getLong(0)).contains(17L) && !rows.map(_.getLong(0)).contains(23L))
 
-      // required-column pruning still holds when the key columns are not
-      // selected (the reader widens internally and projects back down)
-      assert(spark.sql(s"SELECT count(*) FROM $lake.main.t").head.getLong(0) ==
-        viaScala.length.toLong)
-      val texts = spark.sql(s"SELECT text FROM $lake.main.t WHERE doc_id = 5")
-      assert(texts.collect().length == 1)
-      // and pushed predicates keep pruning files under MOR
-      val pruned = spark.sql(s"SELECT n_chars FROM $lake.main.t WHERE doc_id = 33")
-      assert(pruned.collect().length == 1)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    // required-column pruning still holds when the key columns are not
+    // selected (the reader widens internally and projects back down)
+    assert(spark.sql(s"SELECT count(*) FROM $lake.main.t").head.getLong(0) ==
+      viaScala.length.toLong)
+    val texts = spark.sql(s"SELECT text FROM $lake.main.t WHERE doc_id = 5")
+    assert(texts.collect().length == 1)
+    // and pushed predicates keep pruning files under MOR
+    val pruned = spark.sql(s"SELECT n_chars FROM $lake.main.t WHERE doc_id = 33")
+    assert(pruned.collect().length == 1)
   }
 
   test("SQL DDL: CREATE TABLE / DROP TABLE; main writes are refused by design") {
@@ -332,18 +367,23 @@ class SqlCatalogSpec extends SparkSpecBase {
     val stream = new GraftMicroBatchStream(spark, cat.root, "main", "t", schema, schema, None)
     val end = GraftStreamOffset(head, cat.seqOfSnapshot("t", head))
 
-    // 5 tiny files, default 128 MB budget + 4 MB open cost -> ONE task,
-    // not one per file (the r8 behavior: a million-file initial load
-    // would have launched a million tasks)
+    // 5 tiny files pack by Spark's own split size (total bytes over the
+    // default parallelism, never below the 4 MB open cost): fewer tasks
+    // than files (the r8 behavior — a million-file initial load would
+    // have launched a million tasks), as many as spark.read.parquet plans
     val packed = stream.planInputPartitions(GraftStreamOffset.start, end)
-    assert(packed.length == 1, s"tiny files must pack into one partition, got ${packed.length}")
-    assert(packed.head.asInstanceOf[GraftFilesPartition].files.size == 5)
+    val viaParquet = spark.read.parquet(cat.dataFiles("t").map(_.path): _*)
+      .rdd.getNumPartitions
+    assert(packed.length < 5 && packed.length == viaParquet,
+      s"tiny files must pack like spark.read.parquet ($viaParquet), got ${packed.length}")
+    assert(packed.map(_.asInstanceOf[GraftFilesPartition].files.size).sum == 5)
 
-    // a tight byte budget splits again (per-file open cost dominates)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (6L * 1024 * 1024).toString)
+    // a byte budget at the open cost splits again (per-file open cost
+    // dominates)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
     try {
       val split = stream.planInputPartitions(GraftStreamOffset.start, end)
-      assert(split.length == 5, s"6 MB budget with 4 MB open cost -> one file per bin, got ${split.length}")
+      assert(split.length == 5, s"4 MB budget with 4 MB open cost -> one file per bin, got ${split.length}")
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
@@ -499,14 +539,11 @@ class SqlCatalogSpec extends SparkSpecBase {
     intercept[Exception] { spark.sql(s"ALTER TABLE $lake.main.t ALTER COLUMN id TYPE INT") }
     assert(cat.scan("t").columns.toSeq == Seq("id", "score", "v"))
 
-    // the CONNECTOR batch path must read evolved files identically: old
+    // the connector batch scan must read evolved files identically: old
     // int32 parquet under the widened long schema, added column as null
     // (a schema/reader mismatch here would be a runtime-only failure)
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      assert(spark.sql(s"SELECT sum(id) FROM $lake.main.t WHERE score IS NULL")
-        .head.getLong(0) == 3)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    assert(spark.sql(s"SELECT sum(id) FROM $lake.main.t WHERE score IS NULL")
+      .head.getLong(0) == 3)
   }
 
   test("ALTER TABLE RENAME COLUMN through SQL: by-id reads, old name gone") {
@@ -528,12 +565,9 @@ class SqlCatalogSpec extends SparkSpecBase {
     cat.append("t", Seq((3L, "c")).toDF("id", "label"))
     assert(spark.sql(s"SELECT count(*) FROM $lake.main.t WHERE label >= 'a'")
       .head.getLong(0) == 3)
-    // connector batch path (no lowering) reads identically
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      assert(spark.sql(s"SELECT label FROM $lake.main.t WHERE id = 1")
-        .head.getString(0) == "a")
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    // a filtered read prunes and resolves by id too
+    assert(spark.sql(s"SELECT label FROM $lake.main.t WHERE id = 1")
+      .head.getString(0) == "a")
   }
 
   test("readStream.table streams the lake: initial load, per-commit deltas, WAP isolation") {
@@ -1056,21 +1090,18 @@ class SqlCatalogSpec extends SparkSpecBase {
     cat.append("fact", docs.limit(5))
     assert(stats().columnStats().size() > 0, "nearest-ancestor analyze blob serves")
 
-    // connector-path join (lowering off): the small dim broadcasts with
-    // NO hint, from connector-reported stats alone
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      // the dim's optimized relation carries REAL stats (the native batch
-      // scan reports them; the old V1ScanWrapper hid them from the planner)
-      val dimPlan = spark.sql(s"SELECT * FROM $lake.main.dim").queryExecution.optimizedPlan
-      assert(dimPlan.stats.sizeInBytes < (1L << 20),
-        s"planner must see the dim's true size, got ${dimPlan.stats.sizeInBytes}")
-      val q = spark.sql(
-        s"SELECT f.doc_id, d.lang FROM $lake.main.fact f JOIN $lake.main.dim d ON f.source = d.source")
-      assert(q.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-        "small dim must broadcast without a hint, from connector stats alone")
-      assert(q.count() > 0)
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    // the small dim broadcasts with NO hint, from connector-reported
+    // stats alone
+    // the dim's optimized relation carries REAL stats (the native batch
+    // scan reports them; the old V1ScanWrapper hid them from the planner)
+    val dimPlan = spark.sql(s"SELECT * FROM $lake.main.dim").queryExecution.optimizedPlan
+    assert(dimPlan.stats.sizeInBytes < (1L << 20),
+      s"planner must see the dim's true size, got ${dimPlan.stats.sizeInBytes}")
+    val q = spark.sql(
+      s"SELECT f.doc_id, d.lang FROM $lake.main.fact f JOIN $lake.main.dim d ON f.source = d.source")
+    assert(q.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+      "small dim must broadcast without a hint, from connector stats alone")
+    assert(q.count() > 0)
   }
 
   test("the native batch scan prunes files from pushed filters (connector path)") {
@@ -1080,26 +1111,23 @@ class SqlCatalogSpec extends SparkSpecBase {
     cat.appendClustered("t", docs, Seq("doc_id"), files = 8)
     assert(cat.dataFiles("t").size >= 8)
 
-    spark.conf.set("spark.graft.sql.lowering", "false")
-    try {
-      val q = spark.sql(s"SELECT doc_id FROM $lake.main.t WHERE doc_id = 33")
-      assert(q.collect().map(_.getLong(0)).toSeq == Seq(33L))
-      // the physical scan is the NATIVE batch scan, and its input was
-      // manifest-pruned to fewer splits than the table's file count
-      val batchScans = q.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }
-      assert(batchScans.nonEmpty, "connector read must plan a DSv2 batch scan")
-      val nFiles = batchScans.head.inputPartitions
-        .map(_.asInstanceOf[GraftFilesPartition].files.size).sum
-      assert(nFiles < 8, s"point predicate must prune clustered files, scanned $nFiles")
-      // the scan hands over whole vectorized batches (atomic schema):
-      // Spark plans it columnar and converts with codegen'd ColumnarToRow
-      assert(batchScans.head.supportsColumnar,
-        "atomic-schema connector reads must cross the DSv2 boundary columnar")
-      assert(q.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-        "columnar scan must be consumed through ColumnarToRow")
-    } finally spark.conf.set("spark.graft.sql.lowering", "true")
+    val q = spark.sql(s"SELECT doc_id FROM $lake.main.t WHERE doc_id = 33")
+    assert(q.collect().map(_.getLong(0)).toSeq == Seq(33L))
+    // the physical scan is the NATIVE batch scan, and its input was
+    // manifest-pruned to fewer splits than the table's file count
+    val batchScans = q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(batchScans.nonEmpty, "connector read must plan a DSv2 batch scan")
+    val nFiles = batchScans.head.inputPartitions
+      .map(_.asInstanceOf[GraftFilesPartition].files.size).sum
+    assert(nFiles < 8, s"point predicate must prune clustered files, scanned $nFiles")
+    // the scan hands over whole vectorized batches (atomic schema):
+    // Spark plans it columnar and converts with codegen'd ColumnarToRow
+    assert(batchScans.head.supportsColumnar,
+      "atomic-schema connector reads must cross the DSv2 boundary columnar")
+    assert(q.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      "columnar scan must be consumed through ColumnarToRow")
   }
 
   test("CREATE TABLE PARTITIONED BY maps onto hidden partitioning; SQL inserts prune") {
@@ -1124,10 +1152,9 @@ class SqlCatalogSpec extends SparkSpecBase {
 
     // … and a point predicate through SQL reads 1/8 of the files
     val q = spark.sql(s"SELECT n_chars FROM $lake.wip.pt WHERE doc_id = 33")
-    val scans = q.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
-    assert(scans.nonEmpty, "lowering must produce a native parquet scan")
-    assert(scans.head.relation.location.inputFiles.length == 1,
-      "bucket transform must admit exactly one file for a point predicate")
+    val (scans, nFiles) = graftScans(q)
+    assert(scans.nonEmpty, s"expected the graft batch scan, got:\n${q.queryExecution.executedPlan}")
+    assert(nFiles == 1, "bucket transform must admit exactly one file for a point predicate")
     assert(q.collect().length == 1)
 
     // CTAS carries the transform too (staged create + partitioned write)

@@ -214,7 +214,7 @@ class WapSpec extends SparkSpecBase {
     assert(cat.scan("t").filter(col("x").isNull).count() == 0)
   }
 
-  test("audit suite runs as a single job and reports per-check violations") {
+  test("audit suite passes a clean table and reports each failed check") {
     val orders = Tables.orders(spark, sfDir)
     val report = Audit.run(orders, Seq(
       NotNull("o_orderkey"),
