@@ -305,7 +305,7 @@ class GraftCdcMicroBatchStream(
       val from = if (s.seq < 0 || s.idx < 0) 0 else s.idx.toInt
       val until = if (e.idx < 0) all.length else e.idx.toInt
       val anchorSeq = cat.seqOfSnapshot(tableName, e.snapshotId)
-      GraftPartitions.packs(spark, all.slice(from, until))
+      GraftPartitions.packs(spark, Seq(all.slice(from, until))).head
         .map(fs => GraftCdcFilesPartition(fs, "insert", anchorSeq, e.snapshotId)
           : InputPartition).toArray
     } else {
@@ -321,20 +321,40 @@ class GraftCdcMicroBatchStream(
       var parent = cat.snapshotMetaOpt(tableName, s.snapshotId).getOrElse(sys.error(
         s"CDC start snapshot ${s.snapshotId} of $tableName has been expired — " +
           "restart the stream from a fresh checkpoint"))
-      val out = Vector.newBuilder[InputPartition]
+      val changes = Vector.newBuilder[CommitChanges]
       for (commit <- chain) {
-        out ++= commitPartitions(parent, commit)
+        changes ++= commitChanges(parent, commit)
         parent = commit
       }
-      out.result().toArray
+      val all = changes.result()
+      // one split budget over the whole batch: each commit's deletes and
+      // inserts pack apart, against the size the batch's files set
+      val packed = GraftPartitions.packs(spark, all.flatMap(ch => Seq(ch.deleted, ch.inserted)))
+      all.zipWithIndex.flatMap { case (ch, i) =>
+        val c = ch.commit
+        packed(2 * i).map(fs => GraftCdcFilesPartition(fs, "delete", c.seq, c.id, ch.priors)) ++
+          packed(2 * i + 1).map(fs => GraftCdcFilesPartition(fs, "insert", c.seq, c.id)) ++
+          // each NEW sidecar file plans as its own partition: the driver
+          // knows only the sidecar list; marked data files resolve on
+          // the executor
+          ch.sidecars.map(f => GraftCdcSidecarPartition(Seq(f), c.seq, c.id))
+      }.toArray
     }
   }
 
-  /** The partitions of ONE commit's changes — see the class doc for the
-    * per-operation classification. Metadata cost is O(manifests touched
-    * by the commit): untouched manifests are never read. */
-  private def commitPartitions(p: Snapshot, c: Snapshot): Seq[InputPartition] = {
-    if (SnapshotOp.contentNeutral(c.op)) return Nil
+  /** ONE commit's changes, before packing: the data files it deleted
+    * (with the parent's pending sidecar groups), the ones it inserted,
+    * and its new position-delete sidecars. */
+  private case class CommitChanges(
+      commit: Snapshot, deleted: Seq[(String, Long)], priors: Seq[GraftDeleteGroupSpec],
+      inserted: Seq[(String, Long)], sidecars: Seq[(String, Long)])
+
+  /** The changes of ONE commit — see the class doc for the per-operation
+    * classification; None when the commit is content-neutral. Metadata
+    * cost is O(manifests touched by the commit): untouched manifests are
+    * never read. */
+  private def commitChanges(p: Snapshot, c: Snapshot): Option[CommitChanges] = {
+    if (SnapshotOp.contentNeutral(c.op)) return None
     val pDel = p.deleteManifests
     val newDel = c.deleteManifests.filterNot(m => pDel.exists(_.path == m.path))
     require(newDel.forall(_.posDelete),
@@ -359,15 +379,9 @@ class GraftCdcMicroBatchStream(
             "delete feed; materialize with compactDataFiles first")
         pDel.filter(_.posDelete).map(toGroup)
       }
-    val delParts = GraftPartitions.packs(spark, deleted.map(f => f.path -> f.bytes))
-      .map(fs => GraftCdcFilesPartition(fs, "delete", c.seq, c.id, priors))
-    val insParts = GraftPartitions.packs(spark, inserted.map(f => f.path -> f.bytes))
-      .map(fs => GraftCdcFilesPartition(fs, "insert", c.seq, c.id))
-    // each NEW sidecar file plans as its own partition: the driver knows
-    // only the sidecar list; marked data files resolve on the executor
-    val sidecarParts = newDel.flatMap(m => cat.readManifest(m.path))
-      .map(f => GraftCdcSidecarPartition(Seq(f.path -> f.bytes), c.seq, c.id))
-    delParts ++ insParts ++ sidecarParts
+    Some(CommitChanges(c, deleted.map(f => f.path -> f.bytes), priors,
+      inserted.map(f => f.path -> f.bytes),
+      newDel.flatMap(m => cat.readManifest(m.path)).map(f => f.path -> f.bytes)))
   }
 
   private def toGroup(m: ManifestRef): GraftDeleteGroupSpec =

@@ -283,31 +283,37 @@ private[sql] object GraftPartitions {
     * recorded size of 0 (pre-r8 metadata) falls back to one
     * getFileStatus call. */
   def binPack(spark: SparkSession, files: Seq[(String, Long)]): Array[InputPartition] =
-    packs(spark, files).map(GraftFilesPartition(_): InputPartition).toArray
+    packs(spark, Seq(files)).head.map(GraftFilesPartition(_): InputPartition).toArray
 
-  /** The raw size-packed file groups, for callers wrapping them in a
-    * different partition shape (the CDC stream's typed partitions). */
-  def packs(spark: SparkSession, files: Seq[(String, Long)]): Seq[Seq[(String, Long)]] = {
+  /** The size-packed file groups of each of `groups`, for scans whose
+    * partitions must not mix groups (MOR coverage epochs, the CDC
+    * stream's per-commit deletes and inserts). The budget is sized ONCE
+    * over the bytes of every group, so each group packs against the
+    * split size a `spark.read.parquet` of all the files would use; a
+    * group only adds the partition its own boundary cuts. */
+  def packs(spark: SparkSession, groups: Seq[Seq[(String, Long)]]): Seq[Seq[Seq[(String, Long)]]] = {
     val openCost = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.filesOpenCostInBytes
-    val sized = files.map { case (path, bytes) =>
+    val sized = groups.map(_.map { case (path, bytes) =>
       path -> (if (bytes > 0) bytes else fileLength(spark, path))
-    }
+    })
     val maxBytes = org.apache.spark.sql.execution.datasources.FilePartition
-      .maxSplitBytes(spark, sized.map(_._2 + openCost).sum)
-    val bins = Vector.newBuilder[Seq[(String, Long)]]
-    var bin = Vector.newBuilder[(String, Long)]
-    var binBytes = 0L
-    var binEmpty = true
-    for ((path, len) <- sized) {
-      if (!binEmpty && binBytes + len > maxBytes) {
-        bins += bin.result()
-        bin = Vector.newBuilder[(String, Long)]; binBytes = 0L; binEmpty = true
+      .maxSplitBytes(spark, sized.flatten.map(_._2 + openCost).sum)
+    sized.map { files =>
+      val bins = Vector.newBuilder[Seq[(String, Long)]]
+      var bin = Vector.newBuilder[(String, Long)]
+      var binBytes = 0L
+      var binEmpty = true
+      for ((path, len) <- files) {
+        if (!binEmpty && binBytes + len > maxBytes) {
+          bins += bin.result()
+          bin = Vector.newBuilder[(String, Long)]; binBytes = 0L; binEmpty = true
+        }
+        bin += (path -> len); binBytes += len + openCost; binEmpty = false
       }
-      bin += (path -> len); binBytes += len + openCost; binEmpty = false
+      if (!binEmpty) bins += bin.result()
+      bins.result()
     }
-    if (!binEmpty) bins += bin.result()
-    bins.result()
   }
 
   private def fileLength(spark: SparkSession, path: String): Long = {

@@ -1370,16 +1370,28 @@ private[sql] class GraftMetaAggScan(
   * (result aliases and casts) as one [[org.apache.spark.sql.execution
   * .LocalTableScanExec]] of the projected rows. Without it the
   * projection runs as a one-task Spark job over the local scan; with it
-  * `collect` reads the rows on the driver and no Spark job runs. */
+  * `collect` reads the rows on the driver and no Spark job runs.
+  *
+  * Only a projection that can be evaluated while planning folds: a
+  * subquery is planned after the strategies run and a Python UDF is
+  * unevaluable, so either leaves the projection to Spark's `ProjectExec`.
+  * So does a projection that throws (an ANSI overflow): the error then
+  * surfaces when the query runs, not when it is planned or explained. */
 private[graft] object GraftMetaAggStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+  import org.apache.spark.sql.catalyst.expressions.{Attribute, PlanExpression, Unevaluable, UnsafeProjection}
   import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Project(list, org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
-        _, scan: GraftMetaAggScan, output, _, _)) if list.forall(_.deterministic) =>
-      val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(list, output)
-      Seq(org.apache.spark.sql.execution.LocalTableScanExec(
-        list.map(_.toAttribute), scan.rows().toSeq.map(r => project(r).copy()), None))
+        _, scan: GraftMetaAggScan, output, _, _))
+        if list.forall(_.deterministic) && !list.exists(_.exists(e =>
+          e.isInstanceOf[PlanExpression[_]] ||
+            (e.isInstanceOf[Unevaluable] && !e.isInstanceOf[Attribute]))) =>
+      try {
+        val project = UnsafeProjection.create(list, output)
+        Seq(LocalTableScanExec(
+          list.map(_.toAttribute), scan.rows().toSeq.map(r => project(r).copy()), None))
+      } catch { case scala.util.control.NonFatal(_) => Nil }
     case _ => Nil
   }
 }
@@ -1628,13 +1640,14 @@ private[sql] class GraftBatchScan(
         .plannedFilesOfSnapshot(t.tableName, t.snapshotId, cond)
       GraftPartitions.binPack(spark, files)
     case Some(epochs) =>
-      epochs.flatMap { case (files, groups) =>
-        val specs = groups.map(specOf)
-        GraftPartitions.binPack(spark, files).map {
-          case GraftFilesPartition(fs) if specs.nonEmpty =>
-            GraftMorFilesPartition(fs, specs)
-          case p => p
-        }
+      // one split budget over every epoch's files: a partition never
+      // spans two epochs, but each epoch packs as the whole scan would
+      GraftPartitions.packs(spark, epochs.map(_._1)).zip(epochs).flatMap {
+        case (bins, (_, groups)) =>
+          val specs = groups.map(specOf)
+          bins.map(fs =>
+            if (specs.nonEmpty) GraftMorFilesPartition(fs, specs)
+            else GraftFilesPartition(fs): org.apache.spark.sql.connector.read.InputPartition)
       }.toArray
   }
 

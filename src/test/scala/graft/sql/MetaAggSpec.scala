@@ -152,6 +152,34 @@ class MetaAggSpec extends SparkSpecBase {
     assert(qf.collect().head.getLong(0) == d.filter(col("doc_id") < 50).count())
   }
 
+  test("a projection the planner cannot evaluate is left to Spark's ProjectExec") {
+    val (lake, _, cat) = register()
+    val d = docs(120)
+    cat.createTableIfNotExists("docs", d.schema)
+    cat.append("docs", d)
+    cat.createTableIfNotExists("other", d.schema)
+    cat.append("other", d.filter(col("doc_id") < 40))
+
+    // an uncorrelated scalar subquery is deterministic, but Spark plans
+    // it only after the strategies run
+    val q = spark.sql(
+      s"SELECT count(*) AS n, (SELECT max(doc_id) FROM $lake.main.other) AS m " +
+        s"FROM $lake.main.docs")
+    assert(pushedMeta(q))
+    val r = q.collect().head
+    assert(r.getLong(0) == d.count())
+    assert(r.getLong(1) == d.filter(col("doc_id") < 40).agg(max(col("doc_id"))).head.getLong(0))
+
+    // an ANSI error in the projection surfaces when the query runs, not
+    // when it is planned or explained
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val bad = spark.sql(s"SELECT count(*) div 0 AS x FROM $lake.main.docs")
+    assert(pushedMeta(bad))
+    assert(bad.queryExecution.executedPlan != null)
+    val err = intercept[Exception](bad.collect())
+    assert(err.getMessage.contains("DIVIDE_BY_ZERO"), err.getMessage)
+  }
+
   test("non-exact shapes refuse onto the real scan and stay correct") {
     val (lake, _, cat) = register()
     val d = docs(100)

@@ -170,6 +170,39 @@ class SqlCatalogSpec extends SparkSpecBase {
     assert(viaSql == spark.sparkContext.defaultParallelism)
   }
 
+  test("an MOR read over several epochs sizes its splits over the whole scan") {
+    import spark.implicits._
+    val (lake, cat) = register()
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 480)
+    cat.createTableIfNotExists("t", docs.schema)
+    cat.appendClustered("t", docs.filter(col("doc_id") < 240), Seq("doc_id"), files = 24)
+    cat.deleteKeysMOR("t", Seq(5L).toDF("doc_id"))
+    // files appended after the tombstone form a second coverage epoch
+    cat.appendClustered("t", docs.filter(col("doc_id") >= 240), Seq("doc_id"), files = 24)
+    val paths = cat.dataFiles("t").map(_.path)
+    assert(paths.size >= 40, s"expected many small files, got ${paths.size}")
+
+    val parts = graftScans(spark.sql(s"SELECT doc_id, n_chars FROM $lake.main.t"))
+      ._1.head.inputPartitions
+    val epochs = parts.collect { case GraftMorFilesPartition(_, specs) => specs }.distinct.size +
+      (if (parts.exists(_.isInstanceOf[GraftFilesPartition])) 1 else 0)
+    assert(epochs == 2, s"expected two coverage epochs, got $epochs")
+    val planned = parts.map {
+      case GraftMorFilesPartition(fs, _) => fs.size
+      case GraftFilesPartition(fs) => fs.size
+      case _ => 0
+    }.sum
+    assert(planned == paths.size)
+    val viaParquet = spark.read.parquet(paths: _*).select("doc_id", "n_chars")
+      .rdd.getNumPartitions
+    // a partition never spans two epochs, so each epoch boundary may cut
+    // one more partition; sizing each epoch on its own bytes would cut
+    // every epoch into about as many partitions as the whole table
+    assert(parts.length <= viaParquet + epochs - 1,
+      s"MOR read planned ${parts.length} input partitions over $epochs epochs, " +
+        s"spark.read.parquet $viaParquet")
+  }
+
   test("pending MOR tombstones read through the native batch scan (connector path)") {
     import spark.implicits._
     val (lake, cat) = register()
