@@ -463,9 +463,39 @@ private[sql] class GraftMorReaderFactory(
   * bounded pending count keeps live sets small; a restarted executor
   * starts empty. */
 private[sql] object GraftDeleteSets {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Set[Seq[Any]]]()
-  private val posCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, java.util.HashSet[java.lang.Long]]]()
+  /** Entries each cache keeps, least recently used evicted first. A
+    * group's id is its tombstone file list, so every new tombstone gives
+    * every older epoch a new id and the old sets are never asked for
+    * again; the bound keeps a session reading a table under a CDC stream
+    * from holding one dead set per (epoch, read). It covers one scan at
+    * the default tombstone bound (64 pending generations), so a scan's
+    * own groups never evict each other. */
+  private[sql] val MaxEntries = 64
+
+  /** A bounded LRU map: `getOrBuild` builds outside the lock (a build
+    * reads delete files), so two tasks may build the same group once
+    * each; the first stored wins. */
+  private[sql] final class Lru[V <: AnyRef](cap: Int) {
+    private val m = new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
+        size() > cap
+    }
+    def getOrBuild(key: String)(build: => V): V = {
+      val hit = m.synchronized(m.get(key))
+      if (hit != null) hit
+      else {
+        val built = build
+        m.synchronized {
+          val raced = m.get(key)
+          if (raced != null) raced else { m.put(key, built); built }
+        }
+      }
+    }
+    def size: Int = m.synchronized(m.size())
+  }
+
+  private[sql] val cache = new Lru[Set[Seq[Any]]](MaxEntries)
+  private[sql] val posCache = new Lru[Map[String, java.util.HashSet[java.lang.Long]]](MaxEntries)
 
   /** Scheme-insensitive path identity: manifests record "file:/x" style
     * qualified paths while Spark's `_metadata.file_path` renders
@@ -474,13 +504,13 @@ private[sql] object GraftDeleteSets {
   def normPath(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
 
   /** Position-delete sidecar build: normalized data-file path -> deleted
-    * row indexes, once per executor per group (same lifecycle as the
-    * key-set cache — groups die at compaction). `readFunc` reads the
-    * sidecar schema in keyCols order: (__graft_path, __graft_pos). */
+    * row indexes, once per executor per group while the group stays in
+    * the bounded cache. `readFunc` reads the sidecar schema in keyCols
+    * order: (__graft_path, __graft_pos). */
   def positions(g: GraftDeleteGroupSpec,
       readFunc: PartitionedFile => Iterator[InternalRow])
       : Map[String, java.util.HashSet[java.lang.Long]] =
-    posCache.computeIfAbsent(g.id, _ => {
+    posCache.getOrBuild(g.id) {
       val m = scala.collection.mutable.HashMap
         .empty[String, java.util.HashSet[java.lang.Long]]
       g.files.foreach { case (p, l) =>
@@ -490,12 +520,12 @@ private[sql] object GraftDeleteSets {
         }
       }
       m.toMap
-    })
+    }
 
   def get(g: GraftDeleteGroupSpec,
       readFunc: PartitionedFile => Iterator[InternalRow],
       keyTypes: Array[org.apache.spark.sql.types.DataType]): Set[Seq[Any]] =
-    cache.computeIfAbsent(g.id, _ => {
+    cache.getOrBuild(g.id) {
       val ords = Array.range(0, keyTypes.length) // delete read = key schema
       val b = Set.newBuilder[Seq[Any]]
       g.files.foreach { case (p, l) =>
@@ -503,7 +533,7 @@ private[sql] object GraftDeleteSets {
           .foreach(row => b += keyOf(row, ords, keyTypes))
       }
       b.result()
-    })
+    }
 
   /** One probe/build key: values normalized to immutable JVM objects
     * (the vectorized reader REUSES its row and UTF8String buffers — a

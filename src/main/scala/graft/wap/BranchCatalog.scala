@@ -51,8 +51,9 @@ case class DataFileMeta(
 /** One immutable manifest file: the unit of commit. An append writes
   * exactly one manifest (listing only ITS files), so commit metadata cost
   * is O(files-per-commit) — never O(table). Iceberg's manifest-list
-  * structure, minus the avro. */
-/** `seq` is the table's commit sequence number at the manifest's commit
+  * structure, minus the avro.
+  *
+  * `seq` is the table's commit sequence number at the manifest's commit
   * (Iceberg data-sequence-number semantics): a DELETE manifest
   * ([[BranchCatalog.deleteKeysMOR]]) with sequence S covers exactly the
   * data manifests with sequence < S, so rows appended AFTER the delete
@@ -647,7 +648,7 @@ class BranchCatalog(
       * For S3-style stores, pass a [[ConditionalPutRefsStore]] so the
       * commit maps to a conditional put (If-None-Match) instead. */
     refsBackend: Option[RefsStore] = None) {
-  import BranchCatalog.Change
+  import BranchCatalog.{Change, Picked}
   private implicit val fmts: Formats = DefaultFormats
   private val rootPath = new Path(root)
   // resolved once per instance: getFileSystem consults the Hadoop
@@ -962,9 +963,7 @@ class BranchCatalog(
     manifestEntriesOf(snap.manifests.map(_.path))
 
   private def manifestEntriesOf(paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], manifestEntrySchema)
+    if (paths.isEmpty) emptyFrame(manifestEntrySchema)
     else
       spark.read.schema(manifestEntrySchema).json(paths: _*)
 
@@ -972,9 +971,12 @@ class BranchCatalog(
     * independent files, so a many-commit table reads them concurrently
     * on [[BranchCatalog.metaIo]] (remote-store latency, not bandwidth,
     * dominates metadata reads). */
-  def filesOf(snap: Snapshot): Seq[DataFileMeta] =
-    if (snap.manifests.size <= 4) snap.manifests.flatMap(m => readManifest(m.path))
-    else BranchCatalog.metaIo(snap.manifests)(m => readManifest(m.path)).flatten
+  def filesOf(snap: Snapshot): Seq[DataFileMeta] = manifestFiles(snap.manifests).flatten
+
+  /** The entries of each of `ms`, in order ([[filesOf]]'s reads). */
+  private def manifestFiles(ms: Seq[ManifestRef]): Seq[Seq[DataFileMeta]] =
+    if (ms.size <= 4) ms.map(m => readManifest(m.path))
+    else BranchCatalog.metaIo(ms)(m => readManifest(m.path))
 
   /** The one read of catalog-planned parquet files: a [[org.apache.spark
     * .sql.execution.datasources.HadoopFsRelation]] over a
@@ -1117,9 +1119,6 @@ class BranchCatalog(
     walk(dir, 0, Map.empty)
   }
 
-  /** Spec-aware rewrite: partitioned tables keep their hidden layout
-    * through DML rewrites and compaction (otherwise every delete/update
-    * would silently degrade partition pruning on the touched files). */
   /** The snapshot's FULL partition-field registry, outermost first
     * (empty for unpartitioned tables): active fields route writes,
     * dropped fields survive so files written under them keep pruning —
@@ -1132,6 +1131,9 @@ class BranchCatalog(
   private[graft] def activeSpecsOf(fmt: Option[String]): Seq[PartitionSpec.SpecField] =
     specsOf(fmt).filter(_.active)
 
+  /** Spec-aware rewrite: partitioned tables keep their hidden layout
+    * through DML rewrites and compaction (otherwise every delete/update
+    * would silently degrade partition pruning on the touched files). */
   private def writeTableFiles(
       table: String, df: DataFrame, fields: Seq[PartitionSpec.SpecField],
       sortCols: Seq[String] = Nil,
@@ -1167,8 +1169,6 @@ class BranchCatalog(
 
   // ---- public API (the reference's catalog surface) ----------------------
 
-  /** reference app.py:125-149 create_table_if_not_exists. Returns true if
-    * the table was created. */
   /** CREATE with GENERATED ALWAYS AS columns (W87). */
   def createTableGenerated(table: String, schema: StructType,
       generated: Map[String, String], branch: String = "main",
@@ -1180,6 +1180,8 @@ class BranchCatalog(
       writeDefaults, generated)
   }
 
+  /** reference app.py:125-149 create_table_if_not_exists. Returns true if
+    * the table was created. */
   def createTableIfNotExists(table: String, schema: StructType, branch: String,
       specs: Seq[PartitionSpec]): Boolean =
     createTableIfNotExists(table, schema, branch, specs, Map.empty[String, String])
@@ -1633,12 +1635,6 @@ class BranchCatalog(
   def viewDef(name: String, branch: String = "main"): Option[ViewDef] =
     currentRefs().branches.get(branch).flatMap(_.views.get(name))
 
-  /** reference app.py:178-199 append_rows_to_table_in_branch: write the
-    * batch as new immutable files, commit ONE new manifest + a child
-    * snapshot on the branch. Readers of other branches never see these
-    * files (snapshot isolation). Metadata cost: one manifest (the new
-    * files) + one snapshot (manifest list grows by 1 ref) — O(commit),
-    * independent of table file count. */
   /** The table's declared write sort order ([[BranchCatalog.WriteOrderKey]]),
     * validated against `schema` — unknown columns refuse loudly at write
     * time rather than silently skipping the sort. */
@@ -1652,6 +1648,12 @@ class BranchCatalog(
     cols
   }
 
+  /** reference app.py:178-199 append_rows_to_table_in_branch: write the
+    * batch as new immutable files, commit ONE new manifest + a child
+    * snapshot on the branch. Readers of other branches never see these
+    * files (snapshot isolation). Metadata cost: one manifest (the new
+    * files) + one snapshot (manifest list grows by 1 ref) — O(commit),
+    * independent of table file count. */
   def append(table: String, df: DataFrame, branch: String = "main",
       epochStamp: Option[(String, Long)] = None,
       /** Delta mergeSchema for appends (see [[mergeInto]]'s flag of the
@@ -1695,6 +1697,41 @@ class BranchCatalog(
       Some(Change(SnapshotOp.Append, Seq(manifest), _.copy(
         schemaDdl = if (parent.schemaDdl.nonEmpty) parent.schemaDdl else df.schema.toDDL)))
     }
+  }
+
+  /** One-call table ADOPTION (Iceberg's `snapshot`/`migrate` procedures
+    * composed from [[addDataFiles]]): create `table` with the schema of
+    * the parquet under `location` — read from ONE footer, no data IO —
+    * then register every file in place. The result is a fully governed
+    * lake table (branches, time travel, DML, audits) over data that was
+    * never copied; the source directory keeps working for whatever
+    * wrote it (graft never owns imported files — see addDataFiles). */
+  def snapshotTable(table: String, location: String,
+      branch: String = "main"): AddFilesResult = {
+    require(!tableExists(table, branch),
+      s"$table already exists on $branch — add_files imports into existing tables")
+    val locPath = new Path(location)
+    require(fs.exists(locPath), s"snapshot_table location not found: $location")
+    def firstParquet(st: org.apache.hadoop.fs.FileStatus): Option[Path] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).sortBy(_.getPath.getName)
+          .filterNot(c => c.getPath.getName.startsWith("_") ||
+            c.getPath.getName.startsWith("."))
+          .iterator.flatMap(firstParquet).nextOption()
+      else Option(st.getPath).filter(_.getName.endsWith(".parquet"))
+    val probe = firstParquet(fs.getFileStatus(locPath)).getOrElse(
+      sys.error(s"no parquet files under $location"))
+    val schema = {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+        fs.getFileStatus(probe), spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try org.apache.spark.sql.graft.Bridge.parquetFooterSchema(
+        reader.getFooter.getFileMetaData, spark.sparkContext.hadoopConfiguration)
+      finally reader.close()
+    }
+    createTableIfNotExists(table, schema, branch)
+    try addDataFiles(table, location, branch)
+    catch { case e: Throwable => dropTable(table, branch); throw e }
   }
 
   /** METADATA-ONLY file import (W82 — Iceberg's `add_files`/`migrate`
@@ -1741,41 +1778,6 @@ class BranchCatalog(
     * directory names are NOT parsed — partition columns must be
     * present in the files themselves (values live in data, transform
     * values re-derive from stats). */
-  /** One-call table ADOPTION (Iceberg's `snapshot`/`migrate` procedures
-    * composed from [[addDataFiles]]): create `table` with the schema of
-    * the parquet under `location` — read from ONE footer, no data IO —
-    * then register every file in place. The result is a fully governed
-    * lake table (branches, time travel, DML, audits) over data that was
-    * never copied; the source directory keeps working for whatever
-    * wrote it (graft never owns imported files — see addDataFiles). */
-  def snapshotTable(table: String, location: String,
-      branch: String = "main"): AddFilesResult = {
-    require(!tableExists(table, branch),
-      s"$table already exists on $branch — add_files imports into existing tables")
-    val locPath = new Path(location)
-    require(fs.exists(locPath), s"snapshot_table location not found: $location")
-    def firstParquet(st: org.apache.hadoop.fs.FileStatus): Option[Path] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).sortBy(_.getPath.getName)
-          .filterNot(c => c.getPath.getName.startsWith("_") ||
-            c.getPath.getName.startsWith("."))
-          .iterator.flatMap(firstParquet).nextOption()
-      else Option(st.getPath).filter(_.getName.endsWith(".parquet"))
-    val probe = firstParquet(fs.getFileStatus(locPath)).getOrElse(
-      sys.error(s"no parquet files under $location"))
-    val schema = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-        fs.getFileStatus(probe), spark.sparkContext.hadoopConfiguration)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try org.apache.spark.sql.graft.Bridge.parquetFooterSchema(
-        reader.getFooter.getFileMetaData, spark.sparkContext.hadoopConfiguration)
-      finally reader.close()
-    }
-    createTableIfNotExists(table, schema, branch)
-    try addDataFiles(table, location, branch)
-    catch { case e: Throwable => dropTable(table, branch); throw e }
-  }
-
   def addDataFiles(table: String, location: String,
       branch: String = "main"): AddFilesResult = {
     import org.apache.spark.sql.functions.{col => fcol}
@@ -2041,8 +2043,7 @@ class BranchCatalog(
       schemaEvolution: Boolean = false): Snapshot = {
     require(keyCols.nonEmpty, "upsertKeysMOR needs at least one key column")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     requireTombstoneHeadroom(table, branch, cur, "upsertKeysMOR")
     requireNoLineage(table, branch, cur, "upsertKeysMOR")
     val schema = StructType.fromDDL(cur.schemaDdl)
@@ -2063,7 +2064,7 @@ class BranchCatalog(
     // manifest with a LOWER sequence — all prior data, never the new
     // batch committed alongside it
     val delManifest = writeManifest(table, keyFiles, schema)
-      .copy(asOf = Some(curId), keyCols = keyCols)
+      .copy(asOf = Some(cur.id), keyCols = keyCols)
     commitTable(table, branch, Some(cur), "MOR upsert", epochStamp) { (_, _) =>
       Some(Change(SnapshotOp.UpsertMor, Seq(dataManifest), c =>
         c.copy(deleteManifests = c.deleteManifests :+ delManifest.copy(seq = c.seq))))
@@ -2117,8 +2118,7 @@ class BranchCatalog(
     val inserts = latest.filter(col("_change_type") === "insert").drop(virtuals: _*)
     createTableIfNotExists(table, inserts.schema, branch)
     if (schemaEvolution) evolveSchemaForSource(table, inserts.schema, branch)
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"CDC key column $c is not a column of $table"))
@@ -2129,12 +2129,10 @@ class BranchCatalog(
     val delKeys =
       if (cur.manifests.isEmpty) changes.select(keyCols.map(col): _*).limit(0)
       else changes.select(keyCols.map(col): _*).distinct()
-    // rows > 0: an empty side would otherwise stage a schema-only part
-    // file and commit a vacuous manifest
-    val dataFiles = writeTableFiles(table, alignToSchema(inserts, schema,
-      table, branch, writeDefaults = cur.evo.writeDefaults),
-      specsOf(cur.partitionSpec), ids = cur.evo.fieldIds).filter(_.rows > 0)
-    val keyFiles = writeDataFiles(table, delKeys, Map.empty).filter(_.rows > 0)
+    // an empty side writes no file and commits no manifest
+    val dataFiles = writeRows(table, cur, alignToSchema(inserts, schema,
+      table, branch, writeDefaults = cur.evo.writeDefaults))
+    val keyFiles = writeLive(table, delKeys)
     if (dataFiles.isEmpty && keyFiles.isEmpty) {
       // empty batch: nothing to commit, but the delivery record must
       // still land for exactly-once replay
@@ -2150,15 +2148,14 @@ class BranchCatalog(
     val delManifest =
       if (keyFiles.isEmpty) None
       else Some(writeManifest(table, keyFiles, schema)
-        .copy(asOf = Some(curId), keyCols = keyCols))
+        .copy(asOf = Some(cur.id), keyCols = keyCols))
     val op = (dataManifest, delManifest) match {
       case (Some(_), Some(_)) => SnapshotOp.UpsertMor
       case (Some(_), None) => SnapshotOp.Append
       case _ => SnapshotOp.DeleteMor
     }
     commitTable(table, branch, Some(cur), "CDC apply", epochStamp) { (_, _) =>
-      Some(Change(op, dataManifest.toSeq, c =>
-        c.copy(deleteManifests = c.deleteManifests ++ delManifest.map(_.copy(seq = c.seq)))))
+      Some(Change(op, dataManifest.toSeq, withDeletes(_, delManifest)))
     }
   }
 
@@ -2205,34 +2202,18 @@ class BranchCatalog(
     * the probe side of position-delete application. */
   private def scanPlain(
       snap: Snapshot, filter: Option[Column], withLineage: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val totalFiles = snap.manifests.map(_.fileCount).sum
-    val files: Seq[(String, Long)] =
-      if (totalFiles > distributedMetaThreshold) {
-        distributedPrunedPaths(snap, filter, schema)
-      } else sized(filter match {
-        case Some(cond) =>
-          val kept = manifestsFor(snap, filter, schema)
-          pruneFiles(filesOf(snap.copy(manifests = kept)), cond, schema,
-            specsOf(snap.partitionSpec),
-            Some(new BloomProbe(kept)))
-        case None => filesOf(snap)
-      })
-    val lineageSchema =
-      if (!withLineage) schema
-      else StructType(schema.fields ++ BranchCatalog.posDeleteSchema.fields)
+    val files = plannedFiles(snap, filter).map(f => (f._1, f._2))
     val df =
       if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], lineageSchema)
+        emptyFrame(if (!withLineage) schema
+          else StructType(schema.fields ++ BranchCatalog.posDeleteSchema.fields))
       else {
         val raw = readFiles(BranchCatalog.readSchema(schema, snap.evo), files)
         if (!withLineage) raw
-        else raw.select(org.apache.spark.sql.functions.col("*"),
-          org.apache.spark.sql.functions.col("_metadata.file_path")
-            .as(BranchCatalog.PosPathCol),
-          org.apache.spark.sql.functions.col("_metadata.row_index")
-            .as(BranchCatalog.PosIdxCol))
+        else raw.select(col("*"), col("_metadata.file_path").as(BranchCatalog.PosPathCol),
+          col("_metadata.row_index").as(BranchCatalog.PosIdxCol))
       }
     filter.fold(df)(df.filter)
   }
@@ -2383,7 +2364,7 @@ class BranchCatalog(
   }
 
   def scanLineageSnapshot(table: String, snapshotId: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+    import org.apache.spark.sql.functions.col
     val snap = loadSnapshot(table, snapshotId)
     require(snap.lin.enabled,
       s"$table has no row lineage — run enableRowLineage first")
@@ -2394,38 +2375,10 @@ class BranchCatalog(
     require(snap.deleteManifests.forall(_.posDelete),
       s"$table has pending equality tombstones — lineage scans need " +
         "materialized rows (compactDataFiles first)")
-    val schema = StructType.fromDDL(snap.schemaDdl)
-    val files = filesOf(snap.copy(deleteManifests = Nil))
-    val readSchema = StructType(
-      BranchCatalog.readSchema(schema, snap.evo).fields ++ Seq(
-        org.apache.spark.sql.types.StructField(BranchCatalog.RowIdCol, LongType),
-        org.apache.spark.sql.types.StructField(BranchCatalog.LastSeqCol, LongType)))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("_row_id", LongType),
-          org.apache.spark.sql.types.StructField("_last_updated_seq", LongType))))
-    val raw = readFiles(readSchema, sized(files))
-      .select(col("*"),
-        barePath(col("_metadata.file_path")).as("__lin_path"),
-        col("_metadata.row_index").as("__lin_idx"))
-    val posDels = snap.deleteManifests.filter(_.posDelete)
-    val suppressed =
-      if (posDels.isEmpty) raw
-      else {
-        val sidecars = posDels.flatMap(m => readManifest(m.path))
-        val pd = readFiles(BranchCatalog.posDeleteSchema, sized(sidecars))
-          .select(barePath(col(BranchCatalog.PosPathCol)).as("__lin_path"),
-            col(BranchCatalog.PosIdxCol).as("__lin_idx"))
-        raw.join(pd, Seq("__lin_path", "__lin_idx"), "left_anti")
-      }
-    suppressed.join(broadcast(lineageFileMap(snap)), Seq("__lin_path"))
-      .select(
-        schema.fieldNames.map(col).toIndexedSeq ++ Seq(
-          coalesce(col(BranchCatalog.RowIdCol),
-            col("__lin_base") + col("__lin_idx")).as("_row_id"),
-          coalesce(col(BranchCatalog.LastSeqCol), col("__lin_seq"))
-            .as("_last_updated_seq")): _*)
+    currentRows(snap, filesOf(snap)).select(
+      StructType.fromDDL(snap.schemaDdl).fieldNames.map(col).toIndexedSeq ++ Seq(
+        col(BranchCatalog.RowIdCol).as("_row_id"),
+        col(BranchCatalog.LastSeqCol).as("_last_updated_seq")): _*)
   }
 
   /** Turn row lineage ON for a table: one metadata commit that rewrites
@@ -2530,47 +2483,79 @@ class BranchCatalog(
     * paths refuse). Falls back to the ordinary snapshot scan while
     * lineage is off. */
   private def rewriteScan(table: String, snapshotId: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val cur = loadSnapshot(table, snapshotId)
     if (!cur.lin.enabled) scanSnapshot(table, snapshotId)
     else {
       require(cur.deleteManifests.forall(_.posDelete),
         s"$table has pending equality tombstones with row lineage on — unreachable")
-      val schema = StructType.fromDDL(cur.schemaDdl)
-      val files = filesOf(cur.copy(deleteManifests = Nil))
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          lineageReadSchema(schema, cur))
-      else {
-        val raw = readFiles(lineageReadSchema(schema, cur), sized(files))
-          .select(col("*"),
-            col("_metadata.file_path").as(BranchCatalog.PosPathCol),
-            col("_metadata.row_index").as(BranchCatalog.PosIdxCol))
-        // decode off the captured lineage columns (a second projection
-        // could no longer resolve the hidden _metadata struct)
-        val dec = raw
-          .join(broadcast(lineageFileMap(cur)),
-            barePath(col(BranchCatalog.PosPathCol)) === col("__lin_path"))
-          .select(schema.fieldNames.map(col).toIndexedSeq ++ Seq(
-            org.apache.spark.sql.functions.coalesce(col(BranchCatalog.RowIdCol),
-              col("__lin_base") + col(BranchCatalog.PosIdxCol))
-              .as(BranchCatalog.RowIdCol),
-            org.apache.spark.sql.functions.coalesce(col(BranchCatalog.LastSeqCol),
-              col("__lin_seq")).as(BranchCatalog.LastSeqCol),
-            col(BranchCatalog.PosPathCol), col(BranchCatalog.PosIdxCol)): _*)
-        val posDels = cur.deleteManifests.filter(_.posDelete)
-        val suppressed =
-          if (posDels.isEmpty) dec
-          else {
-            val sidecars = posDels.flatMap(m => readManifest(m.path))
-            val pd = readFiles(BranchCatalog.posDeleteSchema, sized(sidecars)).alias("__pd")
-            dec.alias("__dt").join(pd,
-              col(s"__dt.${BranchCatalog.PosPathCol}") === col(s"__pd.${BranchCatalog.PosPathCol}") &&
-                col(s"__dt.${BranchCatalog.PosIdxCol}") === col(s"__pd.${BranchCatalog.PosIdxCol}"),
-              "left_anti")
-          }
-        suppressed.drop(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
-      }
+      currentRows(cur, filesOf(cur))
+        .drop(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
+    }
+  }
+
+  // ---- the file-selection and rewrite kernel ----------------------------
+  //
+  // Every read planner, row-level DML and compaction makes the same few
+  // decisions: which files of which manifests a predicate selects, what
+  // a commit does with each manifest it took files from, how a position
+  // sidecar is written, how manifests group into coverage epochs, and how
+  // a whole table is rewritten. Each is written once, here.
+
+  /** The head snapshot of table@branch. */
+  private def headOf(table: String, branch: String): Snapshot =
+    loadSnapshot(table, snapshotIdOf(table, branch)
+      .getOrElse(sys.error(s"no table $table on $branch")))
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The file selection: for each manifest of `snap`, in order, the files
+    * the partition, stats and bloom prune admits under `cond` and that
+    * `admit` keeps ([[Picked]]). Only the manifests the manifest-list
+    * prune admits are read, concurrently as [[filesOf]] reads them.
+    * Unsupported predicate shapes admit every file (pruning is sound,
+    * never required). */
+  private def selectFiles(snap: Snapshot, cond: Option[Column],
+      admit: DataFileMeta => Boolean = _ => true): Seq[Picked] = {
+    lazy val schema = StructType.fromDDL(snap.schemaDdl) // unfiltered reads skip the parse
+    lazy val specs = specsOf(snap.partitionSpec)
+    val pred = cond.flatMap(resolvePredicate(_, schema))
+    val kept = pred.fold(snap.manifests)(manifestsFor(snap, _, schema))
+    val bloom = new BloomProbe(kept)
+    val read = kept.map(_.path).zip(manifestFiles(kept)).toMap
+    snap.manifests.map { m =>
+      val files = read.getOrElse(m.path, Nil)
+      val admitted = files.filter(admit)
+      Picked(m, files, pred.fold(admitted)(pruneFiles(admitted, _, schema, specs, bloom)))
+    }
+  }
+
+  /** The read planner: (path, bytes, transform value under `pvKey`) of
+    * every file of `snap` the selection admits under `cond`; above
+    * [[distributedMetaThreshold]] files the same prune runs as a Spark
+    * job ([[distributedPrunedFilesPv]]) and only the survivors return. */
+  private def plannedFiles(snap: Snapshot, cond: Option[Column], pvKey: String = "pv")
+      : Seq[(String, Long, Option[String])] =
+    if (snap.manifests.map(_.fileCount).sum > distributedMetaThreshold)
+      distributedPrunedFilesPv(snap, cond, StructType.fromDDL(snap.schemaDdl), pvKey)
+    else selectFiles(snap, cond).flatMap(_.hit)
+      .map(f => (f.path, f.bytes, f.partition.get(pvKey)))
+
+  /** The carry rule, per picked manifest whose `hit` files leave the
+    * table: untouched, it is carried by reference; partly emptied, it is
+    * re-manifested around its survivors at the commit's sequence (a
+    * rewrite) or, with `keepSeq`, at its own (a positional drop: sidecars
+    * pending against it must still cover the survivors); emptied, it
+    * drops. */
+  private def carry(table: String, cur: Snapshot, picked: Seq[Picked],
+      keepSeq: Boolean = false): Seq[ManifestRef] = {
+    val schema = StructType.fromDDL(cur.schemaDdl)
+    picked.flatMap { p =>
+      val survivors = p.rest
+      if (p.hit.isEmpty) Some(p.m)
+      else if (survivors.isEmpty) None
+      else Some(writeCarriedManifest(table, p.m, survivors, schema, cur.lin.enabled)
+        .copy(seq = if (keepSeq) p.m.seq else cur.seq + 1))
     }
   }
 
@@ -2588,6 +2573,134 @@ class BranchCatalog(
       val abs = subset.map(f => f.copy(firstRowId = src.firstRowId + f.firstRowId))
       writeManifest(table, abs, schema, preserveRowIds = true).copy(firstRowId = 0L)
     }
+
+  /** The one writer of DML and maintenance output: `df` written under the
+    * active `fields` (sorted within each value by `sortCols`), its
+    * zero-row part files deleted — Spark stages one schema-only file for
+    * an empty frame, and no manifest will ever reference it — and the
+    * live files' metadata returned. */
+  private def writeLive(table: String, df: DataFrame,
+      fields: Seq[PartitionSpec.SpecField] = Nil, ids: Map[String, Int] = Map.empty,
+      sortCols: Seq[String] = Nil): Seq[DataFileMeta] = {
+    val (live, empty) = writeTableFiles(table, df, fields, sortCols, ids).partition(_.rows > 0)
+    empty.foreach(f => fs.delete(new Path(f.path), false))
+    live
+  }
+
+  /** [[writeLive]] of table rows under `cur`'s layout and field ids. */
+  private def writeRows(table: String, cur: Snapshot, df: DataFrame,
+      sortCols: Seq[String] = Nil): Seq[DataFileMeta] =
+    writeLive(table, df, specsOf(cur.partitionSpec), cur.evo.fieldIds, sortCols)
+
+  /** The current rows of `files` (data files of `cur`) as a rewrite or a
+    * positional mark reads them: the schema columns, the lineage columns
+    * decoded when `decode` and lineage is on (physical values win), each
+    * row's position ([[BranchCatalog.PosPathCol]]/[[BranchCatalog
+    * .PosIdxCol]]), and no row a pending position sidecar of `cur`
+    * suppresses — so a stacked positional op never re-marks, re-updates
+    * or double-counts a suppressed row. Positions are captured in the
+    * first projection: a later select could no longer resolve the hidden
+    * `_metadata` struct. */
+  private def currentRows(cur: Snapshot, files: Seq[DataFileMeta],
+      decode: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col}
+    val (pathCol, idxCol) = (BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
+    val schema = StructType.fromDDL(cur.schemaDdl)
+    val read = lineageReadSchema(schema, cur)
+    if (files.isEmpty)
+      return emptyFrame(StructType(read.fields ++ BranchCatalog.posDeleteSchema.fields))
+    val raw = readFiles(read, sized(files)).select(col("*"),
+      col("_metadata.file_path").as(pathCol), col("_metadata.row_index").as(idxCol))
+    val dec =
+      if (!decode || !cur.lin.enabled) raw
+      else raw.join(broadcast(lineageFileMap(cur)), barePath(col(pathCol)) === col("__lin_path"))
+        .select(schema.fieldNames.map(col).toIndexedSeq ++ Seq(
+          coalesce(col(BranchCatalog.RowIdCol), col("__lin_base") + col(idxCol))
+            .as(BranchCatalog.RowIdCol),
+          coalesce(col(BranchCatalog.LastSeqCol), col("__lin_seq")).as(BranchCatalog.LastSeqCol),
+          col(pathCol), col(idxCol)): _*)
+    val sidecars = cur.deleteManifests.filter(_.posDelete).flatMap(m => readManifest(m.path))
+    if (sidecars.isEmpty) dec
+    else dec.join(readFiles(BranchCatalog.posDeleteSchema, sized(sidecars)),
+      Seq(pathCol, idxCol), "left_anti")
+  }
+
+  /** The one position-sidecar write: the position columns of `marks`
+    * (rows of [[currentRows]], which already drops every position a
+    * pending sidecar holds) as a position-delete manifest anchored at
+    * `cur`; None when nothing is marked. The commit stamps its sequence
+    * ([[withDeletes]]). */
+  private def writeSidecar(table: String, cur: Snapshot, marks: DataFrame): Option[ManifestRef] = {
+    val keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
+    val files = writeLive(table, marks.select(keyCols.map(marks.col): _*))
+    if (files.isEmpty) None
+    else Some(writeManifest(table, files, BranchCatalog.posDeleteSchema)
+      .copy(asOf = Some(cur.id), keyCols = keyCols, posDelete = true))
+  }
+
+  /** `c` with `dels` added to its pending deletes, stamped with `c`'s
+    * sequence: a delete covers exactly the data committed before it
+    * (`m.seq < d.seq`), never the data committed alongside it. */
+  private def withDeletes(c: Snapshot, dels: Iterable[ManifestRef]): Snapshot =
+    c.copy(deleteManifests = c.deleteManifests ++ dels.map(_.copy(seq = c.seq)))
+
+  /** The rows of the `hit` files of `picked`, read for a copy-on-write
+    * rewrite: lineage materialized ([[withMaterializedLineage]]) from the
+    * touched manifests' lineage map. */
+  private def rewriteRows(cur: Snapshot, picked: Seq[Picked]): DataFrame = {
+    val read = lineageReadSchema(StructType.fromDDL(cur.schemaDdl), cur)
+    val touched = picked.filter(_.hit.nonEmpty)
+    if (touched.isEmpty) emptyFrame(read)
+    else withMaterializedLineage(readFiles(read, sized(touched.flatMap(_.hit))),
+      cur.copy(manifests = touched.map(_.m)))
+  }
+
+  /** Commits a copy-on-write rewrite of `cur`: the `written` files as one
+    * fresh manifest beside the `carried` ones ([[carry]]). Refuses
+    * pending tombstones: the two delete representations never
+    * interleave. */
+  private def commitRewrite(table: String, branch: String, cur: Snapshot, op: SnapshotOp,
+      during: String, carried: Seq[ManifestRef], written: Seq[DataFileMeta]): Snapshot = {
+    val fresh =
+      if (written.isEmpty) Nil
+      else Seq(writeManifest(table, written, StructType.fromDDL(cur.schemaDdl)))
+    commitTable(table, branch, Some(cur), during) { (_, _) =>
+      requireNoTombstones(table, branch, cur)
+      Some(Change(op, fresh, _.copy(manifests = carried)))
+    }
+  }
+
+  /** The one whole-table rewrite: the head's current rows
+    * ([[rewriteScan]] — pending deletes applied, lineage materialized)
+    * laid out and written by `layout`, committed as one manifest in a
+    * [[fullRewrite]] child that `edit` gives the op's own contract, then
+    * the bloom indexes rebuilt on the new files ([[carryBloomIndexes]]). */
+  private def rewriteWhole(table: String, branch: String, op: SnapshotOp,
+      during: String = "compaction", edit: Snapshot => Snapshot = identity)(
+      layout: (Snapshot, DataFrame) => Seq[DataFileMeta]): Snapshot = {
+    val cur = headOf(table, branch)
+    val written = layout(cur, rewriteScan(table, cur.id))
+    val fresh =
+      if (written.isEmpty) Nil
+      else Seq(writeManifest(table, written, StructType.fromDDL(cur.schemaDdl)))
+    val committed = commitTable(table, branch, Some(cur), during) { (_, _) =>
+      Some(Change(op, fresh, c => edit(fullRewrite(c))))
+    }
+    carryBloomIndexes(table, cur, branch)
+    committed
+  }
+
+  /** The coverage epochs of `snap`: its data manifests grouped by the
+    * tombstones that cover them ([[tombstoneCovers]]), each with those
+    * tombstones, fewest covering tombstones first. With sequence numbers
+    * the signatures nest, so there are at most tombstones + 1 epochs. */
+  private def epochsOf(table: String, snap: Snapshot): Seq[(Seq[ManifestRef], Seq[ManifestRef])] = {
+    val covers = tombstoneCovers(table, snap)
+    snap.manifests
+      .groupBy(m => snap.deleteManifests.filter(d => covers(d, m)).map(_.path).toSet)
+      .toSeq.sortBy { case (sig, _) => (sig.size, sig.toSeq.sorted.mkString("|")) }
+      .map { case (sig, ms) => (ms, snap.deleteManifests.filter(d => sig.contains(d.path))) }
+  }
 
   /** Does tombstone `d` cover data manifest `m` in `snap`? Sequence
     * comparison when the tombstone carries one (`m.seq < d.seq` — Iceberg
@@ -2624,15 +2737,7 @@ class BranchCatalog(
     * count stays small, so the union stays a handful of branches. */
   private def scanWithDeletes(
       table: String, snap: Snapshot, filter: Option[Column]): DataFrame = {
-    val covers = tombstoneCovers(table, snap)
-    val epochs: Seq[(Seq[ManifestRef], Seq[ManifestRef])] = snap.manifests
-      .groupBy(m => snap.deleteManifests.filter(d => covers(d, m)).map(_.path).toSet)
-      .toSeq.sortBy { case (sig, _) => (sig.size, sig.toSeq.sorted.mkString("|")) }
-      .map { case (sig, ms) =>
-        (ms, snap.deleteManifests.filter(d => sig.contains(d.path)))
-      }
-    val schema = StructType.fromDDL(snap.schemaDdl)
-    val parts = epochs.map { case (ms, dels) =>
+    val parts = epochsOf(table, snap).map { case (ms, dels) =>
       val (posDels, eqDels) = dels.partition(_.posDelete)
       val base = scanPlain(snap.copy(manifests = ms, deleteManifests = Nil),
         filter, withLineage = posDels.nonEmpty)
@@ -2666,8 +2771,7 @@ class BranchCatalog(
           .drop(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
       }
     }
-    parts.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+    parts.reduceOption(_ unionByName _).getOrElse(emptyFrame(StructType.fromDDL(snap.schemaDdl)))
   }
 
   /** Copy-on-write DML refuses while tombstones are pending: the two
@@ -2716,8 +2820,7 @@ class BranchCatalog(
     * delete representations never interleave ambiguously. */
   def deleteKeysMOR(table: String, keys: DataFrame, branch: String = "main"): Snapshot = {
     require(keys.schema.fields.nonEmpty, "deleteKeysMOR needs at least one key column")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     requireTombstoneHeadroom(table, branch, cur, "deleteKeysMOR")
     requireNoLineage(table, branch, cur, "deleteKeysMOR")
     val tableCols = StructType.fromDDL(cur.schemaDdl).fieldNames.toSet
@@ -2728,19 +2831,13 @@ class BranchCatalog(
     // the commit sequence pins the covered manifest set: the delete
     // applies to data committed BEFORE it, never to later appends
     val delManifest = writeManifest(table, delFiles, tschema)
-      .copy(asOf = Some(curId), keyCols = keys.schema.fieldNames.toSeq)
+      .copy(asOf = Some(cur.id), keyCols = keys.schema.fieldNames.toSeq)
     commitTable(table, branch, Some(cur), "MOR delete") { (_, _) =>
       Some(Change(SnapshotOp.DeleteMor, edit = c =>
         c.copy(deleteManifests = c.deleteManifests :+ delManifest.copy(seq = c.seq))))
     }
   }
 
-  /** Replace table@branch's CURRENT content with `df` in one commit (SQL
-    * `INSERT OVERWRITE` semantics): the new snapshot's manifest list is
-    * exactly the batch's manifest — prior files stay referenced by older
-    * snapshots for time travel until expiry, and pending MOR tombstones
-    * are cleared (everything they covered is gone). Metadata cost is the
-    * same O(batch) as [[append]]. */
   /** REPLACE TABLE AS SELECT (Iceberg RTAS): one atomic commit swaps the
     * table's ENTIRE definition — schema, layout, content — while the
     * snapshot lineage survives (parent = the replaced head, so time
@@ -2796,9 +2893,14 @@ class BranchCatalog(
     }
   }
 
+  /** Replace table@branch's CURRENT content with `df` in one commit (SQL
+    * `INSERT OVERWRITE` semantics): the new snapshot's manifest list is
+    * exactly the batch's manifest — prior files stay referenced by older
+    * snapshots for time travel until expiry, and pending MOR tombstones
+    * are cleared (everything they covered is gone). Metadata cost is the
+    * same O(batch) as [[append]]. */
   def overwrite(table: String, df: DataFrame, branch: String = "main"): Snapshot = {
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     val aligned =
       if (cur.schemaDdl.nonEmpty) alignToSchema(df, StructType.fromDDL(cur.schemaDdl),
         table, branch, writeDefaults = cur.evo.writeDefaults)
@@ -2894,13 +2996,9 @@ class BranchCatalog(
     private val byTable =
       scala.collection.mutable.LinkedHashMap.empty[String, StagedTable]
 
-    private def headOf(table: String): Snapshot = {
-      val id = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-      loadSnapshot(table, id)
-    }
     private def entry(table: String): StagedTable =
       byTable.getOrElseUpdate(table, {
-        val head = headOf(table)
+        val head = headOf(table, branch)
         StagedTable(head.schemaDdl, Vector.empty, Vector.empty, head.partitionSpec,
           head.evo.fieldIds, head.evo.writeDefaults)
       })
@@ -2996,21 +3094,13 @@ class BranchCatalog(
     currentRefs().branches.get(branch).flatMap(_.tables.get(table))
 
   /** All current data files of table@branch (manifest read, no data IO). */
-  def dataFiles(table: String, branch: String = "main"): Seq[DataFileMeta] = {
-    val id = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    filesOf(loadSnapshot(table, id))
-  }
+  def dataFiles(table: String, branch: String = "main"): Seq[DataFileMeta] =
+    filesOf(headOf(table, branch))
 
   /** Files of table@branch that MAY satisfy `cond` per footer stats —
     * exposed for tests/metrics; `scan` uses the same logic. */
-  def prunedDataFiles(table: String, cond: Column, branch: String = "main"): Seq[DataFileMeta] = {
-    val id = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val snap = loadSnapshot(table, id)
-    val schema = StructType.fromDDL(snap.schemaDdl)
-    val kept = manifestsFor(snap, Some(cond), schema)
-    pruneFiles(filesOf(snap.copy(manifests = kept)), cond, schema,
-      specsOf(snap.partitionSpec), Some(new BloomProbe(kept)))
-  }
+  def prunedDataFiles(table: String, cond: Column, branch: String = "main"): Seq[DataFileMeta] =
+    selectFiles(headOf(table, branch), Some(cond)).flatMap(_.hit)
 
   // ---- file-level stats pruning -----------------------------------------
 
@@ -3262,29 +3352,18 @@ class BranchCatalog(
     * manifest-list prune every planning tier applies BEFORE reading
     * manifest entries. */
   private def manifestsFor(
-      snap: Snapshot, cond: Option[Column], schema: StructType): Seq[ManifestRef] =
-    cond.flatMap(resolvePredicate(_, schema)) match {
-      case Some(pred) => snap.manifests.filter(
-        manifestMayMatch(_, pred, schema, specsOf(snap.partitionSpec)))
-      case None => snap.manifests
-    }
+      snap: Snapshot, pred: Expression, schema: StructType): Seq[ManifestRef] =
+    snap.manifests.filter(manifestMayMatch(_, pred, schema, specsOf(snap.partitionSpec)))
 
-  /** Keep only files whose partition transform value and footer stats
-    * cannot rule out `cond`. Unsupported predicate shapes / missing stats
-    * keep the file (pruning is always sound, never required). The Column
-    * is resolved through the analyzer against the table schema first
-    * (Spark 4 Columns are lazy ColumnNode graphs; analysis also applies
-    * the proper type coercion). */
+  /** Keep only files whose partition transform value, footer stats and
+    * bloom sidecars cannot rule out the resolved predicate
+    * ([[resolvePredicate]]). Unsupported predicate shapes / missing stats
+    * keep the file (pruning is always sound, never required). */
   private def pruneFiles(
-      files: Seq[DataFileMeta], cond: Column, schema: StructType,
-      specs: Seq[PartitionSpec.SpecField] = Nil,
-      bloom: Option[BloomProbe] = None): Seq[DataFileMeta] = {
-    resolvePredicate(cond, schema) match {
-      case None => files
-      case Some(pred) =>
-        val preds = conjuncts(pred).filter(predLeaves(_) <= maxPruneLeaves)
-        files.filter { f => preds.forall(p => admits(f, p, specs, schema, bloom)) }
-    }
+      files: Seq[DataFileMeta], pred: Expression, schema: StructType,
+      specs: Seq[PartitionSpec.SpecField], bloom: BloomProbe): Seq[DataFileMeta] = {
+    val preds = conjuncts(pred).filter(predLeaves(_) <= maxPruneLeaves)
+    files.filter(f => preds.forall(p => admits(f, p, specs, schema, Some(bloom))))
   }
 
   /** The distributed planning path: manifest entries read + stats-pruned
@@ -3318,8 +3397,7 @@ class BranchCatalog(
         // manifest-list prune FIRST: executors then read only the
         // admitted manifests' entries (O(matching manifests) tasks)
         val entries = manifestEntries(snap.copy(
-            manifests = snap.manifests.filter(
-              manifestMayMatch(_, pred, schema, specsOf(snap.partitionSpec)))))
+            manifests = manifestsFor(snap, pred, schema)))
           .withColumn("__manifest", input_file_name())
         conjuncts(pred).filter(predLeaves(_) <= maxPruneLeaves)
           .map(p => admitsCol(p, spec, schema, bloom))
@@ -3358,19 +3436,7 @@ class BranchCatalog(
     val snap = loadSnapshot(table, snapshotId)
     require(snap.deleteManifests.isEmpty,
       s"snapshot $snapshotId of $table has pending MOR tombstones — plan via scanSnapshot")
-    val schema = StructType.fromDDL(snap.schemaDdl)
-    if (snap.manifests.map(_.fileCount).sum > distributedMetaThreshold)
-      distributedPrunedFilesPv(snap, cond, schema, pvKey)
-    else {
-      val files = cond match {
-        case Some(c) =>
-          val kept = manifestsFor(snap, cond, schema)
-          pruneFiles(filesOf(snap.copy(manifests = kept)), c, schema,
-            specsOf(snap.partitionSpec), Some(new BloomProbe(kept)))
-        case None => filesOf(snap)
-      }
-      files.map(f => (f.path, f.bytes, f.partition.get(pvKey)))
-    }
+    plannedFiles(snap, cond, pvKey)
   }
 
   /** A file PREFIX guaranteed to hold at least `limit` rows (or every
@@ -3441,54 +3507,34 @@ class BranchCatalog(
       table: String, snapshotId: String, cond: Option[Column])
       : Seq[(Seq[(String, Long)], Seq[MorDeleteGroupPlan])] = {
     val snap = loadSnapshot(table, snapshotId)
-    val schema = StructType.fromDDL(snap.schemaDdl)
-    val covers = tombstoneCovers(table, snap)
-    snap.manifests
-      .groupBy(m => snap.deleteManifests.filter(d => covers(d, m)).map(_.path).toSet)
-      .toSeq.sortBy { case (sig, _) => (sig.size, sig.toSeq.sorted.mkString("|")) }
-      .map { case (sig, ms) =>
-        val sub = snap.copy(manifests = ms, deleteManifests = Nil)
-        val dataFiles: Seq[(String, Long)] =
-          if (ms.map(_.fileCount).sum > distributedMetaThreshold)
-            distributedPrunedPaths(sub, cond, schema)
-          else {
-            val fs = cond match {
-              case Some(c) =>
-                val kept = manifestsFor(sub, cond, schema)
-                pruneFiles(filesOf(sub.copy(manifests = kept)), c, schema,
-                  specsOf(snap.partitionSpec),
-                  Some(new BloomProbe(kept)))
-              case None => filesOf(sub)
-            }
-            fs.map(f => f.path -> f.bytes)
+    epochsOf(table, snap).map { case (ms, dels) =>
+      val dataFiles = plannedFiles(snap.copy(manifests = ms, deleteManifests = Nil), cond)
+        .map(f => f._1 -> f._2)
+      val groups = dels
+        .groupBy(d => (if (d.posDelete) "pos|" else "eq|") +
+          (if (d.keyCols.nonEmpty) d.keyCols.mkString(",") else d.path))
+        .toSeq.sortBy(_._1)
+        .map { case (_, group) =>
+          val delFiles = group.flatMap(m => readManifest(m.path)).map(f => f.path -> f.bytes)
+          // one footer read resolves the delete FILE schema (legacy
+          // tombstones recorded no keyCols — their whole file schema
+          // is the key)
+          val fileSchema = spark.read.parquet(delFiles.map(_._1): _*).schema
+          val keyCols = group.head.keyCols match {
+            case Nil => fileSchema.fieldNames.toSeq
+            case cols => cols
           }
-        val groups = snap.deleteManifests.filter(d => sig.contains(d.path))
-          .groupBy(d => (if (d.posDelete) "pos|" else "eq|") +
-            (if (d.keyCols.nonEmpty) d.keyCols.mkString(",") else d.path))
-          .toSeq.sortBy(_._1)
-          .map { case (_, group) =>
-            val delFiles = group.flatMap(m => readManifest(m.path)).map(f => f.path -> f.bytes)
-            // one footer read resolves the delete FILE schema (legacy
-            // tombstones recorded no keyCols — their whole file schema
-            // is the key)
-            val fileSchema = spark.read.parquet(delFiles.map(_._1): _*).schema
-            val keyCols = group.head.keyCols match {
-              case Nil => fileSchema.fieldNames.toSeq
-              case cols => cols
-            }
-            MorDeleteGroupPlan(keyCols, delFiles, fileSchema.toDDL,
-              positional = group.head.posDelete)
-          }
-        (dataFiles, groups)
-      }
+          MorDeleteGroupPlan(keyCols, delFiles, fileSchema.toDDL,
+            positional = group.head.posDelete)
+        }
+      (dataFiles, groups)
+    }
   }
 
   /** Resolve a user predicate against the table schema (Spark 4 Columns
     * are lazy ColumnNode graphs; analysis also applies type coercion). */
   private[wap] def resolvePredicate(cond: Column, schema: StructType): Option[Expression] = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    empty.filter(cond).queryExecution.analyzed
+    emptyFrame(schema).filter(cond).queryExecution.analyzed
       .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
   }
 
@@ -4548,12 +4594,6 @@ class BranchCatalog(
     case _ => false
   }
 
-  /** Align a batch to the table schema for append: reorder columns, cast
-    * columns whose types widen losslessly, and fill columns the batch
-    * lacks with nulls (legal only for nullable columns — i.e. columns
-    * added by [[evolveSchema]], so pre-evolution writers keep working).
-    * Extra columns and non-widening type changes stay hard errors,
-    * raised BEFORE any data is written. */
   /** CHECK constraints (`graft.constraint.<name>` TBLPROPERTIES — the
     * Delta table-constraint analogue): no row WRITTEN by an insert or
     * update path may evaluate a constraint to FALSE (NULL passes, SQL
@@ -4627,6 +4667,12 @@ class BranchCatalog(
     }
   }
 
+  /** Align a batch to the table schema for append: reorder columns, cast
+    * columns whose types widen losslessly, and fill columns the batch
+    * lacks with nulls (legal only for nullable columns — i.e. columns
+    * added by [[evolveSchema]], so pre-evolution writers keep working).
+    * Extra columns and non-widening type changes stay hard errors,
+    * raised BEFORE any data is written. */
   private def alignToSchema(
       df: DataFrame, expected: StructType, table: String, branch: String,
       check: Boolean = true,
@@ -4711,11 +4757,12 @@ class BranchCatalog(
     * no data is rewritten. Older snapshots keep the schema their data was
     * committed under, so time travel returns exactly what was written
     * (Iceberg semantics — the reference inherits this from PyIceberg's
-    * schema evolution). Dropping or renaming columns, narrowing types and
-    * adding non-nullable columns are rejected. */
-  /** Metadata-only schema evolution: add nullable columns, widen types,
-    * DROP columns. A drop never touches data — reads project the new
-    * schema and simply never request the column from old files. The
+    * schema evolution). Narrowing types and adding non-nullable columns
+    * are rejected.
+    *
+    * Columns may also be DROPPED. A drop never touches data — reads
+    * project the new schema and simply never request the column from old
+    * files. The
     * hazard a drop creates is the RE-ADD: old files still carry the old
     * values under that name, and a name-based read would resurrect them
     * into the "new" column (the collision Iceberg prevents with field
@@ -4724,9 +4771,8 @@ class BranchCatalog(
     * last carried it — i.e. until a rewrite (compaction/DML) has
     * replaced every file written while the old column existed. Dropping
     * the hidden-partition source column or a pending MOR tombstone key
-    * is refused (layout/merge semantics depend on them). Renames stay
-    * unsupported (a drop+add pair is exactly that, with the documented
-    * data loss). */
+    * is refused (layout/merge semantics depend on them). Renames go
+    * through [[renameColumn]] (a drop+add pair here loses the data). */
   def evolveSchema(table: String, newSchema: StructType, branch: String = "main",
       defaults: Map[String, String] = Map.empty): Snapshot =
     commitTable(table, branch, None) { (cur, b) =>
@@ -4960,21 +5006,6 @@ class BranchCatalog(
     (head, head.manifests.filterNot(m => baseManifests.contains(m.path)))
   }
 
-  /** Incremental read between two snapshots (the Iceberg
-    * incremental-append-scan analogue): rows in data files `toId`
-    * references that `fromId` does not — the append delta of a snapshot
-    * window, the feed for incremental downstream pipelines ("process
-    * only what landed since my last run"). A metadata diff: manifests
-    * new in `toId` are read, and their files subtracted against
-    * `fromId`'s FILE set — file-level subtraction keeps the delta exact
-    * when manifest compaction re-folded old files into a new manifest
-    * (manifest-level subtraction would re-report the whole table). Cost
-    * is O(manifests) driver reads on both sides, bounded by the same
-    * maintenance that bounds every scan's planning. DML rewrites
-    * (delete/update/data compaction) produce genuinely NEW files whose
-    * rows are reported again — snapshot deltas are append-granular, not
-    * row-level CDC; run incremental consumers against append-only
-    * windows or diff downstream. */
   /** The data FILES `toId` references that `fromId` (None = nothing) does
     * not — the file-level planning primitive behind [[scanChangesBetween]]
     * and the streaming source. Same append-granular semantics; refuses
@@ -5047,8 +5078,7 @@ class BranchCatalog(
       org.apache.spark.sql.types.StructField("_change_type", StringType, nullable = false))
     def side(fs: Seq[DataFileMeta], w: Int): DataFrame =
       if (fs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(schema.fields :+
+        emptyFrame(StructType(schema.fields :+
             org.apache.spark.sql.types.StructField("__w", org.apache.spark.sql.types.IntegerType)))
       else readFiles(BranchCatalog.readSchema(schema, to.evo), sized(fs))
         .select(cols.map(col) :+ lit(w).as("__w"): _*)
@@ -5102,8 +5132,7 @@ class BranchCatalog(
       import org.apache.spark.sql.functions.{broadcast, coalesce}
       val readSchema = lineageReadSchema(schema, snap)
       if (files.isEmpty)
-        return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(schema.fields.map(f => f.copy(name = s"$tag${f.name}")) :+
+        return emptyFrame(StructType(schema.fields.map(f => f.copy(name = s"$tag${f.name}")) :+
             StructField(s"${tag}id", LongType)))
       readFiles(readSchema, sized(files))
         .select(col("*"),
@@ -5153,14 +5182,25 @@ class BranchCatalog(
     val snap = loadSnapshot(table, toId) // one read serves diff AND prune
     val files = changedFilesOf(table, fromId, snap)
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val pruned = cond match {
-      case Some(c) => pruneFiles(files, c, schema,
-        specsOf(snap.partitionSpec), Some(new BloomProbe(snap.manifests)))
-      case None => files
-    }
-    pruned.map(f => f.path -> f.bytes)
+    cond.flatMap(resolvePredicate(_, schema)).fold(files)(pruneFiles(files, _, schema,
+      specsOf(snap.partitionSpec), new BloomProbe(snap.manifests))).map(f => f.path -> f.bytes)
   }
 
+  /** Incremental read between two snapshots (the Iceberg
+    * incremental-append-scan analogue): rows in data files `toId`
+    * references that `fromId` does not — the append delta of a snapshot
+    * window, the feed for incremental downstream pipelines ("process
+    * only what landed since my last run"). A metadata diff: manifests
+    * new in `toId` are read, and their files subtracted against
+    * `fromId`'s FILE set — file-level subtraction keeps the delta exact
+    * when manifest compaction re-folded old files into a new manifest
+    * (manifest-level subtraction would re-report the whole table). Cost
+    * is O(manifests) driver reads on both sides, bounded by the same
+    * maintenance that bounds every scan's planning. DML rewrites
+    * (delete/update/data compaction) produce genuinely NEW files whose
+    * rows are reported again — snapshot deltas are append-granular, not
+    * row-level CDC; run incremental consumers against append-only
+    * windows or diff downstream. */
   def scanChangesBetween(table: String, fromId: String, toId: String): DataFrame = {
     val from = loadSnapshot(table, fromId)
     val to = loadSnapshot(table, toId)
@@ -5168,12 +5208,12 @@ class BranchCatalog(
     val fromManifests = from.manifests.map(_.path).toSet
     val newManifests = to.manifests.filterNot(m => fromManifests.contains(m.path))
     if (newManifests.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return emptyFrame(schema)
     val fromFiles = from.manifests.flatMap(m => readManifest(m.path)).map(_.path).toSet
     val files = newManifests.flatMap(m => readManifest(m.path))
       .filterNot(f => fromFiles.contains(f.path))
     if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      emptyFrame(schema)
     else readFiles(BranchCatalog.readSchema(schema, to.evo), sized(files))
   }
 
@@ -5454,79 +5494,38 @@ class BranchCatalog(
     * the copy-on-write read+rewrite. */
   def deleteWhere(table: String, cond: Column, branch: String = "main"): DeleteResult = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val spec = specsOf(cur.partitionSpec)
-    val bloomIdx = Some(new BloomProbe(cur.manifests))
-    val resolved = resolvePredicate(cond, schema)
-    // per-manifest split so untouched manifests survive by reference;
-    // affected files split again into provably-all-match (metadata-only
-    // drop) vs maybe-match (copy-on-write rewrite)
-    val perManifest = cur.manifests.map { m =>
-      // manifest-list prune: an excluded manifest carries over by
-      // reference without ever being READ
-      if (resolved.exists(p => !manifestMayMatch(m, p, schema, spec)))
-        (m, Seq.empty[DataFileMeta], Seq.empty[DataFileMeta], Seq.empty[DataFileMeta])
-      else {
-        val files = readManifest(m.path)
-        val affected = pruneFiles(files, cond, schema, spec, bloomIdx)
-        val (dropped, rewrite) = resolved match {
-          case Some(pred) => affected.partition(f => allRowsMatch(f, pred, schema))
-          case None => (Seq.empty[DataFileMeta], affected)
-        }
-        val touched = affected.map(_.path).toSet
-        (m, dropped, rewrite, files.filterNot(f => touched.contains(f.path)))
-      }
-    }
-    val droppedFiles = perManifest.flatMap { case (_, d, _, _) => d }
-    val rewriteFiles = perManifest.flatMap { case (_, _, r, _) => r }
+    val cur = headOf(table, branch)
+    val picked = selectFiles(cur, Some(cond))
+    val allMatch = allRowsMatchOf(cur, cond)
+    val (droppedFiles, rewriteFiles) = picked.flatMap(_.hit).partition(allMatch)
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (droppedFiles.isEmpty && rewriteFiles.isEmpty)
       return DeleteResult(cur, 0L, 0L, totalFiles)
-
+    // W73: survivors carry their row ids into the rewrite output (delete
+    // never updates a surviving row, so last_seq carries too); the fresh
+    // base the commit allocates covers no physically-NULL row
     val kept =
-      if (rewriteFiles.isEmpty) Seq.empty[DataFileMeta]
-      else {
-        // W73: survivors carry their row ids into the rewrite output
-        // (delete never updates a surviving row, so last_seq carries too)
-        val raw = readFiles(lineageReadSchema(schema, cur), sized(rewriteFiles))
-        val survivors = withMaterializedLineage(raw,
-          cur.copy(manifests = perManifest.collect {
-            case (m, _, r, _) if r.nonEmpty => m }))
-          .filter(not(coalesce(cond, lit(false))))
-        val rewritten = writeTableFiles(table, survivors, spec, ids = cur.evo.fieldIds)
-        val (k, empty) = rewritten.partition(_.rows > 0)
-        // 0-row part files are ours and uncommitted — drop them now, they
-        // would otherwise be invisible to orphan GC (never in any manifest)
-        empty.foreach(f => fs.delete(new Path(f.path), false))
-        k
-      }
-
-    val newSeq = cur.seq + 1
-    val carried =
-      perManifest.flatMap { case (m, dropped, rewrite, untouched) =>
-        if (dropped.isEmpty && rewrite.isEmpty) Some(m)
-        else if (untouched.nonEmpty) Some(writeCarriedManifest(table, m, untouched,
-          schema, cur.lin.enabled).copy(seq = newSeq))
-        else None
-      }
-    // survivors' ids are MATERIALIZED in the rewrite output, so the fresh
-    // base allocated inside the commit covers only physically-NULL rows
-    // (none here — delete never inserts); allocation still goes through
-    // the global counter for uniformity with inserting rewrites
-    val freshManifest =
-      if (kept.nonEmpty) Seq(writeManifest(table, kept, schema)) else Seq.empty
-    val rowsDeleted =
-      droppedFiles.map(_.rows).sum + rewriteFiles.map(_.rows).sum - kept.map(_.rows).sum
-    val committed = commitTable(table, branch, Some(cur), "delete") { (_, _) =>
-      requireNoTombstones(table, branch, cur)
-      Some(Change(SnapshotOp.Delete, freshManifest, _.copy(manifests = carried)))
-    }
-    DeleteResult(committed, rowsDeleted,
+      if (rewriteFiles.isEmpty) Nil
+      else writeRows(table, cur,
+        rewriteRows(cur, picked.map(p => p.copy(hit = p.hit.filterNot(allMatch))))
+          .filter(not(coalesce(cond, lit(false)))))
+    val committed = commitRewrite(table, branch, cur, SnapshotOp.Delete, "delete",
+      carry(table, cur, picked), kept)
+    DeleteResult(committed,
+      droppedFiles.map(_.rows).sum + rewriteFiles.map(_.rows).sum - kept.map(_.rows).sum,
       rewriteFiles.size.toLong,
       totalFiles - rewriteFiles.size - droppedFiles.size,
       droppedFiles.size.toLong)
+  }
+
+  /** The [[allRowsMatch]] sufficiency proof under `cond` — the DML tier
+    * that drops a file metadata-only, never read. */
+  private def allRowsMatchOf(cur: Snapshot, cond: Column): DataFileMeta => Boolean = {
+    val schema = StructType.fromDDL(cur.schemaDdl)
+    resolvePredicate(cond, schema) match {
+      case Some(pred) => f => allRowsMatch(f, pred, schema)
+      case None => _ => false
+    }
   }
 
   /** Row-level DELETE, merge-on-read by POSITION (Iceberg v2 position
@@ -5557,81 +5556,28 @@ class BranchCatalog(
   def deleteWherePositional(
       table: String, cond: Column, branch: String = "main"): DeleteResult = {
     import org.apache.spark.sql.functions.{coalesce, col => fcol, lit}
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
       s"$table@$branch has pending EQUALITY tombstones — materialize with " +
         "compactDataFiles before position deletes (one delete representation at a time)")
     requireTombstoneHeadroom(table, branch, cur, "deleteWherePositional")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val spec = specsOf(cur.partitionSpec)
-    val bloomIdx = Some(new BloomProbe(cur.manifests))
-    val resolved = resolvePredicate(cond, schema)
-    // same two-tier planning as deleteWhere: manifest-list prune, then
-    // provably-all-match files drop metadata-only; the remainder get
-    // position sidecars instead of a rewrite
-    val perManifest = cur.manifests.map { m =>
-      if (resolved.exists(p => !manifestMayMatch(m, p, schema, spec)))
-        (m, Seq.empty[DataFileMeta], Seq.empty[DataFileMeta])
-      else {
-        val files = readManifest(m.path)
-        val affected = pruneFiles(files, cond, schema, spec, bloomIdx)
-        val (dropped, marked) = resolved match {
-          case Some(pred) => affected.partition(f => allRowsMatch(f, pred, schema))
-          case None => (Seq.empty[DataFileMeta], affected)
-        }
-        (m, dropped, marked)
-      }
-    }
-    val droppedFiles = perManifest.flatMap { case (_, d, _) => d }
-    val markFiles = perManifest.flatMap { case (_, _, mk) => mk }
+    // same two-tier planning as deleteWhere: provably-all-match files drop
+    // metadata-only; the remainder get position sidecars, not a rewrite
+    val picked = selectFiles(cur, Some(cond))
+    val allMatch = allRowsMatchOf(cur, cond)
+    val (droppedFiles, markFiles) = picked.flatMap(_.hit).partition(allMatch)
     val totalFiles = cur.manifests.map(_.fileCount).sum
-    if (droppedFiles.isEmpty && markFiles.isEmpty)
-      return DeleteResult(cur, 0L, 0L, totalFiles)
-
-    val posFilesWritten: Seq[DataFileMeta] =
-      if (markFiles.isEmpty) Nil
-      else {
-        val marked = readFiles(BranchCatalog.readSchema(schema, cur.evo), sized(markFiles))
-          .filter(coalesce(cond, lit(false)))
-          .select(
-            fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
-            fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
-        val priorFiles = cur.deleteManifests.flatMap(d => readManifest(d.path))
-        val fresh =
-          if (priorFiles.isEmpty) marked
-          else marked.join(
-            readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles)),
-            Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
-        val written = writeDataFiles(table, fresh, Map.empty)
-        val (live, empty) = written.partition(_.rows > 0)
-        empty.foreach(f => fs.delete(new Path(f.path), false))
-        live
-      }
-    val newSeq = cur.seq + 1
-    val newManifests = perManifest.flatMap { case (m, dropped, _) =>
-      if (dropped.isEmpty) Some(m)
-      else {
-        val droppedPaths = dropped.map(_.path).toSet
-        val kept = readManifest(m.path).filterNot(f => droppedPaths.contains(f.path))
-        // ORIGINAL sequence: pending sidecars committed earlier must
-        // still cover the surviving files (m.seq < d.seq)
-        if (kept.nonEmpty) Some(writeCarriedManifest(table, m, kept, schema,
-          cur.lin.enabled).copy(seq = m.seq))
-        else None
-      }
-    }
     val posManifest =
-      if (posFilesWritten.isEmpty) None
-      else Some(writeManifest(table, posFilesWritten, BranchCatalog.posDeleteSchema)
-        .copy(asOf = Some(curId), seq = newSeq,
-          keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
-          posDelete = true))
+      if (markFiles.isEmpty) None
+      else writeSidecar(table, cur,
+        currentRows(cur, markFiles, decode = false).filter(coalesce(cond, lit(false))))
     if (droppedFiles.isEmpty && posManifest.isEmpty)
-      return DeleteResult(cur, 0L, 0L, totalFiles) // every mark already pending
+      return DeleteResult(cur, 0L, 0L, totalFiles) // nothing matched, or every mark pending
+    val newManifests = carry(table, cur,
+      picked.map(p => p.copy(hit = p.hit.filter(allMatch))), keepSeq = true)
     val committed = commitTable(table, branch, Some(cur), "positional delete") { (_, _) =>
-      Some(Change(SnapshotOp.DeletePos, edit = c => c.copy(manifests = newManifests,
-        deleteManifests = c.deleteManifests ++ posManifest.toSeq)))
+      Some(Change(SnapshotOp.DeletePos,
+        edit = c => withDeletes(c.copy(manifests = newManifests), posManifest)))
     }
     // rowsDeleted must not re-count rows a PRIOR pending sidecar already
     // suppressed in the metadata-dropped files (stacked positional deletes
@@ -5652,8 +5598,7 @@ class BranchCatalog(
         }
       }
     DeleteResult(committed,
-      droppedFiles.map(_.rows).sum - alreadySuppressedInDropped +
-        posFilesWritten.map(_.rows).sum,
+      droppedFiles.map(_.rows).sum - alreadySuppressedInDropped + posManifest.map(_.rows).sum,
       0L, totalFiles - droppedFiles.size, droppedFiles.size.toLong)
   }
 
@@ -5678,10 +5623,9 @@ class BranchCatalog(
   def updateWherePositional(
       table: String, cond: Column, set: Map[String, Column],
       branch: String = "main"): UpdateResult = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, lit, col => fcol}
+    import org.apache.spark.sql.functions.{coalesce, lit, col => fcol}
     require(set.nonEmpty, "updateWherePositional needs at least one SET column")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
       s"$table@$branch has pending EQUALITY tombstones — materialize with " +
         "compactDataFiles before positional updates (one delete representation at a time)")
@@ -5689,75 +5633,36 @@ class BranchCatalog(
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (c <- set.keys)
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
-    val spec = specsOf(cur.partitionSpec)
-    val bloomIdx = Some(new BloomProbe(cur.manifests))
-    val resolved = resolvePredicate(cond, schema)
-    val markFiles = cur.manifests.flatMap { m =>
-      if (resolved.exists(p => !manifestMayMatch(m, p, schema, spec))) Nil
-      else pruneFiles(readManifest(m.path), cond, schema, spec, bloomIdx)
-    }
+    val markFiles = selectFiles(cur, Some(cond)).flatMap(_.hit)
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (markFiles.isEmpty) return UpdateResult(cur, 0L, 0L, totalFiles)
-
-    // ONE read of the marked files: matched rows with their exact
-    // positions, minus positions a prior pending sidecar already
-    // suppressed (those versions are not current — their replacements,
-    // if any, sit in later files this scan also covers)
-    val marked = readFiles(lineageReadSchema(schema, cur), sized(markFiles))
-      .select(fcol("*"),
-        fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
-        fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
-      .filter(coalesce(cond, lit(false)))
-    val priorFiles = cur.deleteManifests.flatMap(d => readManifest(d.path))
-    val fresh =
-      if (priorFiles.isEmpty) marked
-      else marked.join(
-        readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles)),
-        Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
-
-    val posFilesWritten = {
-      val written = writeDataFiles(table,
-        fresh.select(fcol(BranchCatalog.PosPathCol), fcol(BranchCatalog.PosIdxCol)),
-        Map.empty)
-      val (live, empty) = written.partition(_.rows > 0)
-      empty.foreach(f => fs.delete(new Path(f.path), false))
-      live
+    // ONE read of the marked files: matched CURRENT rows (a version a
+    // pending sidecar suppressed is not current — its replacement, if
+    // any, sits in a later file this scan also covers)
+    val fresh = currentRows(cur, markFiles).filter(coalesce(cond, lit(false)))
+    val posManifest = writeSidecar(table, cur, fresh) match {
+      case Some(m) => m
+      case None => return UpdateResult(cur, 0L, 0L, totalFiles)
     }
-    if (posFilesWritten.isEmpty) return UpdateResult(cur, 0L, 0L, totalFiles)
 
     // the updated VERSIONS: SET applied, original row ids materialized
     // (UPDATE preserves identity), last-seq left NULL — it inherits the
     // new manifest's sequence at decode
     val linCols =
       if (!cur.lin.enabled) Seq.empty[Column]
-      else Seq(
-        coalesce(fcol(BranchCatalog.RowIdCol),
-          fcol("__lin_base") + fcol(BranchCatalog.PosIdxCol)).as(BranchCatalog.RowIdCol),
-        lit(null).cast("long").as(BranchCatalog.LastSeqCol))
-    val decoded =
-      if (!cur.lin.enabled) fresh
-      else fresh.join(broadcast(lineageFileMap(cur)),
-        barePath(fcol(BranchCatalog.PosPathCol)) === fcol("__lin_path"))
-    val updated0 = decoded.select((schema.fields.map { f =>
+      else Seq(fcol(BranchCatalog.RowIdCol), lit(null).cast("long").as(BranchCatalog.LastSeqCol))
+    val updated0 = fresh.select((schema.fields.map { f =>
       set.get(f.name) match {
         case Some(expr) => expr.cast(f.dataType).as(f.name)
         case None => fcol(f.name)
       }
     }.toSeq ++ linCols): _*)
     val updated = constraintGuard(updated0, table, branch, None)
-    val dataFiles = writeTableFiles(table, updated, spec, ids = cur.evo.fieldIds)
-      .filter(_.rows > 0)
-    val dataManifest = writeManifest(table, dataFiles, schema)
-    val rowsUpdated = posFilesWritten.map(_.rows).sum
-    val posManifest = writeManifest(table, posFilesWritten, BranchCatalog.posDeleteSchema)
-      .copy(asOf = Some(curId),
-        keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
-        posDelete = true)
+    val dataManifest = writeManifest(table, writeRows(table, cur, updated), schema)
     val committed = commitTable(table, branch, Some(cur), "positional update") { (_, _) =>
-      Some(Change(SnapshotOp.UpdatePos, Seq(dataManifest), c =>
-        c.copy(deleteManifests = c.deleteManifests :+ posManifest.copy(seq = c.seq))))
+      Some(Change(SnapshotOp.UpdatePos, Seq(dataManifest), withDeletes(_, Seq(posManifest))))
     }
-    UpdateResult(committed, rowsUpdated, 0L, totalFiles)
+    UpdateResult(committed, posManifest.rows, 0L, totalFiles)
   }
 
   /** Row-level UPDATE, copy-on-write — the planning shape of
@@ -5774,36 +5679,20 @@ class BranchCatalog(
       branch: String = "main"): UpdateResult = {
     import org.apache.spark.sql.functions.{coalesce, lit, when, col => fcol}
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (c <- set.keys)
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
-    val spec = specsOf(cur.partitionSpec)
-    val bloomIdx = Some(new BloomProbe(cur.manifests))
-    val resolvedCond = resolvePredicate(cond, schema)
-    val perManifest = cur.manifests.map { m =>
-      if (resolvedCond.exists(p => !manifestMayMatch(m, p, schema, spec)))
-        (m, Seq.empty[DataFileMeta], Seq.empty[DataFileMeta])
-      else {
-        val files = readManifest(m.path)
-        val affected = pruneFiles(files, cond, schema, spec, bloomIdx)
-        val affectedPaths = affected.map(_.path).toSet
-        (m, affected, files.filterNot(f => affectedPaths.contains(f.path)))
-      }
-    }
-    val affectedFiles = perManifest.flatMap { case (_, affected, _) => affected }
+    val picked = selectFiles(cur, Some(cond))
+    val affectedFiles = picked.flatMap(_.hit)
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (affectedFiles.isEmpty)
       return UpdateResult(cur, 0L, 0L, totalFiles)
 
-    val scanRaw = readFiles(lineageReadSchema(schema, cur), sized(affectedFiles))
     // W73: carried rows keep (row id, last seq); UPDATED rows keep their
     // id but get last_seq = NULL — the null inherits the NEW manifest's
     // sequence at read (the Iceberg v3 null-means-this-commit rule)
-    val scan = withMaterializedLineage(scanRaw,
-      cur.copy(manifests = perManifest.collect {
-        case (m, a, _) if a.nonEmpty => m }))
+    val scan = rewriteRows(cur, picked)
     val hit = coalesce(cond, lit(false))
     val rowsUpdated = scan.filter(hit).count()
     val linCols: Seq[Column] =
@@ -5821,48 +5710,12 @@ class BranchCatalog(
     // values); carried-through rows are exempt
     val updated = constraintGuard(updated0, table, branch,
       Some(fcol("__hit"))).drop("__hit")
-    val rewritten = writeTableFiles(table, updated, spec, ids = cur.evo.fieldIds)
-    val newSeq = cur.seq + 1
-    val carried =
-      perManifest.flatMap { case (m, affected, untouched) =>
-        if (affected.isEmpty) Some(m)
-        else if (untouched.nonEmpty) Some(writeCarriedManifest(table, m, untouched,
-          schema, cur.lin.enabled).copy(seq = newSeq))
-        else None
-      }
-    val freshManifest =
-      if (rewritten.nonEmpty) Seq(writeManifest(table, rewritten, schema)) else Seq.empty
-    val committed = commitTable(table, branch, Some(cur), "update") { (_, _) =>
-      requireNoTombstones(table, branch, cur)
-      Some(Change(SnapshotOp.Update, freshManifest, _.copy(manifests = carried)))
-    }
+    val committed = commitRewrite(table, branch, cur, SnapshotOp.Update, "update",
+      carry(table, cur, picked), writeRows(table, cur, updated))
     UpdateResult(committed, rowsUpdated,
       affectedFiles.size.toLong, totalFiles - affectedFiles.size)
   }
 
-  /** MERGE-INTO-style upsert, copy-on-write: every source row lands
-    * (replacing target rows that share its key, inserting otherwise) in
-    * ONE commit. Planning: the per-key min/max of the source (one small
-    * aggregate) builds a range predicate, footer stats prune the table
-    * to files that MAY hold a source key — a file proven outside the
-    * source's key range cannot contain a match, so only those files are
-    * rewritten (their non-matching rows survive byte-equal, matching
-    * rows are dropped) and the source batch is written alongside in the
-    * same job. Untouched manifests carry over by reference; the
-    * replacement is keyed, so duplicate-keyed TARGET rows all collapse
-    * to the source row. Source keys should be unique (every source row
-    * is inserted verbatim — duplicate source keys land as duplicate
-    * rows, exactly as they would via append). */
-  /** Source-key prune predicate shared by [[upsert]] and [[mergeInto]]:
-    * per-key min/max range conjuncts (always — sound for any key count),
-    * PLUS, for a single-key source with at most [[maxPruneLeaves]]
-    * distinct non-null keys, the exact key IN-list. The IN conjunct's
-    * equality leaves engage bucket-transform and bloom-sidecar pruning
-    * that ranges cannot, so a CDC point-upsert on an unclustered table
-    * rewrites only the files whose bloom admits some source key. Sound:
-    * a target row only matches a source row on EQUAL non-null keys, so
-    * every affected row's key is in the list (null-keyed source rows
-    * match nothing). */
   /** Re-binds a `t.`-aliased by-source clause Column to bare columns so
     * the join-free merge tier can evaluate it straight over a file scan
     * (no `t`/`s` aliases exist there — every row IS the target row).
@@ -5882,6 +5735,16 @@ class BranchCatalog(
     })
   }
 
+  /** Source-key prune predicate shared by [[upsert]] and [[mergeInto]]:
+    * per-key min/max range conjuncts (always — sound for any key count),
+    * PLUS, for a single-key source with at most [[maxPruneLeaves]]
+    * distinct non-null keys, the exact key IN-list. The IN conjunct's
+    * equality leaves engage bucket-transform and bloom-sidecar pruning
+    * that ranges cannot, so a CDC point-upsert on an unclustered table
+    * rewrites only the files whose bloom admits some source key. Sound:
+    * a target row only matches a source row on EQUAL non-null keys, so
+    * every affected row's key is in the list (null-keyed source rows
+    * match nothing). */
   private def sourceKeyPruneCond(aligned: DataFrame, keys: Seq[String]): Column = {
     import org.apache.spark.sql.functions.{approx_count_distinct, col => fcol, lit, max => fmax, min => fmin}
     val single = keys.size == 1
@@ -5945,16 +5808,28 @@ class BranchCatalog(
     if (next != cur) { evolveSchema(table, next, branch); () }
   }
 
+  /** MERGE-INTO-style upsert, copy-on-write: every source row lands
+    * (replacing target rows that share its key, inserting otherwise) in
+    * ONE commit. Planning: the per-key min/max of the source (one small
+    * aggregate) builds a range predicate, footer stats prune the table
+    * to files that MAY hold a source key — a file proven outside the
+    * source's key range cannot contain a match, so only those files are
+    * rewritten (their non-matching rows survive byte-equal, matching
+    * rows are dropped) and the source batch is written alongside in the
+    * same job. Untouched manifests carry over by reference; the
+    * replacement is keyed, so duplicate-keyed TARGET rows all collapse
+    * to the source row. Source keys should be unique (every source row
+    * is inserted verbatim — duplicate source keys land as duplicate
+    * rows, exactly as they would via append). */
   def upsert(
       table: String, source: DataFrame, keys: Seq[String],
       branch: String = "main",
       /** See [[mergeInto]]'s flag of the same name. */
       schemaEvolution: Boolean = false): UpsertResult = {
-    import org.apache.spark.sql.functions.{col => fcol, lit, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.{col => fcol, lit}
     require(keys.nonEmpty, "upsert needs at least one key column")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (k <- keys)
       require(schema.fieldNames.contains(k), s"key column $k is not in ${schema.toDDL}")
@@ -5968,22 +5843,8 @@ class BranchCatalog(
       // bounded per-key ranges (+ small-source key IN-list for bucket/
       // bloom pruning) -> a sound (conservative) prune predicate; an
       // all-null key contributes no bound (that key prunes nothing)
-      val cond = sourceKeyPruneCond(aligned, keys)
-
-      val spec = specsOf(cur.partitionSpec)
-      val bloomIdx = Some(new BloomProbe(cur.manifests))
-      val resolvedCond = resolvePredicate(cond, schema)
-      val perManifest = cur.manifests.map { m =>
-        if (resolvedCond.exists(p => !manifestMayMatch(m, p, schema, spec)))
-          (m, Seq.empty[DataFileMeta], Seq.empty[DataFileMeta])
-        else {
-          val files = readManifest(m.path)
-          val affected = pruneFiles(files, cond, schema, spec, bloomIdx)
-          val affectedPaths = affected.map(_.path).toSet
-          (m, affected, files.filterNot(f => affectedPaths.contains(f.path)))
-        }
-      }
-      val affectedFiles = perManifest.flatMap { case (_, affected, _) => affected }
+      val picked = selectFiles(cur, Some(sourceKeyPruneCond(aligned, keys)))
+      val affectedFiles = picked.flatMap(_.hit)
 
       val srcKeys = aligned.select(keys.map(fcol): _*).distinct()
       val alignedNullLin =
@@ -5998,31 +5859,15 @@ class BranchCatalog(
           // inserted rows are SOURCE rows — fresh ids (the Iceberg v3
           // MAY-reassign path for keyed replacement: the pairing is by
           // key, not row identity)
-          val scanRaw = readFiles(lineageReadSchema(schema, cur), sized(affectedFiles))
-          val scan = withMaterializedLineage(scanRaw,
-            cur.copy(manifests = perManifest.collect {
-              case (m, a, _) if a.nonEmpty => m }))
+          val scan = rewriteRows(cur, picked)
           val kept = scan.join(srcKeys, keys, "left_anti")
           val replaced = affectedFiles.map(_.rows).sum - kept.count()
           val inserted = aligned
             .join(scan.select(keys.map(fcol): _*).distinct(), keys, "left_anti").count()
           (kept.unionByName(alignedNullLin), replaced, inserted)
         }
-      val rewritten = writeTableFiles(table, survivors, spec, ids = cur.evo.fieldIds)
-      val newSeq = cur.seq + 1
-      val carried =
-        perManifest.flatMap { case (m, affected, untouched) =>
-          if (affected.isEmpty) Some(m)
-          else if (untouched.nonEmpty) Some(writeCarriedManifest(table, m, untouched,
-            schema, cur.lin.enabled).copy(seq = newSeq))
-          else None
-        }
-      val freshManifest =
-        if (rewritten.nonEmpty) Seq(writeManifest(table, rewritten, schema)) else Seq.empty
-      val committed = commitTable(table, branch, Some(cur), "upsert") { (_, _) =>
-        requireNoTombstones(table, branch, cur)
-        Some(Change(SnapshotOp.Upsert, freshManifest, _.copy(manifests = carried)))
-      }
+      val committed = commitRewrite(table, branch, cur, SnapshotOp.Upsert, "upsert",
+        carry(table, cur, picked), writeRows(table, cur, survivors))
       UpsertResult(committed, rowsReplaced, rowsInserted,
         affectedFiles.size.toLong, totalFiles - affectedFiles.size)
     } finally { aligned.unpersist(); () }
@@ -6064,8 +5909,7 @@ class BranchCatalog(
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
     require(clauses.count(_.isInstanceOf[MergeClause.NotMatchedInsert]) <= 1,
       "at most one WHEN NOT MATCHED clause")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (k <- keys)
       require(schema.fieldNames.contains(k), s"key column $k is not in ${schema.toDDL}")
@@ -6090,40 +5934,24 @@ class BranchCatalog(
       if (srcEmpty && bySource.isEmpty)
         return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
 
-      val spec = specsOf(cur.partitionSpec)
-      val bloomIdx = Some(new BloomProbe(cur.manifests))
       // same sound source-key prune as upsert (ranges + small-source
       // key IN-list engaging bucket/bloom pruning). Soundness is what the
       // by-source tiers below lean on: a file the prune EXCLUDES provably
       // holds no source key, so every one of its rows is NOT MATCHED BY
-      // SOURCE. The remainder is None for manifests never read (fully
-      // skipped) and Some(files minus affected) for read ones.
-      val pruneCond = if (srcEmpty) null else sourceKeyPruneCond(aligned, keys)
-      val resolvedCond = if (srcEmpty) None else resolvePredicate(pruneCond, schema)
-      val perManifest: Seq[(ManifestRef, Seq[DataFileMeta], Option[Seq[DataFileMeta]])] =
-        cur.manifests.map { m =>
-          if (srcEmpty || resolvedCond.exists(p => !manifestMayMatch(m, p, schema, spec)))
-            (m, Seq.empty[DataFileMeta], None)
-          else {
-            val files = readManifest(m.path)
-            val affected = pruneFiles(files, pruneCond, schema, spec, bloomIdx)
-            if (affected.isEmpty) (m, affected, None)
-            else {
-              val affectedPaths = affected.map(_.path).toSet
-              (m, affected, Some(files.filterNot(f => affectedPaths.contains(f.path))))
-            }
-          }
-        }
-      val affectedFiles = perManifest.flatMap { case (_, affected, _) => affected }
+      // SOURCE.
+      val picked =
+        if (srcEmpty) cur.manifests.map(Picked(_, Nil, Nil))
+        else selectFiles(cur, Some(sourceKeyPruneCond(aligned, keys)))
+      val affectedFiles = picked.flatMap(_.hit)
 
       // ---- NOT MATCHED BY SOURCE planning over the no-possible-match
       // files (everything outside `affected`). Tier 1: a leading
       // unconditional by-source DELETE drops them ALL metadata-only —
       // whole skipped manifests fold by their ref counts, never read.
       // Tier 2 (conditional clauses): the disjunction of by-source
-      // conditions prunes; only files some condition MAY hold in are
-      // rewritten (join-free — no source row exists for these), the rest
-      // carry over by reference.
+      // conditions selects (the kernel's second pass); only files some
+      // condition MAY hold in are rewritten (join-free — no source row
+      // exists for these), the rest carry over.
       val dropAllNonMatched = bySource.headOption.exists {
         case (MergeClause.NotMatchedBySourceDelete(None), _) => true
         case _ => false
@@ -6133,67 +5961,25 @@ class BranchCatalog(
         case MergeClause.NotMatchedBySourceDelete(cond) => cond
         case _ => None
       }
-      val bsAnyCond: Option[Column] =
-        if (bySource.isEmpty || dropAllNonMatched) None
-        else Some(bySource.map { case (c, _) =>
+      val bsPicked: Seq[Picked] =
+        if (bySource.isEmpty || dropAllNonMatched) picked.map(_.copy(hit = Nil))
+        else selectFiles(cur, Some(bySource.map { case (c, _) =>
           bsCond(c).map(stripTargetAlias).getOrElse(lit(true))
-        }.reduce(_ || _))
-      val bsResolved = bsAnyCond.flatMap(c => resolvePredicate(c, schema))
+        }.reduce(_ || _))).zip(picked).map { case (b, p) =>
+          val taken = p.hit.map(_.path).toSet
+          b.copy(hit = b.hit.filterNot(f => taken(f.path)))
+        }
+      val bsFiles = bsPicked.flatMap(_.hit)
+      val (droppedRows, droppedCount) =
+        if (!dropAllNonMatched) (0L, 0L)
+        else (cur.manifests.map(_.rows).sum - affectedFiles.map(_.rows).sum,
+          cur.manifests.map(_.fileCount).sum - affectedFiles.size)
+      val manifestKeeps =
+        if (dropAllNonMatched) Nil
+        else carry(table, cur, picked.zip(bsPicked).map { case (p, b) =>
+          Picked(p.m, if (p.files.nonEmpty) p.files else b.files, p.hit ++ b.hit) })
 
-      var droppedRows = 0L
-      var droppedCount = 0L
-      val bsFilesB = Seq.newBuilder[DataFileMeta]
-      // per-manifest keep decision (the rewritten-survivors manifest is
-      // appended after the write below)
-      val manifestKeeps: Seq[ManifestRef] = perManifest.flatMap {
-        case (m, affected, remainderOpt) =>
-          if (bySource.isEmpty) {
-            if (affected.isEmpty) Some(m)
-            else remainderOpt.filter(_.nonEmpty)
-              .map(r => writeCarriedManifest(table, m, r, schema, cur.lin.enabled)
-                .copy(seq = cur.seq + 1))
-          } else if (dropAllNonMatched) {
-            remainderOpt match {
-              case None if affected.isEmpty =>
-                droppedRows += m.rows; droppedCount += m.fileCount; None
-              case None => None // affected covers the whole manifest
-              case Some(r) =>
-                droppedRows += r.map(_.rows).sum; droppedCount += r.size; None
-            }
-          } else {
-            def split(files: Seq[DataFileMeta], keepWholeIfClean: Boolean): Option[ManifestRef] = {
-              val bs = pruneFiles(files, bsAnyCond.get, schema, spec, bloomIdx)
-              bsFilesB ++= bs
-              val bsPaths = bs.map(_.path).toSet
-              val carried = files.filterNot(f => bsPaths.contains(f.path))
-              if (bs.isEmpty && keepWholeIfClean) Some(m)
-              else if (carried.nonEmpty)
-                Some(writeCarriedManifest(table, m, carried, schema, cur.lin.enabled)
-                  .copy(seq = cur.seq + 1))
-              else None
-            }
-            remainderOpt match {
-              case Some(r) => split(r, keepWholeIfClean = false)
-              case None =>
-                // affected is empty here (a manifest with matches always
-                // records its remainder); the manifest was never read for
-                // the match tier, so the by-source conditions get their
-                // own manifest-level prune before any entry is read
-                if (bsResolved.exists(p => !manifestMayMatch(m, p, schema, spec))) Some(m)
-                else split(readManifest(m.path), keepWholeIfClean = true)
-            }
-          }
-      }
-      val bsFiles = bsFilesB.result()
-
-      val targetScan =
-        if (affectedFiles.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            lineageReadSchema(schema, cur))
-        else withMaterializedLineage(
-          readFiles(lineageReadSchema(schema, cur), sized(affectedFiles)),
-          cur.copy(manifests = perManifest.collect {
-            case (m, a, _) if a.nonEmpty => m }))
+      val targetScan = rewriteRows(cur, picked)
       val joined = targetScan
         .withColumn("__t_hit", lit(true)).alias("t")
         .join(aligned.withColumn("__s_hit", lit(true)).alias("s"),
@@ -6279,7 +6065,7 @@ class BranchCatalog(
         val survivors = constraintGuard(
           generatedGuard(survivors0, cur, schema, isU || isV || isI, explicitMain),
           table, branch, Some(isU || isV || isI)).drop("__action")
-        val rewritten = writeTableFiles(table, survivors, spec, ids = cur.evo.fieldIds)
+        val rewritten = writeRows(table, cur, survivors)
 
         // join-free by-source tier: these files provably hold no source
         // key, so every row is NOT MATCHED BY SOURCE — first-match-wins
@@ -6287,9 +6073,7 @@ class BranchCatalog(
         val (bsRewritten, nBsUpd, nBsDel) =
           if (bsFiles.isEmpty) (Seq.empty[DataFileMeta], 0L, 0L)
           else {
-            val scan = withMaterializedLineage(
-              readFiles(lineageReadSchema(schema, cur), sized(bsFiles)),
-              cur)
+            val scan = rewriteRows(cur, bsPicked)
             val bsFires = bySource.map {
               case (MergeClause.NotMatchedBySourceUpdate(c, _), i) =>
                 (coalesce(c.map(stripTargetAlias).getOrElse(lit(true)), lit(false)), s"v$i")
@@ -6334,20 +6118,12 @@ class BranchCatalog(
               val bsSurvivors = constraintGuard(
                 generatedGuard(bsSurvivors0, cur, schema, bsIsV, explicitBs),
                 table, branch, Some(bsIsV)).drop("__action")
-              (writeTableFiles(table, bsSurvivors, spec, ids = cur.evo.fieldIds),
-                bsCnt(0), bsCnt(1))
+              (writeRows(table, cur, bsSurvivors), bsCnt(0), bsCnt(1))
             } finally { bsActioned.unpersist(); () }
           }
 
-        val newSeq = cur.seq + 1
-        val allRewritten = rewritten ++ bsRewritten
-        val freshManifest =
-          if (allRewritten.nonEmpty) Seq(writeManifest(table, allRewritten, schema))
-          else Seq.empty
-        val committed = commitTable(table, branch, Some(cur), "merge") { (_, _) =>
-          requireNoTombstones(table, branch, cur)
-          Some(Change(SnapshotOp.Merge, freshManifest, _.copy(manifests = manifestKeeps)))
-        }
+        val committed = commitRewrite(table, branch, cur, SnapshotOp.Merge, "merge",
+          manifestKeeps, rewritten ++ bsRewritten)
         MergeIntoResult(committed, nUpd + nBsUpd, nDel + nBsDel + droppedRows, nIns,
           affectedFiles.size.toLong + bsFiles.size,
           totalFiles - affectedFiles.size - bsFiles.size - droppedCount,
@@ -6387,7 +6163,7 @@ class BranchCatalog(
       clauses: Seq[MergeClause], branch: String = "main",
       /** See [[mergeInto]]'s flag of the same name. */
       schemaEvolution: Boolean = false): MergeIntoResult = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col => fcol, lit, sum => fsum, when}
+    import org.apache.spark.sql.functions.{coalesce, col => fcol, lit, sum => fsum, when}
     require(keys.nonEmpty, "mergeIntoMOR needs at least one key column")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
     require(clauses.nonEmpty, "mergeIntoMOR needs at least one WHEN clause")
@@ -6398,8 +6174,7 @@ class BranchCatalog(
       "NOT MATCHED BY SOURCE touches every target row outside the source — " +
         "positional encoding would be O(table); use mergeInto (copy-on-write, " +
         "with metadata-only by-source tiers) for this shape")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
       s"$table@$branch has pending EQUALITY tombstones — materialize with " +
         "compactDataFiles before positional merges (one delete representation at a time)")
@@ -6414,48 +6189,10 @@ class BranchCatalog(
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (aligned.isEmpty) return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
-      val spec = specsOf(cur.partitionSpec)
-      val bloomIdx = Some(new BloomProbe(cur.manifests))
-      val pruneCond = sourceKeyPruneCond(aligned, keys)
-      val resolvedCond = resolvePredicate(pruneCond, schema)
-      val markFiles = cur.manifests.flatMap { m =>
-        if (resolvedCond.exists(p => !manifestMayMatch(m, p, schema, spec))) Nil
-        else pruneFiles(readManifest(m.path), pruneCond, schema, spec, bloomIdx)
-      }
-
-      // CURRENT versions of the possibly-matching files: schema columns +
-      // exact positions + (when lineage is on) decoded row ids, minus
-      // positions a prior pending sidecar already suppressed. Positions
-      // and lineage are captured in the FIRST projection — a later select
-      // could no longer resolve the hidden `_metadata` struct.
-      val targetCur: DataFrame =
-        if (markFiles.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(lineageReadSchema(schema, cur).fields ++ Seq(
-              StructField(BranchCatalog.PosPathCol, StringType),
-              StructField(BranchCatalog.PosIdxCol, LongType))))
-        else {
-          val raw = readFiles(lineageReadSchema(schema, cur), sized(markFiles))
-            .select(fcol("*"),
-              fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
-              fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
-          val dec =
-            if (!cur.lin.enabled) raw
-            else raw.join(broadcast(lineageFileMap(cur)),
-              barePath(fcol(BranchCatalog.PosPathCol)) === fcol("__lin_path"))
-              .select(schema.fieldNames.map(fcol).toIndexedSeq ++ Seq(
-                coalesce(fcol(BranchCatalog.RowIdCol),
-                  fcol("__lin_base") + fcol(BranchCatalog.PosIdxCol))
-                  .as(BranchCatalog.RowIdCol),
-                coalesce(fcol(BranchCatalog.LastSeqCol), fcol("__lin_seq"))
-                  .as(BranchCatalog.LastSeqCol),
-                fcol(BranchCatalog.PosPathCol), fcol(BranchCatalog.PosIdxCol)): _*)
-          val priorFiles = cur.deleteManifests.flatMap(d => readManifest(d.path))
-          if (priorFiles.isEmpty) dec
-          else dec.join(
-            readFiles(BranchCatalog.posDeleteSchema, sized(priorFiles)),
-            Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
-        }
+      val markFiles = selectFiles(cur, Some(sourceKeyPruneCond(aligned, keys))).flatMap(_.hit)
+      // CURRENT versions of the possibly-matching files, with positions
+      // and decoded row ids
+      val targetCur = currentRows(cur, markFiles)
 
       val joined = targetCur
         .withColumn("__t_hit", lit(true)).alias("t")
@@ -6494,15 +6231,9 @@ class BranchCatalog(
           return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
 
         // old versions of updated/deleted rows → one position sidecar
-        val posFilesWritten: Seq[DataFileMeta] = {
-          val posRows = actioned.filter(isU || isD).select(
-            fcol(s"t.${BranchCatalog.PosPathCol}").as(BranchCatalog.PosPathCol),
-            fcol(s"t.${BranchCatalog.PosIdxCol}").as(BranchCatalog.PosIdxCol))
-          val written = writeDataFiles(table, posRows, Map.empty)
-          val (live, empty) = written.partition(_.rows > 0)
-          empty.foreach(f => fs.delete(new Path(f.path), false))
-          live
-        }
+        val posManifest = writeSidecar(table, cur, actioned.filter(isU || isD).select(
+          fcol(s"t.${BranchCatalog.PosPathCol}").as(BranchCatalog.PosPathCol),
+          fcol(s"t.${BranchCatalog.PosIdxCol}").as(BranchCatalog.PosIdxCol)))
 
         // outcomes that append: updated versions (original row id kept,
         // seq inherits the commit) + inserts (fresh ids from the new
@@ -6535,33 +6266,17 @@ class BranchCatalog(
         val written = constraintGuard(
           generatedGuard(written0, cur, schema, lit(true), explicitMor),
           table, branch, None).drop("__action")
-        val dataFiles = writeTableFiles(table, written, spec, ids = cur.evo.fieldIds)
-          .filter(_.rows > 0)
-
-        val newSeq = cur.seq + 1
+        val dataFiles = writeRows(table, cur, written)
         val dataManifests =
           if (dataFiles.nonEmpty) Seq(writeManifest(table, dataFiles, schema)) else Nil
-        val posManifest =
-          if (posFilesWritten.isEmpty) None
-          else Some(writeManifest(table, posFilesWritten, BranchCatalog.posDeleteSchema)
-            .copy(asOf = Some(curId), seq = newSeq,
-              keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
-              posDelete = true))
         val committed = commitTable(table, branch, Some(cur), "positional merge") { (_, _) =>
-          Some(Change(SnapshotOp.MergePos, dataManifests,
-            c => c.copy(deleteManifests = c.deleteManifests ++ posManifest.toSeq)))
+          Some(Change(SnapshotOp.MergePos, dataManifests, withDeletes(_, posManifest)))
         }
         MergeIntoResult(committed, nUpd, nDel, nIns, 0L, totalFiles)
       } finally { actioned.unpersist(); () }
     } finally { aligned.unpersist(); () }
   }
 
-  /** Partition evolution by rewrite: re-layout table@branch's CURRENT
-    * data under `spec` (the sanctioned path where [[appendPartitioned]]
-    * rejects a mismatched spec — hidden-partitioning metadata cannot be
-    * retrofitted without rewriting files). One partitioned write job +
-    * one metadata commit; older snapshots keep the old layout until
-    * expiry. */
   /** METADATA-ONLY partition-spec evolution (Iceberg `ADD PARTITION
     * FIELD`): ONE snapshot commit adds a transform to the layout without
     * touching a data file — at 100 TB a layout change must not cost a
@@ -6644,45 +6359,29 @@ class BranchCatalog(
       Some(PartitionSpec.formatFields(merged))
     }
 
+  /** Partition evolution by rewrite: re-layout table@branch's CURRENT
+    * data under `spec` (the sanctioned path where [[appendPartitioned]]
+    * rejects a mismatched spec — hidden-partitioning metadata cannot be
+    * retrofitted without rewriting files). One partitioned write job +
+    * one metadata commit; older snapshots keep the old layout until
+    * expiry. */
   def rewritePartitioned(table: String, spec: PartitionSpec): Snapshot =
     rewritePartitioned(table, Seq(spec))
   def rewritePartitioned(table: String, spec: PartitionSpec, branch: String): Snapshot =
     rewritePartitioned(table, Seq(spec), branch)
   def rewritePartitioned(
-      table: String, specs: Seq[PartitionSpec], branch: String = "main"): Snapshot = {
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+      table: String, specs: Seq[PartitionSpec], branch: String = "main"): Snapshot =
     // a FULL rewrite replaces every live file, so the registry resets to
     // positional ids — no surviving file carries an old field's key (old
     // SNAPSHOTS keep their own registry for time travel)
-    val rewritten = writePartitionedDataFiles(table, rewriteScan(table, curId),
-      specs.zipWithIndex.map { case (sp, i) =>
-        PartitionSpec.SpecField(sp, i, active = true) },
-      ids = cur.evo.fieldIds)
-    val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    commitTable(table, branch, Some(cur), "partition rewrite") { (_, _) =>
-      Some(Change(SnapshotOp.RewritePartition, Seq(manifest), c =>
-        fullRewrite(c).copy(partitionSpec = Some(PartitionSpec.formatMulti(specs)))))
+    rewriteWhole(table, branch, SnapshotOp.RewritePartition, "partition rewrite",
+      _.copy(partitionSpec = Some(PartitionSpec.formatMulti(specs)))) { (cur, rows) =>
+      writeLive(table, rows, specs.zipWithIndex.map { case (sp, i) =>
+        PartitionSpec.SpecField(sp, i, active = true) }, cur.evo.fieldIds)
     }
-  }
 
   // ---- maintenance: compaction + snapshot expiry ------------------------
 
-  /** Fold table@branch's current manifests into ONE new manifest per MOR
-    * coverage epoch (pure metadata rewrite — data files untouched; ONE
-    * manifest total when no tombstones are pending). Run periodically so
-    * long-lived tables keep O(1) manifests to read per scan even after
-    * thousands of commits.
-    *
-    * Pending tombstones survive folding correctly: manifests are grouped
-    * by their covering-tombstone signature and each folded manifest is
-    * stamped with its group's MAX member sequence — within a group every
-    * member agrees on `seq < d.seq` for every tombstone d (that is what
-    * sharing a signature means), so the max preserves each comparison,
-    * and any FUTURE tombstone's sequence exceeds this commit's. Folding a
-    * pre-r8 tombstone (no sequence — coverage is an anchor snapshot's
-    * manifest-path set, which folding would orphan into suppress-nothing)
-    * is refused: materialize it with compactDataFiles first. */
   /** Export one snapshot for a FOREIGN engine — the reference's core
     * premise is that a published table is standard metadata any engine
     * can query without the writer's code (reference README:174-191
@@ -6830,12 +6529,8 @@ class BranchCatalog(
         // per key schema (IS NOT DISTINCT FROM = the scan's <=>),
         // position ones as the (filename, row-number) NOT EXISTS. The
         // sequence arithmetic resolves HERE, never in the view.
-        val covers = tombstoneCovers(table, snap)
-        val parts = snap.manifests
-          .groupBy(m => snap.deleteManifests.filter(d => covers(d, m)).map(_.path).toSet)
-          .toSeq.sortBy { case (sig, _) => (sig.size, sig.toSeq.sorted.mkString("|")) }
-          .flatMap { case (sig, ms) =>
-            val dels = snap.deleteManifests.filter(d => sig.contains(d.path))
+        val parts = epochsOf(table, snap)
+          .flatMap { case (ms, dels) =>
             val (posDels, eqDels) = dels.partition(_.posDelete)
             val epochFiles = filesOf(snap.copy(manifests = ms, deleteManifests = Nil))
               .map(f => plain(f.path)).sorted
@@ -7196,35 +6891,45 @@ class BranchCatalog(
     }
   }
 
+  /** Fold table@branch's current manifests into ONE new manifest per MOR
+    * coverage epoch (pure metadata rewrite — data files untouched; ONE
+    * manifest total when no tombstones are pending). Run periodically so
+    * long-lived tables keep O(1) manifests to read per scan even after
+    * thousands of commits.
+    *
+    * Pending tombstones survive folding correctly: manifests are grouped
+    * by their covering-tombstone signature and each folded manifest is
+    * stamped with its group's MAX member sequence — within a group every
+    * member agrees on `seq < d.seq` for every tombstone d (that is what
+    * sharing a signature means), so the max preserves each comparison,
+    * and any FUTURE tombstone's sequence exceeds this commit's. Folding a
+    * pre-r8 tombstone (no sequence — coverage is an anchor snapshot's
+    * manifest-path set, which folding would orphan into suppress-nothing)
+    * is refused: materialize it with compactDataFiles first. */
   def compactManifests(table: String, branch: String = "main"): Snapshot = {
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.forall(_.seq > 0L),
       s"$table@$branch has pre-sequence MOR tombstones whose coverage cannot survive " +
         "manifest folding — materialize them with compactDataFiles first")
-    val covers = tombstoneCovers(table, cur)
-    val foldedWithSrc = cur.manifests
-      .groupBy(m => cur.deleteManifests.filter(d => covers(d, m)).map(_.path).toSet)
-      .toSeq.sortBy { case (sig, _) => (sig.size, sig.toSeq.sorted.mkString("|")) }
-      .map { case (_, ms) =>
-        val folded =
-          if (!cur.lin.enabled)
-            writeManifest(table, ms.flatMap(m => readManifest(m.path)),
-              StructType.fromDDL(cur.schemaDdl))
-          else {
-            // W73: folded entries carry their ABSOLUTE bases (ref base 0)
-            // so folding never moves a row id
-            val abs = ms.flatMap { m =>
-              require(m.firstRowId >= 0L,
-                s"manifest ${m.path} predates row lineage — run enableRowLineage first")
-              readManifest(m.path).map(f =>
-                f.copy(firstRowId = m.firstRowId + f.firstRowId))
-            }
-            writeManifest(table, abs, StructType.fromDDL(cur.schemaDdl),
-              preserveRowIds = true).copy(firstRowId = 0L)
+    val foldedWithSrc = epochsOf(table, cur).map { case (ms, _) =>
+      val folded =
+        if (!cur.lin.enabled)
+          writeManifest(table, ms.flatMap(m => readManifest(m.path)),
+            StructType.fromDDL(cur.schemaDdl))
+        else {
+          // W73: folded entries carry their ABSOLUTE bases (ref base 0)
+          // so folding never moves a row id
+          val abs = ms.flatMap { m =>
+            require(m.firstRowId >= 0L,
+              s"manifest ${m.path} predates row lineage — run enableRowLineage first")
+            readManifest(m.path).map(f =>
+              f.copy(firstRowId = m.firstRowId + f.firstRowId))
           }
-        (folded.copy(seq = ms.map(_.seq).max), ms)
-      }
+          writeManifest(table, abs, StructType.fromDDL(cur.schemaDdl),
+            preserveRowIds = true).copy(firstRowId = 0L)
+        }
+      (folded.copy(seq = ms.map(_.seq).max), ms)
+    }
     val folded = foldedWithSrc.map(_._1)
     val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
       Some(Change(SnapshotOp.CompactManifests, edit = _.copy(manifests = folded)))
@@ -7250,8 +6955,7 @@ class BranchCatalog(
     * double-marked). No-op without equality tombstones. */
   def convertTombstonesToPositional(table: String, branch: String = "main"): Snapshot = {
     import org.apache.spark.sql.functions.{col => fcol}
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     val eqTombs = cur.deleteManifests.filterNot(_.posDelete)
     if (eqTombs.isEmpty) return cur
     val schema = StructType.fromDDL(cur.schemaDdl)
@@ -7263,11 +6967,8 @@ class BranchCatalog(
         val delFiles = readManifest(d.path)
         val fileSchema = spark.read.parquet(delFiles.map(_.path): _*).schema
         val keyCols = if (d.keyCols.nonEmpty) d.keyCols else fileSchema.fieldNames.toSeq
-        val dataFiles = filesOf(cur.copy(manifests = covered, deleteManifests = Nil))
-        val data = readFiles(BranchCatalog.readSchema(schema, cur.evo), sized(dataFiles))
-          .select(keyCols.map(fcol) ++ Seq(
-            fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
-            fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol)): _*)
+        // current rows only: a position a prior sidecar holds stays there
+        val data = currentRows(cur, filesOf(cur.copy(manifests = covered)), decode = false)
         // key files keep their WRITE-time types; cast to the table's
         // declared types so a widening evolution still matches
         val keys = readFiles(fileSchema, sized(delFiles))
@@ -7278,29 +6979,11 @@ class BranchCatalog(
       }
     }
     // tombstones that cover nothing just drop
-    val posManifest = if (parts.isEmpty) None else {
-      val marked = parts.reduce(_ unionByName _).distinct()
-      val priorPos = cur.deleteManifests.filter(_.posDelete).flatMap(m => readManifest(m.path))
-      val fresh =
-        if (priorPos.isEmpty) marked
-        else marked.join(
-          readFiles(BranchCatalog.posDeleteSchema, sized(priorPos)),
-          Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol), "left_anti")
-      val posFiles = {
-        val written = writeDataFiles(table, fresh, Map.empty)
-        val (live, empty) = written.partition(_.rows > 0)
-        empty.foreach(f => fs.delete(new Path(f.path), false))
-        live
-      }
-      if (posFiles.isEmpty) None
-      else Some(writeManifest(table, posFiles, BranchCatalog.posDeleteSchema)
-        .copy(asOf = Some(curId), seq = cur.seq + 1,
-          keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
-          posDelete = true))
-    }
+    val posManifest =
+      if (parts.isEmpty) None else writeSidecar(table, cur, parts.reduce(_ unionByName _).distinct())
     commitTable(table, branch, Some(cur), "tombstone conversion") { (_, _) =>
-      Some(Change(SnapshotOp.ConvertTombstones, edit = _.copy(
-        deleteManifests = cur.deleteManifests.filter(_.posDelete) ++ posManifest.toSeq)))
+      Some(Change(SnapshotOp.ConvertTombstones, edit = c => withDeletes(
+        c.copy(deleteManifests = cur.deleteManifests.filter(_.posDelete)), posManifest)))
     }
   }
 
@@ -7320,8 +7003,7 @@ class BranchCatalog(
     * first (W76). */
   def compactPositionDeletes(table: String, branch: String = "main"): Snapshot = {
     import org.apache.spark.sql.functions.{col => fcol}
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
       s"$table@$branch has pending EQUALITY tombstones — CALL " +
         "convert_equality_deletes first (position sidecars fold, equality keys do not)")
@@ -7341,17 +7023,10 @@ class BranchCatalog(
       .dropDuplicates(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
       .join(liveDf,
         barePath(fcol(BranchCatalog.PosPathCol)) === fcol("__live"), "left_semi")
-    val posFiles = writeDataFiles(table, folded, Map.empty).filter(_.rows > 0)
-    val newSeq = cur.seq + 1
-    val posManifest =
-      if (posFiles.isEmpty) None
-      else Some(writeManifest(table, posFiles, BranchCatalog.posDeleteSchema)
-        .copy(asOf = Some(curId), seq = newSeq,
-          keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
-          posDelete = true))
+    val posManifest = writeSidecar(table, cur, folded)
     commitTable(table, branch, Some(cur), "position-delete compaction") { (_, _) =>
       Some(Change(SnapshotOp.CompactPosDeletes,
-        edit = _.copy(deleteManifests = posManifest.toSeq)))
+        edit = c => withDeletes(c.copy(deleteManifests = Nil), posManifest)))
     }
   }
 
@@ -7362,17 +7037,9 @@ class BranchCatalog(
     * until expireSnapshots reclaims them. */
   def compactDataFiles(table: String, branch: String = "main", targetFiles: Int = 1): Snapshot = {
     require(targetFiles >= 1, "targetFiles >= 1")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
-    val rewritten = writeTableFiles(table,
-      rewriteScan(table, curId).repartition(targetFiles),
-      specsOf(cur.partitionSpec), ids = cur.evo.fieldIds)
-    val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
-      Some(Change(SnapshotOp.Compact, Seq(manifest), fullRewrite))
+    rewriteWhole(table, branch, SnapshotOp.Compact) { (cur, rows) =>
+      writeRows(table, cur, rows.repartition(targetFiles))
     }
-    carryBloomIndexes(table, cur, branch)
-    committed
   }
 
   /** PREDICATE-SCOPED small-file compaction (Iceberg `rewrite_data_files`
@@ -7392,62 +7059,27 @@ class BranchCatalog(
       table: String, where: Column, branch: String = "main",
       targetFiles: Int = 1): Snapshot = {
     require(targetFiles >= 1, "targetFiles >= 1")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.isEmpty,
       s"$table@$branch has pending MOR tombstones — run the whole-table " +
         "compactDataFiles (which materializes them) before scoped compaction")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val spec = specsOf(cur.partitionSpec)
-    val bloomIdx = Some(new BloomProbe(cur.manifests))
-    val resolvedWhere = resolvePredicate(where, schema)
-    val perManifest = cur.manifests.map { m =>
-      if (resolvedWhere.exists(p => !manifestMayMatch(m, p, schema, spec)))
-        (m, Seq.empty[DataFileMeta], Seq.empty[DataFileMeta])
-      else {
-        val files = readManifest(m.path)
-        val affected = pruneFiles(files, where, schema, spec, bloomIdx)
-        val affectedPaths = affected.map(_.path).toSet
-        (m, affected, files.filterNot(f => affectedPaths.contains(f.path)))
-      }
-    }
-    val affectedFiles = perManifest.flatMap { case (_, a, _) => a }
-    if (affectedFiles.size <= 1) return cur // nothing to fold
+    val picked = selectFiles(cur, Some(where))
+    if (picked.flatMap(_.hit).size <= 1) return cur // nothing to fold
+    compactPicked(table, branch, cur, picked, targetFiles)
+  }
 
-    val compactInput = withMaterializedLineage(
-      readFiles(lineageReadSchema(schema, cur), sized(affectedFiles)),
-      cur.copy(manifests = perManifest.collect { case (m, a, _) if a.nonEmpty => m }))
-    val rewritten = writeTableFiles(table,
-      compactInput.repartition(targetFiles), spec, ids = cur.evo.fieldIds)
-    val newSeq = cur.seq + 1
-    val carried =
-      perManifest.flatMap { case (m, affected, untouched) =>
-        if (affected.isEmpty) Some(m)
-        else if (untouched.nonEmpty) Some(writeCarriedManifest(table, m, untouched,
-          schema, cur.lin.enabled).copy(seq = newSeq))
-        else None
-      }
-    val freshManifest = Seq(writeManifest(table, rewritten, schema))
-    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
-      Some(Change(SnapshotOp.Compact, freshManifest, _.copy(manifests = carried)))
-    }
+  /** The scoped compactions' commit: the `hit` files of `picked` rewritten
+    * into `outFiles` files, every manifest [[carry]]-ed around them, then
+    * the bloom indexes rebuilt on the new files. */
+  private def compactPicked(table: String, branch: String, cur: Snapshot,
+      picked: Seq[Picked], outFiles: Int): Snapshot = {
+    val committed = commitRewrite(table, branch, cur, SnapshotOp.Compact, "compaction",
+      carry(table, cur, picked),
+      writeRows(table, cur, rewriteRows(cur, picked).repartition(outFiles)))
     carryBloomIndexes(table, cur, branch)
     committed
   }
 
-  /** Sort-clustered small-file compaction (the Iceberg
-    * `rewrite_data_files` "sort" strategy analogue): rewrite
-    * table@branch's CURRENT data range-partitioned and sorted on
-    * `clusterBy`, so files accumulated from interleaved appends — each
-    * spanning nearly the full key range, making footer-stats pruning
-    * useless — become `targetFiles` files with tight, nearly-disjoint
-    * min/max ranges that selective predicates prune down to one. Plain
-    * [[compactDataFiles]] fixes file COUNT but hash-repartitions, which
-    * keeps every output file fat-ranged; this fixes file count AND
-    * pruning. Hidden-partitioned tables keep their partition layout and
-    * sort WITHIN each partition value (file-level ranges there are the
-    * partition's by construction; the sort tightens parquet
-    * row-group/page stats for readers). */
   /** Size-tiered SMALL-FILE compaction (the Iceberg `rewrite_data_files`
     * BIN_PACK strategy): rewrite ONLY the files under `targetBytes` into
     * ~targetBytes outputs, leaving well-sized files untouched — the
@@ -7465,22 +7097,15 @@ class BranchCatalog(
       minInputFiles: Int = 2): Option[Snapshot] = {
     require(targetBytes > 0 && minInputFiles >= 2,
       "targetBytes > 0 and minInputFiles >= 2")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val cur = headOf(table, branch)
     require(cur.deleteManifests.isEmpty,
       s"$table@$branch has pending MOR tombstones — run the whole-table " +
         "compactDataFiles (which materializes them) before small-file compaction")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val spec = specsOf(cur.partitionSpec)
     def sizeOf(f: DataFileMeta): Long =
       if (f.bytes > 0) f.bytes // pre-r8 metadata: one status call
       else fs.getFileStatus(new Path(f.path)).getLen
-    val perManifest = cur.manifests.map { m =>
-      val files = readManifest(m.path)
-      val (small, big) = files.partition(f => sizeOf(f) < targetBytes)
-      (m, small, big)
-    }
-    val smallFiles = perManifest.flatMap { case (_, s, _) => s }
+    val picked = selectFiles(cur, None, admit = sizeOf(_) < targetBytes)
+    val smallFiles = picked.flatMap(_.hit)
     if (smallFiles.size < minInputFiles) return None
     val outFiles = math.max(1,
       math.ceil(smallFiles.map(sizeOf).sum.toDouble / targetBytes).toInt)
@@ -7488,25 +7113,7 @@ class BranchCatalog(
     // folding N smalls into N outputs would loop forever — idempotence
     // means "stop when the fold no longer reduces the file count"
     if (smallFiles.size <= outFiles) return None
-    val packInput = withMaterializedLineage(
-      readFiles(lineageReadSchema(schema, cur), sized(smallFiles)),
-      cur.copy(manifests = perManifest.collect { case (m, sm, _) if sm.nonEmpty => m }))
-    val rewritten = writeTableFiles(table,
-      packInput.repartition(outFiles), spec, ids = cur.evo.fieldIds)
-    val newSeq = cur.seq + 1
-    val carried =
-      perManifest.flatMap { case (m, small, big) =>
-        if (small.isEmpty) Some(m)
-        else if (big.nonEmpty) Some(writeCarriedManifest(table, m, big, schema,
-          cur.lin.enabled).copy(seq = newSeq))
-        else None
-      }
-    val freshManifest = Seq(writeManifest(table, rewritten, schema))
-    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
-      Some(Change(SnapshotOp.Compact, freshManifest, _.copy(manifests = carried)))
-    }
-    carryBloomIndexes(table, cur, branch)
-    Some(committed)
+    Some(compactPicked(table, branch, cur, picked, outFiles))
   }
 
   /** POLICY-DRIVEN table maintenance (the "auto OPTIMIZE" loop as one
@@ -7803,41 +7410,45 @@ class BranchCatalog(
     perTable ++ tagRows
   }
 
+  /** Sort-clustered small-file compaction (the Iceberg
+    * `rewrite_data_files` "sort" strategy analogue): rewrite
+    * table@branch's CURRENT data range-partitioned and sorted on
+    * `clusterBy`, so files accumulated from interleaved appends — each
+    * spanning nearly the full key range, making footer-stats pruning
+    * useless — become `targetFiles` files with tight, nearly-disjoint
+    * min/max ranges that selective predicates prune down to one. Plain
+    * [[compactDataFiles]] fixes file COUNT but hash-repartitions, which
+    * keeps every output file fat-ranged; this fixes file count AND
+    * pruning. Hidden-partitioned tables keep their partition layout and
+    * sort WITHIN each partition value (file-level ranges there are the
+    * partition's by construction; the sort tightens parquet
+    * row-group/page stats for readers). */
   def compactDataFilesSorted(
       table: String, clusterBy: Seq[String], branch: String = "main",
       targetFiles: Int = 8): Snapshot = {
     require(clusterBy.nonEmpty, "clusterBy must name at least one column")
     require(targetFiles >= 1, "targetFiles >= 1")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
-    val data = rewriteScan(table, curId)
-    val cols = clusterBy.map(data.col)
-    val spec = specsOf(cur.partitionSpec)
-    val rewritten = spec match {
-      case Nil =>
-        // range layout survives writeDataFiles (no further shuffle):
-        // one tight-ranged file per range partition. Manifest entries
-        // sort by part-file NAME (zero-padded index = range-partition
-        // order; filesystem listing order is unspecified) so manifest
-        // order IS global range order — the sortOrder contract below.
-        writeTableFiles(table,
-          data.repartitionByRange(targetFiles, cols: _*).sortWithinPartitions(cols: _*),
-          Nil, ids = cur.evo.fieldIds).sortBy(f => new Path(f.path).getName)
-      case ps =>
-        writeTableFiles(table, data, ps, sortCols = clusterBy, ids = cur.evo.fieldIds)
+    // only the UNPARTITIONED rewrite's range layout guarantees the global
+    // file order sortOrder promises; the partitioned rewrite sorts within
+    // partition VALUES (one file per value), which is exactly the
+    // per-partition contract sortWithinPartitions records
+    rewriteWhole(table, branch, SnapshotOp.CompactSorted, edit = c => {
+      val unpartitioned = specsOf(c.partitionSpec).isEmpty
+      c.copy(sortOrder = if (unpartitioned) clusterBy else Nil,
+        sortWithinPartitions = if (unpartitioned) Nil else clusterBy)
+    }) { (cur, data) =>
+      if (specsOf(cur.partitionSpec).isEmpty) {
+        // range layout survives the write (no further shuffle): one
+        // tight-ranged file per range partition. Manifest entries sort by
+        // part-file NAME (zero-padded index = range-partition order;
+        // filesystem listing order is unspecified) so manifest order IS
+        // global range order — the sortOrder contract.
+        val cols = clusterBy.map(data.col)
+        writeRows(table, cur,
+          data.repartitionByRange(targetFiles, cols: _*).sortWithinPartitions(cols: _*))
+          .sortBy(f => new Path(f.path).getName)
+      } else writeRows(table, cur, data, sortCols = clusterBy)
     }
-    val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
-      // only the UNPARTITIONED rewrite's range layout guarantees the
-      // global file order sortOrder promises; the partitioned rewrite
-      // sorts within partition VALUES (one file per value), which is
-      // exactly the per-partition contract sortWithinPartitions records
-      Some(Change(SnapshotOp.CompactSorted, Seq(manifest), c => fullRewrite(c).copy(
-        sortOrder = if (spec.isEmpty) clusterBy else Nil,
-        sortWithinPartitions = if (spec.nonEmpty) clusterBy else Nil)))
-    }
-    carryBloomIndexes(table, cur, branch)
-    committed
   }
 
   /** Z-order (Morton-curve) compaction (the Iceberg `rewrite_data_files`
@@ -7860,36 +7471,28 @@ class BranchCatalog(
       "z-order needs >= 2 columns; use compactDataFilesSorted for one")
     require(zorderBy.size * bits <= 63, s"zorderBy.size * bits must fit a long")
     require(targetFiles >= 1, "targetFiles >= 1")
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
-    require(cur.partitionSpec.isEmpty,
-      "z-order rewrite supports unpartitioned tables (combine the partition " +
-        "transform with compactDataFilesSorted instead)")
-    val data = rewriteScan(table, curId)
-    zorderBy.foreach { c =>
-      val dt = data.schema.fields.find(_.name == c)
-        .getOrElse(sys.error(s"no column $c in $table")).dataType
-      require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"z-order column $c must be numeric, got $dt")
+    rewriteWhole(table, branch, SnapshotOp.CompactZOrder) { (cur, data) =>
+      require(cur.partitionSpec.isEmpty,
+        "z-order rewrite supports unpartitioned tables (combine the partition " +
+          "transform with compactDataFilesSorted instead)")
+      zorderBy.foreach { c =>
+        val dt = data.schema.fields.find(_.name == c)
+          .getOrElse(sys.error(s"no column $c in $table")).dataType
+        require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
+          s"z-order column $c must be numeric, got $dt")
+      }
+      // 2^bits - 1 internal cutpoints per column from ONE sketch job
+      val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
+      val cuts = data.stat.approxQuantile(zorderBy.toArray, probs, 0.001)
+      val zcol = zInterleave(bits, zorderBy.zip(cuts).map { case (c, cu) =>
+        bucketizeSorted(org.apache.spark.sql.functions.col(c).cast("double"), cu)
+      }: _*)
+      writeRows(table, cur, data
+        .withColumn("__z", zcol)
+        .repartitionByRange(targetFiles, org.apache.spark.sql.functions.col("__z"))
+        .sortWithinPartitions(org.apache.spark.sql.functions.col("__z"))
+        .drop("__z")) // projection: range layout + intra-partition order survive
     }
-    // 2^bits - 1 internal cutpoints per column from ONE sketch job
-    val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
-    val cuts = data.stat.approxQuantile(zorderBy.toArray, probs, 0.001)
-    val zcol = zInterleave(bits, zorderBy.zip(cuts).map { case (c, cu) =>
-      bucketizeSorted(org.apache.spark.sql.functions.col(c).cast("double"), cu)
-    }: _*)
-    val arranged = data
-      .withColumn("__z", zcol)
-      .repartitionByRange(targetFiles, org.apache.spark.sql.functions.col("__z"))
-      .sortWithinPartitions(org.apache.spark.sql.functions.col("__z"))
-      .drop("__z") // projection: range layout + intra-partition order survive
-    val rewritten = writeTableFiles(table, arranged, Nil, ids = cur.evo.fieldIds)
-    val manifest = writeManifest(table, rewritten, StructType.fromDDL(cur.schemaDdl))
-    val committed = commitTable(table, branch, Some(cur), "compaction") { (_, _) =>
-      Some(Change(SnapshotOp.CompactZOrder, Seq(manifest), fullRewrite))
-    }
-    carryBloomIndexes(table, cur, branch)
-    committed
   }
 
   /** Expire history: keep only snapshots referenced by a branch head (or
@@ -7897,9 +7500,9 @@ class BranchCatalog(
     * no surviving snapshot references. Time travel to expired ids stops
     * working — that is the point. Run from a maintenance context: expiry
     * racing a concurrent commit on the same table can delete a snapshot
-    * committed between the read and the deletes. */
-  /** Reclaim unreferenced snapshots, manifests and data files. Liveness:
-    * every branch head, every fork base, every tag pin, `keepIds`, plus
+    * committed between the read and the deletes.
+    *
+    * Liveness: every branch head, every fork base, every tag pin, `keepIds`, plus
     * two RETENTION knobs (Iceberg expire_snapshots semantics) —
     * `retainLast` keeps that many newest ancestors of EACH branch head
     * readable for time travel (1 = head only, the historical default),
@@ -8129,6 +7732,17 @@ object BranchCatalog {
       op: SnapshotOp, fresh: Seq[ManifestRef] = Nil,
       edit: Snapshot => Snapshot = identity)
 
+  /** One manifest under a file selection (the catalog's `selectFiles`):
+    * `files` are its entries (empty when the manifest-list prune excluded
+    * it unread), `hit` the ones selected. */
+  private final case class Picked(
+      m: ManifestRef, files: Seq[DataFileMeta], hit: Seq[DataFileMeta]) {
+    /** The entries the selection left. */
+    def rest: Seq[DataFileMeta] =
+      if (hit.isEmpty) files
+      else { val gone = hit.map(_.path).toSet; files.filterNot(f => gone(f.path)) }
+  }
+
   /** Bounded pool for concurrent driver metadata reads (manifests,
     * footers). Daemon threads that time out when idle, so it never holds
     * a JVM open; its tasks never wait on the pool themselves, so a
@@ -8163,6 +7777,14 @@ object BranchCatalog {
   private[graft] val metaParseNanos = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val metaParseCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Last refs HEAD version seen per catalog root (default filesystem
+    * store only): lets [[BranchCatalog.currentVersion]] probe forward
+    * from here instead of listing the whole refs directory per consult.
+    * Always validated against the filesystem before use — see the
+    * probing loop for the dense-versions invariant it relies on. */
+  private[wap] val maxRefsSeen =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
   /** JVM-wide caches of parsed IMMUTABLE metadata files. Snapshot and
     * manifest JSONs are written create-if-absent under UUID names, so a
     * path's CONTENT can never change — the only lifecycle event is
@@ -8175,14 +7797,6 @@ object BranchCatalog {
     * json4s-reflection-parsing them per operation is pure driver latency
     * (remote metadata GETs at 100 TB, parse CPU locally). Bounded LRU:
     * snapshots by count, manifests by total cached FILE ENTRIES. */
-  /** Last refs HEAD version seen per catalog root (default filesystem
-    * store only): lets [[BranchCatalog.currentVersion]] probe forward
-    * from here instead of listing the whole refs directory per consult.
-    * Always validated against the filesystem before use — see the
-    * probing loop for the dense-versions invariant it relies on. */
-  private[wap] val maxRefsSeen =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private val snapCacheCap = 2048
   private[wap] val snapCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, Snapshot](64, 0.75f, true) {

@@ -170,6 +170,26 @@ class SqlCatalogSpec extends SparkSpecBase {
     assert(viaSql == spark.sparkContext.defaultParallelism)
   }
 
+  test("the MOR delete-set cache stays bounded as tombstones stack up") {
+    import spark.implicits._
+    val (lake, cat) = register()
+    val rows = spark.range(0, 4).select(col("id"), (col("id") * 3).as("v"))
+    cat.createTableIfNotExists("t", rows.schema)
+    // each append + delete adds one coverage epoch, and each delete gives
+    // every older epoch a new group id: unbounded, N reads would cache
+    // N(N+1)/2 key sets
+    val n = 12
+    assert(n * (n + 1) / 2 > GraftDeleteSets.MaxEntries)
+    for (i <- 0 until n) {
+      cat.append("t", rows.select((col("id") + i * 10).as("id"), col("v")))
+      cat.deleteKeysMOR("t", Seq(i * 10L).toDF("id"))
+      assert(spark.sql(s"SELECT id FROM $lake.main.t").collect().length == 3 * (i + 1))
+      assert(GraftDeleteSets.cache.size <= GraftDeleteSets.MaxEntries,
+        s"${GraftDeleteSets.cache.size} cached delete sets after ${i + 1} reads")
+    }
+    assert(GraftDeleteSets.cache.size > 0, "the reads probe through the cache")
+  }
+
   test("an MOR read over several epochs sizes its splits over the whole scan") {
     import spark.implicits._
     val (lake, cat) = register()

@@ -2240,6 +2240,30 @@ class WapSpec extends SparkSpecBase {
     assert(cat.scan("t").count() == 204)
   }
 
+  test("bloom pruning must survive a partition rewrite") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    // k = id * 37 mod 1000 spreads 40 distinct keys over every file's
+    // [min, max], so only a bloom sidecar can prune an absent key. (The
+    // partitioned rewrite names its files alike in every value directory,
+    // and sidecars key blooms by file name, so the 40 keys share one
+    // bloom there: few enough that it still rejects the absent key.)
+    val rows = spark.range(0, 40).select(col("id"), (col("id") % 4).as("grp"),
+      (col("id") * 37 % 1000).as("k"))
+    cat.createTableIfNotExists("t", rows.schema)
+    for (r <- 0 until 4) cat.append("t", rows.filter(col("id") % 4 === r).coalesce(1))
+    cat.buildBloomIndex("t", "k", fpp = 0.001)
+    val present = rows.select("k").as[Long].collect().toSet
+    val absent = (400L to 600L).find(v => !present(v)).get
+    assert(cat.prunedDataFiles("t", col("k") === absent).isEmpty)
+
+    cat.rewritePartitioned("t", IdentityPartition("grp"))
+    assert(cat.dataFiles("t").size == 4)
+    assert(cat.prunedDataFiles("t", col("k") === absent).isEmpty,
+      "the rewrite must re-index the bloom-indexed column")
+    assert(cat.scan("t", filter = Some(col("k") === 37L)).count() == 1)
+  }
+
   test("expireBranches drops only fully-merged, aged-out branches") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sfDir).select("doc_id", "lang", "n_chars")
