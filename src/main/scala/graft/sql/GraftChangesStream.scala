@@ -397,7 +397,8 @@ class GraftCdcMicroBatchStream(
     new GraftCdcReaderFactory(
       Bridge.parquetReadFunc(spark, baseSchema, prunedData, Nil),
       Bridge.parquetReadFunc(spark, sidecarSchema, sidecarSchema, Nil),
-      prunedData, requiredOut, Bridge.serializableHadoopConf(spark))
+      prunedData, requiredOut, Bridge.serializableHadoopConf(spark),
+      s"changes $root/$tableName@$branch")
   }
 
   override def toString: String = s"GraftCdcMicroBatchStream($branch.$tableName @ $root)"
@@ -419,7 +420,9 @@ private[sql] class GraftCdcReaderFactory(
     /** The output schema: `prunedData`'s columns plus whichever virtual
       * columns the query projected, in output order. */
     requiredOut: StructType,
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: org.apache.spark.util.SerializableConfiguration,
+    /** The stream's [[GraftDeleteSets.Plan]] scope. */
+    scope: String)
   extends PartitionReaderFactory {
 
   private def projection(changeType: String, seq: Long, id: String): UnsafeProjection =
@@ -440,7 +443,10 @@ private[sql] class GraftCdcReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case GraftCdcFilesPartition(files, ct, seq, id, priors) =>
-        val priorMaps = priors.map(g => GraftDeleteSets.positions(g, delReadFunc))
+        // commit sequences order a stream's plans: a later commit's
+        // priors replace an earlier one's
+        val plan = GraftDeleteSets.Plan(scope, seq, priors.map(_.id).toSet)
+        val priorMaps = priors.map(g => GraftDeleteSets.positions(plan, g, delReadFunc))
         val proj = projection(ct, seq, id)
         GraftReaderFactory.reader(files.iterator.flatMap { case (p, l) =>
           val suppressed = priorMaps.flatMap(_.get(GraftDeleteSets.normPath(p)))

@@ -400,7 +400,9 @@ private[sql] class GraftMorReaderFactory(
       * above the scan, so this is a per-file efficiency trade, not a
       * correctness one — and compaction materializes the sidecars,
       * restoring reader pushdown. */
-    morReadFuncUnfiltered: PartitionedFile => Iterator[InternalRow])
+    morReadFuncUnfiltered: PartitionedFile => Iterator[InternalRow],
+    /** the scan's delete groups, for the executor's set cache. */
+    plan: GraftDeleteSets.Plan)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -418,13 +420,13 @@ private[sql] class GraftMorReaderFactory(
       eqGroups.map { g =>
         val ords = g.keyCols.map(c => readAll.fieldIndex(c)).toArray
         val types = ords.map(readAll(_).dataType)
-        val keySet = GraftDeleteSets.get(g, delReadFuncs(g.id), types)
+        val keySet = GraftDeleteSets.get(plan, g, delReadFuncs(g.id), types)
         (ords, types, keySet)
       }
     // one per positional group: normalized data-file path -> deleted
     // row indexes (built once per executor, shared across tasks)
     val posMaps: Seq[Map[String, java.util.HashSet[java.lang.Long]]] =
-      posGroups.map(g => GraftDeleteSets.positions(g, delReadFuncs(g.id)))
+      posGroups.map(g => GraftDeleteSets.positions(plan, g, delReadFuncs(g.id)))
     val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
       required.fieldNames.map { c =>
         val i = readAll.fieldIndex(c)
@@ -457,45 +459,56 @@ private[sql] class GraftMorReaderFactory(
   }
 }
 
-/** Executor-global cache of MOR delete-key sets, keyed by group id (the
-  * tombstone file list): every task in a JVM shares one hash build per
-  * group. No eviction — tombstone generations die at compaction, and the
-  * bounded pending count keeps live sets small; a restarted executor
-  * starts empty. */
+/** Executor-global cache of MOR delete sets: equality key sets and
+  * position maps, keyed by delete-group id, built once per group per JVM
+  * and shared by every task that reads the group. What it holds is bound
+  * by what each scope's newest plan names ([[GraftDeleteSets.Plan]]): a
+  * group id is its tombstone file list, so every new tombstone gives
+  * every older epoch a new id, and without the bound a session reading a
+  * table under a CDC stream would keep one dead set per epoch per read.
+  * A restarted executor starts empty. */
 private[sql] object GraftDeleteSets {
-  /** Entries each cache keeps, least recently used evicted first. A
-    * group's id is its tombstone file list, so every new tombstone gives
-    * every older epoch a new id and the old sets are never asked for
-    * again; the bound keeps a session reading a table under a CDC stream
-    * from holding one dead set per (epoch, read). It covers one scan at
-    * the default tombstone bound (64 pending generations), so a scan's
-    * own groups never evict each other. */
-  private[sql] val MaxEntries = 64
+  /** The delete groups one read names: `scope` is one reader of one
+    * table@branch, `seq` orders the scope's plans (higher is newer) and
+    * `ids` are the group ids the read may ask for. A newer plan drops the
+    * scope's sets it does not name; an older plan still reading (a time-
+    * travel scan, a late task) adds the groups it asks for, until the
+    * next newer plan. */
+  final case class Plan(scope: String, seq: Long, ids: Set[String])
 
-  /** A bounded LRU map: `getOrBuild` builds outside the lock (a build
-    * reads delete files), so two tasks may build the same group once
-    * each; the first stored wins. */
-  private[sql] final class Lru[V <: AnyRef](cap: Int) {
-    private val m = new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
-        size() > cap
-    }
-    def getOrBuild(key: String)(build: => V): V = {
-      val hit = m.synchronized(m.get(key))
-      if (hit != null) hit
-      else {
-        val built = build
-        m.synchronized {
-          val raced = m.get(key)
-          if (raced != null) raced else { m.put(key, built); built }
-        }
+  private val planCount = new java.util.concurrent.atomic.AtomicLong
+
+  /** A plan newer than every plan made before it in this JVM. */
+  def newPlan(scope: String, ids: Iterable[String]): Plan =
+    Plan(scope, planCount.incrementAndGet(), ids.toSet)
+
+  /** One build per group: the first task to ask stores the holder under
+    * the lock, and every task forces the same `value` outside it. */
+  private final class Holder[V](build: => V) { lazy val value: V = build }
+
+  private val scopes = scala.collection.mutable.HashMap.empty[String, Plan]
+  private val keySets = scala.collection.mutable.HashMap.empty[String, Holder[Set[Seq[Any]]]]
+  private val posMaps = scala.collection.mutable.HashMap
+    .empty[String, Holder[Map[String, java.util.HashSet[java.lang.Long]]]]
+
+  /** The group ids with a cached set. */
+  private[sql] def cachedIds: Set[String] = synchronized(keySets.keySet.toSet ++ posMaps.keySet)
+
+  private def held[V](plan: Plan, id: String,
+      m: scala.collection.mutable.HashMap[String, Holder[V]])(build: => V): V =
+    synchronized {
+      require(plan.ids(id), s"delete group $id is not named by its plan")
+      scopes.get(plan.scope) match {
+        case Some(cur) if plan.seq < cur.seq =>
+          if (!cur.ids(id)) scopes(plan.scope) = cur.copy(ids = cur.ids + id)
+        case Some(cur) if plan.seq == cur.seq =>
+        case prev =>
+          scopes(plan.scope) = plan
+          val live = scopes.valuesIterator.flatMap(_.ids).toSet
+          prev.foreach(_.ids.filterNot(live).foreach { g => keySets.remove(g); posMaps.remove(g) })
       }
-    }
-    def size: Int = m.synchronized(m.size())
-  }
-
-  private[sql] val cache = new Lru[Set[Seq[Any]]](MaxEntries)
-  private[sql] val posCache = new Lru[Map[String, java.util.HashSet[java.lang.Long]]](MaxEntries)
+      m.getOrElseUpdate(id, new Holder(build))
+    }.value
 
   /** Scheme-insensitive path identity: manifests record "file:/x" style
     * qualified paths while Spark's `_metadata.file_path` renders
@@ -504,13 +517,13 @@ private[sql] object GraftDeleteSets {
   def normPath(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
 
   /** Position-delete sidecar build: normalized data-file path -> deleted
-    * row indexes, once per executor per group while the group stays in
-    * the bounded cache. `readFunc` reads the sidecar schema in keyCols
-    * order: (__graft_path, __graft_pos). */
-  def positions(g: GraftDeleteGroupSpec,
+    * row indexes, once per executor per group while `plan`'s scope names
+    * it. `readFunc` reads the sidecar schema in keyCols order:
+    * (__graft_path, __graft_pos). */
+  def positions(plan: Plan, g: GraftDeleteGroupSpec,
       readFunc: PartitionedFile => Iterator[InternalRow])
       : Map[String, java.util.HashSet[java.lang.Long]] =
-    posCache.getOrBuild(g.id) {
+    held(plan, g.id, posMaps) {
       val m = scala.collection.mutable.HashMap
         .empty[String, java.util.HashSet[java.lang.Long]]
       g.files.foreach { case (p, l) =>
@@ -522,10 +535,12 @@ private[sql] object GraftDeleteSets {
       m.toMap
     }
 
-  def get(g: GraftDeleteGroupSpec,
+  /** Equality key-set build, once per executor per group while `plan`'s
+    * scope names it. */
+  def get(plan: Plan, g: GraftDeleteGroupSpec,
       readFunc: PartitionedFile => Iterator[InternalRow],
       keyTypes: Array[org.apache.spark.sql.types.DataType]): Set[Seq[Any]] =
-    cache.getOrBuild(g.id) {
+    held(plan, g.id, keySets) {
       val ords = Array.range(0, keyTypes.length) // delete read = key schema
       val b = Set.newBuilder[Seq[Any]]
       g.files.foreach { case (p, l) =>

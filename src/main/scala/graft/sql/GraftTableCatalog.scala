@@ -1685,7 +1685,8 @@ private[sql] class GraftBatchScan(
           bridge.parquetReadFunc(spark, t.tableSchema, readAll, readerFilters),
           bridge.parquetReadFunc(spark, t.tableSchema, required, readerFilters),
           readAll, required, delFuncs,
-          bridge.parquetReadFunc(spark, t.tableSchema, readAll, Nil))
+          bridge.parquetReadFunc(spark, t.tableSchema, readAll, Nil),
+          GraftDeleteSets.newPlan(s"scan ${t.root}/${t.tableName}@${t.branch}", groups.keys))
     }
   }
 

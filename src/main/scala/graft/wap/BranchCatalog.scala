@@ -2514,19 +2514,34 @@ class BranchCatalog(
     * `admit` keeps ([[Picked]]). Only the manifests the manifest-list
     * prune admits are read, concurrently as [[filesOf]] reads them.
     * Unsupported predicate shapes admit every file (pruning is sound,
-    * never required). */
+    * never required). With `after`, an earlier selection over the same
+    * snapshot, it selects among the files that one did not take, and
+    * reuses the entries of the manifests that one read. */
   private def selectFiles(snap: Snapshot, cond: Option[Column],
-      admit: DataFileMeta => Boolean = _ => true): Seq[Picked] = {
-    lazy val schema = StructType.fromDDL(snap.schemaDdl) // unfiltered reads skip the parse
+      admit: DataFileMeta => Boolean = _ => true, after: Seq[Picked] = Nil): Seq[Picked] =
+    selectResolved(snap, cond.flatMap(resolvedOn(snap, _)), admit, after)
+
+  /** `cond` resolved against `snap`'s schema, with that schema. */
+  private def resolvedOn(snap: Snapshot, cond: Column): Option[(Expression, StructType)] = {
+    val schema = StructType.fromDDL(snap.schemaDdl)
+    resolvePredicate(cond, schema).map(_ -> schema)
+  }
+
+  /** [[selectFiles]] under a predicate already resolved ([[resolvedOn]]). */
+  private def selectResolved(snap: Snapshot, pred: Option[(Expression, StructType)],
+      admit: DataFileMeta => Boolean = _ => true, after: Seq[Picked] = Nil): Seq[Picked] = {
     lazy val specs = specsOf(snap.partitionSpec)
-    val pred = cond.flatMap(resolvePredicate(_, schema))
-    val kept = pred.fold(snap.manifests)(manifestsFor(snap, _, schema))
+    val kept = pred.fold(snap.manifests) { case (p, schema) => manifestsFor(snap, p, schema) }
+    val known = after.collect { case p if p.files.nonEmpty => p.m.path -> p.rest }.toMap
+    val fresh = kept.filterNot(m => known.contains(m.path))
     val bloom = new BloomProbe(kept)
-    val read = kept.map(_.path).zip(manifestFiles(kept)).toMap
+    val read = kept.flatMap(m => known.get(m.path).map(m.path -> _)).toMap ++
+      fresh.map(_.path).zip(manifestFiles(fresh))
     snap.manifests.map { m =>
       val files = read.getOrElse(m.path, Nil)
       val admitted = files.filter(admit)
-      Picked(m, files, pred.fold(admitted)(pruneFiles(admitted, _, schema, specs, bloom)))
+      Picked(m, files, pred.fold(admitted) { case (p, schema) =>
+        pruneFiles(admitted, p, schema, specs, bloom) })
     }
   }
 
@@ -5495,8 +5510,9 @@ class BranchCatalog(
   def deleteWhere(table: String, cond: Column, branch: String = "main"): DeleteResult = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val cur = headOf(table, branch)
-    val picked = selectFiles(cur, Some(cond))
-    val allMatch = allRowsMatchOf(cur, cond)
+    val pred = resolvedOn(cur, cond)
+    val picked = selectResolved(cur, pred)
+    val allMatch = allRowsMatchOf(pred)
     val (droppedFiles, rewriteFiles) = picked.flatMap(_.hit).partition(allMatch)
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (droppedFiles.isEmpty && rewriteFiles.isEmpty)
@@ -5518,15 +5534,12 @@ class BranchCatalog(
       droppedFiles.size.toLong)
   }
 
-  /** The [[allRowsMatch]] sufficiency proof under `cond` — the DML tier
+  /** The [[allRowsMatch]] sufficiency proof under a resolved predicate
+    * ([[resolvedOn]]; none proves nothing) — the DML tier
     * that drops a file metadata-only, never read. */
-  private def allRowsMatchOf(cur: Snapshot, cond: Column): DataFileMeta => Boolean = {
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    resolvePredicate(cond, schema) match {
-      case Some(pred) => f => allRowsMatch(f, pred, schema)
-      case None => _ => false
-    }
-  }
+  private def allRowsMatchOf(
+      pred: Option[(Expression, StructType)]): DataFileMeta => Boolean =
+    f => pred.exists { case (p, schema) => allRowsMatch(f, p, schema) }
 
   /** Row-level DELETE, merge-on-read by POSITION (Iceberg v2 position
     * deletes / Delta deletion vectors, as parquet sidecars): instead of
@@ -5563,8 +5576,9 @@ class BranchCatalog(
     requireTombstoneHeadroom(table, branch, cur, "deleteWherePositional")
     // same two-tier planning as deleteWhere: provably-all-match files drop
     // metadata-only; the remainder get position sidecars, not a rewrite
-    val picked = selectFiles(cur, Some(cond))
-    val allMatch = allRowsMatchOf(cur, cond)
+    val pred = resolvedOn(cur, cond)
+    val picked = selectResolved(cur, pred)
+    val allMatch = allRowsMatchOf(pred)
     val (droppedFiles, markFiles) = picked.flatMap(_.hit).partition(allMatch)
     val totalFiles = cur.manifests.map(_.fileCount).sum
     val posManifest =
@@ -5965,10 +5979,7 @@ class BranchCatalog(
         if (bySource.isEmpty || dropAllNonMatched) picked.map(_.copy(hit = Nil))
         else selectFiles(cur, Some(bySource.map { case (c, _) =>
           bsCond(c).map(stripTargetAlias).getOrElse(lit(true))
-        }.reduce(_ || _))).zip(picked).map { case (b, p) =>
-          val taken = p.hit.map(_.path).toSet
-          b.copy(hit = b.hit.filterNot(f => taken(f.path)))
-        }
+        }.reduce(_ || _)), after = picked)
       val bsFiles = bsPicked.flatMap(_.hit)
       val (droppedRows, droppedCount) =
         if (!dropAllNonMatched) (0L, 0L)
@@ -6370,7 +6381,8 @@ class BranchCatalog(
   def rewritePartitioned(table: String, spec: PartitionSpec, branch: String): Snapshot =
     rewritePartitioned(table, Seq(spec), branch)
   def rewritePartitioned(
-      table: String, specs: Seq[PartitionSpec], branch: String = "main"): Snapshot =
+      table: String, specs: Seq[PartitionSpec], branch: String = "main"): Snapshot = {
+    require(specs.nonEmpty, "rewritePartitioned needs at least one transform")
     // a FULL rewrite replaces every live file, so the registry resets to
     // positional ids — no surviving file carries an old field's key (old
     // SNAPSHOTS keep their own registry for time travel)
@@ -6379,6 +6391,7 @@ class BranchCatalog(
       writeLive(table, rows, specs.zipWithIndex.map { case (sp, i) =>
         PartitionSpec.SpecField(sp, i, active = true) }, cur.evo.fieldIds)
     }
+  }
 
   // ---- maintenance: compaction + snapshot expiry ------------------------
 

@@ -170,24 +170,56 @@ class SqlCatalogSpec extends SparkSpecBase {
     assert(viaSql == spark.sparkContext.defaultParallelism)
   }
 
-  test("the MOR delete-set cache stays bounded as tombstones stack up") {
+  test("the MOR delete-set cache holds what the newest plan names as tombstones stack up") {
     import spark.implicits._
     val (lake, cat) = register()
     val rows = spark.range(0, 4).select(col("id"), (col("id") * 3).as("v"))
     cat.createTableIfNotExists("t", rows.schema)
+    def cached = GraftDeleteSets.cachedIds.count(_.contains(cat.root))
     // each append + delete adds one coverage epoch, and each delete gives
-    // every older epoch a new group id: unbounded, N reads would cache
-    // N(N+1)/2 key sets
+    // every older epoch a new group id: a cache that never drops a set
+    // would hold N(N+1)/2 key sets after N rounds, and more per re-read
     val n = 12
-    assert(n * (n + 1) / 2 > GraftDeleteSets.MaxEntries)
     for (i <- 0 until n) {
       cat.append("t", rows.select((col("id") + i * 10).as("id"), col("v")))
       cat.deleteKeysMOR("t", Seq(i * 10L).toDF("id"))
-      assert(spark.sql(s"SELECT id FROM $lake.main.t").collect().length == 3 * (i + 1))
-      assert(GraftDeleteSets.cache.size <= GraftDeleteSets.MaxEntries,
-        s"${GraftDeleteSets.cache.size} cached delete sets after ${i + 1} reads")
+      for (_ <- 0 until 2)
+        assert(spark.sql(s"SELECT id FROM $lake.main.t").collect().length == 3 * (i + 1))
+      // the newest plan names one group per epoch a tombstone covers
+      assert(cached <= i + 1, s"$cached cached delete sets after ${i + 1} rounds")
     }
-    assert(GraftDeleteSets.cache.size > 0, "the reads probe through the cache")
+    assert(cached > 0, "the reads probe through the cache")
+  }
+
+  test("the delete-set cache builds each group once and drops what a newer plan leaves") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow] = { _ =>
+      builds.incrementAndGet()
+      Thread.sleep(50)
+      Iterator.empty
+    }
+    val types = Array[org.apache.spark.sql.types.DataType](org.apache.spark.sql.types.LongType)
+    def group(id: String) = GraftDeleteGroupSpec(id, Seq("id"), Seq(s"/nowhere/$id.parquet" -> 1L))
+    val scope = s"spec ${java.util.UUID.randomUUID()}"
+    val (g1, g2, g3) = (group(s"$scope/g1"), group(s"$scope/g2"), group(s"$scope/g3"))
+    val older = GraftDeleteSets.newPlan(scope, Seq(g1.id, g2.id))
+    val tasks = (1 to 4).map(_ => new Thread(() => GraftDeleteSets.get(older, g1, read, types)))
+    tasks.foreach(_.start()); tasks.foreach(_.join())
+    assert(builds.get == 1, "concurrent tasks share one build")
+    GraftDeleteSets.get(older, g2, read, types)
+    val newer = GraftDeleteSets.newPlan(scope, Seq(g2.id, g3.id))
+    GraftDeleteSets.get(newer, g3, read, types)
+    def ours = GraftDeleteSets.cachedIds.filter(_.startsWith(scope))
+    assert(ours == Set(g2.id, g3.id), "the newer plan drops the group it does not name")
+    assert(builds.get == 3)
+    // a task of the older plan still reading rebuilds g1 once and keeps it
+    // until the next newer plan
+    GraftDeleteSets.get(older, g1, read, types)
+    GraftDeleteSets.get(older, g1, read, types)
+    assert(builds.get == 4 && ours == Set(g1.id, g2.id, g3.id))
+    GraftDeleteSets.get(GraftDeleteSets.newPlan(scope, Seq(g3.id)), g3, read, types)
+    assert(ours == Set(g3.id))
   }
 
   test("an MOR read over several epochs sizes its splits over the whole scan") {

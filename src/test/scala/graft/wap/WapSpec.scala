@@ -2240,15 +2240,14 @@ class WapSpec extends SparkSpecBase {
     assert(cat.scan("t").count() == 204)
   }
 
-  test("bloom pruning must survive a partition rewrite") {
+  /** A 4-file table of `keys` rows, bloom-indexed on `k`, rewritten
+    * under identity(grp): an absent `k` must prune every file before and
+    * after the rewrite. k = id * 37 mod 1000 spreads the keys over every
+    * file's [min, max], so only a bloom sidecar can prune. */
+  private def bloomAfterPartitionRewrite(keys: Int): Unit = {
     import spark.implicits._
     val cat = freshCatalog()
-    // k = id * 37 mod 1000 spreads 40 distinct keys over every file's
-    // [min, max], so only a bloom sidecar can prune an absent key. (The
-    // partitioned rewrite names its files alike in every value directory,
-    // and sidecars key blooms by file name, so the 40 keys share one
-    // bloom there: few enough that it still rejects the absent key.)
-    val rows = spark.range(0, 40).select(col("id"), (col("id") % 4).as("grp"),
+    val rows = spark.range(0, keys).select(col("id"), (col("id") % 4).as("grp"),
       (col("id") * 37 % 1000).as("k"))
     cat.createTableIfNotExists("t", rows.schema)
     for (r <- 0 until 4) cat.append("t", rows.filter(col("id") % 4 === r).coalesce(1))
@@ -2262,6 +2261,32 @@ class WapSpec extends SparkSpecBase {
     assert(cat.prunedDataFiles("t", col("k") === absent).isEmpty,
       "the rewrite must re-index the bloom-indexed column")
     assert(cat.scan("t", filter = Some(col("k") === 37L)).count() == 1)
+  }
+
+  test("bloom pruning must survive a partition rewrite") {
+    // 40 keys: few enough that the file-name collision below still
+    // rejects the absent key
+    bloomAfterPartitionRewrite(40)
+  }
+
+  test("bloom pruning survives a partition rewrite at 200 keys") {
+    // pending: a partitioned write names its files alike in every value
+    // directory, and bloom sidecars key each filter by file NAME, so the
+    // four files share one filter sized for one file's rows and admit
+    // the absent key
+    pendingUntilFixed(bloomAfterPartitionRewrite(200))
+  }
+
+  test("rewritePartitioned refuses an empty spec list and commits nothing") {
+    val cat = freshCatalog()
+    val rows = spark.range(0, 8).select(col("id"), (col("id") % 2).as("grp"))
+    cat.createTableIfNotExists("t", rows.schema)
+    cat.append("t", rows)
+    val head = cat.snapshotIdOf("t")
+    val e = intercept[IllegalArgumentException](cat.rewritePartitioned("t", Nil))
+    assert(e.getMessage.contains("at least one transform"))
+    assert(cat.snapshotIdOf("t") == head)
+    assert(cat.snapshotMeta("t", head.get).partitionSpec.isEmpty)
   }
 
   test("expireBranches drops only fully-merged, aged-out branches") {
