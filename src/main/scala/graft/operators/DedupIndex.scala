@@ -111,7 +111,7 @@ object DedupIndex {
     val headId = cat.snapshotIdOf(table, branch)
       .getOrElse(sys.error(s"no table $table on $branch"))
     if (headId == recorded) return "fresh"
-    if (appendOnlyWindow(cat, table, recorded, headId)) {
+    if (cat.appendOnlyWindow(table, recorded, headId)) {
       cat.append(bandsTable(table, textCol),
         bandRows(cat.scanChangesBetween(table, recorded, headId),
           idCol, textCol, params), branch)
@@ -128,28 +128,13 @@ object DedupIndex {
       // (delete+insert of one id) drops the stale rows first, then signs
       // the new text. Falls to `full` only when the window itself is not
       // changelog-readable (tombstoned endpoints, pre-field-id schema
-      // change).
-      // only the DOCUMENTED not-changelog-readable refusals fall to full
-      // (IllegalArgument/IllegalState from scanChangelog's preconditions,
-      // FileNotFound when the recorded snapshot has been expired) — any
-      // other exception is a real bug and propagates instead of silently
-      // degrading to an O(corpus) rebuild
-      val net =
-        try {
-          val changes = cat.scanChangelog(table, recorded, headId)
-          Some((
-            changes.filter(col("_change_type") === "delete")
-              .select(col(idCol).as("id")).distinct(),
-            changes.filter(col("_change_type") === "insert")
-              .drop("_change_type")))
-        } catch {
-          case e @ (_: IllegalArgumentException | _: IllegalStateException |
-                    _: java.io.FileNotFoundException) =>
-            org.slf4j.LoggerFactory.getLogger(getClass).info(
-              s"dedup index $table.$textCol: window $recorded..$headId not " +
-                s"changelog-readable (${e.getMessage}) — full rebuild")
-            None
-        }
+      // change, an expired watermark). Any other failure is a real bug and
+      // propagates instead of silently degrading to an O(corpus) rebuild.
+      val net = cat.changelogIfReadable(table, recorded, headId).map { changes =>
+        (changes.filter(col("_change_type") === "delete")
+          .select(col(idCol).as("id")).distinct(),
+          changes.filter(col("_change_type") === "insert").drop("_change_type"))
+      }
       net match {
         case Some((deletedIds, inserted)) =>
           val bt = bandsTable(table, textCol)
@@ -232,17 +217,6 @@ object DedupIndex {
     Map("dest" -> dest, "candidatesSql" -> candPath, "indexManifest" -> manifestPath)
   }
 
-  private def appendOnlyWindow(cat: BranchCatalog, table: String,
-      fromId: String, toId: String): Boolean =
-    (for {
-      from <- cat.snapshotMetaOpt(table, fromId)
-      to <- cat.snapshotMetaOpt(table, toId)
-    } yield {
-      val toPaths = to.manifests.map(_.path).toSet
-      from.deleteManifests.isEmpty && to.deleteManifests.isEmpty &&
-        from.manifests.forall(m => toPaths.contains(m.path))
-    }).getOrElse(false)
-
   /** Near-duplicate pairs TOUCHING `newDocs`, against the indexed corpus
     * and within the batch, exactly verified: `(id_a, id_b, jaccard)`
     * with `jaccard >= threshold`, ids ordered ascending. The index side
@@ -305,7 +279,7 @@ object DedupIndex {
       s"$table.$textCol has no dedup index on $branch — CALL build_dedup_index first"))
     val headId = cat.snapshotIdOf(table, branch)
       .getOrElse(sys.error(s"no table $table on $branch"))
-    require(appendOnlyWindow(cat, table, recorded, headId),
+    require(cat.appendOnlyWindow(table, recorded, headId),
       s"window $recorded..$headId of $table is not append-only — refresh the " +
         "index (full) and dedup batches before they land instead")
     pairsAgainst(spark, cat, table, textCol,

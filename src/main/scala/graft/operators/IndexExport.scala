@@ -1,14 +1,15 @@
 package graft.operators
 
+import graft.wap.BranchCatalog
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the foreign-engine INDEX exports
-  * ([[VectorIndex.exportIndex]], [[DedupIndex.exportIndex]]): one
-  * artifact writer and one overwrite guard, so the two exports cannot
-  * drift — and so a mistyped dest cannot silently clobber someone
-  * else's directory (the same stance as
-  * [[graft.wap.BranchCatalog.exportSnapshot]]'s manifest.json guard,
-  * keyed here on `index-manifest.json`). */
+  * ([[VectorIndex.exportIndex]], [[DedupIndex.exportIndex]]): the
+  * catalog's export writer keyed on `index-manifest.json`, so the two
+  * exports cannot drift — and so a mistyped dest cannot silently clobber
+  * someone else's directory (the same stance as
+  * [[graft.wap.BranchCatalog.exportSnapshot]]'s manifest.json guard). */
 private[operators] object IndexExport {
 
   val ManifestName = "index-manifest.json"
@@ -20,26 +21,17 @@ private[operators] object IndexExport {
     * same delete-then-write stance as
     * [[graft.wap.BranchCatalog.exportSnapshot]]. */
   def requireFreshOrPrior(spark: SparkSession, dest: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dest)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val nonEmpty = fs.listStatus(p).nonEmpty
-      require(!nonEmpty || fs.exists(new org.apache.hadoop.fs.Path(p, ManifestName)),
-        s"index-export dest $dest exists, is non-empty and is not a prior " +
-          s"index export (no $ManifestName) — refusing to overwrite; pick an empty dest")
-      fs.delete(p, true)
-      ()
-    }
+    val p = new Path(dest)
+    BranchCatalog.clearExportDest(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, ManifestName,
+      s"index-export dest $dest exists, is non-empty and is not a prior " +
+        s"index export (no $ManifestName) — refusing to overwrite; pick an empty dest")
   }
 
   /** Write a small text artifact under `dest`, creating parents. */
   def emit(spark: SparkSession, dest: String, name: String, content: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dest, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    p.toString
+    val p = new Path(dest)
+    BranchCatalog.emitExport(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, name, content)
   }
 }

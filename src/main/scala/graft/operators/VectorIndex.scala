@@ -121,7 +121,7 @@ object VectorIndex {
     val headId = cat.snapshotIdOf(table, branch)
       .getOrElse(sys.error(s"no table $table on $branch"))
     if (headId == recorded) return "fresh"
-    if (appendOnlyWindow(cat, table, recorded, headId)) {
+    if (cat.appendOnlyWindow(table, recorded, headId)) {
       val delta = normalized(
         cat.scanChangesBetween(table, recorded, headId), idCol, vecCol)
       val (cents, codec) = loadCodec(cat, table, vecCol, branch)
@@ -139,26 +139,13 @@ object VectorIndex {
       // Centroid/codebook drift from churn degrades recall gracefully,
       // never correctness (the shortlist re-ranks with the exact cosine);
       // a periodic `full` via maintenance re-trains. Falls to `full` when
-      // the window is not changelog-readable.
-      // only the DOCUMENTED not-changelog-readable refusals fall to full
-      // (see DedupIndex.refresh) — anything else is a real bug and
-      // propagates instead of silently degrading to an O(corpus) rebuild
-      val net =
-        try {
-          val changes = cat.scanChangelog(table, recorded, headId)
-          Some((
-            changes.filter(col("_change_type") === "delete")
-              .select(col(idCol).as("neighbor_id")).distinct(),
-            changes.filter(col("_change_type") === "insert")
-              .drop("_change_type")))
-        } catch {
-          case e @ (_: IllegalArgumentException | _: IllegalStateException |
-                    _: java.io.FileNotFoundException) =>
-            org.slf4j.LoggerFactory.getLogger(getClass).info(
-              s"vector index $table.$vecCol: window $recorded..$headId not " +
-                s"changelog-readable (${e.getMessage}) — full rebuild")
-            None
-        }
+      // the window is not changelog-readable; any other failure propagates
+      // (see DedupIndex.refresh).
+      val net = cat.changelogIfReadable(table, recorded, headId).map { changes =>
+        (changes.filter(col("_change_type") === "delete")
+          .select(col(idCol).as("neighbor_id")).distinct(),
+          changes.filter(col("_change_type") === "insert").drop("_change_type"))
+      }
       net match {
         case Some((deletedIds, inserted)) =>
           val ct = codesTable(table, vecCol)
@@ -189,19 +176,6 @@ object VectorIndex {
       cat.setTableProperties(table, Map(
         snapshotKey(vecCol) -> "", idKey(vecCol) -> "", paramsKey(vecCol) -> ""), branch)
   }
-
-  /** Is `from..to` a pure append window? (Same test as W56 mview
-    * refresh: every `from` manifest still present, no tombstones.) */
-  private def appendOnlyWindow(cat: BranchCatalog, table: String,
-      fromId: String, toId: String): Boolean =
-    (for {
-      from <- cat.snapshotMetaOpt(table, fromId)
-      to <- cat.snapshotMetaOpt(table, toId)
-    } yield {
-      val toPaths = to.manifests.map(_.path).toSet
-      from.deleteManifests.isEmpty && to.deleteManifests.isEmpty &&
-        from.manifests.forall(m => toPaths.contains(m.path))
-    }).getOrElse(false)
 
   private def loadCodec(cat: BranchCatalog, table: String, vecCol: String,
       branch: String): (DataFrame, PqCodec) = {

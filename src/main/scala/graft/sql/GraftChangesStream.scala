@@ -362,14 +362,8 @@ class GraftCdcMicroBatchStream(
         "deleted rows cost O(covered files) to enumerate — CDC-readable tables " +
         "should delete through position sidecars (ALTER TABLE ... SET " +
         "TBLPROPERTIES('write.delete.mode'='merge-on-read')) or copy-on-write")
-    val remM = p.manifests.filterNot(m => c.manifests.exists(_.path == m.path))
-    val addM = c.manifests.filterNot(m => p.manifests.exists(_.path == m.path))
-    val remFiles = remM.flatMap(m => cat.readManifest(m.path))
-    val addFiles = addM.flatMap(m => cat.readManifest(m.path))
-    val remPaths = remFiles.map(_.path).toSet
-    val addPaths = addFiles.map(_.path).toSet
-    val deleted = remFiles.filterNot(f => addPaths.contains(f.path))
-    val inserted = addFiles.filterNot(f => remPaths.contains(f.path))
+    val diff = cat.windowDiff(p, c)
+    val (deleted, inserted) = (diff.removed, diff.added)
     val priors =
       if (deleted.isEmpty) Nil
       else {

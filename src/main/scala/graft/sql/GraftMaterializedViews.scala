@@ -143,7 +143,7 @@ object GraftMaterializedViews {
       if (stale.size == 1 && recorded.contains(stale.head._1)) {
         val (table, toId) = stale.head
         val fromId = recorded(table)
-        if (appendOnlyWindow(cat, table, fromId, toId))
+        if (cat.appendOnlyWindow(table, fromId, toId))
           tryIncremental(spark, cat, name, branch, analyzed, companions,
             table, fromId)
         else
@@ -221,21 +221,6 @@ object GraftMaterializedViews {
           s"materialized view source ${r.table.name} is not a graft table of " +
             "this catalog root on the view's branch — staleness is untrackable"))
     }.distinct
-
-  /** Is `from..to` a pure append window? Every `from` manifest must still
-    * be present in `to` (deletes/updates/compactions REPLACE manifests),
-    * and neither end may carry tombstones. An expired `from` returns
-    * false — the full recompute handles it. */
-  private def appendOnlyWindow(cat: BranchCatalog, table: String,
-      fromId: String, toId: String): Boolean =
-    (for {
-      from <- cat.snapshotMetaOpt(table, fromId)
-      to <- cat.snapshotMetaOpt(table, toId)
-    } yield {
-      val toPaths = to.manifests.map(_.path).toSet
-      from.deleteManifests.isEmpty && to.deleteManifests.isEmpty &&
-        from.manifests.forall(m => toPaths.contains(m.path))
-    }).getOrElse(false)
 
   /** Pure select/project/filter over exactly one relation? */
   private def selectOnly(plan: LogicalPlan): Boolean = plan match {
@@ -536,11 +521,9 @@ object GraftMaterializedViews {
           val usable = rel.isDefined && foldableKinds &&
             (if (signable) countStar.isDefined
              else groupCols.nonEmpty && keyPairs.isDefined)
+          // tombstones, expiry or a pre-field-id schema change: full
           if (!usable) None
-          else {
-            val cl =
-              try cat.scanChangelog(table, fromId, toId)
-              catch { case _: Exception => return None } // tombstones/expiry: full
+          else cat.changelogIfReadable(table, fromId, toId).flatMap { cl =>
             def aggOver(rows: DataFrame): DataFrame =
               Bridge.dataFrame(spark, substituted(agg, rel.get, rows))
             val ins = aggOver(cl.filter(col("_change_type") === "insert")

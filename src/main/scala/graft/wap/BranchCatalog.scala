@@ -648,7 +648,8 @@ class BranchCatalog(
       * For S3-style stores, pass a [[ConditionalPutRefsStore]] so the
       * commit maps to a conditional put (If-None-Match) instead. */
     refsBackend: Option[RefsStore] = None) {
-  import BranchCatalog.{Change, Picked}
+  import BranchCatalog.{Change, Picked, clearExportDest, defaultResidue, emitExport,
+    existsOver, exportEntry, linkFarm, plain, posMatch, readParquet, sqlString}
   private implicit val fmts: Formats = DefaultFormats
   private val rootPath = new Path(root)
   // resolved once per instance: getFileSystem consults the Hadoop
@@ -3200,8 +3201,10 @@ class BranchCatalog(
         org.apache.spark.util.SerializableConfiguration]) {
     def probe(column: String, value: String): Column = {
       val bc = confBc
+      // `__manifest` is input_file_name, URI-encoded; `path` is as recorded
       org.apache.spark.sql.functions.udf((m: String, p: String) =>
-        BranchCatalog.BloomSidecarCache.mightContain(bc.value.value, m, column, p, value)
+        BranchCatalog.BloomSidecarCache.mightContain(bc.value.value,
+          new Path(new java.net.URI(m)).toString, column, p, value)
       ).apply(org.apache.spark.sql.functions.col("__manifest"),
         org.apache.spark.sql.functions.col("path"))
     }
@@ -4169,72 +4172,64 @@ class BranchCatalog(
     var built = 0
     snap.manifests.foreach { m =>
       val p = bloomSidecarPath(m.path, column)
-      if (!fs.exists(p)) {
+      // a sidecar of an older format declines to prune: rebuild it
+      if (!fs.exists(p) || BranchCatalog.BloomSidecarCache.entriesOf(readString(p)).isEmpty) {
         built += 1
         val files = readManifest(m.path)
-        if (files.isEmpty) {
-          // an empty commit's manifest: write an empty (marker-only)
-          // sidecar so the build is done once and probes answer "might
-          // match" per file
-          fs.mkdirs(p.getParent)
-          val out = fs.create(p, true)
-          try out.write(Serialization.write(Map(
-            "__graft_bloom_format" -> BranchCatalog.BloomSidecarCache.formatVersion))
-            .getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-          BranchCatalog.BloomSidecarCache.invalidate(m.path, column)
-        } else {
-        val expect = files.map(_.rows).max.max(64L)
-        implicit val enc: org.apache.spark.sql.Encoder[(String, String)] =
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING)
-        implicit val outEnc: org.apache.spark.sql.Encoder[(String, Array[Byte])] =
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY)
-        // the string normalization is pinned to UTC EXPLICITLY (not the
-        // session TZ): probes render literals through the same fixed-UTC
-        // Cast ([[litString]]), so build and probe agree even when they
-        // happen in sessions with different time zones — a session-TZ
-        // cast here would make timestamp-column pruning silently unsound
-        // anywhere off-UTC
-        val utcString = org.apache.spark.sql.graft.Bridge.column(
-          Cast(org.apache.spark.sql.graft.Bridge.expression(col(column)),
-            StringType, Some("UTC")))
-        val partials = readFiles(BranchCatalog.readSchema(schema, snap.evo), sized(files))
-          .select(input_file_name().as("f"), utcString.as("v"))
-          .as[(String, String)]
-          .mapPartitions { it =>
-            val blooms = scala.collection.mutable.Map
-              .empty[String, org.apache.spark.util.sketch.BloomFilter]
-            it.foreach { case (f, v) =>
-              if (v != null) {
-                val name = f.substring(f.lastIndexOf('/') + 1)
-                blooms.getOrElseUpdate(name,
-                  org.apache.spark.util.sketch.BloomFilter.create(expect, fpp)).putString(v)
-              }
-            }
-            blooms.iterator.map { case (n, b) =>
+        // an empty commit's manifest gets a marker-only sidecar, so the
+        // build is done once and probes answer "might match" per file
+        val entries =
+          if (files.isEmpty) Map.empty[String, String]
+          else {
+            val mPath = m.path
+            val expect = files.map(_.rows).max.max(64L)
+            implicit val enc: org.apache.spark.sql.Encoder[(String, String)] =
+              org.apache.spark.sql.Encoders.tuple(
+                org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING)
+            implicit val outEnc: org.apache.spark.sql.Encoder[(String, Array[Byte])] =
+              org.apache.spark.sql.Encoders.tuple(
+                org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY)
+            // the string normalization is pinned to UTC EXPLICITLY (not the
+            // session TZ): probes render literals through the same fixed-UTC
+            // Cast ([[litString]]), so build and probe agree even when they
+            // happen in sessions with different time zones — a session-TZ
+            // cast here would make timestamp-column pruning silently unsound
+            // anywhere off-UTC
+            val utcString = org.apache.spark.sql.graft.Bridge.column(
+              Cast(org.apache.spark.sql.graft.Bridge.expression(col(column)),
+                StringType, Some("UTC")))
+            val partials = readFiles(BranchCatalog.readSchema(schema, snap.evo), sized(files))
+              .select(input_file_name().as("f"), utcString.as("v"))
+              .as[(String, String)]
+              .mapPartitions { it =>
+                val blooms = scala.collection.mutable.Map
+                  .empty[String, org.apache.spark.util.sketch.BloomFilter]
+                it.foreach { case (f, v) =>
+                  if (v != null) {
+                    // input_file_name is URI-encoded; the manifest records
+                    // the Hadoop path string it decodes to
+                    val key = BranchCatalog.BloomSidecarCache.keyOf(mPath,
+                      new Path(new java.net.URI(f)).toString)
+                    blooms.getOrElseUpdate(key,
+                      org.apache.spark.util.sketch.BloomFilter.create(expect, fpp)).putString(v)
+                  }
+                }
+                blooms.iterator.map { case (n, b) =>
+                  val bos = new java.io.ByteArrayOutputStream()
+                  b.writeTo(bos)
+                  (n, bos.toByteArray)
+                }
+              }.collect()
+            partials.groupBy(_._1).map { case (n, bs) =>
+              val acc = org.apache.spark.util.sketch.BloomFilter.readFrom(bs.head._2)
+              bs.tail.foreach(b =>
+                acc.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(b._2)))
               val bos = new java.io.ByteArrayOutputStream()
-              b.writeTo(bos)
-              (n, bos.toByteArray)
+              acc.writeTo(bos)
+              n -> java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
             }
-          }.collect()
-        val merged: Map[String, String] = partials.groupBy(_._1).map { case (n, bs) =>
-          val acc = org.apache.spark.util.sketch.BloomFilter.readFrom(bs.head._2)
-          bs.tail.foreach(b =>
-            acc.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(b._2)))
-          val bos = new java.io.ByteArrayOutputStream()
-          acc.writeTo(bos)
-          n -> java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
-        }
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, true)
-        try out.write(Serialization.write(merged +
-          ("__graft_bloom_format" -> BranchCatalog.BloomSidecarCache.formatVersion))
-          .getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        BranchCatalog.BloomSidecarCache.invalidate(m.path, column)
-        }
+          }
+        BranchCatalog.BloomSidecarCache.write(fs, m.path, column, entries)
       }
     }
     built
@@ -4253,11 +4248,11 @@ class BranchCatalog(
     private def loaded(column: String) = perCol.getOrElseUpdate(column,
       manifests.flatMap(m => BranchCatalog.BloomSidecarCache.load(
         spark.sparkContext.hadoopConfiguration, m.path, column)).toMap)
+    // one table's manifests share one directory, so any of them keys a file
     def mightContain(f: DataFileMeta, column: String, l: Literal): Boolean = {
       val m = loaded(column)
-      m.isEmpty || m.get(f.path.substring(f.path.lastIndexOf('/') + 1)).forall { bf =>
-        litString(l).forall(bf.mightContainString)
-      }
+      m.isEmpty || m.get(BranchCatalog.BloomSidecarCache.keyOf(manifests.head.path, f.path))
+        .forall(bf => litString(l).forall(bf.mightContainString))
     }
   }
 
@@ -5032,9 +5027,8 @@ class BranchCatalog(
 
   private def changedFilesOf(
       table: String, fromId: Option[String], to: Snapshot): Seq[DataFileMeta] = {
-    val toId = to.id
     require(to.deleteManifests.isEmpty,
-      s"snapshot $toId of $table has pending MOR tombstones and incremental deltas " +
+      s"snapshot ${to.id} of $table has pending MOR tombstones and incremental deltas " +
         "are append-granular — materialize with compactDataFiles first")
     fromId match {
       case None => filesOf(to)
@@ -5042,16 +5036,78 @@ class BranchCatalog(
         val from = loadSnapshotOpt(table, f).getOrElse(sys.error(
           s"incremental start snapshot $f of $table has been expired — " +
             "restart the consumer from scratch"))
-        val fromManifests = from.manifests.map(_.path).toSet
-        val newManifests = to.manifests.filterNot(m => fromManifests.contains(m.path))
-        if (newManifests.isEmpty) Seq.empty
-        else {
-          val fromFiles = from.manifests.flatMap(m => readManifest(m.path)).map(_.path).toSet
-          newManifests.flatMap(m => readManifest(m.path))
-            .filterNot(fl => fromFiles.contains(fl.path))
-        }
+        windowDiff(from, to).added
     }
   }
+
+  /** What the window `from` -> `to` changed: the data manifests only one
+    * endpoint lists, and the data files removed and added between them.
+    * Manifests diff by path; files diff only inside the removed and added
+    * manifests (read once, on first use). A snapshot lists each data
+    * file in exactly one manifest, so a file in a manifest both
+    * endpoints list is in both, and this equals the full file diff at
+    * O(touched manifests) of metadata reads — a manifest fold re-lists
+    * old files under a new path, and they cancel here. */
+  private[graft] final class WindowDiff(from: Snapshot, to: Snapshot) {
+    val removedManifests: Seq[ManifestRef] = {
+      val toPaths = to.manifests.map(_.path).toSet
+      from.manifests.filterNot(m => toPaths(m.path))
+    }
+    val addedManifests: Seq[ManifestRef] = {
+      val fromPaths = from.manifests.map(_.path).toSet
+      to.manifests.filterNot(m => fromPaths(m.path))
+    }
+    lazy val (removed, added) = {
+      val read = manifestFiles(removedManifests ++ addedManifests)
+      val (rem, add) = (read.take(removedManifests.size).flatten,
+        read.drop(removedManifests.size).flatten)
+      val (remPaths, addPaths) = (rem.map(_.path).toSet, add.map(_.path).toSet)
+      (rem.filterNot(f => addPaths(f.path)), add.filterNot(f => remPaths(f.path)))
+    }
+  }
+
+  private[graft] def windowDiff(from: Snapshot, to: Snapshot): WindowDiff =
+    new WindowDiff(from, to)
+
+  /** Is `fromId` -> `toId` a pure append window? No `from` manifest was
+    * removed (deletes, updates and compactions replace manifests) and
+    * neither endpoint carries tombstones. False when an endpoint has
+    * expired. Metadata only: no manifest is read. */
+  private[graft] def appendOnlyWindow(table: String, fromId: String, toId: String): Boolean =
+    (for {
+      from <- loadSnapshotOpt(table, fromId)
+      to <- loadSnapshotOpt(table, toId)
+    } yield from.deleteManifests.isEmpty && to.deleteManifests.isEmpty &&
+      windowDiff(from, to).removedManifests.isEmpty).getOrElse(false)
+
+  /** Why the window's rows cannot be compared as a changelog, if they
+    * cannot: both endpoints must be tombstone-free, and the rows must
+    * resolve through field ids or the schema must not change. */
+  private def changelogRefusal(table: String, from: Snapshot, to: Snapshot): Option[String] =
+    if (from.deleteManifests.nonEmpty || to.deleteManifests.nonEmpty)
+      Some(s"changelog endpoints of $table must be tombstone-free — materialize with " +
+        "compactDataFiles first")
+    else if (to.evo.fieldIds.isEmpty && from.schemaDdl != to.schemaDdl)
+      Some(s"changelog window of $table changes the schema and the table predates " +
+        "field ids — rows cannot be compared across the change")
+    else None
+
+  private def requireChangelogWindow(table: String, from: Snapshot, to: Snapshot): Unit = {
+    val refusal = changelogRefusal(table, from, to)
+    require(refusal.isEmpty, refusal.get)
+  }
+
+  /** [[scanChangelog]] of a window that can be read as a changelog; None
+    * exactly when it cannot: an endpoint has expired, or
+    * [[changelogRefusal]] refuses it. Every other failure propagates —
+    * the incremental refreshes fall back to a full rebuild on None only. */
+  private[graft] def changelogIfReadable(
+      table: String, fromId: String, toId: String): Option[DataFrame] =
+    for {
+      from <- loadSnapshotOpt(table, fromId)
+      to <- loadSnapshotOpt(table, toId)
+      if changelogRefusal(table, from, to).isEmpty
+    } yield changelogOf(table, from, to)
 
   /** NET row-level CHANGELOG of a snapshot window (the Iceberg
     * `create_changelog_view` analogue in its net-changes form): every
@@ -5061,9 +5117,10 @@ class BranchCatalog(
     * incremental consumer needs when the window contains DELETES, which
     * the append-granular [[scanChangesBetween]] refuses.
     *
-    * Computed as a symmetric FILE-level diff: only files referenced by
-    * exactly one endpoint are read (untouched files never open — a
-    * selective delete's changelog costs O(rewritten files)), then one
+    * Computed as a symmetric FILE-level diff ([[WindowDiff]]): only the
+    * manifests and files referenced by exactly one endpoint are read
+    * (untouched manifests and files never open — a selective delete's
+    * changelog costs O(rewritten files)), then one
     * full-row hash aggregation nets multiplicities, so a CoW rewrite's
     * carried survivors cancel and duplicate rows diff by COUNT (a row
     * appearing twice before and once after yields one delete). Both
@@ -5072,22 +5129,16 @@ class BranchCatalog(
     * tables the window must not change the schema. Both endpoints must
     * be tombstone-free (materialize MOR state first). */
   def scanChangelog(table: String, fromId: String, toId: String): DataFrame = {
-    import org.apache.spark.sql.functions.{abs => fabs, col, explode, lit, sequence, sum => fsum, when}
     val from = loadSnapshot(table, fromId)
     val to = loadSnapshot(table, toId)
-    require(from.deleteManifests.isEmpty && to.deleteManifests.isEmpty,
-      s"changelog endpoints of $table must be tombstone-free — materialize with " +
-        "compactDataFiles first")
-    require(to.evo.fieldIds.nonEmpty || from.schemaDdl == to.schemaDdl,
-      s"changelog window of $table changes the schema and the table predates " +
-        "field ids — rows cannot be compared across the change")
+    requireChangelogWindow(table, from, to)
+    changelogOf(table, from, to)
+  }
+
+  private def changelogOf(table: String, from: Snapshot, to: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.{abs => fabs, col, explode, lit, sequence, sum => fsum, when}
     val schema = StructType.fromDDL(to.schemaDdl)
-    val fromFiles = filesOf(from)
-    val toFiles = filesOf(to)
-    val fromPaths = fromFiles.map(_.path).toSet
-    val toPaths = toFiles.map(_.path).toSet
-    val removed = fromFiles.filterNot(f => toPaths.contains(f.path))
-    val added = toFiles.filterNot(f => fromPaths.contains(f.path))
+    val diff = windowDiff(from, to)
     val cols = schema.fieldNames.toSeq
     val outSchema = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("_change_type", StringType, nullable = false))
@@ -5097,10 +5148,9 @@ class BranchCatalog(
             org.apache.spark.sql.types.StructField("__w", org.apache.spark.sql.types.IntegerType)))
       else readFiles(BranchCatalog.readSchema(schema, to.evo), sized(fs))
         .select(cols.map(col) :+ lit(w).as("__w"): _*)
-    val diff = side(removed, -1).unionByName(side(added, 1))
+    side(diff.removed, -1).unionByName(side(diff.added, 1))
       .groupBy(cols.map(col): _*).agg(fsum(col("__w")).as("__d"))
       .filter(col("__d") =!= 0)
-    diff
       .select(cols.map(col) :+
         when(col("__d") > 0, lit("insert")).otherwise(lit("delete")).as("_change_type") :+
         fabs(col("__d")).cast("int").as("__n"): _*)
@@ -5129,20 +5179,10 @@ class BranchCatalog(
     require(from.lin.enabled && to.lin.enabled,
       s"row-identified changelog of $table needs row lineage on both endpoints — " +
         "run enableRowLineage first")
-    require(from.deleteManifests.isEmpty && to.deleteManifests.isEmpty,
-      s"changelog endpoints of $table must be tombstone-free — materialize with " +
-        "compactDataFiles first")
-    require(to.evo.fieldIds.nonEmpty || from.schemaDdl == to.schemaDdl,
-      s"changelog window of $table changes the schema and the table predates " +
-        "field ids — rows cannot be compared across the change")
+    requireChangelogWindow(table, from, to)
     val schema = StructType.fromDDL(to.schemaDdl)
     val cols = schema.fieldNames.toSeq
-    val fromFiles = filesOf(from)
-    val toFiles = filesOf(to)
-    val fromPaths = fromFiles.map(_.path).toSet
-    val toPaths = toFiles.map(_.path).toSet
-    val removed = fromFiles.filterNot(f => toPaths(f.path))
-    val added = toFiles.filterNot(f => fromPaths(f.path))
+    val diff = windowDiff(from, to)
     def decoded(files: Seq[DataFileMeta], snap: Snapshot, tag: String): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, coalesce}
       val readSchema = lineageReadSchema(schema, snap)
@@ -5158,8 +5198,10 @@ class BranchCatalog(
           coalesce(col(BranchCatalog.RowIdCol), col("__lin_base") + col("__lin_idx"))
             .as(s"${tag}id"): _*)
     }
-    val o = decoded(removed, from, "__o_")
-    val n = decoded(added, to, "__n_")
+    // each side's lineage map lists only its touched manifests: they hold
+    // every file the side reads
+    val o = decoded(diff.removed, from.copy(manifests = diff.removedManifests), "__o_")
+    val n = decoded(diff.added, to.copy(manifests = diff.addedManifests), "__n_")
     val j = o.join(n, col("__o_id") === col("__n_id"), "full_outer")
     val oldStruct = struct(cols.map(c => col(s"__o_$c").as(c)): _*)
     val newStruct = struct(cols.map(c => col(s"__n_$c").as(c)): _*)
@@ -5205,13 +5247,13 @@ class BranchCatalog(
     * incremental-append-scan analogue): rows in data files `toId`
     * references that `fromId` does not — the append delta of a snapshot
     * window, the feed for incremental downstream pipelines ("process
-    * only what landed since my last run"). A metadata diff: manifests
-    * new in `toId` are read, and their files subtracted against
-    * `fromId`'s FILE set — file-level subtraction keeps the delta exact
-    * when manifest compaction re-folded old files into a new manifest
-    * (manifest-level subtraction would re-report the whole table). Cost
-    * is O(manifests) driver reads on both sides, bounded by the same
-    * maintenance that bounds every scan's planning. DML rewrites
+    * only what landed since my last run"). A metadata diff
+    * ([[WindowDiff]]): only the manifests one endpoint lists and the
+    * other does not are read, and their files subtract — file-level
+    * subtraction keeps the delta exact when manifest compaction re-folded
+    * old files into a new manifest (manifest-level subtraction would
+    * re-report the whole table). Cost is O(touched manifests) of driver
+    * reads, never O(table). DML rewrites
     * (delete/update/data compaction) produce genuinely NEW files whose
     * rows are reported again — snapshot deltas are append-granular, not
     * row-level CDC; run incremental consumers against append-only
@@ -5220,13 +5262,7 @@ class BranchCatalog(
     val from = loadSnapshot(table, fromId)
     val to = loadSnapshot(table, toId)
     val schema = StructType.fromDDL(to.schemaDdl)
-    val fromManifests = from.manifests.map(_.path).toSet
-    val newManifests = to.manifests.filterNot(m => fromManifests.contains(m.path))
-    if (newManifests.isEmpty)
-      return emptyFrame(schema)
-    val fromFiles = from.manifests.flatMap(m => readManifest(m.path)).map(_.path).toSet
-    val files = newManifests.flatMap(m => readManifest(m.path))
-      .filterNot(f => fromFiles.contains(f.path))
+    val files = windowDiff(from, to).added
     if (files.isEmpty)
       emptyFrame(schema)
     else readFiles(BranchCatalog.readSchema(schema, to.evo), sized(files))
@@ -5303,31 +5339,40 @@ class BranchCatalog(
     * to APPEND deltas — a snapshot that also removed manifests (a DML
     * rewrite, a compaction) or changed tombstones cannot be replayed
     * onto a diverged head without the full 3-way [[merge]], so those
-    * refuse loudly. Idempotent: manifests the target already carries are
-    * skipped, and an empty remainder commits nothing. Schema and
-    * partition layout must match the target head. Metadata-only —
-    * O(delta manifests), no data moves. */
+    * refuse loudly. Idempotent by DATA FILE, not manifest path (a
+    * manifest fold re-lists picked files under a new path): when every
+    * file the snapshot added is already on the target, nothing commits;
+    * when only some are, the pick refuses, since replaying the rest
+    * would need the 3-way [[merge]]. Schema and partition layout must
+    * match the target head. Metadata-only — O(delta manifests + the
+    * target's manifests the parent lacks), no data moves. */
   def cherrypickSnapshot(table: String, snapshotId: String,
       into: String = "main"): Snapshot = {
     val snap = loadSnapshot(table, snapshotId)
     val parent = snap.parentId.map(loadSnapshot(table, _)).getOrElse(
       sys.error(s"$snapshotId has no parent — cherry-pick replays a commit's delta"))
-    val parentPaths = parent.manifests.map(_.path).toSet
-    val snapPaths = snap.manifests.map(_.path).toSet
-    require(parentPaths.subsetOf(snapPaths),
+    val delta = windowDiff(parent, snap)
+    require(delta.removedManifests.isEmpty,
       s"$snapshotId removed manifests relative to its parent (DML rewrite or " +
         "compaction) — only append commits cherry-pick; publish with merge()")
     require(snap.deleteManifests.map(_.path) == parent.deleteManifests.map(_.path),
       s"$snapshotId changed MOR tombstones — only append commits cherry-pick")
-    val added = snap.manifests.filterNot(m => parentPaths.contains(m.path))
     commitTable(table, into, None) { (head, _) =>
       require(head.schemaDdl == snap.schemaDdl,
         s"schema of $snapshotId diverged from $table@$into — evolve first")
       require(head.partitionSpec == snap.partitionSpec,
         s"partition layout of $snapshotId diverged from $table@$into")
-      val headPaths = head.manifests.map(_.path).toSet
-      val fresh = added.filterNot(m => headPaths.contains(m.path))
-      if (fresh.isEmpty) None
+      // the parent's manifests cannot list a file the snapshot added, so
+      // only the head's other manifests can already hold one
+      val parentPaths = parent.manifests.map(_.path).toSet
+      val onHead = manifestFiles(head.manifests.filterNot(m => parentPaths(m.path)))
+        .flatten.map(_.path).toSet
+      val landed = delta.added.count(f => onHead(f.path))
+      require(landed == 0 || landed == delta.added.size,
+        s"$landed of the ${delta.added.size} files $snapshotId added are already on " +
+          s"$table@$into — re-picking the rest cannot be told from a duplicate; " +
+          "publish with merge()")
+      if (landed == delta.added.size) None
       else {
         // cherry-picked manifests keep their bases VERBATIM (the global
         // counter already reserved those ranges at the original commit,
@@ -5335,7 +5380,7 @@ class BranchCatalog(
         // files whose ids were physically materialized by a source-side
         // rewrite. Only bases never assigned (source committed before
         // lineage was on) allocate fresh.
-        val (withBase, unstamped) = fresh.partition(_.firstRowId >= 0L)
+        val (withBase, unstamped) = delta.addedManifests.partition(_.firstRowId >= 0L)
         Some(Change(SnapshotOp.Cherrypick, unstamped, c =>
           c.copy(manifests = c.manifests ++ withBase.map(_.copy(seq = c.seq)))))
       }
@@ -6458,82 +6503,37 @@ class BranchCatalog(
       s"snapshot $id of $table has renamed columns whose pre-rename files still " +
         "carry the old name — a FOREIGN engine matches columns by name, so export " +
         "after a full rewrite (compactDataFiles) materializes current names")
-    // W71: a foreign engine fills file-missing columns with NULL, not the
-    // declared initial default — precise check via the add sequence (files
-    // carried through rewrites keep their original manifest seq)
-    locally {
-      val backed = snap.evo.initDefaults.filter {
-        case (_, d) => snap.manifests.exists(_.seq < d.addSeq)
-      }
-      require(backed.isEmpty,
-        s"snapshot $id of $table still references files written before column(s) " +
-          s"${backed.keys.mkString(", ")} existed; their declared DEFAULT would read " +
-          "as NULL in a foreign engine — rewrite (compactDataFiles) first")
-    }
+    val residue = defaultResidue(snap)
+    require(residue.isEmpty,
+      s"snapshot $id of $table still references files written before column(s) " +
+        s"${residue.mkString(", ")} existed; their declared DEFAULT would read " +
+        "as NULL in a foreign engine — rewrite (compactDataFiles) first")
     val files = filesOf(snap).sortBy(_.path)
     require(files.nonEmpty,
       s"snapshot $id of $table has no data files — an empty export would emit " +
         "an invalid read_parquet([]) view; append data (or export a later snapshot)")
-    def plain(p: String): String = {
-      val uri = new Path(p).toUri
-      if (uri.getScheme == null || uri.getScheme == "file") uri.getPath else p
-    }
     val destPath = new Path(dest)
     val dfs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (dfs.exists(destPath)) {
-      // overwrite ONLY a previous export: a dest that exists, is
-      // non-empty and carries no manifest.json is someone else's data —
-      // a mistyped path must not silently destroy it
-      val nonEmpty = dfs.listStatus(destPath).nonEmpty
-      require(!nonEmpty || dfs.exists(new Path(destPath, "manifest.json")),
-        s"export dest $dest exists, is non-empty and is not a prior export " +
-          "(no manifest.json) — refusing to overwrite; pick an empty dest")
-      dfs.delete(destPath, true)
-    }
-    dfs.mkdirs(destPath)
-    def emit(name: String, content: String): String = {
-      val p = new Path(destPath, name)
-      val out = dfs.create(p, true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      p.toString
-    }
-    val entries = files.map(f => ExportFileEntry(plain(f.path), f.rows, f.bytes,
-      f.lower, f.upper, f.nullCounts, f.partition))
+    clearExportDest(dfs, destPath, "manifest.json",
+      s"export dest $dest exists, is non-empty and is not a prior export " +
+        "(no manifest.json) — refusing to overwrite; pick an empty dest")
+    val entries = files.map(exportEntry)
     val deleteEntries = snap.deleteManifests
       .flatMap(d => readManifest(d.path)).sortBy(_.path)
       .map(f => ExportFileEntry(plain(f.path), f.rows, f.bytes))
-    val manifestPath = emit("manifest.json", Serialization.write(ExportManifest(
-      table, id, snap.seq, snap.committedAtMillis, snap.schemaDdl,
-      snap.partitionSpec, entries, deleteEntries)))
-    // single quotes in a path are doubled: the view must survive any
-    // filesystem name SQL can express
-    def quoted(es: Seq[ExportFileEntry]): String =
-      es.map(e => s"'${e.path.replace("'", "''")}'").mkString(",\n  ")
-    def quotedPaths(ps: Seq[String]): String =
-      ps.map(p => s"'${p.replace("'", "''")}'").mkString(",\n  ")
-    // the sidecars store Spark's qualified _metadata.file_path
-    // (file:/... or file:///...); the reader's filename is the
-    // literal list entry — both sides canonicalize to scheme-less,
-    // single-leading-slash form before the anti-join
-    def posNotExists(delPaths: Seq[String]): String =
-      "NOT EXISTS (\n" +
-        s"  SELECT 1 FROM read_parquet([\n  ${quotedPaths(delPaths)}\n]) x\n" +
-        s"  WHERE regexp_replace(regexp_replace(x.${BranchCatalog.PosPathCol}, " +
-        "'^[a-zA-Z0-9+.-]+:', ''), '^/+', '/') = " +
-        "regexp_replace(regexp_replace(d.filename, " +
-        "'^[a-zA-Z0-9+.-]+:', ''), '^/+', '/')\n" +
-        s"    AND x.${BranchCatalog.PosIdxCol} = d.file_row_number\n)"
+    val manifestPath = emitExport(dfs, destPath, "manifest.json",
+      Serialization.write(ExportManifest(table, id, snap.seq, snap.committedAtMillis,
+        snap.schemaDdl, snap.partitionSpec, entries, deleteEntries)))
     val eqPending = snap.deleteManifests.exists(!_.posDelete)
     val viewSql =
       if (deleteEntries.isEmpty)
-        s"CREATE OR REPLACE VIEW ${table}_export AS SELECT * FROM read_parquet([\n  " +
-          quoted(entries) + "\n]);\n"
+        s"CREATE OR REPLACE VIEW ${table}_export AS SELECT * FROM " +
+          readParquet(entries.map(_.path), positions = false) + ";\n"
       else if (!eqPending)
         s"CREATE OR REPLACE VIEW ${table}_export AS\n" +
           "SELECT * EXCLUDE (filename, file_row_number)\n" +
-          s"FROM read_parquet([\n  ${quoted(entries)}\n], " +
-          "filename=true, file_row_number=true) d\n" +
-          "WHERE " + posNotExists(deleteEntries.map(_.path)) + ";\n"
+          s"FROM ${readParquet(entries.map(_.path), positions = true)} d\n" +
+          s"WHERE NOT EXISTS ${posMatch(deleteEntries.map(_.path))};\n"
       else {
         // EQUALITY (or mixed) pending: partition the data manifests into
         // the SAME nested coverage epochs the MOR scan uses, and emit one
@@ -6554,30 +6554,23 @@ class BranchCatalog(
                   .map(f => plain(f.path)).sorted
                 val keyCond = group.head.keyCols
                   .map(k => s"x.$k IS NOT DISTINCT FROM d.$k").mkString(" AND ")
-                "NOT EXISTS (\n" +
-                  s"  SELECT 1 FROM read_parquet([\n  ${quotedPaths(delPaths)}\n]) x\n" +
-                  s"  WHERE $keyCond\n)"
+                s"NOT EXISTS ${existsOver(delPaths, keyCond)}"
               }
             val posConds =
               if (posDels.isEmpty) Nil
-              else Seq(posNotExists(posDels.flatMap(m => readManifest(m.path))
+              else Seq("NOT EXISTS " + posMatch(posDels.flatMap(m => readManifest(m.path))
                 .map(f => plain(f.path)).sorted))
             val needMeta = posDels.nonEmpty
             val select =
               if (needMeta) "SELECT * EXCLUDE (filename, file_row_number)" else "SELECT *"
-            val src =
-              if (needMeta)
-                s"read_parquet([\n  ${quotedPaths(epochFiles)}\n], " +
-                  "filename=true, file_row_number=true)"
-              else s"read_parquet([\n  ${quotedPaths(epochFiles)}\n])"
             val conds = eqConds ++ posConds
-            s"$select\nFROM $src d" +
+            s"$select\nFROM ${readParquet(epochFiles, positions = needMeta)} d" +
               (if (conds.isEmpty) "" else "\nWHERE " + conds.mkString("\n  AND "))
           } }
         s"CREATE OR REPLACE VIEW ${table}_export AS\n" +
           parts.mkString("\nUNION ALL\n") + ";\n"
       }
-    val viewPath = emit("view.sql", viewSql)
+    val viewPath = emitExport(dfs, destPath, "view.sql", viewSql)
     // files.parquet: the same file list as a DISTRIBUTED parquet table
     // (path, rows, bytes + the pruning stats maps) — at 100 TB the inline
     // JSON array is the wrong shape for an engine to parse, and this
@@ -6600,21 +6593,7 @@ class BranchCatalog(
         org.apache.spark.sql.functions.col("partition"))
       .write.mode("overwrite").parquet(filesParquet)
     // numbered symlinks preserve the manifest's (path-sorted) file order
-    val filesDir: Option[String] =
-      if ("file" != dfs.makeQualified(destPath).toUri.getScheme ||
-          !entries.forall(e => new Path(e.path).toUri.getScheme == null ||
-            "file" == new Path(e.path).toUri.getScheme)) None
-      else {
-        val dir = java.nio.file.Paths.get(
-          dfs.makeQualified(new Path(destPath, "files")).toUri.getPath)
-        java.nio.file.Files.createDirectories(dir)
-        entries.zipWithIndex.foreach { case (e, i) =>
-          java.nio.file.Files.createSymbolicLink(
-            dir.resolve(f"$i%05d.parquet"),
-            java.nio.file.Paths.get(new Path(e.path).toUri.getPath))
-        }
-        Some(dir.toString)
-      }
+    val filesDir = linkFarm(dfs, destPath, "files", entries.map(_.path))
     ExportedSnapshot(dest, manifestPath, viewPath, filesDir, filesParquet, id,
       entries.length.toLong, entries.map(_.rows).sum, deleteEntries.length.toLong)
   }
@@ -6680,75 +6659,32 @@ class BranchCatalog(
     require(from.schemaDdl == to.schemaDdl && !to.evo.renamedFiles,
       s"changes window of $table crosses a schema change or rename residue — a " +
         "FOREIGN engine matches columns by name; export after a full rewrite")
-    locally { // W71: same default-residue rule as exportSnapshot
-      val backed = to.evo.initDefaults.filter {
-        case (_, d) => to.manifests.exists(_.seq < d.addSeq)
-      }
-      require(backed.isEmpty,
-        s"changes export of $table refused: files written before column(s) " +
-          s"${backed.keys.mkString(", ")} existed would serve NULL instead of their " +
-          "DEFAULT in a foreign engine — rewrite (compactDataFiles) first")
-    }
-    val fromFiles = filesOf(from)
-    val toFiles = filesOf(to)
-    val fromPaths = fromFiles.map(_.path).toSet
-    val toPaths = toFiles.map(_.path).toSet
-    val deletes = fromFiles.filterNot(f => toPaths.contains(f.path)).sortBy(_.path)
-    val inserts = toFiles.filterNot(f => fromPaths.contains(f.path)).sortBy(_.path)
+    val residue = defaultResidue(to)
+    require(residue.isEmpty,
+      s"changes export of $table refused: files written before column(s) " +
+        s"${residue.mkString(", ")} existed would serve NULL instead of their " +
+        "DEFAULT in a foreign engine — rewrite (compactDataFiles) first")
+    val diff = windowDiff(from, to)
+    val deletes = diff.removed.sortBy(_.path)
+    val inserts = diff.added.sortBy(_.path)
     val newSidecarManifests = {
       val fp = from.deleteManifests.map(_.path).toSet
       to.deleteManifests.filterNot(d => fp.contains(d.path))
     }
     require(deletes.nonEmpty || inserts.nonEmpty || newSidecarManifests.nonEmpty,
       s"window $fromId -> $toId of $table changed no files — nothing to export")
-    def plain(p: String): String = {
-      val uri = new Path(p).toUri
-      if (uri.getScheme == null || uri.getScheme == "file") uri.getPath else p
-    }
     val destPath = new Path(dest)
     val dfs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (dfs.exists(destPath)) {
-      val nonEmpty = dfs.listStatus(destPath).nonEmpty
-      require(!nonEmpty || dfs.exists(new Path(destPath, "manifest-changes.json")),
-        s"export dest $dest exists, is non-empty and is not a prior changes " +
-          "export — refusing to overwrite; pick an empty dest")
-      dfs.delete(destPath, true)
-    }
-    dfs.mkdirs(destPath)
-    def emit(name: String, content: String): String = {
-      val p = new Path(destPath, name)
-      val out = dfs.create(p, true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      p.toString
-    }
-    def entriesOf(fs: Seq[DataFileMeta]): Seq[ExportFileEntry] =
-      fs.map(f => ExportFileEntry(plain(f.path), f.rows, f.bytes,
-        f.lower, f.upper, f.nullCounts, f.partition))
-    def linkFarm(kind: String, entries: Seq[ExportFileEntry]): Unit =
-      if (entries.nonEmpty &&
-          "file" == dfs.makeQualified(destPath).toUri.getScheme &&
-          entries.forall(e => new Path(e.path).toUri.getScheme == null ||
-            "file" == new Path(e.path).toUri.getScheme)) {
-        val d = java.nio.file.Paths.get(
-          dfs.makeQualified(new Path(destPath, kind)).toUri.getPath)
-        java.nio.file.Files.createDirectories(d)
-        entries.zipWithIndex.foreach { case (e, i) =>
-          java.nio.file.Files.createSymbolicLink(d.resolve(f"$i%05d.parquet"),
-            java.nio.file.Paths.get(new Path(e.path).toUri.getPath))
-        }
-      }
-    def leg(ct: String, entries: Seq[ExportFileEntry]): String =
-      s"SELECT *, '$ct' AS _change_type FROM read_parquet([\n  " +
-        entries.map(e => s"'${e.path.replace("'", "''")}'").mkString(",\n  ") + "\n])"
-
-    val (insE, delE) = (entriesOf(inserts), entriesOf(deletes))
+    clearExportDest(dfs, destPath, "manifest-changes.json",
+      s"export dest $dest exists, is non-empty and is not a prior changes " +
+        "export — refusing to overwrite; pick an empty dest")
+    val (insE, delE) = (inserts.map(exportEntry), deletes.map(exportEntry))
     // the window's NEW and INHERITED position-sidecar files (read ONCE —
     // the view paths AND the manifest's deleteSidecars derive from this)
     val newScFiles = newSidecarManifests.flatMap(m => readManifest(m.path))
       .sortBy(_.path)
-    val newSc = newScFiles.map(f => plain(f.path))
     val fromScFiles = from.deleteManifests.flatMap(m => readManifest(m.path))
-    val fromSc = fromScFiles.map(f => plain(f.path)).sorted
+      .sortBy(_.path)
     def canonS(p: String): String =
       p.replaceFirst("^[a-zA-Z0-9+.-]+:", "").replaceFirst("^/+", "/")
     // CARRIED files the new sidecars reference: rows deleted in-window
@@ -6756,9 +6692,10 @@ class BranchCatalog(
     // them. The new sidecars are window-scoped (small), so one driver
     // read of their distinct target paths is O(window), never O(table).
     val carriedTargets: Seq[DataFileMeta] =
-      if (newSc.isEmpty) Nil
+      if (newScFiles.isEmpty) Nil
       else {
-        val carried = toFiles.filter(f => fromPaths.contains(f.path))
+        val addedPaths = inserts.map(_.path).toSet
+        val carried = filesOf(to).filterNot(f => addedPaths(f.path))
         if (carried.isEmpty) Nil
         else {
           val referenced = readFiles(BranchCatalog.posDeleteSchema, sized(newScFiles))
@@ -6767,38 +6704,34 @@ class BranchCatalog(
           carried.filter(f => referenced.contains(canonS(plain(f.path)))).sortBy(_.path)
         }
       }
-    val carriedE = entriesOf(carriedTargets)
-    def quotedP(ps: Seq[String]): String =
-      ps.map(p => s"'${p.replace("'", "''")}'").mkString(",\n  ")
-    def scMatch(scPaths: Seq[String]): String =
-      s"(\n  SELECT 1 FROM read_parquet([\n  ${quotedP(scPaths)}\n]) x\n" +
-        s"  WHERE regexp_replace(regexp_replace(x.${BranchCatalog.PosPathCol}, " +
-        "'^[a-zA-Z0-9+.-]+:', ''), '^/+', '/') = " +
-        "regexp_replace(regexp_replace(d.filename, " +
-        "'^[a-zA-Z0-9+.-]+:', ''), '^/+', '/')\n" +
-        s"    AND x.${BranchCatalog.PosIdxCol} = d.file_row_number\n)"
-    /** A change leg filtered by sidecar membership: `exists = false`
-      * keeps rows NO sidecar entry marks, `exists = true` keeps exactly
-      * the marked rows. */
-    def sidecarLeg(ct: String, es: Seq[ExportFileEntry],
-        scPaths: Seq[String], exists: Boolean): String =
-      s"SELECT * EXCLUDE (filename, file_row_number), '$ct' AS _change_type\n" +
-        s"FROM read_parquet([\n  ${quotedP(es.map(_.path))}\n], " +
-        "filename=true, file_row_number=true) d\n" +
-        s"WHERE ${if (exists) "EXISTS" else "NOT EXISTS"} ${scMatch(scPaths)}"
-    /** Rows of `files` minus/inside the sidecar marks, counted in Spark
-      * (the metadata row sums are no longer exact once sidecars apply). */
-    def countAgainst(files: Seq[DataFileMeta], scFiles: Seq[DataFileMeta],
-        keepMarked: Boolean): Long =
-      if (files.isEmpty) 0L
+    val carriedE = carriedTargets.map(exportEntry)
+    /** One change leg over `files`: all their rows, or — filtered by
+      * sidecar membership — the rows no sidecar marks (`marked = false`)
+      * or exactly the marked rows (`marked = true`). */
+    def leg(ct: String, files: Seq[DataFileMeta], sidecars: Seq[DataFileMeta],
+        marked: Boolean): String = {
+      val paths = files.map(f => plain(f.path))
+      if (sidecars.isEmpty)
+        s"SELECT *, '$ct' AS _change_type FROM " + readParquet(paths, positions = false)
+      else
+        s"SELECT * EXCLUDE (filename, file_row_number), '$ct' AS _change_type\n" +
+          s"FROM ${readParquet(paths, positions = true)} d\n" +
+          s"WHERE ${if (marked) "EXISTS" else "NOT EXISTS"} " +
+          posMatch(sidecars.map(f => plain(f.path)))
+    }
+    /** The rows [[leg]] serves: the metadata row sum, or — once sidecars
+      * apply and the sums are no longer exact — a Spark count. */
+    def legRows(files: Seq[DataFileMeta], sidecars: Seq[DataFileMeta],
+        marked: Boolean): Long =
+      if (sidecars.isEmpty) files.map(_.rows).sum
       else {
         import org.apache.spark.sql.functions.{col => fcol}
         val raw = readFiles(StructType.fromDDL(to.schemaDdl), sized(files))
           .select(fcol("_metadata.file_path").as(BranchCatalog.PosPathCol),
             fcol("_metadata.row_index").as(BranchCatalog.PosIdxCol))
-        val pd = readFiles(BranchCatalog.posDeleteSchema, sized(scFiles))
+        val pd = readFiles(BranchCatalog.posDeleteSchema, sized(sidecars))
         raw.join(pd, Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol),
-          if (keepMarked) "left_semi" else "left_anti").count()
+          if (marked) "left_semi" else "left_anti").count()
       }
     val (viewSql, changesParquet, insRows, delRows) =
       if (net) {
@@ -6808,12 +6741,12 @@ class BranchCatalog(
         val counts = spark.read.parquet(dir).groupBy("_change_type").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         (s"CREATE OR REPLACE VIEW ${table}_changes_export AS SELECT * FROM " +
-          s"read_parquet('${plain(dir).replace("'", "''")}/*.parquet');\n",
+          s"read_parquet(${sqlString(plain(dir) + "/*.parquet")});\n",
           Some(plain(dir)),
           counts.getOrElse("insert", 0L), counts.getOrElse("delete", 0L))
       } else {
-        linkFarm("inserts", insE)
-        linkFarm("deletes", delE)
+        linkFarm(dfs, destPath, "inserts", insE.map(_.path))
+        linkFarm(dfs, destPath, "deletes", delE.map(_.path))
         // three legs (sidecar-aware where needed):
         //  - inserts: added files minus the NEW sidecars' marks (a row
         //    born and deleted inside the window was never visible; only
@@ -6822,33 +6755,22 @@ class BranchCatalog(
         //    dead at `from` must not re-delete)
         //  - deletes B: carried files' rows the NEW sidecars mark (the
         //    zero-file-change deletions the file diff cannot see)
-        val legs =
-          (if (insE.isEmpty) Nil
-           else if (newSc.isEmpty) Seq(leg("insert", insE))
-           else Seq(sidecarLeg("insert", insE, newSc, exists = false))) ++
-          (if (delE.isEmpty) Nil
-           else if (fromSc.isEmpty) Seq(leg("delete", delE))
-           else Seq(sidecarLeg("delete", delE, fromSc, exists = false))) ++
-          (if (carriedE.isEmpty) Nil
-           else Seq(sidecarLeg("delete", carriedE, newSc, exists = true)))
-        val nIns =
-          if (newSc.isEmpty) insE.map(_.rows).sum
-          else countAgainst(inserts, newScFiles, keepMarked = false)
-        val nDel =
-          (if (fromSc.isEmpty) delE.map(_.rows).sum
-           else countAgainst(deletes, fromScFiles, keepMarked = false)) +
-            (if (carriedE.isEmpty) 0L
-             else countAgainst(carriedTargets, newScFiles, keepMarked = true))
+        val legs = Seq(("insert", inserts, newScFiles, false),
+          ("delete", deletes, fromScFiles, false),
+          ("delete", carriedTargets, newScFiles, true)).filter(_._2.nonEmpty)
+        def rowsOf(ct: String): Long =
+          legs.collect { case (`ct`, fs, sc, marked) => legRows(fs, sc, marked) }.sum
         (s"CREATE OR REPLACE VIEW ${table}_changes_export AS\n" +
-          legs.mkString("\nUNION ALL\n") + ";\n",
-          None, nIns, nDel)
+          legs.map { case (ct, fs, sc, marked) => leg(ct, fs, sc, marked) }
+            .mkString("\nUNION ALL\n") + ";\n",
+          None, rowsOf("insert"), rowsOf("delete"))
       }
-    val manifestPath = emit("manifest-changes.json",
+    val manifestPath = emitExport(dfs, destPath, "manifest-changes.json",
       Serialization.write(ExportChangesManifest(table, fromId, toId,
         from.seq, to.seq, to.schemaDdl, net, insE, delE, changesParquet,
-        deleteSidecars = entriesOf(newScFiles),
+        deleteSidecars = newScFiles.map(exportEntry),
         carriedDeleteTargets = carriedE)))
-    val viewPath = emit("view.sql", viewSql)
+    val viewPath = emitExport(dfs, destPath, "view.sql", viewSql)
     ExportedChanges(dest, manifestPath, viewPath, fromId, toId,
       insE.length.toLong, delE.length.toLong, insRows, delRows, net)
   }
@@ -6879,30 +6801,16 @@ class BranchCatalog(
     * per-file blooms merge by map union — zero data reads. Sources
     * without a current-format sidecar contribute nothing (their files
     * just stay unprobed, which is sound). */
-  private def carryBloomSidecars(newManifestPath: String, sources: Seq[String]): Unit = {
-    val fmtKey = "__graft_bloom_format"
+  private def carryBloomSidecars(newManifestPath: String, sources: Seq[String]): Unit =
     bloomIndexedColumns(sources).foreach { c =>
+      // keys stay valid: the folded manifest sits beside its sources
       val merged = sources.flatMap { sp =>
         val p = bloomSidecarPath(sp, c)
         if (!fs.exists(p)) Nil
-        else {
-          val raw = Serialization.read[Map[String, String]](readString(p))
-          if (!raw.get(fmtKey).contains(BranchCatalog.BloomSidecarCache.formatVersion)) Nil
-          else (raw - fmtKey).toSeq
-        }
+        else BranchCatalog.BloomSidecarCache.entriesOf(readString(p)).toSeq.flatten
       }.toMap
-      if (merged.nonEmpty) {
-        val p = bloomSidecarPath(newManifestPath, c)
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, true)
-        try out.write(Serialization.write(
-          merged + (fmtKey -> BranchCatalog.BloomSidecarCache.formatVersion))
-          .getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        BranchCatalog.BloomSidecarCache.invalidate(newManifestPath, c)
-      }
+      if (merged.nonEmpty) BranchCatalog.BloomSidecarCache.write(fs, newManifestPath, c, merged)
     }
-  }
 
   /** Fold table@branch's current manifests into ONE new manifest per MOR
     * coverage epoch (pure metadata rewrite — data files untouched; ONE
@@ -8053,6 +7961,96 @@ object BranchCatalog {
   val PosPathCol = "__graft_path"
   val PosIdxCol = "__graft_pos"
 
+  // ---- the export writer ([[BranchCatalog.exportSnapshot]],
+  // [[BranchCatalog.exportChanges]] and the index exports) ---------------
+
+  /** Ready `dest` for an export whose marker file is `marker`: a dest
+    * that exists, is non-empty and carries no marker is someone else's
+    * data — a mistyped path must not silently destroy it — so it
+    * refuses with `refusal`; a prior export is cleared whole, so a
+    * re-export never leaves mixed artifacts behind. */
+  private[graft] def clearExportDest(
+      fs: FileSystem, dest: Path, marker: String, refusal: => String): Unit =
+    if (fs.exists(dest)) {
+      require(fs.listStatus(dest).isEmpty || fs.exists(new Path(dest, marker)), refusal)
+      fs.delete(dest, true)
+      ()
+    }
+
+  /** Write one small text artifact `dest/name`, creating parents. */
+  private[graft] def emitExport(fs: FileSystem, dest: Path, name: String,
+      content: String): String = {
+    val p = new Path(dest, name)
+    fs.mkdirs(p.getParent)
+    val out = fs.create(p, true)
+    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    p.toString
+  }
+
+  /** An export's path form: local paths lose their scheme, so the file
+    * list reads as plain filesystem paths; other URIs stay whole. */
+  private def plain(p: String): String = {
+    val uri = new Path(p).toUri
+    if (uri.getScheme == null || uri.getScheme == "file") uri.getPath else p
+  }
+
+  private def exportEntry(f: DataFileMeta): ExportFileEntry =
+    ExportFileEntry(plain(f.path), f.rows, f.bytes, f.lower, f.upper, f.nullCounts,
+      f.partition)
+
+  /** Columns whose declared DEFAULT some live file predates (W71): a
+    * foreign engine fills a file-missing column with NULL, not the
+    * default, so an export refuses while any remain. Precise through the
+    * add sequence — files carried through rewrites keep their original
+    * manifest seq. */
+  private def defaultResidue(snap: Snapshot): Seq[String] =
+    snap.evo.initDefaults.collect {
+      case (c, d) if snap.manifests.exists(_.seq < d.addSeq) => c
+    }.toSeq
+
+  /** Numbered symlinks `dest/dir/00000.parquet`… over `paths`, in order,
+    * for glob-only readers; the directory, or None when there is nothing
+    * to link or a side is not on a local filesystem (the manifest and
+    * view carry the real URIs). */
+  private def linkFarm(fs: FileSystem, dest: Path, dir: String,
+      paths: Seq[String]): Option[String] =
+    if (paths.isEmpty || "file" != fs.makeQualified(dest).toUri.getScheme ||
+        !paths.forall(p => Option(new Path(p).toUri.getScheme).forall(_ == "file"))) None
+    else {
+      val d = java.nio.file.Paths.get(fs.makeQualified(new Path(dest, dir)).toUri.getPath)
+      java.nio.file.Files.createDirectories(d)
+      paths.zipWithIndex.foreach { case (p, i) =>
+        java.nio.file.Files.createSymbolicLink(d.resolve(f"$i%05d.parquet"),
+          java.nio.file.Paths.get(new Path(p).toUri.getPath))
+      }
+      Some(d.toString)
+    }
+
+  /** A SQL string literal; single quotes double, so an export view
+    * survives any filesystem name SQL can express. */
+  private def sqlString(s: String): String = s"'${s.replace("'", "''")}'"
+
+  /** `read_parquet` over a literal file list; `positions` adds each row's
+    * `filename` and `file_row_number` for the position-sidecar match. */
+  private def readParquet(paths: Seq[String], positions: Boolean): String =
+    s"read_parquet([\n  ${paths.map(sqlString).mkString(",\n  ")}\n]" +
+      (if (positions) ", filename=true, file_row_number=true)" else ")")
+
+  /** The `(SELECT 1 … WHERE cond)` body of an export view's EXISTS or
+    * NOT EXISTS clause over the parquet files `paths`, aliased `x`. */
+  private def existsOver(paths: Seq[String], cond: String): String =
+    s"(\n  SELECT 1 FROM ${readParquet(paths, positions = false)} x\n  WHERE $cond\n)"
+
+  /** The position-sidecar rows of `sidecars` that mark the reader's row
+    * `d` by (filename, file_row_number). The sidecars store Spark's
+    * qualified `_metadata.file_path` (file:/… or file:///…) and the
+    * reader's filename is the literal list entry, so both sides
+    * canonicalize to scheme-less, single-leading-slash form. */
+  private def posMatch(sidecars: Seq[String]): String = existsOver(sidecars,
+    s"regexp_replace(regexp_replace(x.$PosPathCol, '^[a-zA-Z0-9+.-]+:', ''), '^/+', '/') = " +
+      "regexp_replace(regexp_replace(d.filename, '^[a-zA-Z0-9+.-]+:', ''), '^/+', '/')\n" +
+      s"    AND x.$PosIdxCol = d.file_row_number")
+
   /** Row-lineage columns (W73 — Iceberg v3 row tracking). In rewrite
     * OUTPUT files they are physical: `__graft_row_id` carries each
     * carried row's original stable id (NULL = a row INSERTED by the
@@ -8174,37 +8172,64 @@ object BranchCatalog {
     private val existsCache = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Boolean)]()
 
-    /** Sidecar format marker: a reserved JSON key (no file basename can
-      * collide with it) written since the fixed-UTC normalization.
-      * Sidecars WITHOUT it (a pre-marker format whose timestamp
-      * rendering may be session-TZ-dependent) decline to prune rather
-      * than prune wrongly. */
+    /** Sidecar format marker: a reserved JSON key (no data-file key can
+      * collide with it). Sidecars without the current version decline to
+      * prune rather than prune wrongly: pre-marker ones may render
+      * timestamps in the session time zone, and "1-utc" ones key filters
+      * by file NAME, which repeats across a partitioned write's value
+      * directories. */
     private val formatKey = "__graft_bloom_format"
-    private[wap] val formatVersion = "1-utc"
+    private[wap] val formatVersion = "2-path"
 
     private[wap] def sidecarFor(manifestPath: String, column: String): Path = {
       val mp = new Path(manifestPath)
       new Path(mp.getParent, s"bloom-${mp.getName.stripSuffix(".json")}-$column.json")
     }
 
-    /** The ONE place the sidecar wire format (JSON of file-name ->
-      * base64 bloom bytes + the format marker) is parsed — both tiers
-      * go through it. A sidecar without the current format marker
-      * answers as empty (declines to prune). */
-    private def parse(body: String): Map[String, org.apache.spark.util.sketch.BloomFilter] = {
+    /** A data file's filter key ([[keyOf]]): its path under the table's
+      * data directory (`tables/<t>/data/`, beside the manifest's
+      * `meta/`), or its whole scheme-less path when it lives elsewhere.
+      * `filePath` is a Hadoop path string, as manifests record it. */
+    private[wap] def keyOf(manifestPath: String, filePath: String): String = {
+      val file = new Path(filePath).toUri.getPath
+      val dataDir =
+        new Path(new Path(manifestPath).getParent.getParent, "data").toUri.getPath + "/"
+      if (file.startsWith(dataDir)) file.substring(dataDir.length) else file
+    }
+
+    /** The ONE place the sidecar wire format (JSON of file key -> base64
+      * bloom bytes + the format marker) is read — both tiers and
+      * [[BranchCatalog.buildBloomIndex]] go through it: the entries, or
+      * None for a sidecar without the current format marker. */
+    private[wap] def entriesOf(body: String): Option[Map[String, String]] = {
       implicit val fmts: Formats = DefaultFormats
       val raw = Serialization.read[Map[String, String]](body)
-      if (!raw.get(formatKey).contains(formatVersion)) Map.empty
-      else (raw - formatKey).map { case (k, v) =>
+      if (raw.get(formatKey).contains(formatVersion)) Some(raw - formatKey) else None
+    }
+
+    private def parse(body: String): Map[String, org.apache.spark.util.sketch.BloomFilter] =
+      entriesOf(body).getOrElse(Map.empty).map { case (k, v) =>
         k -> org.apache.spark.util.sketch.BloomFilter.readFrom(
           java.util.Base64.getDecoder.decode(v))
       }
+
+    /** Write `column`'s current-format sidecar for one manifest and drop
+      * its cached answers, so the writing JVM sees it at once. */
+    private[wap] def write(fs: FileSystem, manifestPath: String, column: String,
+        entries: Map[String, String]): Unit = {
+      implicit val fmts: Formats = DefaultFormats
+      val p = sidecarFor(manifestPath, column)
+      fs.mkdirs(p.getParent)
+      val out = fs.create(p, true)
+      try out.write(Serialization.write(entries + (formatKey -> formatVersion))
+        .getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      invalidate(manifestPath, column)
     }
 
-    /** Drop cached answers for one sidecar — [[BranchCatalog
-      * .buildBloomIndex]] calls this after writing, so the building JVM
-      * sees its own index immediately instead of waiting out a cached
-      * negative's TTL. */
+    /** Drop cached answers for one sidecar — [[write]] calls this after
+      * writing, so the building JVM sees its own index immediately
+      * instead of waiting out a cached negative's TTL. */
     def invalidate(manifestPath: String, column: String): Unit = {
       val key = sidecarFor(manifestPath, column).toString
       loadCache.remove(key)
@@ -8258,8 +8283,7 @@ object BranchCatalog {
         column: String, filePath: String, value: String): Boolean = {
       val blooms = load(conf, manifestPath, column)
       blooms.isEmpty ||
-        blooms.get(filePath.substring(filePath.lastIndexOf('/') + 1))
-          .forall(_.mightContainString(value))
+        blooms.get(keyOf(manifestPath, filePath)).forall(_.mightContainString(value))
     }
   }
 }

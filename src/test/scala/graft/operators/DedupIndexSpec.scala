@@ -114,6 +114,21 @@ class DedupIndexSpec extends SparkSpecBase {
     assert((0L until 20L).forall(i => served.contains((i, i + 9000))))
   }
 
+  test("a pending equality tombstone on the source is not changelog-readable: refresh runs full") {
+    val cat = freshCat()
+    cat.createTableIfNotExists("documents", docs(0, 1).schema)
+    cat.append("documents", docs(0, 200))
+    DedupIndex.build(spark, cat, "documents", "doc_id", "text")
+    cat.deleteKeysMOR("documents", docs(0, 10).select("doc_id"))
+    assert(DedupIndex.refresh(spark, cat, "documents", "text") == "full")
+    val bandsT = DedupIndex.bandsTable("documents", "text")
+    val refreshed = cat.scan(bandsT).collect().toSet
+    assert(!refreshed.exists(_.getLong(0) < 10), "tombstoned docs must leave the index")
+    DedupIndex.build(spark, cat, "documents", "doc_id", "text")
+    assert(cat.scan(bandsT).collect().toSet == refreshed,
+      "the fallback must equal a fresh build over the same source")
+  }
+
   test("pairsSinceWatermark dedups the un-indexed ingest window") {
     val cat = freshCat()
     cat.createTableIfNotExists("documents", docs(0, 1).schema)

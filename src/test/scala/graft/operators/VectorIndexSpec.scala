@@ -122,6 +122,24 @@ class VectorIndexSpec extends SparkSpecBase {
     assert(recall >= 0.5, s"post-churn recall floor: $recall")
   }
 
+  test("a pending equality tombstone on the source is not changelog-readable: refresh runs full") {
+    val cat = mkLake(freshRoot(), 100, 300)
+    VectorIndex.build(spark, cat, "emb", "vec_id", "embedding", P)
+    cat.deleteKeysMOR("emb", emb(250, 300).select("vec_id"))
+    assert(VectorIndex.refresh(spark, cat, "emb", "embedding") == "full")
+    def index(): Seq[Set[Seq[Any]]] =
+      Seq(VectorIndex.centsTable("emb", "embedding"), VectorIndex.codesTable("emb", "embedding"))
+        .map(t => cat.scan(t).collect().map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        }).toSet)
+    val refreshed = index()
+    assert(cat.scan(VectorIndex.codesTable("emb", "embedding"))
+      .filter(col("neighbor_id") >= 250).count() == 0L)
+    VectorIndex.build(spark, cat, "emb", "vec_id", "embedding", P)
+    assert(index() == refreshed, "the fallback must equal a fresh build over the same source")
+  }
+
   test("a fresh catalog handle serves queries from the stored artifact; recall holds") {
     val root = freshRoot()
     val cat = mkLake(root, 100, 400)

@@ -1163,6 +1163,34 @@ class WapSpec extends SparkSpecBase {
     assert(e2.getMessage.contains("removed manifests"), e2.getMessage)
   }
 
+  test("cherrypickSnapshot after a merge and a manifest fold commits nothing") {
+    val cat = freshCatalog()
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 100)
+    cat.createTableIfNotExists("t", docs.schema)
+    cat.append("t", docs.filter(col("doc_id") < 50))
+    cat.createBranch("wip")
+    val picked = cat.append("t", docs.filter(col("doc_id") >= 50), "wip")
+    cat.merge("wip")
+    // the fold re-lists the picked files under a new manifest path
+    val folded = cat.compactManifests("t")
+    assert(cat.cherrypickSnapshot("t", picked.id).id == folded.id)
+    assert(cat.scan("t").count() == 100)
+    val files = cat.dataFiles("t").map(_.path)
+    assert(files.size == files.distinct.size, "no data file may be listed twice")
+
+    // a target holding only SOME of the picked files refuses: after the
+    // merge, a delete on main rewrote one of the two picked files
+    cat.createBranch("wip2")
+    val two = cat.append("t", Tables.documents(spark, sfDir)
+      .filter(col("doc_id") >= 100 && col("doc_id") < 140)
+      .repartitionByRange(2, col("doc_id")), "wip2")
+    assert(cat.snapshotMeta("t", two.id).manifests.last.fileCount == 2)
+    cat.merge("wip2")
+    cat.deleteWhere("t", col("doc_id") === 100)
+    val e = intercept[IllegalArgumentException](cat.cherrypickSnapshot("t", two.id))
+    assert(e.getMessage.contains("already on"), e.getMessage)
+  }
+
   test("tags: immutable refs pin snapshots against expiry; names share the branch namespace") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 100)
@@ -2270,11 +2298,47 @@ class WapSpec extends SparkSpecBase {
   }
 
   test("bloom pruning survives a partition rewrite at 200 keys") {
-    // pending: a partitioned write names its files alike in every value
-    // directory, and bloom sidecars key each filter by file NAME, so the
-    // four files share one filter sized for one file's rows and admit
-    // the absent key
-    pendingUntilFixed(bloomAfterPartitionRewrite(200))
+    // a partitioned write names its files alike in every value
+    // directory: only filters keyed by path keep the four files apart
+    bloomAfterPartitionRewrite(200)
+  }
+
+  test("bloom filters key by path, across escaped partition dirs; older-format sidecars rebuild") {
+    import spark.implicits._
+    // a catalog root and partition values Spark escapes in paths, '%' too
+    val cat = new BranchCatalog(spark,
+      Files.createTempDirectory("graft-bloom").resolve("a root%").toString)
+    val rows = spark.range(0, 200).select(col("id"),
+      concat(lit("a b:c%"), (col("id") % 4).cast("string")).as("grp"),
+      (col("id") * 37 % 1000).as("k"))
+    cat.createTableIfNotExists("t", rows.schema)
+    cat.append("t", rows.coalesce(1))
+    cat.rewritePartitioned("t", IdentityPartition("grp"))
+    cat.buildBloomIndex("t", "k", fpp = 0.001)
+    val present = rows.select("k").as[Long].collect().toSet
+    val absent = (400L to 600L).find(v => !present(v)).get
+    assert(cat.dataFiles("t").size == 4)
+    assert(cat.prunedDataFiles("t", col("k") === absent).isEmpty)
+    assert(cat.prunedDataFiles("t", col("k") === 37L).size == 1)
+    val dcat = new BranchCatalog(spark, cat.root, distributedMetaThreshold = 0)
+    val snap = dcat.snapshotMeta("t", dcat.snapshotIdOf("t").get)
+    val schema = StructType.fromDDL(snap.schemaDdl)
+    assert(dcat.distributedPrunedPaths(snap, Some(col("k") === absent), schema).isEmpty,
+      "executor-side probes key files like the driver")
+
+    // a sidecar of the file-name format declines to prune, and the next
+    // build rewrites it
+    val m = snap.manifests.head.path
+    val sidecar = BranchCatalog.BloomSidecarCache.sidecarFor(m, "k")
+    val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val body = scala.io.Source.fromInputStream(fs.open(sidecar), "UTF-8").mkString
+    val out = fs.create(sidecar, true)
+    try out.write(body.replace("\"2-path\"", "\"1-utc\"").getBytes("UTF-8"))
+    finally out.close()
+    BranchCatalog.BloomSidecarCache.invalidate(m, "k")
+    assert(cat.prunedDataFiles("t", col("k") === absent).size == 4)
+    assert(cat.buildBloomIndex("t", "k", fpp = 0.001) == 1)
+    assert(cat.prunedDataFiles("t", col("k") === absent).isEmpty)
   }
 
   test("rewritePartitioned refuses an empty spec list and commits nothing") {
