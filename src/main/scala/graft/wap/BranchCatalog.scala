@@ -648,8 +648,8 @@ class BranchCatalog(
       * For S3-style stores, pass a [[ConditionalPutRefsStore]] so the
       * commit maps to a conditional put (If-None-Match) instead. */
     refsBackend: Option[RefsStore] = None) {
-  import BranchCatalog.{Change, Picked, clearExportDest, defaultResidue, emitExport,
-    existsOver, exportEntry, linkFarm, plain, posMatch, readParquet, sqlString}
+  import BranchCatalog.{Arm, Change, PartStats, Picked, clearExportDest, defaultResidue,
+    emitExport, existsOver, exportEntry, linkFarm, plain, posMatch, readParquet, sqlString}
   private implicit val fmts: Formats = DefaultFormats
   private val rootPath = new Path(root)
   // resolved once per instance: getFileSystem consults the Hadoop
@@ -2686,6 +2686,111 @@ class BranchCatalog(
     }
   }
 
+  /** The row-outcome evaluator behind MERGE and UPDATE, copy-on-write
+    * and merge-on-read: `body` runs over the outcome of each of the
+    * `candidates` rows ([[Outcomes]]). A row gets the first of `arms`
+    * that fires on it (a NULL condition does not fire); a row no arm
+    * fires on is kept where `keepUnfired` holds and dropped elsewhere (a
+    * MERGE source-only row). `target` and `source` read a column of the
+    * row's two sides: `t.x` and `s.x` over a MERGE join, `x` over a bare
+    * scan. */
+  private def withOutcomes[T](table: String, branch: String, cur: Snapshot,
+      candidates: DataFrame, arms: Seq[Arm],
+      target: String => Column = org.apache.spark.sql.functions.col,
+      source: String => Column = org.apache.spark.sql.functions.col,
+      keepUnfired: Column = org.apache.spark.sql.functions.lit(true))(
+      body: Outcomes => T): T = {
+    val o = new Outcomes(table, branch, cur, candidates, arms, target, source, keepUnfired)
+    try body(o) finally { o.rows.unpersist(); () }
+  }
+
+  /** The labeled rows of one [[withOutcomes]] evaluation, persisted while
+    * it runs, and what the two write shapes take of them: copy-on-write
+    * writes [[kept]] ([[writeRows]]); merge-on-read marks [[marks]]
+    * ([[writeSidecar]]) and appends [[appended]] ([[commitPositional]]).
+    * Every written row follows the same rules: the firing arm's SET cast
+    * to each column's declared type over the target's values (an
+    * insert's come from the source); row lineage per W73 (`_row_id` kept
+    * unless the row is an insert, `_last_updated_seq` NULL, so it
+    * inherits the commit's sequence at read); generated columns computed
+    * or validated ([[generatedGuard]] — explicit where the firing arm
+    * SETs the column or the row is an insert) and CHECK constraints
+    * enforced ([[constraintGuard]]). Rows carried through are exempt from
+    * both guards. */
+  private final class Outcomes(table: String, branch: String, cur: Snapshot,
+      candidates: DataFrame, arms: Seq[Arm], target: String => Column,
+      source: String => Column, keepUnfired: Column) {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
+    private val (armCol, unfired, dropped) = ("__arm", -1, -2)
+    private val arm = col(armCol)
+    val rows: DataFrame = candidates.withColumn(armCol,
+      arms.zipWithIndex.foldRight(when(keepUnfired, unfired).otherwise(dropped)) {
+        case ((a, i), rest) => when(coalesce(a.fire, lit(false)), i).otherwise(rest)
+      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    private def is(kind: Arm.Kind): Column = {
+      val ids = arms.indices.filter(arms(_).kind == kind)
+      if (ids.isEmpty) lit(false) else arm.isin(ids: _*)
+    }
+    private val (isU, isD, isI) = (is(Arm.Update), is(Arm.Delete), is(Arm.Insert))
+
+    /** (updated, deleted, inserted) row counts, by one aggregate. */
+    lazy val counts: (Long, Long, Long) = {
+      val r = rows.agg(sum(when(isU, 1L).otherwise(0L)),
+        sum(when(isD, 1L).otherwise(0L)), sum(when(isI, 1L).otherwise(0L))).head
+      def n(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+      (n(0), n(1), n(2))
+    }
+
+    /** Every row but the deleted and dropped ones, as written. */
+    def kept: DataFrame = written(!isD && arm =!= dropped)
+
+    /** The updated and inserted rows, as written. */
+    def appended: DataFrame = written(isU || isI)
+
+    /** The positions of the updated and deleted target rows. */
+    def marks: DataFrame = rows.filter(isU || isD).select(
+      target(BranchCatalog.PosPathCol).as(BranchCatalog.PosPathCol),
+      target(BranchCatalog.PosIdxCol).as(BranchCatalog.PosIdxCol))
+
+    private def written(keep: Column): DataFrame = {
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      val wrote = isU || isI
+      val values = schema.fields.map { f =>
+        arms.zipWithIndex.foldLeft(when(isI, source(f.name)).otherwise(target(f.name))) {
+          case (acc, (a, i)) if a.set.contains(f.name) =>
+            when(arm === i, a.set(f.name).cast(f.dataType)).otherwise(acc)
+          case (acc, _) => acc
+        }.as(f.name)
+      }
+      val lineage =
+        if (!cur.lin.enabled) Nil
+        else Seq(
+          when(isI, lit(null).cast("long"))
+            .otherwise(target(BranchCatalog.RowIdCol)).as(BranchCatalog.RowIdCol),
+          when(wrote, lit(null).cast("long"))
+            .otherwise(target(BranchCatalog.LastSeqCol)).as(BranchCatalog.LastSeqCol))
+      def explicit(c: String): Column =
+        arms.indices.filter(arms(_).set.contains(c)).foldLeft(isI)((e, i) => e || arm === i)
+      val out = rows.filter(keep).select((values ++ lineage :+ arm).toIndexedSeq: _*)
+      constraintGuard(generatedGuard(out, cur, schema, wrote, explicit),
+        table, branch, Some(wrote)).drop(armCol)
+    }
+  }
+
+  /** Commits the merge-on-read write shape: the `marks` sidecar
+    * ([[writeSidecar]] of [[Outcomes.marks]]) beside `o`'s appended rows
+    * as one fresh manifest. */
+  private def commitPositional(table: String, branch: String, cur: Snapshot, op: SnapshotOp,
+      during: String, marks: Option[ManifestRef], o: Outcomes): Snapshot = {
+    val files = writeRows(table, cur, o.appended)
+    val fresh =
+      if (files.isEmpty) Nil
+      else Seq(writeManifest(table, files, StructType.fromDDL(cur.schemaDdl)))
+    commitTable(table, branch, Some(cur), during) { (_, _) =>
+      Some(Change(op, fresh, withDeletes(_, marks)))
+    }
+  }
+
   /** The one whole-table rewrite: the head's current rows
     * ([[rewriteScan]] — pending deletes applied, lineage materialized)
     * laid out and written by `layout`, committed as one manifest in a
@@ -4403,28 +4508,6 @@ class BranchCatalog(
         return Some(aggs.map(_ => manifests.map(_.rows).sum))
       return None
     }
-    val totalRows = manifests.map(_.rows).sum
-    // an unknown name would otherwise "answer" whenever no live manifest
-    // exists to refuse it (an empty delta) or a dropped column's old
-    // stats survive in the manifests
-    def nullsOf(c: String): Option[Long] =
-      if (schema.fieldNames.contains(c) && live.forall(_.nullCounts.contains(c)))
-        Some(live.map(_.nullCounts(c)).sum)
-      else None
-    def extremum(c: String, takeMin: Boolean): Option[Any] = for {
-      f <- schema.fields.find(_.name == c)
-      if BranchCatalog.exactStatType(f.dataType)
-      cmp <- BranchCatalog.statOrder(f.dataType)
-      side = if (takeMin) (m: ManifestRef) => m.lower else (m: ManifestRef) => m.upper
-      if live.forall(m => side(m).contains(c) || m.nullCounts.get(c).contains(m.rows))
-      v <- {
-        val bounds = live.flatMap(m => side(m).get(c))
-        if (bounds.isEmpty) Some(null) // no non-null value anywhere -> SQL NULL
-        else try Some(BranchCatalog.statInternal(f.dataType,
-          bounds.reduce((a, b) => if ((cmp(a, b) <= 0) == takeMin) a else b)))
-        catch { case _: Exception => None }
-      }
-    } yield v
     // W80: exact SUM/AVG from per-file sum sidecars, freshness-gated on
     // every live manifest carrying one for the column
     val sumCols = aggs.collect {
@@ -4433,12 +4516,45 @@ class BranchCatalog(
     }.distinct
     if (sumCols.exists(c => !summableCols(schema, Seq(c)).contains(c))) return None
     lazy val sidecars = sumSidecars(table, live, sumCols)
-    def sumOf(c: String): Option[Option[Long]] = sidecars.flatMap { maps =>
-      val entries = maps.flatMap(_(c).values)
+    foldAggs(schema, live.map(m => PartStats(m.rows, m.nullCounts, m.lower, m.upper)), aggs,
+      c => sidecars.map(_.flatMap(_(c).values).map(_.toLong)))
+  }
+
+  /** The one metadata-aggregate fold, behind [[metaAggregateOf]] (parts =
+    * manifests) and [[metaAggregateBy]] (parts = the files of one group):
+    * `aggs` over the rows of `parts` from their row counts, null counts
+    * and bounds, under `schema`. `sums(c)` lists the parts' non-NULL sums
+    * of `c` from the sum sidecars (None refuses). None unless every
+    * answer is exact. */
+  private def foldAggs(schema: StructType, parts: Seq[PartStats], aggs: Seq[MetaAgg],
+      sums: String => Option[Seq[Long]]): Option[Seq[Any]] = {
+    val totalRows = parts.map(_.rows).sum
+    // an unknown name would otherwise "answer" whenever no live part
+    // exists to refuse it (an empty delta) or a dropped column's old
+    // stats survive in the manifests
+    def nullsOf(c: String): Option[Long] =
+      if (schema.fieldNames.contains(c) && parts.forall(_.nullCounts.contains(c)))
+        Some(parts.map(_.nullCounts(c)).sum)
+      else None
+    def extremum(c: String, takeMin: Boolean): Option[Any] = for {
+      f <- schema.fields.find(_.name == c)
+      if BranchCatalog.exactStatType(f.dataType)
+      cmp <- BranchCatalog.statOrder(f.dataType)
+      side = if (takeMin) (p: PartStats) => p.lower else (p: PartStats) => p.upper
+      if parts.forall(p => side(p).contains(c) || p.nullCounts.get(c).contains(p.rows))
+      v <- {
+        val bounds = parts.flatMap(p => side(p).get(c))
+        if (bounds.isEmpty) Some(null) // no non-null value anywhere -> SQL NULL
+        else try Some(BranchCatalog.statInternal(f.dataType,
+          bounds.reduce((a, b) => if ((cmp(a, b) <= 0) == takeMin) a else b)))
+        catch { case _: Exception => None }
+      }
+    } yield v
+    def sumOf(c: String): Option[Option[Long]] = sums(c).flatMap { entries =>
       if (entries.isEmpty) Some(None) // every row NULL -> SQL NULL sum
       // overflow refuses: the scan then keeps its eval mode's own
       // behavior (ANSI raises, legacy wraps); a served value is exact
-      else try Some(Some(entries.foldLeft(0L)((a, b) => Math.addExact(a, b.toLong))))
+      else try Some(Some(entries.foldLeft(0L)((a, b) => Math.addExact(a, b))))
       catch { case _: ArithmeticException => None }
     }
     val answers = aggs.map {
@@ -4537,49 +4653,17 @@ class BranchCatalog(
     }
 
     val rows = grouped.toSeq.map { case (key, fs) =>
-      val groupRows = fs.map(_.rows).sum
-      def nullsOf(c: String): Option[Long] =
-        if (fs.forall(_.nullCounts.contains(c))) Some(fs.map(_.nullCounts(c)).sum)
-        else None
-      def extremum(c: String, takeMin: Boolean): Option[Any] = for {
-        fld <- schema.fields.find(_.name == c)
-        cmp <- BranchCatalog.statOrder(fld.dataType)
-        side = if (takeMin) (f: DataFileMeta) => f.lower else (f: DataFileMeta) => f.upper
-        if fs.forall(f => side(f).contains(c) || f.nullCounts.get(c).contains(f.rows))
-        v <- {
-          val bounds = fs.flatMap(f => side(f).get(c))
-          if (bounds.isEmpty) Some(null)
-          else try Some(BranchCatalog.statInternal(fld.dataType,
-            bounds.reduce((a, b) => if ((cmp(a, b) <= 0) == takeMin) a else b)))
-          catch { case _: Exception => None }
-        }
-      } yield v
-      def sumOf(c: String): Option[Option[Long]] = {
-        val present = fs.flatMap(f => fileSums(c).get(new Path(f.path).toUri.getPath))
-        if (present.isEmpty) Some(None) // group all-NULL -> SQL NULL sum
-        else try Some(Some(present.foldLeft(0L)((a, b) => Math.addExact(a, b))))
-        catch { case _: ArithmeticException => None }
-      }
-      val aggVals = aggs.map {
-        case MetaAgg.CountStar => Some(groupRows)
-        case MetaAgg.CountCol(c) => nullsOf(c).map(groupRows - _)
-        case MetaAgg.MinCol(c) => extremum(c, takeMin = true)
-        case MetaAgg.MaxCol(c) => extremum(c, takeMin = false)
-        case MetaAgg.SumCol(c) => sumOf(c).map(_.fold(null: Any)(v => v))
-        case MetaAgg.AvgCol(c) => for {
-          s <- sumOf(c)
-          nulls <- nullsOf(c)
-          n = groupRows - nulls
-        } yield s.fold(null: Any)(v => v.toDouble / n)
-      }
-      if (aggVals.exists(_.isEmpty)) return None
+      val aggVals = foldAggs(schema,
+        fs.toSeq.map(f => PartStats(f.rows, f.nullCounts, f.lower, f.upper)), aggs,
+        c => Some(fs.toSeq.flatMap(f => fileSums(c).get(new Path(f.path).toUri.getPath))))
+        .getOrElse(return None)
       val keyVals: Seq[Any] = key.zip(gFields).map {
         case (None, _) => null
         case (Some(s), gf) =>
           try BranchCatalog.statInternal(gf.dataType, s)
           catch { case _: Exception => return None }
       }
-      (keyVals ++ aggVals.map(_.get)).toArray
+      (keyVals ++ aggVals).toArray
     }
     Some(rows)
   }
@@ -4645,13 +4729,15 @@ class BranchCatalog(
         ua.nameParts.head
     }
 
-  /** W87 generated columns on the MERGE rewrite paths (Delta semantics,
-    * mirroring [[alignToSchema]]'s rule for whole-batch writes): for rows
-    * the statement WROTE (`written` mask — insert/update outcomes), an
+  /** W87 generated columns on the row-level DML paths — MERGE and
+    * UPDATE, copy-on-write and merge-on-read, through the row-outcome
+    * evaluator ([[Outcomes]]) — with Delta semantics, mirroring
+    * [[alignToSchema]]'s rule for whole-batch writes: for rows the
+    * statement WROTE (`written` mask — insert/update outcomes), an
     * omitted-or-NULL generated column is COMPUTED over the row's FINAL
     * values (post-UPDATE dependencies — this runs as a second pass over
-    * the already-projected survivors) and an explicitly provided value
-    * (`explicit(c)` — the firing clause SET the column, or an INSERT's
+    * the already-projected rows) and an explicitly provided value
+    * (`explicit(c)` — the firing arm SET the column, or an INSERT's
     * source carried it) is VALIDATED against the generation, raising
     * with the offending row. Carried-through rows are untouched, so
     * pre-generation history stays rewritable. */
@@ -5677,12 +5763,13 @@ class BranchCatalog(
     * (an update never moves a row's identity) and take the commit's
     * `_last_updated_seq`. Stacked positional deletes/updates anti-join
     * prior sidecars, so an already-suppressed version is never
-    * re-updated or double-counted. Compaction materializes everything.
-    * Pending EQUALITY tombstones refuse (one representation at a time). */
+    * re-updated or double-counted. Generated columns and CHECK
+    * constraints hold on the new versions ([[Outcomes]]). Compaction
+    * materializes everything. Pending EQUALITY tombstones refuse (one
+    * representation at a time). */
   def updateWherePositional(
       table: String, cond: Column, set: Map[String, Column],
       branch: String = "main"): UpdateResult = {
-    import org.apache.spark.sql.functions.{coalesce, lit, col => fcol}
     require(set.nonEmpty, "updateWherePositional needs at least one SET column")
     val cur = headOf(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
@@ -5695,33 +5782,17 @@ class BranchCatalog(
     val markFiles = selectFiles(cur, Some(cond)).flatMap(_.hit)
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (markFiles.isEmpty) return UpdateResult(cur, 0L, 0L, totalFiles)
-    // ONE read of the marked files: matched CURRENT rows (a version a
-    // pending sidecar suppressed is not current — its replacement, if
-    // any, sits in a later file this scan also covers)
-    val fresh = currentRows(cur, markFiles).filter(coalesce(cond, lit(false)))
-    val posManifest = writeSidecar(table, cur, fresh) match {
-      case Some(m) => m
-      case None => return UpdateResult(cur, 0L, 0L, totalFiles)
-    }
-
-    // the updated VERSIONS: SET applied, original row ids materialized
-    // (UPDATE preserves identity), last-seq left NULL — it inherits the
-    // new manifest's sequence at decode
-    val linCols =
-      if (!cur.lin.enabled) Seq.empty[Column]
-      else Seq(fcol(BranchCatalog.RowIdCol), lit(null).cast("long").as(BranchCatalog.LastSeqCol))
-    val updated0 = fresh.select((schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(expr) => expr.cast(f.dataType).as(f.name)
-        case None => fcol(f.name)
+    // ONE read of the marked files' CURRENT rows (a version a pending
+    // sidecar suppressed is not current — its replacement, if any, sits
+    // in a later file this scan also covers)
+    withOutcomes(table, branch, cur, currentRows(cur, markFiles),
+        Seq(Arm(cond, Arm.Update, set))) { o =>
+      writeSidecar(table, cur, o.marks) match {
+        case None => UpdateResult(cur, 0L, 0L, totalFiles)
+        case Some(marks) => UpdateResult(commitPositional(table, branch, cur,
+          SnapshotOp.UpdatePos, "positional update", Some(marks), o), marks.rows, 0L, totalFiles)
       }
-    }.toSeq ++ linCols): _*)
-    val updated = constraintGuard(updated0, table, branch, None)
-    val dataManifest = writeManifest(table, writeRows(table, cur, updated), schema)
-    val committed = commitTable(table, branch, Some(cur), "positional update") { (_, _) =>
-      Some(Change(SnapshotOp.UpdatePos, Seq(dataManifest), withDeletes(_, Seq(posManifest))))
     }
-    UpdateResult(committed, posManifest.rows, 0L, totalFiles)
   }
 
   /** Row-level UPDATE, copy-on-write — the planning shape of
@@ -5730,13 +5801,13 @@ class BranchCatalog(
     * but every row of an affected file survives: matching rows get each
     * `set` expression applied (cast back to the column's declared type),
     * non-matching rows pass through byte-identical. Rows where `cond` is
-    * NULL are NOT updated (SQL UPDATE semantics). Older snapshots keep
-    * the pre-update files until expiry; publish a branch update with
-    * [[merge]]. */
+    * NULL are NOT updated (SQL UPDATE semantics). Generated columns and
+    * CHECK constraints hold on the updated rows ([[Outcomes]]). Older
+    * snapshots keep the pre-update files until expiry; publish a branch
+    * update with [[merge]]. */
   def updateWhere(
       table: String, cond: Column, set: Map[String, Column],
       branch: String = "main"): UpdateResult = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when, col => fcol}
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     val cur = headOf(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
@@ -5747,32 +5818,14 @@ class BranchCatalog(
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (affectedFiles.isEmpty)
       return UpdateResult(cur, 0L, 0L, totalFiles)
-
-    // W73: carried rows keep (row id, last seq); UPDATED rows keep their
-    // id but get last_seq = NULL — the null inherits the NEW manifest's
-    // sequence at read (the Iceberg v3 null-means-this-commit rule)
-    val scan = rewriteRows(cur, picked)
-    val hit = coalesce(cond, lit(false))
-    val rowsUpdated = scan.filter(hit).count()
-    val linCols: Seq[Column] =
-      if (!cur.lin.enabled) Nil
-      else Seq(fcol(BranchCatalog.RowIdCol),
-        when(hit, lit(null).cast("long"))
-          .otherwise(fcol(BranchCatalog.LastSeqCol)).as(BranchCatalog.LastSeqCol))
-    val updated0 = scan.select((schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(expr) => when(hit, expr.cast(f.dataType)).otherwise(fcol(f.name)).as(f.name)
-        case None => fcol(f.name)
-      }
-    } ++ linCols :+ hit.as("__hit")).toIndexedSeq: _*)
-    // constraints check only the rows this UPDATE changed (post-SET
-    // values); carried-through rows are exempt
-    val updated = constraintGuard(updated0, table, branch,
-      Some(fcol("__hit"))).drop("__hit")
-    val committed = commitRewrite(table, branch, cur, SnapshotOp.Update, "update",
-      carry(table, cur, picked), writeRows(table, cur, updated))
-    UpdateResult(committed, rowsUpdated,
-      affectedFiles.size.toLong, totalFiles - affectedFiles.size)
+    withOutcomes(table, branch, cur, rewriteRows(cur, picked),
+        Seq(Arm(cond, Arm.Update, set))) { o =>
+      val (rowsUpdated, _, _) = o.counts
+      val committed = commitRewrite(table, branch, cur, SnapshotOp.Update, "update",
+        carry(table, cur, picked), writeRows(table, cur, o.kept))
+      UpdateResult(committed, rowsUpdated,
+        affectedFiles.size.toLong, totalFiles - affectedFiles.size)
+    }
   }
 
   /** Re-binds a `t.`-aliased by-source clause Column to bare columns so
@@ -5792,6 +5845,44 @@ class BranchCatalog(
           if ua.nameParts.length >= 2 && ua.nameParts.head.equalsIgnoreCase("t") =>
         UnresolvedAttribute(ua.nameParts.tail)
     })
+  }
+
+  /** MERGE `clauses` as [[withOutcomes]] arms, in order: each fires on
+    * its family's pairing outcome (`matched`, `sourceOnly` or
+    * `targetOnly`) where its condition holds; `bind` rewrites every
+    * condition and SET value first. */
+  private def mergeArms(clauses: Seq[MergeClause], matched: Column, sourceOnly: Column,
+      targetOnly: Column, bind: Column => Column = identity): Seq[Arm] = {
+    def on(family: Column, cond: Option[Column]): Column =
+      family && cond.map(bind).getOrElse(org.apache.spark.sql.functions.lit(true))
+    def bound(set: Map[String, Column]): Map[String, Column] =
+      set.map { case (c, v) => c -> bind(v) }
+    clauses.map {
+      case MergeClause.MatchedUpdate(c, set) => Arm(on(matched, c), Arm.Update, bound(set))
+      case MergeClause.MatchedDelete(c) => Arm(on(matched, c), Arm.Delete)
+      case MergeClause.NotMatchedInsert(c) => Arm(on(sourceOnly, c), Arm.Insert)
+      case MergeClause.NotMatchedBySourceUpdate(c, set) =>
+        Arm(on(targetOnly, c), Arm.Update, bound(set))
+      case MergeClause.NotMatchedBySourceDelete(c) => Arm(on(targetOnly, c), Arm.Delete)
+    }
+  }
+
+  /** [[withOutcomes]] over the MERGE pairing: `targetRows` (aliased `t`)
+    * full-outer joined to the `aligned` source (`s`) on plain key
+    * equality — NULL keys never match, so a null-keyed target row stays
+    * and a null-keyed source row is NOT MATCHED (SQL MERGE semantics) —
+    * with `clauses` as its arms. A row is exactly one of matched,
+    * target-only or source-only, so the clause families never compete. */
+  private def withMergeOutcomes[T](table: String, branch: String, cur: Snapshot,
+      targetRows: DataFrame, aligned: DataFrame, keys: Seq[String],
+      clauses: Seq[MergeClause])(body: Outcomes => T): T = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val joined = targetRows.withColumn("__t_hit", lit(true)).alias("t")
+      .join(aligned.withColumn("__s_hit", lit(true)).alias("s"),
+        keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
+    val (t, s) = (col("t.__t_hit").isNotNull, col("s.__s_hit").isNotNull)
+    withOutcomes(table, branch, cur, joined, mergeArms(clauses, t && s, !t && s, t && !s),
+      c => col(s"t.$c"), c => col(s"s.$c"), keepUnfired = t)(body)
   }
 
   /** Source-key prune predicate shared by [[upsert]] and [[mergeInto]]:
@@ -5962,7 +6053,7 @@ class BranchCatalog(
         * is its own metadata-only commit; a merge failure after it leaves
         * just the added columns (harmless, Delta-identical). */
       schemaEvolution: Boolean = false): MergeIntoResult = {
-    import org.apache.spark.sql.functions.{coalesce, col => fcol, lit, sum => fsum, when}
+    import org.apache.spark.sql.functions.lit
     require(keys.nonEmpty, "mergeInto needs at least one key column")
     require(clauses.nonEmpty, "mergeInto needs at least one WHEN clause")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
@@ -5976,9 +6067,9 @@ class BranchCatalog(
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
     for (MergeClause.NotMatchedBySourceUpdate(_, set) <- clauses; c <- set.keys)
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
-    val bySource: Seq[(MergeClause, Int)] = clauses.zipWithIndex.collect {
-      case (c: MergeClause.NotMatchedBySourceUpdate, i) => (c: MergeClause, i)
-      case (c: MergeClause.NotMatchedBySourceDelete, i) => (c: MergeClause, i)
+    val bySource = clauses.filter {
+      case _: MergeClause.NotMatchedBySourceUpdate | _: MergeClause.NotMatchedBySourceDelete => true
+      case _ => false
     }
     val totalFiles = cur.manifests.map(_.fileCount).sum
     // check=false: a merge source row may only pair for matching and
@@ -6012,7 +6103,7 @@ class BranchCatalog(
       // condition MAY hold in are rewritten (join-free — no source row
       // exists for these), the rest carry over.
       val dropAllNonMatched = bySource.headOption.exists {
-        case (MergeClause.NotMatchedBySourceDelete(None), _) => true
+        case MergeClause.NotMatchedBySourceDelete(None) => true
         case _ => false
       }
       def bsCond(c: MergeClause): Option[Column] = c match {
@@ -6022,7 +6113,7 @@ class BranchCatalog(
       }
       val bsPicked: Seq[Picked] =
         if (bySource.isEmpty || dropAllNonMatched) picked.map(_.copy(hit = Nil))
-        else selectFiles(cur, Some(bySource.map { case (c, _) =>
+        else selectFiles(cur, Some(bySource.map { c =>
           bsCond(c).map(stripTargetAlias).getOrElse(lit(true))
         }.reduce(_ || _)), after = picked)
       val bsFiles = bsPicked.flatMap(_.hit)
@@ -6035,156 +6126,26 @@ class BranchCatalog(
         else carry(table, cur, picked.zip(bsPicked).map { case (p, b) =>
           Picked(p.m, if (p.files.nonEmpty) p.files else b.files, p.hit ++ b.hit) })
 
-      val targetScan = rewriteRows(cur, picked)
-      val joined = targetScan
-        .withColumn("__t_hit", lit(true)).alias("t")
-        .join(aligned.withColumn("__s_hit", lit(true)).alias("s"),
-          // plain equality: NULL keys never match (SQL MERGE semantics) —
-          // a null-keyed target row survives unchanged, a null-keyed
-          // source row is NOT MATCHED
-          keys.map(k => fcol(s"t.$k") === fcol(s"s.$k")).reduce(_ && _), "full_outer")
-      val matched = fcol("t.__t_hit").isNotNull && fcol("s.__s_hit").isNotNull
-      val targetOnly = fcol("t.__t_hit").isNotNull && fcol("s.__s_hit").isNull
-      val sourceOnly = fcol("t.__t_hit").isNull && fcol("s.__s_hit").isNotNull
-
-      // one action label per row: first-match-wins over the clause list.
-      // A row is exactly one of matched / target-only / source-only, so
-      // the three clause families never compete across lists (SQL MERGE
-      // evaluates them independently); by-source labels (v=update,
-      // e=delete) guard on targetOnly.
-      val fires = clauses.zipWithIndex.map {
-        case (MergeClause.MatchedUpdate(c, _), i) =>
-          (matched && coalesce(c.getOrElse(lit(true)), lit(false)), s"u$i")
-        case (MergeClause.MatchedDelete(c), i) =>
-          (matched && coalesce(c.getOrElse(lit(true)), lit(false)), s"d$i")
-        case (MergeClause.NotMatchedInsert(c), i) =>
-          (sourceOnly && coalesce(c.getOrElse(lit(true)), lit(false)), s"i$i")
-        case (MergeClause.NotMatchedBySourceUpdate(c, _), i) =>
-          (targetOnly && coalesce(c.getOrElse(lit(true)), lit(false)), s"v$i")
-        case (MergeClause.NotMatchedBySourceDelete(c), i) =>
-          (targetOnly && coalesce(c.getOrElse(lit(true)), lit(false)), s"e$i")
-      }
-      val action = fires.foldRight(
-        when(targetOnly || matched, "t").otherwise("x")) { case ((cond, label), rest) =>
-        when(cond, label).otherwise(rest)
-      }
-      val actioned = joined.withColumn("__action", action)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val isU = fcol("__action").startsWith("u")
-        val isD = fcol("__action").startsWith("d")
-        val isI = fcol("__action").startsWith("i")
-        val isV = fcol("__action").startsWith("v")
-        val isE = fcol("__action").startsWith("e")
-        val countsRow = actioned.agg(
-          fsum(when(isU || isV, 1L).otherwise(0L)).as("u"),
-          fsum(when(isD || isE, 1L).otherwise(0L)).as("d"),
-          fsum(when(isI, 1L).otherwise(0L)).as("i")).head
-        def cnt(i: Int): Long = if (countsRow.isNullAt(i)) 0L else countsRow.getLong(i)
-        val (nUpd, nDel, nIns) = (cnt(0), cnt(1), cnt(2))
-
-        // W73: carried rows keep (id, seq); matched/by-source UPDATES
-        // keep the id with seq nulled (inherits this commit's sequence);
-        // INSERTS null both (fresh id from the new file's base)
-        val mergeLinCols: Seq[Column] =
-          if (!cur.lin.enabled) Nil
-          else Seq(
-            when(isI, lit(null).cast("long"))
-              .otherwise(fcol(s"t.${BranchCatalog.RowIdCol}")).as(BranchCatalog.RowIdCol),
-            when(isI || isU || isV, lit(null).cast("long"))
-              .otherwise(fcol(s"t.${BranchCatalog.LastSeqCol}")).as(BranchCatalog.LastSeqCol))
-        val survivors0 = actioned.filter(!isD && !isE && fcol("__action") =!= "x")
-          .select((schema.fields.map { f =>
-            val updated = clauses.zipWithIndex.foldLeft(
-              when(isI, fcol(s"s.${f.name}")).otherwise(fcol(s"t.${f.name}"))) {
-              case (acc, (MergeClause.MatchedUpdate(_, set), i)) if set.contains(f.name) =>
-                when(fcol("__action") === s"u$i", set(f.name).cast(f.dataType)).otherwise(acc)
-              case (acc, (MergeClause.NotMatchedBySourceUpdate(_, set), i)) if set.contains(f.name) =>
-                when(fcol("__action") === s"v$i", set(f.name).cast(f.dataType)).otherwise(acc)
-              case (acc, _) => acc
-            }
-            updated.as(f.name)
-          } ++ mergeLinCols :+ fcol("__action")).toIndexedSeq: _*)
-        // generated columns + constraints check only the rows this merge
-        // WROTE differently (insert/update outcomes) — carried-through
-        // rows are exempt. Explicitly-provided = the firing clause SET
-        // the column, or an INSERT whose source carried it.
-        def explicitMain(c: String): Column = {
-          val setActions: Seq[Column] = clauses.zipWithIndex.collect {
-            case (MergeClause.MatchedUpdate(_, set), i) if set.contains(c) =>
-              fcol("__action") === s"u$i"
-            case (MergeClause.NotMatchedBySourceUpdate(_, set), i) if set.contains(c) =>
-              fcol("__action") === s"v$i"
-          }
-          (setActions :+ isI).reduce(_ || _)
-        }
-        val survivors = constraintGuard(
-          generatedGuard(survivors0, cur, schema, isU || isV || isI, explicitMain),
-          table, branch, Some(isU || isV || isI)).drop("__action")
-        val rewritten = writeRows(table, cur, survivors)
-
+      withMergeOutcomes(table, branch, cur, rewriteRows(cur, picked), aligned, keys, clauses) { o =>
+        val (nUpd, nDel, nIns) = o.counts
+        val rewritten = writeRows(table, cur, o.kept)
         // join-free by-source tier: these files provably hold no source
         // key, so every row is NOT MATCHED BY SOURCE — first-match-wins
         // over the by-source clauses straight on the file scan
         val (bsRewritten, nBsUpd, nBsDel) =
           if (bsFiles.isEmpty) (Seq.empty[DataFileMeta], 0L, 0L)
-          else {
-            val scan = rewriteRows(cur, bsPicked)
-            val bsFires = bySource.map {
-              case (MergeClause.NotMatchedBySourceUpdate(c, _), i) =>
-                (coalesce(c.map(stripTargetAlias).getOrElse(lit(true)), lit(false)), s"v$i")
-              case (MergeClause.NotMatchedBySourceDelete(c), i) =>
-                (coalesce(c.map(stripTargetAlias).getOrElse(lit(true)), lit(false)), s"e$i")
-              case (c, _) => sys.error(s"non-by-source clause $c in by-source tier")
-            }
-            val bsAction = bsFires.foldRight(lit("t")) { case ((cond, label), rest) =>
-              when(cond, label).otherwise(rest)
-            }
-            val bsActioned = scan.withColumn("__action", bsAction)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val bsIsV = fcol("__action").startsWith("v")
-              val bsIsE = fcol("__action").startsWith("e")
-              val bsCounts = bsActioned.agg(
-                fsum(when(bsIsV, 1L).otherwise(0L)).as("v"),
-                fsum(when(bsIsE, 1L).otherwise(0L)).as("e")).head
-              def bsCnt(i: Int): Long = if (bsCounts.isNullAt(i)) 0L else bsCounts.getLong(i)
-              val bsLinCols: Seq[Column] =
-                if (!cur.lin.enabled) Nil
-                else Seq(fcol(BranchCatalog.RowIdCol),
-                  when(bsIsV, lit(null).cast("long"))
-                    .otherwise(fcol(BranchCatalog.LastSeqCol)).as(BranchCatalog.LastSeqCol))
-              val bsSurvivors0 = bsActioned.filter(!bsIsE)
-                .select((schema.fields.map { f =>
-                  val updated = bySource.foldLeft(fcol(f.name)) {
-                    case (acc, (MergeClause.NotMatchedBySourceUpdate(_, set), i)) if set.contains(f.name) =>
-                      when(fcol("__action") === s"v$i",
-                        stripTargetAlias(set(f.name)).cast(f.dataType)).otherwise(acc)
-                    case (acc, _) => acc
-                  }
-                  updated.as(f.name)
-                } ++ bsLinCols :+ fcol("__action")).toIndexedSeq: _*)
-              def explicitBs(c: String): Column = {
-                val acts: Seq[Column] = bySource.collect {
-                  case (MergeClause.NotMatchedBySourceUpdate(_, set), i) if set.contains(c) =>
-                    fcol("__action") === s"v$i"
-                }
-                if (acts.isEmpty) lit(false) else acts.reduce(_ || _)
-              }
-              val bsSurvivors = constraintGuard(
-                generatedGuard(bsSurvivors0, cur, schema, bsIsV, explicitBs),
-                table, branch, Some(bsIsV)).drop("__action")
-              (writeRows(table, cur, bsSurvivors), bsCnt(0), bsCnt(1))
-            } finally { bsActioned.unpersist(); () }
+          else withOutcomes(table, branch, cur, rewriteRows(cur, bsPicked),
+              mergeArms(bySource, lit(false), lit(false), lit(true), stripTargetAlias)) { bs =>
+            val (u, d, _) = bs.counts
+            (writeRows(table, cur, bs.kept), u, d)
           }
-
         val committed = commitRewrite(table, branch, cur, SnapshotOp.Merge, "merge",
           manifestKeeps, rewritten ++ bsRewritten)
         MergeIntoResult(committed, nUpd + nBsUpd, nDel + nBsDel + droppedRows, nIns,
           affectedFiles.size.toLong + bsFiles.size,
           totalFiles - affectedFiles.size - bsFiles.size - droppedCount,
           droppedCount)
-      } finally { actioned.unpersist(); () }
+      }
     } finally { aligned.unpersist(); () }
   }
 
@@ -6219,7 +6180,6 @@ class BranchCatalog(
       clauses: Seq[MergeClause], branch: String = "main",
       /** See [[mergeInto]]'s flag of the same name. */
       schemaEvolution: Boolean = false): MergeIntoResult = {
-    import org.apache.spark.sql.functions.{coalesce, col => fcol, lit, sum => fsum, when}
     require(keys.nonEmpty, "mergeIntoMOR needs at least one key column")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
     require(clauses.nonEmpty, "mergeIntoMOR needs at least one WHEN clause")
@@ -6247,89 +6207,17 @@ class BranchCatalog(
       if (aligned.isEmpty) return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
       val markFiles = selectFiles(cur, Some(sourceKeyPruneCond(aligned, keys))).flatMap(_.hit)
       // CURRENT versions of the possibly-matching files, with positions
-      // and decoded row ids
-      val targetCur = currentRows(cur, markFiles)
-
-      val joined = targetCur
-        .withColumn("__t_hit", lit(true)).alias("t")
-        .join(aligned.withColumn("__s_hit", lit(true)).alias("s"),
-          keys.map(k => fcol(s"t.$k") === fcol(s"s.$k")).reduce(_ && _), "full_outer")
-      val matched = fcol("t.__t_hit").isNotNull && fcol("s.__s_hit").isNotNull
-      val sourceOnly = fcol("t.__t_hit").isNull && fcol("s.__s_hit").isNotNull
-      val fires = clauses.zipWithIndex.map {
-        case (MergeClause.MatchedUpdate(c, _), i) =>
-          (matched && coalesce(c.getOrElse(lit(true)), lit(false)), s"u$i")
-        case (MergeClause.MatchedDelete(c), i) =>
-          (matched && coalesce(c.getOrElse(lit(true)), lit(false)), s"d$i")
-        case (MergeClause.NotMatchedInsert(c), i) =>
-          (sourceOnly && coalesce(c.getOrElse(lit(true)), lit(false)), s"i$i")
-        case (c, _) => sys.error(s"by-source clause $c reached the MOR tier")
-      }
-      // "t" = untouched: a matched row no clause fires on (or any
+      // and decoded row ids; a matched row no clause fires on (or any
       // target-only row) simply STAYS in its file — the zero-cost case
       // copy-on-write cannot have
-      val action = fires.foldRight(lit("t")) { case ((cond, label), rest) =>
-        when(cond, label).otherwise(rest)
+      withMergeOutcomes(table, branch, cur, currentRows(cur, markFiles),
+          aligned, keys, clauses) { o =>
+        val (nUpd, nDel, nIns) = o.counts
+        if (nUpd + nDel + nIns == 0L) MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
+        else MergeIntoResult(commitPositional(table, branch, cur, SnapshotOp.MergePos,
+          "positional merge", writeSidecar(table, cur, o.marks), o),
+          nUpd, nDel, nIns, 0L, totalFiles)
       }
-      val actioned = joined.withColumn("__action", action)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val isU = fcol("__action").startsWith("u")
-        val isD = fcol("__action").startsWith("d")
-        val isI = fcol("__action").startsWith("i")
-        val countsRow = actioned.agg(
-          fsum(when(isU, 1L).otherwise(0L)).as("u"),
-          fsum(when(isD, 1L).otherwise(0L)).as("d"),
-          fsum(when(isI, 1L).otherwise(0L)).as("i")).head
-        def cnt(i: Int): Long = if (countsRow.isNullAt(i)) 0L else countsRow.getLong(i)
-        val (nUpd, nDel, nIns) = (cnt(0), cnt(1), cnt(2))
-        if (nUpd + nDel + nIns == 0L)
-          return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
-
-        // old versions of updated/deleted rows → one position sidecar
-        val posManifest = writeSidecar(table, cur, actioned.filter(isU || isD).select(
-          fcol(s"t.${BranchCatalog.PosPathCol}").as(BranchCatalog.PosPathCol),
-          fcol(s"t.${BranchCatalog.PosIdxCol}").as(BranchCatalog.PosIdxCol)))
-
-        // outcomes that append: updated versions (original row id kept,
-        // seq inherits the commit) + inserts (fresh ids from the new
-        // manifest's base)
-        val linColsOut: Seq[Column] =
-          if (!cur.lin.enabled) Nil
-          else Seq(
-            when(isI, lit(null).cast("long"))
-              .otherwise(fcol(s"t.${BranchCatalog.RowIdCol}")).as(BranchCatalog.RowIdCol),
-            lit(null).cast("long").as(BranchCatalog.LastSeqCol))
-        val written0 = actioned.filter(isU || isI)
-          .select((schema.fields.map { f =>
-            val base = when(isI, fcol(s"s.${f.name}")).otherwise(fcol(s"t.${f.name}"))
-            val v = clauses.zipWithIndex.foldLeft(base) {
-              case (acc, (MergeClause.MatchedUpdate(_, set), i)) if set.contains(f.name) =>
-                when(fcol("__action") === s"u$i", set(f.name).cast(f.dataType)).otherwise(acc)
-              case (acc, _) => acc
-            }
-            v.as(f.name)
-          } ++ linColsOut :+ fcol("__action")).toIndexedSeq: _*)
-        // every row here is a written outcome (u/i) — generated columns
-        // compute when omitted, validate when the clause/source provided
-        def explicitMor(c: String): Column = {
-          val setActions: Seq[Column] = clauses.zipWithIndex.collect {
-            case (MergeClause.MatchedUpdate(_, set), i) if set.contains(c) =>
-              fcol("__action") === s"u$i"
-          }
-          (setActions :+ isI).reduce(_ || _)
-        }
-        val written = constraintGuard(
-          generatedGuard(written0, cur, schema, lit(true), explicitMor),
-          table, branch, None).drop("__action")
-        val dataFiles = writeRows(table, cur, written)
-        val dataManifests =
-          if (dataFiles.nonEmpty) Seq(writeManifest(table, dataFiles, schema)) else Nil
-        val committed = commitTable(table, branch, Some(cur), "positional merge") { (_, _) =>
-          Some(Change(SnapshotOp.MergePos, dataManifests, withDeletes(_, posManifest)))
-        }
-        MergeIntoResult(committed, nUpd, nDel, nIns, 0L, totalFiles)
-      } finally { actioned.unpersist(); () }
     } finally { aligned.unpersist(); () }
   }
 
@@ -7663,6 +7551,22 @@ object BranchCatalog {
       if (hit.isEmpty) files
       else { val gone = hit.map(_.path).toSet; files.filterNot(f => gone(f.path)) }
   }
+
+  /** One arm of a row-level DML statement (the catalog's `withOutcomes`):
+    * the rows it fires on, what it does to them, and the columns an
+    * update SETs. */
+  private final case class Arm(fire: Column, kind: Arm.Kind, set: Map[String, Column] = Map.empty)
+  private object Arm {
+    sealed trait Kind
+    case object Update extends Kind
+    case object Delete extends Kind
+    case object Insert extends Kind
+  }
+
+  /** What the metadata-aggregate fold (the catalog's `foldAggs`) reads
+    * of one manifest or one data file. */
+  private final case class PartStats(rows: Long, nullCounts: Map[String, Long],
+      lower: Map[String, String], upper: Map[String, String])
 
   /** Bounded pool for concurrent driver metadata reads (manifests,
     * footers). Daemon threads that time out when idle, so it never holds

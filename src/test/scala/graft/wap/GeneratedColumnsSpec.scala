@@ -2,7 +2,7 @@ package graft.wap
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -134,6 +134,55 @@ class GeneratedColumnsSpec extends SparkSpecBase {
     intercept[Exception](cat2.mergeIntoMOR("t", docs(0, 3), Seq("doc_id"), Seq(
       MatchedUpdate(None, Map("kchars" -> lit(999999L))))))
     assert(cat2.snapshotIdOf("t") == head2)
+  }
+
+  test("UPDATE paths compute omitted and validate provided generated columns") {
+    def mismatched(cat: BranchCatalog): Long = cat.scan("t")
+      .where(col("kchars").isNull || col("kchars") =!= expr("n_chars div 1000")).count()
+    def table(root: String): BranchCatalog = {
+      val cat = new BranchCatalog(spark, root)
+      cat.createTableGenerated("t", genSchema, Map("kchars" -> "n_chars div 1000"))
+      cat.append("t", docs(0, 50))
+      cat
+    }
+    // Scala: copy-on-write and merge-on-read
+    for (positional <- Seq(false, true)) {
+      val cat = freshCat()
+      table(cat.root)
+      def update(cond: Column, set: Map[String, Column]): UpdateResult =
+        if (positional) cat.updateWherePositional("t", cond, set)
+        else cat.updateWhere("t", cond, set)
+      // SET on the dependency alone: the generated column RECOMPUTES
+      val r = update(col("doc_id") < 10, Map("n_chars" -> (col("n_chars") + 7000L)))
+      assert(r.rowsUpdated == 10L)
+      assert(cat.scan("t").count() == 50L && mismatched(cat) == 0L, s"positional=$positional")
+      // SETTING it to the CORRECT value passes validation
+      update(col("doc_id") === 20L, Map("n_chars" -> lit(4321L), "kchars" -> lit(4L)))
+      assert(cat.scan("t").where(col("doc_id") === 20L).select("kchars").head.getLong(0) == 4L)
+      // a WRONG value fails the write and commits nothing
+      val head = cat.snapshotIdOf("t")
+      intercept[Exception](update(col("doc_id") < 5, Map("kchars" -> lit(999999L))))
+      assert(cat.snapshotIdOf("t") == head, s"positional=$positional")
+      assert(cat.scan("t").where(col("kchars") === 999999L).count() == 0L)
+    }
+    // SQL UPDATE under each write.update.mode
+    for (mode <- Seq("copy-on-write", "merge-on-read")) {
+      n += 1
+      val name = s"genupd$n"
+      val root = Files.createTempDirectory("gencol-upd").toString
+      spark.conf.set(s"spark.sql.catalog.$name", classOf[graft.sql.GraftTableCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$name.root", root)
+      spark.conf.set(s"spark.sql.catalog.$name.write.main", "true")
+      val cat = table(root)
+      spark.sql(s"ALTER TABLE $name.main.t SET TBLPROPERTIES('write.update.mode'='$mode')")
+      spark.sql(s"UPDATE $name.main.t SET n_chars = n_chars + 7000 WHERE doc_id < 10")
+      val snap = cat.snapshotMeta("t", cat.snapshotIdOf("t").get)
+      assert(snap.deleteManifests.nonEmpty == (mode == "merge-on-read"), mode)
+      assert(mismatched(cat) == 0L, mode)
+      val head = cat.snapshotIdOf("t")
+      intercept[Exception](spark.sql(s"UPDATE $name.main.t SET kchars = 999999 WHERE doc_id < 5"))
+      assert(cat.snapshotIdOf("t") == head, mode)
+    }
   }
 
   test("SQL: CREATE TABLE with GENERATED ALWAYS AS; INSERT computes and validates") {
