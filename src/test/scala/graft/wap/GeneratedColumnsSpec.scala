@@ -161,7 +161,9 @@ class GeneratedColumnsSpec extends SparkSpecBase {
       assert(cat.scan("t").where(col("doc_id") === 20L).select("kchars").head.getLong(0) == 4L)
       // a WRONG value fails the write and commits nothing
       val head = cat.snapshotIdOf("t")
-      intercept[Exception](update(col("doc_id") < 5, Map("kchars" -> lit(999999L))))
+      val e = intercept[Exception](update(col("doc_id") < 5, Map("kchars" -> lit(999999L))))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("GENERATED column kchars")))
       assert(cat.snapshotIdOf("t") == head, s"positional=$positional")
       assert(cat.scan("t").where(col("kchars") === 999999L).count() == 0L)
     }
@@ -180,7 +182,10 @@ class GeneratedColumnsSpec extends SparkSpecBase {
       assert(snap.deleteManifests.nonEmpty == (mode == "merge-on-read"), mode)
       assert(mismatched(cat) == 0L, mode)
       val head = cat.snapshotIdOf("t")
-      intercept[Exception](spark.sql(s"UPDATE $name.main.t SET kchars = 999999 WHERE doc_id < 5"))
+      val e = intercept[Exception](
+        spark.sql(s"UPDATE $name.main.t SET kchars = 999999 WHERE doc_id < 5"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("GENERATED column kchars")), mode)
       assert(cat.snapshotIdOf("t") == head, mode)
     }
   }
