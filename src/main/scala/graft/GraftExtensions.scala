@@ -14,23 +14,21 @@ import graft.functions._
   *  - at session BUILD time: `spark.sql.extensions=graft.GraftExtensions`
   *    or `SparkSession.builder().withExtensions(new GraftExtensions)`
   *  - on an EXISTING session: `GraftFunctions.register(spark)` (functions
-  *    only — optimizer rules can only bind at session build, which is why
-  *    [[GraftSession.configure]] sets the extensions conf)
+  *    only — rules and strategies can only bind at session build, which
+  *    is why [[GraftSession.configure]] sets the extensions conf)
   *
   * Lake-table reads need no extension: every session plans them through
   * the catalog's connector scan ([[graft.sql.GraftTable.newScanBuilder]]).
-  * The extensions add the filtered metadata aggregate, job-free planning
-  * of pushed metadata aggregates, SQL UPDATE/MERGE, branch-versioned
-  * views and the partition-evolution DDL.
+  * Metadata-only aggregates, filtered or not, are pushed into the scan in
+  * every session too. The extensions add job-free planning of those
+  * pushed aggregates, SQL UPDATE/MERGE, branch-versioned views and the
+  * partition-evolution DDL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name), builder))
     }
-    // filtered metadata-only aggregates (W81) — the one aggregate shape
-    // DSv2 pushdown cannot reach (see GraftAggLowering)
-    ext.injectOptimizerRule(new graft.sql.GraftAggLowering(_))
     // a pushed metadata aggregate answers on the driver, with no Spark job
     ext.injectPlannerStrategy(_ => graft.sql.GraftMetaAggStrategy)
     // SQL UPDATE / MERGE INTO on catalog tables lower onto the native

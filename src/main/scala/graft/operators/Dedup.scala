@@ -291,7 +291,8 @@ object Dedup {
       // the previous round's checkpoint blocks are dead once `changed`
       // is computed — free them NOW instead of waiting for GC (over
       // O(diameter) rounds the dead blocks otherwise stack up)
-      org.apache.spark.sql.graft.Bridge.releaseCheckpoint(labels)
+      org.apache.spark.sql.graft.Bridge.releaseCheckpoint(
+        org.apache.spark.sql.graft.Bridge.checkpointRdds(labels))
       labels = next
       done = changed == 0L
       it += 1

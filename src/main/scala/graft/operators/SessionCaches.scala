@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Session-keyed registry for persisted intermediate frames that more
@@ -29,8 +30,11 @@ object SessionCaches {
         .getOrElseUpdate(key, build.persist(StorageLevel.MEMORY_AND_DISK))
     }
 
-  private val ckpts =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Buffer[DataFrame]]()
+  /** The checkpoint RDDs each session registered. Values hold RDDs, not
+    * frames: a frame holds its session, and a value that reaches its own
+    * weak key keeps the entry alive for good. */
+  private val ckpts = new java.util.WeakHashMap[
+    SparkSession, scala.collection.mutable.Buffer[org.apache.spark.rdd.RDD[_]]]()
 
   /** `df.localCheckpoint()` with its storage blocks REGISTERED for
     * release: a local checkpoint's blocks otherwise live until the RDD
@@ -51,7 +55,7 @@ object SessionCaches {
   def track(cp: DataFrame): DataFrame = {
     ckpts.synchronized {
       ckpts.computeIfAbsent(cp.sparkSession,
-        _ => scala.collection.mutable.Buffer.empty) += cp
+        _ => scala.collection.mutable.Buffer.empty) ++= Bridge.checkpointRdds(cp)
     }
     cp
   }
@@ -66,10 +70,9 @@ object SessionCaches {
     }
     ckpts.synchronized {
       Option(ckpts.remove(spark)).foreach { per =>
-        if (!spark.sparkContext.isStopped) per.foreach { df =>
-          try org.apache.spark.sql.graft.Bridge.releaseCheckpoint(df)
+        if (!spark.sparkContext.isStopped)
+          try Bridge.releaseCheckpoint(per.toSeq)
           catch { case _: Exception => () }
-        }
       }
     }
   }

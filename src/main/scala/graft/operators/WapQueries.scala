@@ -1319,12 +1319,12 @@ object WapQueries {
   }
 
   /** Filtered metadata aggregates (W81): a WHERE over the
-    * identity-partition column folds the WHOLE filtered aggregate —
-    * global and grouped — from manifest-entry stats (each file wholly
-    * passes or wholly fails the predicate by the homogeneity proof),
-    * including exact SUM/AVG from the W80 sidecars. A predicate on a
-    * non-homogeneous column must refuse onto the real scan and stay
-    * correct. Oracle: the same filtered SQL. */
+    * identity-partition column is a complete filter (file metadata
+    * proves it for every kept file), so the WHOLE filtered aggregate —
+    * global and grouped — is pushed into the scan and folds from
+    * manifest-entry stats, including exact SUM/AVG from the W80
+    * sidecars. A predicate on a non-homogeneous column must stay
+    * residual, scan, and stay correct. Oracle: the same filtered SQL. */
   def wapAggFiltered(spark: SparkSession, dir: String): DataFrame = {
     val tmp = Files.createTempDirectory("graft-wap-aggflt").toString
     val cat = new BranchCatalog(spark, tmp)
@@ -1339,27 +1339,21 @@ object WapQueries {
     spark.conf.set(s"spark.sql.catalog.$lake", classOf[graft.sql.GraftTableCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$lake.root", tmp)
 
-    def metaOnly(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => s
-    }.isEmpty
-
     val q = spark.sql(s"SELECT count(*) AS n, CAST(min(doc_id) AS BIGINT) AS min_id, " +
       s"sum(n_chars) AS sum_chars, avg(n_chars) AS avg_chars " +
       s"FROM $lake.main.documents WHERE lang = 'en'")
-    val filteredMeta = metaOnly(q)
+    val filteredMeta = metaAggPushed(q)
     val row = q.collect().head
 
     // grouped + filtered stays metadata-only and agrees with itself
     val qg = spark.sql(s"SELECT lang, count(*) AS n FROM $lake.main.documents " +
       s"WHERE lang <> 'en' GROUP BY lang")
-    val groupedMeta = metaOnly(qg)
+    val groupedMeta = metaAggPushed(qg)
     val groupedTotal = qg.collect().map(_.getLong(1)).sum
 
     // a predicate on a NON-homogeneous column refuses and scans correctly
     val qs = spark.sql(s"SELECT count(*) AS n FROM $lake.main.documents WHERE doc_id < 50")
-    val fallbackScans = !metaOnly(qs)
+    val fallbackScans = !metaAggPushed(qs)
     val fallbackCorrect = qs.collect().head.getLong(0) == 50L
 
     import spark.implicits._

@@ -46,10 +46,12 @@ import graft.wap.BranchCatalog
   * [[GraftBatchScan]] — pushed and runtime filters reach the manifest
   * pruner, files bin-pack into Spark-sized splits, readers are Spark's
   * vectorized parquet readers (columnar batches cross the DSv2
-  * boundary), and pending MOR tombstones are anti-probed per row. An
-  * unfiltered aggregate the snapshot metadata answers exactly is pushed
-  * whole into the builder and plans as a local scan of driver-computed
-  * rows (with no Spark job at all under [[graft.GraftExtensions]]).
+  * boundary), and pending MOR tombstones are anti-probed per row. A
+  * filter file metadata proves for every kept file is not re-checked,
+  * and an aggregate the snapshot metadata answers exactly under such
+  * filters is pushed whole into the builder and plans as a local scan
+  * of driver-computed rows (with no Spark job at all under
+  * [[graft.GraftExtensions]]).
   * Only the metadata tables (`t$snapshots`, `t$files`, ...) — small
   * frames built on the driver — read through a [[V1Scan]].
   *
@@ -1176,10 +1178,32 @@ private class GraftScanBuilder(
     * snapshot metadata: (result schema, catalyst-internal rows — one for
     * a global aggregate, one per group for GROUP BY). */
   private var aggAnswer: Option[(StructType, Seq[Array[Any]])] = None
+  /** The filters Spark re-checks row by row, and the files the exact
+    * filters keep when file metadata decided them ([[pushFilters]]). */
+  private var residual: Array[sources.Filter] = Array.empty
+  private var selected: Option[Seq[graft.wap.DataFileMeta]] = None
 
+  /** Every filter the manifest pruner understands prunes files. A filter
+    * is also COMPLETE — Spark drops its row-level re-check — when it
+    * converts in full and the pinned snapshot's file metadata proves it
+    * for every file the conjunction of such filters keeps
+    * ([[BranchCatalog.exactFilters]]): Iceberg's rule for predicates
+    * that select whole files. The scan prunes under at least that
+    * conjunction, so it plans no file holding a row the filter rejects.
+    * A changes window (its rows are a delta, not the snapshot) keeps
+    * every filter residual; streaming reads push none. */
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
     pushed = filters.filter(f => GraftScanBuilder.toColumn(f).isDefined)
-    filters // all residual: file pruning is conservative, rows re-checked
+    val exact =
+      if (changes.isDefined) Array.empty[(sources.Filter, Column)]
+      else filters.flatMap(f => GraftScanBuilder.toColumnExact(f).map(f -> _))
+    val proof = new BranchCatalog(SparkSession.active, t.root)
+      .exactFilters(t.tableName, t.snapshotId, exact.map(_._2).toSeq)
+    selected = proof.map(_._1)
+    val complete = proof.toSeq.flatMap(p =>
+      exact.map(_._1).zip(p._2).collect { case (f, true) => f }).toSet
+    residual = filters.filterNot(complete)
+    residual
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
@@ -1233,15 +1257,17 @@ private class GraftScanBuilder(
     true
   }
 
-  /** GLOBAL COUNT(*)/COUNT(col)/MIN/MAX answered from per-manifest
-    * metadata — O(manifests), zero data IO ([[BranchCatalog
-    * .metaAggregate]]). Complete-only: either the snapshot stats answer
-    * every function EXACTLY (coverage-aware bounds + null sums, no
-    * pending MOR tombstones, no float/double extrema) or nothing is
-    * pushed and Spark plans the ordinary scan+aggregate. Spark only
-    * attempts aggregate pushdown when no Filter sits between the
-    * aggregate and this scan, and every graft filter stays residual, so
-    * a filtered aggregate can never reach the metadata path. */
+  /** COUNT(*)/COUNT(col)/MIN/MAX/SUM/AVG, global or GROUP BY, answered
+    * from snapshot metadata with zero data IO: an unfiltered global
+    * aggregate from per-manifest stats ([[BranchCatalog.metaAggregate]]),
+    * any other from per-file stats ([[BranchCatalog
+    * .metaAggregateFiles]]) over the files the complete filters keep.
+    * Complete-only: either the stats answer every function EXACTLY
+    * (coverage-aware bounds + null sums, no pending MOR tombstones, no
+    * float/double extrema) or nothing is pushed and Spark plans the
+    * ordinary scan+aggregate. Spark only attempts aggregate pushdown
+    * when no Filter sits between the aggregate and this scan, so every
+    * filter below it must be complete ([[pushFilters]]). */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
     answer(agg).isDefined
@@ -1274,8 +1300,7 @@ private class GraftScanBuilder(
     import org.apache.spark.sql.connector.expressions.NamedReference
     val spark = SparkSession.active
     // a changes-window read aggregates the DELTA, never the snapshot
-    if (changes.isDefined) return None
-    if (pushed.nonEmpty) return None
+    if (changes.isDefined || residual.nonEmpty) return None
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case n: NamedReference if n.fieldNames().length == 1 &&
@@ -1317,11 +1342,11 @@ private class GraftScanBuilder(
           org.apache.spark.sql.types.StructField(s"agg_$i", dt)
         })
     val cat = new BranchCatalog(spark, t.root)
-    if (groups.isEmpty)
+    if (groups.isEmpty && selected.isEmpty)
       cat.metaAggregate(t.tableName, t.snapshotId, metas.map(_._1))
         .map(values => (schema, Seq(values.toArray)))
     else
-      cat.metaAggregateBy(t.tableName, t.snapshotId, groups, metas.map(_._1))
+      cat.metaAggregateFiles(t.tableName, t.snapMeta, selected, groups, metas.map(_._1))
         // an all-null group under a NOT NULL column (schema/data drift)
         // cannot ride the unsafe row writer — refuse onto the real scan
         .filter(rows => !rows.exists(r => groups.indices.exists(i =>
@@ -1341,7 +1366,8 @@ private class GraftScanBuilder(
   override def build(): Scan = aggAnswer match {
     case Some((schema, values)) => new GraftMetaAggScan(t, schema, values)
     case None =>
-      new GraftBatchScan(t, required, pushed, maxFilesPerTrigger, changes, limit, topN)
+      new GraftBatchScan(t, required, pushed, pushed.filter(residual.contains),
+        maxFilesPerTrigger, changes, limit, topN)
   }
 }
 
@@ -1410,6 +1436,11 @@ private[graft] object GraftMetaAggStrategy extends org.apache.spark.sql.executio
   * keeps the vectorized read and the pruner. */
 private[sql] class GraftBatchScan(
     t: GraftTable, required: StructType, pushed: Array[sources.Filter],
+    /** The pushed filters Spark still re-checks above the scan. The
+      * others hold for every row of every planned file, so they would
+      * skip nothing inside one, and may name columns the scan does not
+      * read — which the parquet reader's page filter takes for NULL. */
+    rechecked: Array[sources.Filter],
     maxFilesPerTrigger: Option[Int],
     /** (fromId, toId) incremental window — the scan then plans ONLY the
       * window's append delta ([[BranchCatalog.plannedChangedFiles]]):
@@ -1658,10 +1689,9 @@ private[sql] class GraftBatchScan(
     // pushed INTO the parquet reader too: per-file row-group/page
     // skipping below the manifest-level file pruning (at 100 TB a kept
     // file still holds many 128 MB row groups a selective predicate can
-    // skip from footer stats alone). Sound: Spark re-applies every
-    // filter above this scan (all filters are residual), and the join
-    // re-checks runtime DPP keys.
-    val readerFilters = (pushed ++ runtime).toSeq
+    // skip from footer stats alone). Sound: Spark re-applies these
+    // filters above this scan, and the join re-checks runtime DPP keys.
+    val readerFilters = (rechecked ++ runtime).toSeq
     morEpochs match {
       case None => GraftReaderFactory(spark, t.tableSchema, required, readerFilters)
       case Some(epochs) =>
@@ -1865,6 +1895,9 @@ private object GraftScanBuilder {
       }
     case sources.Or(l, r) =>
       for (a <- toColumn(l); b <- toColumn(r)) yield a || b
+    // a NOT converts in full or not at all: weakening its child would
+    // strengthen the NOT
+    case sources.Not(c) => toColumnExact(c).map(!_)
     case _ => None
   }
 }

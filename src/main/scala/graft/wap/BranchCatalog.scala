@@ -3562,6 +3562,28 @@ class BranchCatalog(
     plannedFiles(snap, cond, pvKey)
   }
 
+  /** The connector's exact filters over one pinned snapshot: the files
+    * the driver-tier selection keeps under the conjunction of `filters`,
+    * and per filter whether every kept file PROVES it for every row
+    * ([[allRowsMatch]]). A proved filter needs no row-level re-check: a
+    * dropped file holds no row matching the conjunction, a kept one no
+    * row failing the filter. An empty selection proves every filter.
+    * None — every filter stays residual — under pending MOR tombstones,
+    * above [[distributedMetaThreshold]] files (the read then plans
+    * through the conservative executor-side prune), or when a filter
+    * does not resolve. */
+  private[graft] def exactFilters(table: String, snapshotId: String,
+      filters: Seq[Column]): Option[(Seq[DataFileMeta], Seq[Boolean])] = {
+    val snap = loadSnapshot(table, snapshotId)
+    if (filters.isEmpty || snap.deleteManifests.nonEmpty ||
+        snap.manifests.map(_.fileCount).sum > distributedMetaThreshold) return None
+    val schema = StructType.fromDDL(snap.schemaDdl)
+    val preds = filters.flatMap(resolvePredicate(_, schema))
+    if (preds.size != filters.size) return None
+    val kept = selectResolved(snap, Some(preds.reduce(And(_, _)) -> schema)).flatMap(_.hit)
+    Some(kept -> preds.map(p => kept.forall(allRowsMatch(_, p, schema))))
+  }
+
   /** A file PREFIX guaranteed to hold at least `limit` rows (or every
     * file, if the table is smaller) — the connector's limit pushdown
     * (`SELECT * FROM t LIMIT k` on an unfiltered snapshot): manifests
@@ -3779,6 +3801,11 @@ class BranchCatalog(
         attrName(stripCast(a)).forall(n => f.nullCounts.get(n).forall(_ > 0))
       case IsNotNull(a) =>
         attrName(stripCast(a)).forall(n => f.nullCounts.get(n).forall(_ < f.rows) || f.rows == 0)
+      // NOT of one comparison: no row matches when every row matches the
+      // comparison, or when its column is all-NULL in the file
+      case Not(c) if comparisonOf(c).isDefined =>
+        !allRowsMatch(f, c, schema) &&
+          !comparisonOf(c).exists(cmp => f.nullCounts.get(cmp._1).contains(f.rows))
       case _ => true
     }
   }
@@ -3826,37 +3853,35 @@ class BranchCatalog(
       (intTypes.contains(colDt) && intTypes.contains(litDt)) ||
         (colDt == litDt && (colDt == StringType || colDt == DateType ||
           colDt == TimestampType || colDt == TimestampNTZType))
-    def leafProved(e: Expression): Boolean = {
-      val cmp: Option[(String, String, Literal)] = e match {
-        case EqualTo(a, FoldedLit(l)) => widenedAttr(a).map((_, "=", l))
-        case EqualTo(FoldedLit(l), a) => widenedAttr(a).map((_, "=", l))
-        case GreaterThan(a, FoldedLit(l)) => widenedAttr(a).map((_, ">", l))
-        case GreaterThan(FoldedLit(l), a) => widenedAttr(a).map((_, "<", l))
-        case GreaterThanOrEqual(a, FoldedLit(l)) => widenedAttr(a).map((_, ">=", l))
-        case GreaterThanOrEqual(FoldedLit(l), a) => widenedAttr(a).map((_, "<=", l))
-        case LessThan(a, FoldedLit(l)) => widenedAttr(a).map((_, "<", l))
-        case LessThan(FoldedLit(l), a) => widenedAttr(a).map((_, ">", l))
-        case LessThanOrEqual(a, FoldedLit(l)) => widenedAttr(a).map((_, "<=", l))
-        case LessThanOrEqual(FoldedLit(l), a) => widenedAttr(a).map((_, ">=", l))
-        case _ => None
-      }
-      cmp.exists { case (name, op, l) =>
-        l.value != null && noNulls(name) && dtOf(name).exists { colDt =>
-          provablePair(colDt, l.dataType) && {
-            val lo = f.lower.get(name)
-            val hi = f.upper.get(name)
-            op match {
-              case "=" =>
-                lo.flatMap(cmpStat(_, l, l.dataType)).contains(0) &&
-                  hi.flatMap(cmpStat(_, l, l.dataType)).contains(0)
-              case ">" => lo.flatMap(cmpStat(_, l, l.dataType)).exists(_ > 0)
-              case ">=" => lo.flatMap(cmpStat(_, l, l.dataType)).exists(_ >= 0)
-              case "<" => hi.flatMap(cmpStat(_, l, l.dataType)).exists(_ < 0)
-              case "<=" => hi.flatMap(cmpStat(_, l, l.dataType)).exists(_ <= 0)
-              case _ => false
-            }
-          }
-        }
+    // a comparison whose truth the stats can decide for every row: its
+    // column holds no NULL and compares against a non-null literal
+    def decidable(e: Expression): Option[(String, String, Literal)] = (e match {
+      case EqualTo(a, FoldedLit(l)) => widenedAttr(a).map((_, "=", l))
+      case EqualTo(FoldedLit(l), a) => widenedAttr(a).map((_, "=", l))
+      case GreaterThan(a, FoldedLit(l)) => widenedAttr(a).map((_, ">", l))
+      case GreaterThan(FoldedLit(l), a) => widenedAttr(a).map((_, "<", l))
+      case GreaterThanOrEqual(a, FoldedLit(l)) => widenedAttr(a).map((_, ">=", l))
+      case GreaterThanOrEqual(FoldedLit(l), a) => widenedAttr(a).map((_, "<=", l))
+      case LessThan(a, FoldedLit(l)) => widenedAttr(a).map((_, "<", l))
+      case LessThan(FoldedLit(l), a) => widenedAttr(a).map((_, ">", l))
+      case LessThanOrEqual(a, FoldedLit(l)) => widenedAttr(a).map((_, "<=", l))
+      case LessThanOrEqual(FoldedLit(l), a) => widenedAttr(a).map((_, ">=", l))
+      case _ => None
+    }).filter { case (name, _, l) =>
+      l.value != null && noNulls(name) && dtOf(name).exists(provablePair(_, l.dataType))
+    }
+    def leafProved(e: Expression): Boolean = decidable(e).exists { case (name, op, l) =>
+      val lo = f.lower.get(name)
+      val hi = f.upper.get(name)
+      op match {
+        case "=" =>
+          lo.flatMap(cmpStat(_, l, l.dataType)).contains(0) &&
+            hi.flatMap(cmpStat(_, l, l.dataType)).contains(0)
+        case ">" => lo.flatMap(cmpStat(_, l, l.dataType)).exists(_ > 0)
+        case ">=" => lo.flatMap(cmpStat(_, l, l.dataType)).exists(_ >= 0)
+        case "<" => hi.flatMap(cmpStat(_, l, l.dataType)).exists(_ < 0)
+        case "<=" => hi.flatMap(cmpStat(_, l, l.dataType)).exists(_ <= 0)
+        case _ => false
       }
     }
     p match {
@@ -3867,6 +3892,9 @@ class BranchCatalog(
         vs.exists(v => allRowsMatch(f, EqualTo(a, v), schema))
       case IsNull(a: AttributeReference) => f.nullCounts.get(a.name).contains(f.rows)
       case IsNotNull(a: AttributeReference) => noNulls(a.name)
+      // NOT of one comparison: no row is NULL in its column and no row
+      // can match the comparison
+      case Not(c) => decidable(c).isDefined && !mayMatch(f, c, schema)
       case leaf => leafProved(leaf)
     }
   }
@@ -4189,7 +4217,7 @@ class BranchCatalog(
     * missing coverage). Returns the number of manifests freshly
     * (re)summed. */
   def ensureSumStats(
-      table: String, branch: String = "main", columns: Seq[String] = Nil): Int = try {
+      table: String, branch: String = "main", columns: Seq[String] = Nil): Int = {
     import org.apache.spark.sql.functions.{col, sum}
     val id = snapshotIdOf(table, branch).getOrElse(sys.error(s"no table $table on $branch"))
     val snap = loadSnapshot(table, id)
@@ -4230,7 +4258,7 @@ class BranchCatalog(
       }
     }
     computed
-  } finally { BranchCatalog.sidecarEpoch.incrementAndGet(); () }
+  }
 
   /** The sum sidecar of each live manifest, or None if any is missing a
     * requested column — the freshness gate metadata SUM/AVG hangs on. */
@@ -4521,7 +4549,7 @@ class BranchCatalog(
   }
 
   /** The one metadata-aggregate fold, behind [[metaAggregateOf]] (parts =
-    * manifests) and [[metaAggregateBy]] (parts = the files of one group):
+    * manifests) and [[metaAggregateFiles]] (parts = the files of one group):
     * `aggs` over the rows of `parts` from their row counts, null counts
     * and bounds, under `schema`. `sums(c)` lists the parts' non-NULL sums
     * of `c` from the sum sidecars (None refuses). None unless every
@@ -4575,25 +4603,35 @@ class BranchCatalog(
   /** GROUP BY metadata aggregates (W79): `SELECT g, count(*)/count(c)/
     * min(c)/max(c) FROM t GROUP BY g` answered from manifest-entry stats
     * with ZERO data IO — one row per distinct group, values
-    * catalyst-internal like [[metaAggregate]]'s. Sound exactly when
-    * every live file is HOMOGENEOUS in every group column: its exact
-    * (untruncated) footer bounds satisfy `lower == upper` with zero
-    * nulls, or the column is all-null in the file — the layout identity
-    * partitioning and per-column clustered compaction produce by
-    * construction. Then each file belongs to one group and the global
-    * fold splits per group losslessly: COUNT(*) sums exact row counts,
-    * COUNT(c) subtracts covered null sums, MIN/MAX fold exact bounds
-    * under [[BranchCatalog.exactStatType]]'s rules. ANY file failing
-    * homogeneity or coverage answers None — the caller plans the
-    * ordinary scan, never an approximation. Entry reads are
-    * driver-side O(files), bounded by `maxFiles` (past the cap the
-    * ordinary distributed scan wins anyway); pending MOR tombstones
-    * refuse as in [[metaAggregate]]. */
+    * catalyst-internal like [[metaAggregate]]'s: [[metaAggregateFiles]]
+    * over every live file of the snapshot. Entry reads are driver-side
+    * O(files), bounded by `maxFiles` (past the cap the ordinary
+    * distributed scan wins anyway). */
   def metaAggregateBy(
       table: String, snapshotId: String, groupCols: Seq[String],
       aggs: Seq[MetaAgg], maxFiles: Long = 200000L): Option[Seq[Array[Any]]] = {
     require(groupCols.nonEmpty, "metaAggregateBy needs at least one group column")
-    val snap = loadSnapshot(table, snapshotId)
+    metaAggregateFiles(table, loadSnapshot(table, snapshotId), None, groupCols, aggs, maxFiles)
+  }
+
+  /** The per-file metadata fold: `aggs` over the rows of `files` (every
+    * live file of `snap` when None) grouped by `groupCols`, one row of
+    * group values then aggregate values per group. With no group column
+    * it is one global row, also over no file (count 0, NULL extrema) —
+    * the connector's filtered aggregate over the files its exact filters
+    * keep. Sound exactly when every file is HOMOGENEOUS in every group
+    * column: its exact (untruncated) footer bounds satisfy `lower ==
+    * upper` with zero nulls, or the column is all-null in the file — the
+    * layout identity partitioning and per-column clustered compaction
+    * produce by construction. Then each file belongs to one group and
+    * the global fold ([[foldAggs]]) splits per group losslessly. ANY file
+    * failing homogeneity or coverage answers None — the caller plans the
+    * ordinary scan, never an approximation; pending MOR tombstones and
+    * more than `maxFiles` live files refuse too. */
+  private[graft] def metaAggregateFiles(
+      table: String, snap: Snapshot, files: Option[Seq[DataFileMeta]],
+      groupCols: Seq[String], aggs: Seq[MetaAgg],
+      maxFiles: Long = 200000L): Option[Seq[Array[Any]]] = {
     if (snap.deleteManifests.nonEmpty) return None
     val schema = StructType.fromDDL(snap.schemaDdl)
     val live = snap.manifests.filter(_.rows > 0)
@@ -4632,11 +4670,12 @@ class BranchCatalog(
         .map { case (p, s) => p -> s.toLong }.toMap).toMap
     }
 
-    val files = live.flatMap(m => readManifest(m.path)).filter(_.rows > 0)
+    val fileList = files.getOrElse(live.flatMap(m => readManifest(m.path))).filter(_.rows > 0)
     // group key per file, with the homogeneity proof; None = bail whole
     val grouped = scala.collection.mutable.LinkedHashMap
       .empty[Seq[Option[String]], scala.collection.mutable.ArrayBuffer[DataFileMeta]]
-    for (f <- files) {
+    if (gFields.isEmpty) grouped(Nil) = scala.collection.mutable.ArrayBuffer.empty
+    for (f <- fileList) {
       val key = gFields.map { gf =>
         f.nullCounts.get(gf.name) match {
           case Some(n) if n == f.rows => Some(None) // all-null -> NULL group
@@ -7669,11 +7708,6 @@ object BranchCatalog {
     new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
   private[wap] def txnKey(root: String, name: String): (String, String) =
     (new org.apache.hadoop.fs.Path(root).toUri.getPath, name)
-
-  /** Bumped whenever a sum sidecar pass completes in this JVM (W80):
-    * sidecars appear WITHOUT a snapshot change, so snapshot-keyed
-    * refusal memos (GraftAggLowering) include this epoch to notice. */
-  val sidecarEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Footer-stats extraction, shared by the write paths (driver-side,
     * O(files-per-commit)) and [[BranchCatalog.addDataFiles]]'s

@@ -154,18 +154,22 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Release the storage blocks behind a `localCheckpoint()`ed frame.
+  /** The RDDs behind a `localCheckpoint()`ed frame: its LogicalRDD
+    * leaves (none for a frame that is not checkpointed). Unlike the
+    * frame, they do not hold its session. */
+  def checkpointRdds(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
+  /** Release the storage blocks of checkpoint RDDs ([[checkpointRdds]]).
     * A local checkpoint's blocks otherwise live until the RDD is GC'd
     * (ContextCleaner), so a long-lived session accumulates executor
     * storage across query runs; this frees them deterministically once
-    * every consumer is done. Safe on any frame — only LogicalRDD leaves
-    * are touched. */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+    * every consumer is done. */
+  def releaseCheckpoint(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
+    rdds.foreach(_.unpersist(blocking = false))
 
   /** The config value a builder currently carries for `key`, if any.
     * `SparkSessionBuilder.options` is `protected` in Scala but its

@@ -11,11 +11,13 @@ import graft.{SparkSpecBase, Tables}
 import graft.wap.BranchCatalog
 
 /** Metadata-only aggregates (W44/W79/W80/W81): `SELECT count(*),
-  * count(c), min(c), max(c) FROM t` answered from per-manifest stats with
-  * ZERO data-file IO — unfiltered global and GROUP BY shapes through the
-  * DSv2 `SupportsPushDownAggregates` route (the local
-  * [[GraftMetaAggScan]]), filtered ones through [[GraftAggLowering]] —
-  * with every non-exact shape refused onto the ordinary batch scan. */
+  * count(c), min(c), max(c) FROM t` answered from snapshot stats with
+  * ZERO data-file IO — global and GROUP BY, unfiltered or under filters
+  * file metadata proves exactly, all through the DSv2
+  * `SupportsPushDownAggregates` route (the local [[GraftMetaAggScan]]) —
+  * with every non-exact shape refused onto the ordinary batch scan, and
+  * the exact filters themselves: complete where every kept file proves
+  * them, residual everywhere else. */
 class MetaAggSpec extends SparkSpecBase {
 
   private var n = 0
@@ -61,6 +63,18 @@ class MetaAggSpec extends SparkSpecBase {
     df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }.exists(_.isInstanceOf[GraftMetaAggScan])
+
+  /** Spark still re-checks some filter row by row above the scan. */
+  private def residualFilter(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+    }.nonEmpty
+
+  /** Rows as (doc_id, lang), sorted — for comparing a SQL read with the
+    * DataFrame filter it must equal. */
+  private def idLang(df: DataFrame): Seq[(Long, String)] =
+    df.select("doc_id", "lang").collect().map(r => (r.getLong(0), r.getString(1)))
+      .sortBy(_._1).toSeq
 
   test("extension path: count/min/max answered from metadata, zero scans") {
     val (lake, root, cat) = register()
@@ -510,5 +524,132 @@ class MetaAggSpec extends SparkSpecBase {
     assert(vals(0) == exp.getLong(0) && vals(1) == exp.getLong(1))
     assert(vals(2) == exp.getLong(2) && vals(3) == exp.getLong(3))
     assert(vals(4).toString == exp.getString(4) && vals(5).toString == exp.getString(5))
+  }
+
+  test("filtered aggregates push into the scan: partition equality and NOT, zero jobs") {
+    val (lake, _, cat) = register()
+    val d = docs(160)
+    cat.createTableIfNotExists("docs", d.schema, "main",
+      Seq(graft.wap.IdentityPartition("lang")))
+    cat.append("docs", d.filter(col("doc_id") < 80))
+    cat.append("docs", d.filter(col("doc_id") >= 80))
+    cat.ensureSumStats("docs")
+
+    val en = d.filter(col("lang") === "en")
+    val q1 = spark.sql(s"SELECT count(*) AS n, sum(n_chars) AS s, min(doc_id) AS a " +
+      s"FROM $lake.main.docs WHERE lang = 'en'")
+    assert(pushedMeta(q1), s"expected the metadata scan, got:\n${q1.queryExecution.optimizedPlan}")
+    val (r1, jobs1) = jobsDuring(q1.collect().head)
+    assert(jobs1 == 0, s"a filtered metadata aggregate must run no Spark job, ran $jobs1")
+    assert(r1 == en.agg(count(lit(1)), sum(col("n_chars")), min(col("doc_id"))).head)
+
+    val q2 = spark.sql(s"SELECT lang, count(*) AS n FROM $lake.main.docs " +
+      "WHERE lang <> 'en' GROUP BY lang")
+    assert(pushedMeta(q2), s"expected the metadata scan, got:\n${q2.queryExecution.optimizedPlan}")
+    val (r2, jobs2) = jobsDuring(q2.collect())
+    assert(jobs2 == 0, s"a filtered GROUP BY must run no Spark job, ran $jobs2")
+    assert(r2.map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      d.filter(col("lang") =!= "en").groupBy("lang").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+  }
+
+  test("a range-clustered filter answers count/sum/min from metadata") {
+    val (lake, _, cat) = register()
+    val d = docs(160)
+    cat.createTableIfNotExists("docs", d.schema)
+    cat.append("docs", d.filter(col("doc_id") < 80))
+    cat.append("docs", d.filter(col("doc_id") >= 80))
+    cat.ensureSumStats("docs")
+    val q = spark.sql(s"SELECT count(*) AS n, sum(n_chars) AS s, min(lang) AS a " +
+      s"FROM $lake.main.docs WHERE doc_id < 80")
+    assert(pushedMeta(q), s"expected the metadata scan, got:\n${q.queryExecution.optimizedPlan}")
+    assertMetaOnly(q)
+    val lo = d.filter(col("doc_id") < 80)
+    assert(q.collect().head ==
+      lo.agg(count(lit(1)), sum(col("n_chars")), min(col("lang"))).head)
+  }
+
+  test("the publish check counts NULLs from metadata until a batch brings some") {
+    val (lake, _, cat) = register()
+    val d = docs(120)
+    cat.createTableIfNotExists("docs", d.schema)
+    cat.append("docs", d.filter(col("doc_id") < 60))
+    cat.append("docs", d.filter(col("doc_id") >= 60))
+    val check = s"SELECT count(*) FROM $lake.main.docs WHERE lang IS NULL"
+    val q = spark.sql(check)
+    assert(pushedMeta(q) && !residualFilter(q))
+    val (n, jobs) = jobsDuring(q.collect().head.getLong(0))
+    assert(n == 0L)
+    assert(jobs == 0, s"the publish check over NULL-free files must run no Spark job, ran $jobs")
+
+    // a batch with NULLs: the filter stays residual and the count exact
+    cat.append("docs", docs(140).filter(col("doc_id") >= 120)
+      .withColumn("lang", when(col("doc_id") % 2 === 0, lit(null)).otherwise(col("lang"))))
+    val q2 = spark.sql(check)
+    assert(!pushedMeta(q2) && residualFilter(q2) && scansOf(q2).nonEmpty)
+    assert(q2.collect().head.getLong(0) == 10L)
+  }
+
+  test("exact filters drop their Filter only where every file decides them") {
+    val (lake, _, cat) = register()
+    val d = docs(160)
+    cat.createTableIfNotExists("docs", d.schema, "main",
+      Seq(graft.wap.IdentityPartition("lang")))
+    cat.append("docs", d.filter(col("doc_id") < 80))
+    cat.append("docs", d.filter(col("doc_id") >= 80))
+
+    // NOT over the partition column: complete, no Filter over the scan
+    val qn = spark.sql(s"SELECT doc_id, lang FROM $lake.main.docs WHERE lang <> 'en'")
+    assert(!residualFilter(qn), s"expected no Filter, got:\n${qn.queryExecution.optimizedPlan}")
+    assert(idLang(qn) == idLang(d.filter(col("lang") =!= "en")))
+    // ...also when the scan no longer outputs the filtered column
+    val qi = spark.sql(s"SELECT doc_id FROM $lake.main.docs WHERE lang <> 'en'")
+    assert(!residualFilter(qi))
+    assert(qi.collect().map(_.getLong(0)).sorted.toSeq ==
+      d.filter(col("lang") =!= "en").collect().map(_.getAs[Long]("doc_id")).sorted.toSeq)
+
+    // doc_id < 50 straddles the files of the first append: it stays residual
+    val qs = spark.sql(s"SELECT doc_id, lang FROM $lake.main.docs WHERE doc_id < 50")
+    assert(residualFilter(qs), s"expected a Filter, got:\n${qs.queryExecution.optimizedPlan}")
+    assert(idLang(qs) == idLang(d.filter(col("doc_id") < 50)))
+    // ...and in a conjunction only the decided filter is complete
+    val qc = spark.sql(
+      s"SELECT doc_id, lang FROM $lake.main.docs WHERE lang = 'en' AND doc_id < 50")
+    assert(residualFilter(qc) && !pushedMeta(qc))
+    assert(idLang(qc) == idLang(d.filter(col("lang") === "en" && col("doc_id") < 50)))
+  }
+
+  test("double predicates, changes windows and MOR tombstones keep every filter residual") {
+    val (lake, _, cat) = register()
+    val d = docs(160).withColumn("v", col("n_chars").cast("double"))
+    cat.createTableIfNotExists("docs", d.schema, "main",
+      Seq(graft.wap.IdentityPartition("lang")))
+    cat.append("docs", d.filter(col("doc_id") < 80))
+    val first = cat.snapshotIdOf("docs").get
+    cat.append("docs", d.filter(col("doc_id") >= 80))
+
+    // a double comparison is never proved (footer bounds exclude NaN)
+    val qd = spark.sql(s"SELECT count(*) FROM $lake.main.docs WHERE v < 1e12")
+    assert(residualFilter(qd) && !pushedMeta(qd))
+    assert(qd.collect().head.getLong(0) == 160L)
+
+    // a changes window reads the delta: its filters are never complete
+    val w = spark.read.option("graft.changes.from", first)
+      .table(s"$lake.main.docs").filter(col("lang") === "en")
+    assert(residualFilter(w))
+    assert(idLang(w) == idLang(d.filter(col("doc_id") >= 80 && col("lang") === "en")))
+    val wn = w.agg(count(lit(1)))
+    assert(!pushedMeta(wn))
+    assert(wn.head.getLong(0) == d.filter(col("doc_id") >= 80 && col("lang") === "en").count())
+
+    // pending MOR tombstones: the aggregate refuses, the rows are exact
+    cat.deleteWherePositional("docs", col("doc_id") % 7 === 0)
+    val live = d.filter(col("doc_id") % 7 =!= 0 && col("lang") === "en")
+    val qt = spark.sql(s"SELECT count(*) FROM $lake.main.docs WHERE lang = 'en'")
+    assert(residualFilter(qt) && !pushedMeta(qt) && scansOf(qt).nonEmpty)
+    assert(qt.collect().head.getLong(0) == live.count())
+    val rows = spark.sql(s"SELECT doc_id, lang FROM $lake.main.docs WHERE lang = 'en'")
+    assert(residualFilter(rows))
+    assert(idLang(rows) == idLang(live))
   }
 }

@@ -1345,6 +1345,23 @@ class WapSpec extends SparkSpecBase {
     assert(cat3.scan("t").count() == 0)
   }
 
+  test("metadata-only delete under NOT: lang <> 'en' drops the other partitions' files unread") {
+    val cat = freshCatalog()
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 150)
+      .select("doc_id", "lang", "n_chars")
+    cat.createTableIfNotExists("t", docs.schema, "main", Seq(IdentityPartition("lang")))
+    cat.append("t", docs)
+    val others = cat.dataFiles("t").count(f =>
+      f.nullCounts.get("lang").contains(0L) && f.lower.get("lang").exists(_ != "en"))
+    assert(others > 0)
+    val res = cat.deleteWhere("t", col("lang") =!= "en")
+    assert(res.filesDropped == others && res.filesRewritten == 0, s"$res")
+    assert(res.rowsDeleted == docs.filter(col("lang") =!= "en").count(), s"$res")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "lang", "n_chars").collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+    assert(rows(cat.scan("t")) == rows(docs.filter(col("lang") === "en")))
+  }
+
   test("deleteWhere: NULL predicate keeps the row; out-of-range delete is a no-op; delete-all empties the table") {
     val cat = freshCatalog()
     val spark0 = spark
