@@ -21,15 +21,18 @@ import graft.functions._
   * the catalog's connector scan ([[graft.sql.GraftTable.newScanBuilder]]).
   * Metadata-only aggregates, filtered or not, are pushed into the scan in
   * every session too. The extensions add job-free planning of those
-  * pushed aggregates, SQL UPDATE/MERGE, branch-versioned views and the
-  * partition-evolution DDL.
+  * pushed aggregates and of a global aggregate over a catalog scan whose
+  * files are all pruned away (an empty local relation — the WAP audit
+  * count of a clean batch), SQL UPDATE/MERGE, branch-versioned views and
+  * the partition-evolution DDL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name), builder))
     }
-    // a pushed metadata aggregate answers on the driver, with no Spark job
+    // a pushed metadata aggregate, and a global aggregate over a fully
+    // pruned scan, answer on the driver with no Spark job
     ext.injectPlannerStrategy(_ => graft.sql.GraftMetaAggStrategy)
     // SQL UPDATE / MERGE INTO on catalog tables lower onto the native
     // row-level ops (updateWhere / mergeInto) — see GraftDmlLowering

@@ -431,6 +431,21 @@ object CheckQueries {
     ).reduce(_.unionByName(_))
   }
 
+  /** The row count of each distinct `keys` value in `a` (`__s`) and in
+    * `b` (`__r`, 0 where a side lacks the key), one row per key of either
+    * side. The keys join null-safely, so a NULL key counts like any
+    * other: `a` and `b` are equal multisets over `keys` iff every row has
+    * `__s == __r`. */
+  private[graft] def keyCounts(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame = {
+    def other(k: String) = s"__r_$k"
+    val s = a.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__s"))
+    val r = b.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__r"))
+      .select(keys.map(k => col(k).as(other(k))) :+ col("__r"): _*)
+    s.join(r, keys.map(k => col(k) <=> col(other(k))).reduce(_ && _), "full_outer")
+      .select(keys.map(k => coalesce(col(k), col(other(k))).as(k)) ++
+        Seq(coalesce(col("__s"), lit(0L)).as("__s"), coalesce(col("__r"), lit(0L)).as("__r")): _*)
+  }
+
   /** The persisted dedup index (W72) checked for EXACT agreement with
     * the batch operator: index-served pairs of a new batch against a
     * 400-doc indexed corpus must equal [[Dedup.minhashPairs]] on the
@@ -481,13 +496,10 @@ object CheckQueries {
     // the gates into one job also lets the served and reference subplans
     // materialize their persists CONCURRENTLY (guide §2.6) instead of
     // back-to-back.
-    val sCnt = served.groupBy("id_a", "id_b").agg(count(lit(1)).as("__s"))
-    val rCnt = reference.groupBy("id_a", "id_b").agg(count(lit(1)).as("__r"))
-    val cmpRow = sCnt.join(rCnt, Seq("id_a", "id_b"), "full_outer").agg(
-      coalesce(sum(when(coalesce(col("__s"), lit(0L)) =!= coalesce(col("__r"), lit(0L)),
-        1L).otherwise(0L)), lit(0L)).as("n_diff"),
+    val cmpRow = keyCounts(served, reference, Seq("id_a", "id_b")).agg(
+      coalesce(sum(when(col("__s") =!= col("__r"), 1L).otherwise(0L)), lit(0L)).as("n_diff"),
       coalesce(sum(when(col("id_a") < 20 && col("id_b") === col("id_a") + 5000L,
-        coalesce(col("__s"), lit(0L))).otherwise(0L)), lit(0L)).as("planted")).head
+        col("__s")).otherwise(0L)), lit(0L)).as("planted")).head
     val pairsMatch = cmpRow.getLong(0) == 0L
     val plantedRecovered = cmpRow.getLong(1) == 20L
 

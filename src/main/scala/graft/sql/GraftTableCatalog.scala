@@ -1392,34 +1392,64 @@ private[sql] class GraftMetaAggScan(
       : org.apache.spark.sql.catalyst.InternalRow).toArray
 }
 
-/** Plans the projection Spark puts over a pushed metadata aggregate
-  * (result aliases and casts) as one [[org.apache.spark.sql.execution
-  * .LocalTableScanExec]] of the projected rows. Without it the
-  * projection runs as a one-task Spark job over the local scan; with it
-  * `collect` reads the rows on the driver and no Spark job runs.
+/** Answers two plan shapes on the driver, each as one
+  * [[org.apache.spark.sql.execution.LocalTableScanExec]], so `collect`
+  * reads the rows there and no Spark job runs:
   *
-  * Only a projection that can be evaluated while planning folds: a
-  * subquery is planned after the strategies run and a Python UDF is
-  * unevaluable, so either leaves the projection to Spark's `ProjectExec`.
-  * So does a projection that throws (an ANSI overflow): the error then
-  * surfaces when the query runs, not when it is planned or explained. */
+  *  - the projection Spark puts over a pushed metadata aggregate (result
+  *    aliases and casts), evaluated over the local scan's rows — without
+  *    it the projection runs as a one-task job;
+  *  - a global aggregate over an empty local relation — the shape a
+  *    catalog scan whose files are all pruned away leaves under `count()`
+  *    (the WAP audit of a clean batch) — as the one row Spark computes
+  *    for no input: each aggregate's result over its initial buffer
+  *    (count 0; sum, avg, min, max NULL). Without it that row costs a
+  *    HashAggregate → Exchange → HashAggregate job. Only declarative
+  *    aggregates fold: an imperative one (`approx_count_distinct`,
+  *    `percentile_approx`, `collect_list`, a UDAF) keeps Spark's plan.
+  *
+  * Only a list that can be evaluated while planning folds: a subquery is
+  * planned after the strategies run and a Python UDF is unevaluable, so
+  * either leaves the list to Spark. So does a list that throws (an ANSI
+  * overflow or division by zero): the error then surfaces when the query
+  * runs, not when it is planned or explained. */
 private[graft] object GraftMetaAggStrategy extends org.apache.spark.sql.execution.SparkStrategy {
-  import org.apache.spark.sql.catalyst.expressions.{Attribute, PlanExpression, Unevaluable, UnsafeProjection}
-  import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, NamedExpression, PlanExpression, Unevaluable, UnsafeProjection}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
   import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Project(list, org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
-        _, scan: GraftMetaAggScan, output, _, _))
-        if list.forall(_.deterministic) && !list.exists(_.exists(e =>
-          e.isInstanceOf[PlanExpression[_]] ||
-            (e.isInstanceOf[Unevaluable] && !e.isInstanceOf[Attribute]))) =>
-      try {
-        val project = UnsafeProjection.create(list, output)
-        Seq(LocalTableScanExec(
-          list.map(_.toAttribute), scan.rows().toSeq.map(r => project(r).copy()), None))
-      } catch { case scala.util.control.NonFatal(_) => Nil }
+        _, scan: GraftMetaAggScan, output, _, _)) =>
+      local(list, output, scan.rows().toSeq)
+    case Aggregate(Seq(), list, r: LocalRelation, _) if r.data.isEmpty && !r.isStreaming &&
+        list.forall(_.collect { case a: AggregateExpression => a.aggregateFunction }
+          .forall(_.isInstanceOf[DeclarativeAggregate])) =>
+      local(list.map(_.transformDown {
+        case a: AggregateExpression => emptyInput(a.aggregateFunction.asInstanceOf[DeclarativeAggregate])
+      }.asInstanceOf[NamedExpression]), Nil, Seq(InternalRow.empty))
     case _ => Nil
   }
+
+  /** `f`'s result over no input row: its result expression over its
+    * initial buffer values. */
+  private def emptyInput(f: DeclarativeAggregate): Expression = {
+    val initial = AttributeMap(f.aggBufferAttributes.zip(f.initialValues))
+    f.evaluateExpression.transform { case b: Attribute if initial.contains(b) => initial(b) }
+  }
+
+  /** `list` over `rows` (of `input`) as one local table scan, or Nil when
+    * the list cannot be evaluated while planning. */
+  private def local(list: Seq[NamedExpression], input: Seq[Attribute],
+      rows: Seq[InternalRow]): Seq[SparkPlan] =
+    if (!list.forall(_.deterministic) || list.exists(_.exists(e =>
+        e.isInstanceOf[PlanExpression[_]] ||
+          (e.isInstanceOf[Unevaluable] && !e.isInstanceOf[Attribute])))) Nil
+    else try {
+      val project = UnsafeProjection.create(list, input)
+      Seq(LocalTableScanExec(list.map(_.toAttribute), rows.map(r => project(r).copy()), None))
+    } catch { case scala.util.control.NonFatal(_) => Nil }
 }
 
 /** The read path of a pinned snapshot, in every session: manifest-pruned,

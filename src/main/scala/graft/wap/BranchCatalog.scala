@@ -63,7 +63,12 @@ case class DataFileMeta(
   * comparison). `asOf` (the delete's anchor snapshot id) and `keyCols`
   * (the tombstone's equality-key columns) are set on DELETE manifests
   * only; `asOf` remains the coverage fallback for pre-r8 metadata whose
-  * tombstones carry no sequence (json4s fills the defaults). */
+  * tombstones carry no sequence (json4s fills the defaults).
+  *
+  * The defaults are part of the on-disk format: a snapshot document
+  * leaves out every field equal to its default
+  * ([[BranchCatalog.snapshotJson]]), so changing one changes what every
+  * snapshot written since means. */
 case class ManifestRef(path: String, fileCount: Long, rows: Long,
     asOf: Option[String] = None,
     seq: Long = 0L,
@@ -847,7 +852,7 @@ class BranchCatalog(
     if (fs.exists(snapPath(table, id))) Some(loadSnapshot(table, id)) else None
 
   private[wap] def writeSnapshot(table: String, s: Snapshot): Unit = {
-    require(writeString(snapPath(table, s.id), Serialization.write(s)),
+    require(writeString(snapPath(table, s.id), BranchCatalog.snapshotJson(s)),
       s"snapshot ${s.id} already exists for $table")
     // the committer is the next reader of its own snapshot: pre-populate
     BranchCatalog.snapCache.put(snapPath(table, s.id).toString, s)
@@ -1435,15 +1440,22 @@ class BranchCatalog(
     * such a name must get a fresh directory, not the retiree's. */
   def dropBranch(branch: String): Unit = {
     require(branch != "main", "refusing to drop main")
-    commitRefs { refs =>
-      val next = refs.branches - branch
-      val used = next.values.flatMap(_.tables.keys).toSet ++
-        refs.tags.values.flatMap(_.keys)
-      refs.copy(branches = next,
-        branchCreatedAt = refs.branchCreatedAt - branch,
-        tableDirs = refs.tableDirs.filter { case (n, _) => used.contains(n) })
+    commitSweepingDirs(refs => refs.copy(branches = refs.branches - branch,
+      branchCreatedAt = refs.branchCreatedAt - branch))
+  }
+
+  /** Commits `update` with the dir aliases of the names no branch or tag
+    * of the result carries any more swept, and evicts only those names
+    * from this instance's alias cache. */
+  private def commitSweepingDirs(update: Refs => Refs): Unit = {
+    val (_, swept) = commitRefsFor { refs =>
+      val next = update(refs)
+      val used = next.branches.values.flatMap(_.tables.keys).toSet ++
+        next.tags.values.flatMap(_.keys)
+      val (keep, gone) = next.tableDirs.partition { case (n, _) => used.contains(n) }
+      (next.copy(tableDirs = keep), gone.keys)
     }
-    dirAlias.clear()
+    swept.foreach(dirAlias.remove)
   }
 
   /** FULLY-MERGED stale-branch cleanup (the Nessie branch-retention
@@ -1544,18 +1556,13 @@ class BranchCatalog(
         tagCreatedAt = refs.tagCreatedAt.updated(tag, System.currentTimeMillis()))
     }
 
-  def dropTag(tag: String): Unit = {
-    commitRefs { refs =>
+  /** Same dir-alias sweep as [[dropBranch]]: aliases die with the last
+    * ref. */
+  def dropTag(tag: String): Unit =
+    commitSweepingDirs { refs =>
       require(refs.tags.contains(tag), s"no tag $tag")
-      val nextTags = refs.tags - tag
-      // same dir-alias sweep as dropBranch: aliases die with the last ref
-      val used = refs.branches.values.flatMap(_.tables.keys).toSet ++
-        nextTags.values.flatMap(_.keys)
-      refs.copy(tags = nextTags, tagCreatedAt = refs.tagCreatedAt - tag,
-        tableDirs = refs.tableDirs.filter { case (n, _) => used.contains(n) })
+      refs.copy(tags = refs.tags - tag, tagCreatedAt = refs.tagCreatedAt - tag)
     }
-    dirAlias.clear()
-  }
 
   /** Age-based tag retention (Iceberg `max-ref-age-ms`): drop every tag
     * CREATED more than `maxAgeMs` ago; returns the dropped names. Tags
@@ -1567,17 +1574,12 @@ class BranchCatalog(
       nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
     require(maxAgeMs > 0, "expireTags needs a positive max age")
     var dropped: Seq[String] = Nil
-    commitRefs { refs =>
+    commitSweepingDirs { refs =>
       val cutoff = nowMillis - maxAgeMs
       dropped = refs.tags.keys.filter(t =>
         refs.tagCreatedAt.get(t).exists(_ < cutoff)).toSeq.sorted
-      val nextTags = refs.tags -- dropped
-      val used = refs.branches.values.flatMap(_.tables.keys).toSet ++
-        nextTags.values.flatMap(_.keys)
-      refs.copy(tags = nextTags, tagCreatedAt = refs.tagCreatedAt -- dropped,
-        tableDirs = refs.tableDirs.filter { case (n, _) => used.contains(n) })
+      refs.copy(tags = refs.tags -- dropped, tagCreatedAt = refs.tagCreatedAt -- dropped)
     }
-    dirAlias.clear()
     dropped
   }
 
@@ -1639,14 +1641,22 @@ class BranchCatalog(
   /** The table's declared write sort order ([[BranchCatalog.WriteOrderKey]]),
     * validated against `schema` — unknown columns refuse loudly at write
     * time rather than silently skipping the sort. */
-  private def writeOrderOf(table: String, branch: String,
+  private def writeOrderOf(table: String, props: Map[String, String],
       schema: StructType): Seq[String] = {
-    val cols = tableProperties(table, branch)
-      .getOrElse(BranchCatalog.WriteOrderKey, "")
+    val cols = props.getOrElse(BranchCatalog.WriteOrderKey, "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"${BranchCatalog.WriteOrderKey} names unknown column $c of $table"))
     cols
+  }
+
+  /** The head of table@branch (None before the table exists there) and
+    * the table's properties, from one refs read: the state an append's
+    * alignment, guards and write order read. */
+  private def writeState(table: String, branch: String): (Option[Snapshot], Map[String, String]) = {
+    val b = currentRefs().branches.get(branch)
+    (b.flatMap(_.tables.get(table)).map(loadSnapshot(table, _)),
+      b.flatMap(_.tableProps.get(table)).getOrElse(Map.empty))
   }
 
   /** reference app.py:178-199 append_rows_to_table_in_branch: write the
@@ -1667,7 +1677,7 @@ class BranchCatalog(
       evolveSchemaForSource(table, df.schema, branch)
     // validate/align BEFORE writing data: a mismatched batch must not
     // corrupt the table (the reference inherits this from PyIceberg)
-    val head = snapshotIdOf(table, branch).map(loadSnapshot(table, _))
+    val (head, props) = writeState(table, branch)
     // a PARTITIONED table routes EVERY append through the partitioned
     // writer — the streaming sink, Wap.run, and every other surface
     // built on append write transform-valued (prunable) files without
@@ -1683,10 +1693,10 @@ class BranchCatalog(
     val aligned = head match {
       case Some(snap) if snap.schemaDdl.nonEmpty =>
         alignToSchema(df, StructType.fromDDL(snap.schemaDdl), table, branch,
-          writeDefaults = snap.evo.writeDefaults)
+          Some(snap.evo), props)
       case _ => df
     }
-    val order = head.map(_ => writeOrderOf(table, branch, aligned.schema))
+    val order = head.map(_ => writeOrderOf(table, props, aligned.schema))
       .getOrElse(Nil)
     val arranged =
       if (order.isEmpty) aligned
@@ -1914,7 +1924,7 @@ class BranchCatalog(
         BranchCatalog.readSchema(schema, cur.evo.copy(idlessFiles = true)), sized(metas0))
       // the same fused guard every write path uses: any violating row
       // raises with the constraint name BEFORE anything commits
-      constraintGuard(df, table, branch).count()
+      constraintGuard(df, tableProperties(table, branch)).count()
       ()
     }
 
@@ -2051,7 +2061,7 @@ class BranchCatalog(
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"upsert key column $c is not a column of $table"))
     val aligned = alignToSchema(source, schema, table, branch,
-      writeDefaults = cur.evo.writeDefaults)
+      Some(cur.evo), tableProperties(table, branch))
     // the new versions are table DATA: on a partitioned table they carry
     // transform values like any append (key/tombstone files are not —
     // they are metadata the scan anti-joins, never partition-pruned)
@@ -2132,7 +2142,7 @@ class BranchCatalog(
       else changes.select(keyCols.map(col): _*).distinct()
     // an empty side writes no file and commits no manifest
     val dataFiles = writeRows(table, cur, alignToSchema(inserts, schema,
-      table, branch, writeDefaults = cur.evo.writeDefaults))
+      table, branch, Some(cur.evo), tableProperties(table, branch)))
     val keyFiles = writeLive(table, delKeys)
     if (dataFiles.isEmpty && keyFiles.isEmpty) {
       // empty batch: nothing to commit, but the delivery record must
@@ -2507,8 +2517,12 @@ class BranchCatalog(
     loadSnapshot(table, snapshotIdOf(table, branch)
       .getOrElse(sys.error(s"no table $table on $branch")))
 
+  /** No rows of `schema`, as an empty local relation: Spark's optimizer
+    * folds the filters, projections, joins and grouped aggregates above
+    * it away, and [[graft.sql.GraftMetaAggStrategy]] answers a global
+    * aggregate over it, so a fully pruned read runs no Spark job. */
   private def emptyFrame(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** The file selection: for each manifest of `snap`, in order, the files
     * the partition, stats and bloom prune admits under `cond` and that
@@ -2773,7 +2787,7 @@ class BranchCatalog(
         arms.indices.filter(arms(_).set.contains(c)).foldLeft(isI)((e, i) => e || arm === i)
       val out = rows.filter(keep).select((values ++ lineage :+ arm).toIndexedSeq: _*)
       constraintGuard(generatedGuard(out, cur, schema, wrote, explicit),
-        table, branch, Some(wrote)).drop(armCol)
+        tableProperties(table, branch), Some(wrote)).drop(armCol)
     }
   }
 
@@ -3000,7 +3014,7 @@ class BranchCatalog(
       PartitionSpec.SpecField(sp, i, active = true) }
     specs.foreach(sp => require(df.schema.fieldNames.contains(sp.column),
       s"partition column ${sp.column} not in the replacement schema"))
-    val checked = constraintGuard(df, table, branch)
+    val checked = constraintGuard(df, tableProperties(table, branch))
     val manifest = writeManifest(table,
       writeTableFiles(table, checked, fields, ids = evo.fieldIds), df.schema)
     // lineage-enabled tables keep tracking: every replaced row is an
@@ -3024,7 +3038,7 @@ class BranchCatalog(
     val cur = headOf(table, branch)
     val aligned =
       if (cur.schemaDdl.nonEmpty) alignToSchema(df, StructType.fromDDL(cur.schemaDdl),
-        table, branch, writeDefaults = cur.evo.writeDefaults)
+        table, branch, Some(cur.evo), tableProperties(table, branch))
       else df
     val manifest = writeManifest(table, writeTableFiles(table, aligned,
       specsOf(cur.partitionSpec), ids = cur.evo.fieldIds),
@@ -3106,8 +3120,7 @@ class BranchCatalog(
   private[wap] case class StagedTable(
       schemaDdl: String, appends: Vector[ManifestRef], deletes: Vector[ManifestRef],
       partitionSpec: Option[String] = None,
-      fieldIds: Map[String, Int] = Map.empty,
-      writeDefaults: Map[String, String] = Map.empty)
+      evo: SchemaEvo = SchemaEvo())
 
   /** The staging handle [[transaction]] passes to its body. Staging
     * writes files and manifests eagerly; NOTHING is visible to any reader
@@ -3120,8 +3133,7 @@ class BranchCatalog(
     private def entry(table: String): StagedTable =
       byTable.getOrElseUpdate(table, {
         val head = headOf(table, branch)
-        StagedTable(head.schemaDdl, Vector.empty, Vector.empty, head.partitionSpec,
-          head.evo.fieldIds, head.evo.writeDefaults)
+        StagedTable(head.schemaDdl, Vector.empty, Vector.empty, head.partitionSpec, head.evo)
       })
 
     /** Stage an append (same alignment + partition routing as
@@ -3130,10 +3142,10 @@ class BranchCatalog(
     def append(table: String, df: DataFrame): Unit = {
       val st = entry(table)
       val aligned = alignToSchema(df, StructType.fromDDL(st.schemaDdl), table, branch,
-        writeDefaults = st.writeDefaults)
+        Some(st.evo), tableProperties(table, branch))
       val manifest = writeManifest(table,
         writeTableFiles(table, aligned, specsOf(st.partitionSpec),
-          ids = st.fieldIds),
+          ids = st.evo.fieldIds),
         aligned.schema)
       byTable(table) = st.copy(appends = st.appends :+ manifest)
     }
@@ -4737,9 +4749,9 @@ class BranchCatalog(
     * the check to the rows a rewrite actually changed: a CoW rewrite's
     * carried-through rows are not re-validated, so pre-constraint
     * history stays deletable/compactable. */
-  private def constraintGuard(df: DataFrame, table: String, branch: String,
+  private def constraintGuard(df: DataFrame, props: Map[String, String],
       subject: Option[Column] = None): DataFrame = {
-    val checks = tableProperties(table, branch).toSeq.collect {
+    val checks = props.toSeq.collect {
       case (k, v) if k.startsWith(BranchCatalog.ConstraintPrefix) =>
         k.stripPrefix(BranchCatalog.ConstraintPrefix) -> v
     }.sortBy(_._1)
@@ -4810,21 +4822,21 @@ class BranchCatalog(
     * raised BEFORE any data is written. */
   private def alignToSchema(
       df: DataFrame, expected: StructType, table: String, branch: String,
-      check: Boolean = true,
-      /** Columns the batch may omit fill their WRITE default instead of
-        * NULL (W71) — callers pass the pinned snapshot's
-        * `evo.writeDefaults`, except mergeInto (its "aligned source" is
-        * a join input, not written rows; a default there would leak into
-        * match conditions and update assignments). */
-      writeDefaults: Map[String, String] = Map.empty): DataFrame = {
+      /** The pinned head's schema state: columns the batch omits fill its
+        * WRITE default instead of NULL (W71), and its generated columns
+        * compute (W87). None for mergeInto only: its "aligned source" is
+        * a join input, not written rows — a default there would leak into
+        * match conditions and update assignments. */
+      evo: Option[SchemaEvo],
+      /** The table's properties, whose CHECK constraints guard every
+        * aligned row when `evo` is given. */
+      props: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, concat, expr, lit, raise_error, struct, to_json, when}
     val incoming = df.schema
+    val writeDefaults = evo.fold(Map.empty[String, String])(_.writeDefaults)
     // W87 generated columns ride the same choke point as write defaults:
     // omitted -> computed over the batch row, provided -> validated
-    val generated: Map[String, String] =
-      if (!check) Map.empty
-      else snapshotIdOf(table, branch).map(loadSnapshot(table, _))
-        .map(_.evo.generated).getOrElse(Map.empty)
+    val generated = evo.fold(Map.empty[String, String])(_.generated)
     def mismatch(): Nothing = throw new IllegalArgumentException(
       s"schema mismatch appending to $table@$branch: table has " +
         s"${expected.toDDL}; batch has ${incoming.toDDL}")
@@ -4883,7 +4895,7 @@ class BranchCatalog(
     // overwrite, upsert, MOR upsert, CDC apply, txn append) — except
     // mergeInto, whose source rows may only pair for matching; it opts
     // out and guards its written survivors itself
-    if (check) constraintGuard(genChecked, table, branch) else genChecked
+    if (evo.isDefined) constraintGuard(genChecked, props) else genChecked
   }
 
   /** Evolve table@branch's schema: ADD nullable columns and WIDEN numeric
@@ -5615,11 +5627,11 @@ class BranchCatalog(
       table: String, df: DataFrame, specs: Seq[PartitionSpec],
       branch: String = "main",
       epochStamp: Option[(String, Long)] = None): Snapshot = {
-    val head = snapshotIdOf(table, branch).map(loadSnapshot(table, _))
+    val (head, props) = writeState(table, branch)
     val aligned = head match {
       case Some(snap) if snap.schemaDdl.nonEmpty =>
         alignToSchema(df, StructType.fromDDL(snap.schemaDdl), table, branch,
-          writeDefaults = snap.evo.writeDefaults)
+          Some(snap.evo), props)
       case _ => df
     }
     // the table's OWN registry routes the write (its active fields carry
@@ -5640,7 +5652,7 @@ class BranchCatalog(
     val specFmt = headFmt.getOrElse(PartitionSpec.formatMulti(specs))
     val newFiles = writePartitionedDataFiles(table, aligned, fields,
       ids = head.map(_.evo.fieldIds).getOrElse(Map.empty),
-      advisoryOrder = head.map(_ => writeOrderOf(table, branch, aligned.schema))
+      advisoryOrder = head.map(_ => writeOrderOf(table, props, aligned.schema))
         .getOrElse(Nil))
     val manifest = writeManifest(table, newFiles, aligned.schema)
     commitTable(table, branch, None, epochStamp = epochStamp) { (parent, _) =>
@@ -6024,7 +6036,7 @@ class BranchCatalog(
       require(schema.fieldNames.contains(k), s"key column $k is not in ${schema.toDDL}")
     val totalFiles = cur.manifests.map(_.fileCount).sum
     val aligned = alignToSchema(source, schema, table, branch,
-      writeDefaults = cur.evo.writeDefaults)
+      Some(cur.evo), tableProperties(table, branch))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (aligned.isEmpty) return UpsertResult(cur, 0L, 0L, 0L, totalFiles)
@@ -6111,10 +6123,10 @@ class BranchCatalog(
       case _ => false
     }
     val totalFiles = cur.manifests.map(_.fileCount).sum
-    // check=false: a merge source row may only pair for matching and
+    // no guards: a merge source row may only pair for matching and
     // never be written whole — constraints apply to the WRITTEN outcomes
     // (insert/update-labeled survivors) below
-    val aligned = alignToSchema(source, schema, table, branch, check = false)
+    val aligned = alignToSchema(source, schema, table, branch, None)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // an EMPTY source still fires by-source clauses on every target row
@@ -6240,7 +6252,7 @@ class BranchCatalog(
     for (MergeClause.MatchedUpdate(_, set) <- clauses; c <- set.keys)
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
     val totalFiles = cur.manifests.map(_.fileCount).sum
-    val aligned = alignToSchema(source, schema, table, branch, check = false)
+    val aligned = alignToSchema(source, schema, table, branch, None)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (aligned.isEmpty) return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
@@ -7566,6 +7578,38 @@ object BranchCatalog {
   /** StructField metadata key Spark's parquet writer/reader use for
     * field ids (`ParquetUtils.FIELD_ID_METADATA_KEY`). */
   val FieldIdKey = "parquet.field.id"
+
+  /** The JSON of a snapshot document. Each [[ManifestRef]] in it leaves
+    * out every field equal to its constructor default, which json4s fills
+    * back when the snapshot is read: a snapshot inlines every manifest
+    * ref, so its unused fields would otherwise be written again on every
+    * commit. */
+  private[wap] def snapshotJson(s: Snapshot): String = {
+    implicit val fmts: Formats = DefaultFormats
+    def trim(refs: JValue): JValue = refs match {
+      case JArray(ms) => JArray(ms.map {
+        case JObject(fs) => JObject(fs.filterNot { case (k, v) => refDefaults.get(k).contains(v) })
+        case m => m
+      })
+      case other => other
+    }
+    org.json4s.jackson.JsonMethods.compact(Extraction.decompose(s) match {
+      case JObject(fs) => JObject(fs.map {
+        case (k @ ("manifests" | "deleteManifests"), v) => k -> trim(v)
+        case f => f
+      })
+      case other => other
+    })
+  }
+
+  /** The JSON of each defaulted [[ManifestRef]] field, by name. */
+  private lazy val refDefaults: Map[String, JValue] = {
+    implicit val fmts: Formats = DefaultFormats
+    Extraction.decompose(ManifestRef("", 0L, 0L)) match {
+      case JObject(fs) => fs.toMap -- Seq("path", "fileCount", "rows")
+      case _ => Map.empty
+    }
+  }
 
   /** Lost refs-commit races a commit retries before giving up. */
   private val MaxCommitRetries = 50

@@ -275,4 +275,20 @@ class DedupIndexSpec extends SparkSpecBase {
     assert(cat.snapshotMetaOpt("documents", wm).isEmpty,
       "a superseded watermark must not pin history forever")
   }
+
+  test("the dedup check's per-key counts pair NULL keys: equal multisets compare equal") {
+    import spark.implicits._
+    val a = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (1L, 2L), (null, 3L), (null, null), (4L, null))
+      .toDF("id_a", "id_b")
+    val same = Seq[(java.lang.Long, java.lang.Long)]((null, null), (4L, null), (1L, 2L), (null, 3L), (1L, 2L))
+      .toDF("id_a", "id_b")
+    def diffs(x: DataFrame, y: DataFrame): Long =
+      CheckQueries.keyCounts(x, y, Seq("id_a", "id_b")).filter(col("__s") =!= col("__r")).count()
+    assert(diffs(a, same) == 0L)
+    assert(CheckQueries.keyCounts(a, same, Seq("id_a", "id_b")).count() == 4L,
+      "one row per distinct key, the NULL keys included")
+    // a missing or an extra NULL-keyed row is a difference
+    assert(diffs(a, same.filter(col("id_b").isNotNull)) == 2L)
+    assert(diffs(a, same.unionByName(a.filter(col("id_a").isNull))) == 2L)
+  }
 }

@@ -40,6 +40,12 @@ class OverridingCatalog(spark: SparkSession, root: String) extends BranchCatalog
     counted(super.compactDataFiles(table, branch, targetFiles))
 }
 
+/** Counts refs reads, as the benchmark's traced catalog does. */
+class RefsCountingCatalog(spark: SparkSession, root: String) extends BranchCatalog(spark, root) {
+  val reads = new AtomicLong(0L)
+  override def currentRefs(): Refs = { reads.incrementAndGet(); super.currentRefs() }
+}
+
 class CatalogOverridesSpec extends SparkSpecBase {
   test("a subclass overriding the benchmark's methods runs a WAP cycle through them") {
     val cat = new OverridingCatalog(spark, Files.createTempDirectory("overrides").toString)
@@ -56,5 +62,25 @@ class CatalogOverridesSpec extends SparkSpecBase {
     assert(cat.scan("t", filter = Some(col("v") === 9L)).count() == 2)
     assert(cat.branchStats("t").count() >= 1)
     assert(cat.calls.get() > 10)
+  }
+
+  test("a published WAP cycle reads the refs at most 8 times, its next scan once") {
+    val cat = new RefsCountingCatalog(spark, Files.createTempDirectory("refs-reads").toString)
+    val rows = spark.range(0, 10).select(col("id"), (col("id") % 3).as("v"))
+    cat.createTableIfNotExists("t", rows.schema)
+    // a CHECK constraint and a write order: both guards read the properties
+    cat.setTableProperties("t", Map(s"${BranchCatalog.ConstraintPrefix}nonneg" -> "v >= 0",
+      BranchCatalog.WriteOrderKey -> "v"))
+    def reads[T](body: => T): Long = { val r0 = cat.reads.get(); body; cat.reads.get() - r0 }
+    val counts = (0 until 3).map { i =>
+      val cycle = reads(assert(Wap.run(cat, "t", rows, Seq(graft.quality.NotNull("v")), s"b$i",
+        LogAlerter).published))
+      val scan = reads(assert(cat.scan("t", "main", Some(col("v").isNull)).count() == 0L))
+      (cycle, scan)
+    }
+    // the fresh catalog's first cycle also resolves the table's directory
+    assert(counts.tail.forall(_._1 <= 8), s"refs reads per cycle: ${counts.map(_._1)}")
+    // dropping the branch keeps the table's directory alias cached
+    assert(counts.forall(_._2 == 1), s"refs reads per scan after a cycle: ${counts.map(_._2)}")
   }
 }
