@@ -4830,7 +4830,7 @@ class BranchCatalog(
       evo: Option[SchemaEvo],
       /** The table's properties, whose CHECK constraints guard every
         * aligned row when `evo` is given. */
-      props: Map[String, String] = Map.empty): DataFrame = {
+      props: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, concat, expr, lit, raise_error, struct, to_json, when}
     val incoming = df.schema
     val writeDefaults = evo.fold(Map.empty[String, String])(_.writeDefaults)
@@ -6126,7 +6126,7 @@ class BranchCatalog(
     // no guards: a merge source row may only pair for matching and
     // never be written whole — constraints apply to the WRITTEN outcomes
     // (insert/update-labeled survivors) below
-    val aligned = alignToSchema(source, schema, table, branch, None)
+    val aligned = alignToSchema(source, schema, table, branch, None, Map.empty)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // an EMPTY source still fires by-source clauses on every target row
@@ -6252,7 +6252,7 @@ class BranchCatalog(
     for (MergeClause.MatchedUpdate(_, set) <- clauses; c <- set.keys)
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
     val totalFiles = cur.manifests.map(_.fileCount).sum
-    val aligned = alignToSchema(source, schema, table, branch, None)
+    val aligned = alignToSchema(source, schema, table, branch, None, Map.empty)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (aligned.isEmpty) return MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
