@@ -391,7 +391,7 @@ class GraftCdcMicroBatchStream(
     new GraftCdcReaderFactory(
       Bridge.parquetReadFunc(spark, baseSchema, prunedData, Nil),
       Bridge.parquetReadFunc(spark, sidecarSchema, sidecarSchema, Nil),
-      prunedData, requiredOut, Bridge.serializableHadoopConf(spark),
+      prunedData, requiredOut, Bridge.sharedHadoopConf(spark),
       s"changes $root/$tableName@$branch")
   }
 
@@ -414,7 +414,7 @@ private[sql] class GraftCdcReaderFactory(
     /** The output schema: `prunedData`'s columns plus whichever virtual
       * columns the query projected, in output order. */
     requiredOut: StructType,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
     /** The stream's [[GraftDeleteSets.Plan]] scope. */
     scope: String)
   extends PartitionReaderFactory {
@@ -466,7 +466,7 @@ private[sql] class GraftCdcReaderFactory(
         val proj = projection("delete", seq, id)
         GraftReaderFactory.reader(marked.entrySet().iterator().asScala.flatMap { e =>
           val path = new org.apache.hadoop.fs.Path(e.getKey)
-          val len = path.getFileSystem(conf.value).getFileStatus(path).getLen
+          val len = path.getFileSystem(conf.value.value).getFileStatus(path).getLen
           var idx = -1L
           Bridge.flattenBatches(dataReadFunc(Bridge.partitionedFile(e.getKey, len)))
             .filter { _ => idx += 1; e.getValue.contains(idx) }

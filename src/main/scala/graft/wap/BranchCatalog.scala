@@ -25,9 +25,10 @@ case class DataFileMeta(
       * was written by [[BranchCatalog.appendPartitioned]]; empty for
       * unpartitioned files (which partition pruning then never skips). */
     partition: Map[String, String] = Map.empty,
-    /** File size in bytes (from the write-time FileStatus — no extra IO);
-      * 0 in pre-r8 metadata. Streaming reads and byte-aware planning use
-      * it; a 0 falls back to a getFileStatus call. */
+    /** File size in bytes, from the status the writing task takes of the
+      * file it just closed (an import's from the file's own status); 0 in
+      * pre-r8 metadata. Streaming reads and byte-aware planning use it; a
+      * 0 falls back to a getFileStatus call. */
     bytes: Long = 0L,
     /** Row-lineage entry OFFSET within the manifest (W73): the running
       * sum of earlier entries' row counts, written by [[BranchCatalog
@@ -68,7 +69,9 @@ case class DataFileMeta(
   * The defaults are part of the on-disk format: a snapshot document
   * leaves out every field equal to its default
   * ([[BranchCatalog.snapshotJson]]), so changing one changes what every
-  * snapshot written since means. */
+  * snapshot written since means. The document is stored gzip-compressed
+  * ([[BranchCatalog.snapshotBytes]]); plain documents written before
+  * that still load ([[BranchCatalog.parseSnapshot]]). */
 case class ManifestRef(path: String, fileCount: Long, rows: Long,
     asOf: Option[String] = None,
     seq: Long = 0L,
@@ -691,7 +694,10 @@ class BranchCatalog(
     * racing committers. Parent directories are created as needed.
     * Returns false only when the target already exists (= lost the
     * commit race); every other I/O error propagates as itself. */
-  private def writeString(p: Path, s: String): Boolean = {
+  private def writeString(p: Path, s: String): Boolean =
+    writeBytes(p, s.getBytes(StandardCharsets.UTF_8))
+
+  private def writeBytes(p: Path, bytes: Array[Byte]): Boolean = {
     val qualified = fs.makeQualified(p)
     if ("file" == qualified.toUri.getScheme) {
       // local fast path: plain nio. Going through the Hadoop
@@ -704,7 +710,7 @@ class BranchCatalog(
       val nioTmp = nio.getParent.resolve(s".tmp-${UUID.randomUUID().toString.take(12)}")
       try {
         java.nio.file.Files.createDirectories(nio.getParent)
-        java.nio.file.Files.write(nioTmp, s.getBytes(StandardCharsets.UTF_8))
+        java.nio.file.Files.write(nioTmp, bytes)
         try { java.nio.file.Files.createLink(nio, nioTmp); true }
         catch { case _: java.nio.file.FileAlreadyExistsException => false }
       } finally {
@@ -715,7 +721,7 @@ class BranchCatalog(
       val tmp = new Path(p.getParent, s".tmp-${UUID.randomUUID().toString.take(12)}")
       try {
         val out = fs.create(tmp, false)
-        try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+        try out.write(bytes) finally out.close()
         // HDFS-style rename: atomic; an existing destination makes it
         // return false (or, on some stores, raise)
         try fs.rename(tmp, p)
@@ -726,12 +732,13 @@ class BranchCatalog(
     }
   }
 
-  private def readString(p: Path): String = {
+  private def readString(p: Path): String = new String(readBytes(p), StandardCharsets.UTF_8)
+
+  private def readBytes(p: Path): Array[Byte] = {
     val qualified = fs.makeQualified(p)
     if ("file" == qualified.toUri.getScheme)
       // local fast path: one open+read, no ChecksumFileSystem .crc probe
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(qualified.toUri.getPath)), StandardCharsets.UTF_8)
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(qualified.toUri.getPath))
     else {
       val in = fs.open(p)
       try {
@@ -739,10 +746,14 @@ class BranchCatalog(
         val buf = new Array[Byte](8192)
         var n = in.read(buf)
         while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, StandardCharsets.UTF_8)
+        bytes.toByteArray
       } finally in.close()
     }
   }
+
+  /** The snapshot document at `p`, in either on-disk encoding
+    * ([[BranchCatalog.parseSnapshot]]). */
+  private def readSnapshot(p: Path): Snapshot = BranchCatalog.parseSnapshot(readBytes(p))
 
   // ---- refs (optimistic versioned commits) ------------------------------
 
@@ -839,7 +850,7 @@ class BranchCatalog(
       BranchCatalog.snapCache.remove(key)
     }
     val t0 = System.nanoTime()
-    val r = Serialization.read[Snapshot](readString(p))
+    val r = readSnapshot(p)
     BranchCatalog.metaParseNanos.addAndGet(System.nanoTime() - t0)
     BranchCatalog.metaParseCount.incrementAndGet()
     BranchCatalog.snapCache.put(key, r)
@@ -852,7 +863,7 @@ class BranchCatalog(
     if (fs.exists(snapPath(table, id))) Some(loadSnapshot(table, id)) else None
 
   private[wap] def writeSnapshot(table: String, s: Snapshot): Unit = {
-    require(writeString(snapPath(table, s.id), BranchCatalog.snapshotJson(s)),
+    require(writeBytes(snapPath(table, s.id), BranchCatalog.snapshotBytes(s)),
       s"snapshot ${s.id} already exists for $table")
     // the committer is the next reader of its own snapshot: pre-populate
     BranchCatalog.snapCache.put(snapPath(table, s.id).toString, s)
@@ -1019,110 +1030,80 @@ class BranchCatalog(
   private def sized(files: Seq[DataFileMeta]): Seq[(String, Long)] =
     files.map(f => f.path -> f.bytes)
 
-  /** Write a DataFrame batch as immutable parquet files; return their
-    * metadata — row counts AND per-column min/max/null stats, all read
-    * from footers, never by rescanning data. */
-  private def writeDataFiles(table: String, df: DataFrame,
-      ids: Map[String, Int]): Seq[DataFileMeta] = {
-    val commitId = UUID.randomUUID().toString
-    val dir = new Path(rootPath, s"tables/${physDir(table)}/data/$commitId")
-    withFieldIds(df, ids).write.parquet(dir.toString)
-    footerMetas(fs.listStatus(dir).toSeq
-      .filter(st => st.getPath.getName.endsWith(".parquet")))
-  }
-
-  /** Footer stats for a commit's files, read CONCURRENTLY: each read is an
-    * independent footer fetch (latency-bound on remote stores), and the
-    * driver otherwise pays them back-to-back after every write job. Order
-    * is preserved. */
-  private def footerMetas(sts: Seq[org.apache.hadoop.fs.FileStatus]): Seq[DataFileMeta] =
-    if (sts.length <= 1) sts.map(footerMeta)
-    else BranchCatalog.metaIo(sts)(footerMeta)
-
-  /** Hidden-partitioned write: ONE job writes the batch hash-grouped into
-    * nested `__pv<i>=<value>` subdirectories, one level per transform
-    * (the transform columns exist only in the directory names, never in
-    * the data files), then each file's metadata records its transform
-    * values alongside the footer stats (keys [[PartitionSpec.pvKey]]:
-    * "pv" for the first transform — byte-compatible with every
-    * single-transform table ever written — then "pv1", "pv2", …). */
-  private def writePartitionedDataFiles(
-      table: String, df: DataFrame, fields: Seq[PartitionSpec.SpecField],
+  /** The one data-file writer: every table data file (appends, DML and
+    * compaction output, MOR tombstone keys, position sidecars) is written
+    * here, and each file's metadata — rows, bytes, null counts, bounds
+    * and transform values — comes back from the task that wrote it.
+    *
+    * One Spark job over `df`'s rows ([[org.apache.spark.sql.graft.Bridge
+    * .runOnRows]]); each task opens a file under `data/<commitId>/` only
+    * when its first row arrives and writes it in place. Nothing is
+    * committed until a manifest names the files, so there is no
+    * `_temporary` staging, rename or job commit, no driver listing and no
+    * driver footer read, and an empty frame writes no file. A failed task
+    * deletes what it wrote; one that dies leaves an unreferenced file for
+    * orphan sweep ([[removeOrphanFiles]]).
+    *
+    * Under active hidden-partition `fields` the rows carry their
+    * (path-escaped, [[PathSafeEscape]]) transform values as trailing
+    * `__pv<i>` columns, arranged so each task sees them grouped; a task
+    * rolls to a new file per value group, in nested Hive-style
+    * `__pv<i>=<value>` directories (positional per write), and records
+    * each level's true value under the field's stable key
+    * ([[PartitionSpec.pvKey]]: "pv", then "pv1", "pv2", … — keys follow
+    * field ids, so a position reused after spec evolution never aliases
+    * an old field). A NULL or empty transform value records nothing at
+    * its level: it can never be proven out of range, so pruning keeps the
+    * file. `sortCols` asks for ONE file per value group (hard repartition),
+    * ordered by `sortCols` within it — the layout
+    * [[Snapshot.sortWithinPartitions]] promises; otherwise the rows are
+    * rebalanced on the values, so AQE coalesces tiny groups and splits a
+    * skewed one across files, optionally ordered by `advisoryOrder`
+    * ([[BranchCatalog.WriteOrderKey]]) to tighten row-group stats.
+    * Unpartitioned writes ignore both: callers order those rows. */
+  private def writeFiles(table: String, df: DataFrame,
+      fields: Seq[PartitionSpec.SpecField] = Nil,
       sortCols: Seq[String] = Nil,
       ids: Map[String, Int] = Map.empty,
-      /** Advisory within-task order ([[BranchCatalog.WriteOrderKey]]):
-        * tightens row-group stats WITHOUT forcing the one-file-per-value
-        * repartition contract `sortCols` implies — plain appends keep
-        * the AQE rebalance (skew still splits across files). */
       advisoryOrder: Seq[String] = Nil): Seq[DataFileMeta] = {
     import org.apache.spark.sql.functions.col
-    require(fields.nonEmpty && fields.forall(_.active),
-      "partitioned write needs at least one ACTIVE transform")
-    val specs = fields.map(_.spec)
+    val active = fields.filter(_.active)
+    val specs = active.map(_.spec)
     require(specs.indices.forall(i => !df.schema.fieldNames.contains(s"__pv$i")),
       "batch columns may not collide with the __pv<i> partition-value names")
-    val commitId = UUID.randomUUID().toString
-    val dir = new Path(rootPath, s"tables/${physDir(table)}/data/$commitId")
-    // directory levels stay POSITIONAL per write (__pv0/__pv1/...);
-    // manifest metadata keys by each field's STABLE id — after spec
-    // evolution position and id diverge, and the id is what pruning
-    // resolves (a reused position must never alias an old field's key)
+    val dir = fs.makeQualified(new Path(rootPath,
+      s"tables/${physDir(table)}/data/${UUID.randomUUID()}"))
+    val data = withFieldIds(df, ids)
     val pvCols = specs.indices.map(i => s"__pv$i")
-    // %XX-escape '%' and non-ASCII bytes BEFORE partitionBy so each
-    // physical directory name is pure ASCII on any filesystem locale
-    // (an ASCII-locale JVM throws InvalidPathException on literal
-    // non-ASCII dir names); manifest metadata keeps the true strings
-    val withPv = specs.zipWithIndex.foldLeft(withFieldIds(df, ids)) {
-      case (acc, (spec, i)) =>
-        val colType = df.schema.fields.find(_.name == spec.column).map(_.dataType)
-          .getOrElse(throw new IllegalArgumentException(
-            s"partition column '${spec.column}' not in batch schema"))
-        acc.withColumn(s"__pv$i", org.apache.spark.sql.graft.Bridge.column(
-          PathSafeEscapeExpr(org.apache.spark.sql.graft.Bridge.expression(
-            spec.valueCol(colType)))))
+    val withPv = specs.zipWithIndex.foldLeft(data) { case (acc, (spec, i)) =>
+      val colType = df.schema.fields.find(_.name == spec.column).map(_.dataType)
+        .getOrElse(throw new IllegalArgumentException(
+          s"partition column '${spec.column}' not in batch schema"))
+      acc.withColumn(s"__pv$i", org.apache.spark.sql.graft.Bridge.column(
+        PathSafeEscapeExpr(org.apache.spark.sql.graft.Bridge.expression(
+          spec.valueCol(colType)))))
     }
-    // plain appends REBALANCE on the partition values: AQE coalesces
-    // many tiny value groups into one task AND SPLITS a skewed value
-    // (a hot day at 100 TB) across several tasks/files — multiple files
-    // per value are fine, each carries its pv in the manifest. The
-    // sorted-compaction path keeps the hard repartition: its ONE-file-
-    // per-value layout is the contract [[Snapshot.sortWithinPartitions]]
-    // (and the W57 exchange-free SMJ ordering report) depends on.
+    // an empty value lands in the NULL directory, mapped after the
+    // distribution and before the local sort, where Spark's partitioned
+    // writer maps it
     val arranged =
-      if (sortCols.isEmpty) {
-        val re = withPv.hint("rebalance", pvCols.map(col): _*)
-        if (advisoryOrder.isEmpty) re
-        else re.sortWithinPartitions((pvCols ++ advisoryOrder).map(col): _*)
-      }
-      else withPv.repartition(pvCols.map(col): _*)
-        // order rows INSIDE each partition-value group so parquet
-        // row-group/page stats tighten on the sort keys (file-level
-        // min/max can't shrink — each value group is one file)
-        .sortWithinPartitions((pvCols ++ sortCols).map(col): _*)
-    arranged.write.partitionBy(pvCols: _*).parquet(dir.toString)
-    // recursive descent: level i contributes pvKey(i) -> unescaped value
-    // (Spark escapes dir names Hive-style — %XX for special chars, '+'
-    // left alone; URLDecoder would corrupt literal '+'); a null transform
-    // value (__HIVE_DEFAULT_PARTITION__) records no metadata at its
-    // level — it can never be proven out of range, so pruning keeps the
-    // file (sound)
-    def walk(p: Path, level: Int, acc: Map[String, String]): Seq[DataFileMeta] =
-      if (level == specs.length)
-        footerMetas(fs.listStatus(p).toSeq
-          .filter(st => st.getPath.getName.endsWith(".parquet")))
-          .map(_.copy(partition = acc))
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"__pv$level="))
-        .flatMap { pd =>
-          val raw = pd.getPath.getName.stripPrefix(s"__pv$level=")
-          val next =
-            if (raw == "__HIVE_DEFAULT_PARTITION__") acc
-            else acc + (fields(level).key -> PathSafeEscape.unescape(
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .unescapePathName(raw)))
-          walk(pd.getPath, level + 1, next)
-        }
-    walk(dir, 0, Map.empty)
+      if (specs.isEmpty) data
+      else pvCols.foldLeft(
+        if (sortCols.nonEmpty) withPv.repartition(pvCols.map(col): _*)
+        else withPv.hint("rebalance", pvCols.map(col): _*)) { (acc, c) =>
+          acc.withColumn(c, org.apache.spark.sql.functions.nullif(col(c),
+            org.apache.spark.sql.functions.lit("")))
+        }.sortWithinPartitions((pvCols ++ (if (sortCols.nonEmpty) sortCols else advisoryOrder))
+          .map(col): _*)
+    // the columns as the optimized plan types them (its nullability can
+    // be tighter than the frame's), as a `df.write` declares them
+    val schema = StructType(org.apache.spark.sql.graft.Bridge.optimizedSchema(arranged)
+      .take(data.schema.length))
+    val task = new BranchCatalog.FileWriteTask(
+      org.apache.spark.sql.graft.Bridge.parquetStageWriterFactory(spark, schema),
+      dir.toString, UUID.randomUUID().toString, schema, active.map(_.key),
+      spark.sessionState.conf.maxRecordsPerFile)
+    org.apache.spark.sql.graft.Bridge.runOnRows(arranged)(task).toSeq.flatten
   }
 
   /** The snapshot's FULL partition-field registry, outermost first
@@ -1136,18 +1117,6 @@ class BranchCatalog(
   /** Only the fields new writes route by. */
   private[graft] def activeSpecsOf(fmt: Option[String]): Seq[PartitionSpec.SpecField] =
     specsOf(fmt).filter(_.active)
-
-  /** Spec-aware rewrite: partitioned tables keep their hidden layout
-    * through DML rewrites and compaction (otherwise every delete/update
-    * would silently degrade partition pruning on the touched files). */
-  private def writeTableFiles(
-      table: String, df: DataFrame, fields: Seq[PartitionSpec.SpecField],
-      sortCols: Seq[String] = Nil,
-      ids: Map[String, Int] = Map.empty): Seq[DataFileMeta] = {
-    val active = fields.filter(_.active)
-    if (active.nonEmpty) writePartitionedDataFiles(table, df, active, sortCols, ids)
-    else writeDataFiles(table, df, ids)
-  }
 
   /** Stamp each column the table tracks with its parquet field id (W58):
     * the writer then records `PARQUET:field_id` in every footer, which
@@ -1169,9 +1138,6 @@ class BranchCatalog(
         }
       }: _*)
     }
-
-  private def footerMeta(st: org.apache.hadoop.fs.FileStatus): DataFileMeta =
-    BranchCatalog.footerMetaOf(st, spark.sparkContext.hadoopConfiguration)
 
   // ---- public API (the reference's catalog surface) ----------------------
 
@@ -1659,6 +1625,13 @@ class BranchCatalog(
       b.flatMap(_.tableProps.get(table)).getOrElse(Map.empty))
   }
 
+  /** [[writeState]] of a table that must exist on `branch`. */
+  private def headState(table: String, branch: String): (Snapshot, Map[String, String]) =
+    writeState(table, branch) match {
+      case (Some(head), props) => (head, props)
+      case _ => sys.error(s"no table $table on $branch")
+    }
+
   /** reference app.py:178-199 append_rows_to_table_in_branch: write the
     * batch as new immutable files, commit ONE new manifest + a child
     * snapshot on the branch. Readers of other branches never see these
@@ -1701,8 +1674,8 @@ class BranchCatalog(
     val arranged =
       if (order.isEmpty) aligned
       else aligned.sortWithinPartitions(order.map(org.apache.spark.sql.functions.col): _*)
-    val newFiles = writeDataFiles(table, arranged,
-      head.map(_.evo.fieldIds).getOrElse(Map.empty))
+    val newFiles = writeFiles(table, arranged,
+      ids = head.map(_.evo.fieldIds).getOrElse(Map.empty))
     val manifest = writeManifest(table, newFiles, aligned.schema)
     commitTable(table, branch, None, epochStamp = epochStamp) { (parent, _) =>
       Some(Change(SnapshotOp.Append, Seq(manifest), _.copy(
@@ -1792,9 +1765,7 @@ class BranchCatalog(
   def addDataFiles(table: String, location: String,
       branch: String = "main"): AddFilesResult = {
     import org.apache.spark.sql.functions.{col => fcol}
-    val curId = snapshotIdOf(table, branch)
-      .getOrElse(sys.error(s"no table $table on $branch"))
-    val cur = loadSnapshot(table, curId)
+    val (cur, props) = headState(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     require(!cur.evo.renamedFiles,
       s"$table has files written under pre-rename column names; imported " +
@@ -1918,13 +1889,12 @@ class BranchCatalog(
     val metas0 = collected.map(_._1.copy(inexact = true))
 
     // ---- CHECK constraints: the one step that must read data ----
-    if (tableProperties(table, branch).keys
-        .exists(_.startsWith(BranchCatalog.ConstraintPrefix))) {
+    if (props.keys.exists(_.startsWith(BranchCatalog.ConstraintPrefix))) {
       val df = readFiles(
         BranchCatalog.readSchema(schema, cur.evo.copy(idlessFiles = true)), sized(metas0))
       // the same fused guard every write path uses: any violating row
       // raises with the constraint name BEFORE anything commits
-      constraintGuard(df, tableProperties(table, branch)).count()
+      constraintGuard(df, props).count()
       ()
     }
 
@@ -2054,31 +2024,26 @@ class BranchCatalog(
       schemaEvolution: Boolean = false): Snapshot = {
     require(keyCols.nonEmpty, "upsertKeysMOR needs at least one key column")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     requireTombstoneHeadroom(table, branch, cur, "upsertKeysMOR")
     requireNoLineage(table, branch, cur, "upsertKeysMOR")
     val schema = StructType.fromDDL(cur.schemaDdl)
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"upsert key column $c is not a column of $table"))
-    val aligned = alignToSchema(source, schema, table, branch,
-      Some(cur.evo), tableProperties(table, branch))
+    val aligned = alignToSchema(source, schema, table, branch, Some(cur.evo), props)
     // the new versions are table DATA: on a partitioned table they carry
     // transform values like any append (key/tombstone files are not —
     // they are metadata the scan anti-joins, never partition-pruned)
-    val dataFiles = writeTableFiles(table, aligned,
+    val dataFiles = writeFiles(table, aligned,
       specsOf(cur.partitionSpec), ids = cur.evo.fieldIds)
     val dataManifest = writeManifest(table, dataFiles, schema)
-    val keyFiles = writeDataFiles(table,
-      aligned.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct(),
-      Map.empty)
     // the tombstone's sequence equals the commit's, so it covers every
     // manifest with a LOWER sequence — all prior data, never the new
     // batch committed alongside it
-    val delManifest = writeManifest(table, keyFiles, schema)
-      .copy(asOf = Some(cur.id), keyCols = keyCols)
+    val delManifest = tombstone(table, cur,
+      aligned.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct(), keyCols)
     commitTable(table, branch, Some(cur), "MOR upsert", epochStamp) { (_, _) =>
-      Some(Change(SnapshotOp.UpsertMor, Seq(dataManifest), c =>
-        c.copy(deleteManifests = c.deleteManifests :+ delManifest.copy(seq = c.seq))))
+      Some(Change(SnapshotOp.UpsertMor, Seq(dataManifest), withDeletes(_, delManifest)))
     }
   }
 
@@ -2129,7 +2094,7 @@ class BranchCatalog(
     val inserts = latest.filter(col("_change_type") === "insert").drop(virtuals: _*)
     createTableIfNotExists(table, inserts.schema, branch)
     if (schemaEvolution) evolveSchemaForSource(table, inserts.schema, branch)
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"CDC key column $c is not a column of $table"))
@@ -2142,8 +2107,8 @@ class BranchCatalog(
       else changes.select(keyCols.map(col): _*).distinct()
     // an empty side writes no file and commits no manifest
     val dataFiles = writeRows(table, cur, alignToSchema(inserts, schema,
-      table, branch, Some(cur.evo), tableProperties(table, branch)))
-    val keyFiles = writeLive(table, delKeys)
+      table, branch, Some(cur.evo), props))
+    val keyFiles = writeFiles(table, delKeys)
     if (dataFiles.isEmpty && keyFiles.isEmpty) {
       // empty batch: nothing to commit, but the delivery record must
       // still land for exactly-once replay
@@ -2604,23 +2569,10 @@ class BranchCatalog(
       writeManifest(table, abs, schema, preserveRowIds = true).copy(firstRowId = 0L)
     }
 
-  /** The one writer of DML and maintenance output: `df` written under the
-    * active `fields` (sorted within each value by `sortCols`), its
-    * zero-row part files deleted — Spark stages one schema-only file for
-    * an empty frame, and no manifest will ever reference it — and the
-    * live files' metadata returned. */
-  private def writeLive(table: String, df: DataFrame,
-      fields: Seq[PartitionSpec.SpecField] = Nil, ids: Map[String, Int] = Map.empty,
-      sortCols: Seq[String] = Nil): Seq[DataFileMeta] = {
-    val (live, empty) = writeTableFiles(table, df, fields, sortCols, ids).partition(_.rows > 0)
-    empty.foreach(f => fs.delete(new Path(f.path), false))
-    live
-  }
-
-  /** [[writeLive]] of table rows under `cur`'s layout and field ids. */
+  /** [[writeFiles]] of table rows under `cur`'s layout and field ids. */
   private def writeRows(table: String, cur: Snapshot, df: DataFrame,
       sortCols: Seq[String] = Nil): Seq[DataFileMeta] =
-    writeLive(table, df, specsOf(cur.partitionSpec), cur.evo.fieldIds, sortCols)
+    writeFiles(table, df, specsOf(cur.partitionSpec), sortCols, cur.evo.fieldIds)
 
   /** The current rows of `files` (data files of `cur`) as a rewrite or a
     * positional mark reads them: the schema columns, the lineage columns
@@ -2662,10 +2614,23 @@ class BranchCatalog(
     * ([[withDeletes]]). */
   private def writeSidecar(table: String, cur: Snapshot, marks: DataFrame): Option[ManifestRef] = {
     val keyCols = Seq(BranchCatalog.PosPathCol, BranchCatalog.PosIdxCol)
-    val files = writeLive(table, marks.select(keyCols.map(marks.col): _*))
+    val files = writeFiles(table, marks.select(keyCols.map(marks.col): _*))
     if (files.isEmpty) None
     else Some(writeManifest(table, files, BranchCatalog.posDeleteSchema)
       .copy(asOf = Some(cur.id), keyCols = keyCols, posDelete = true))
+  }
+
+  /** The equality tombstone of `keys` (distinct key rows of `cur`'s
+    * table), anchored at `cur`; None when there are no keys, so an empty
+    * delete leaves no pending tombstone. The commit stamps its sequence
+    * ([[withDeletes]]): the delete applies to data committed before it,
+    * never to later appends. */
+  private def tombstone(table: String, cur: Snapshot, keys: DataFrame,
+      keyCols: Seq[String]): Option[ManifestRef] = {
+    val files = writeFiles(table, keys)
+    if (files.isEmpty) None
+    else Some(writeManifest(table, files, StructType.fromDDL(cur.schemaDdl))
+      .copy(asOf = Some(cur.id), keyCols = keyCols))
   }
 
   /** `c` with `dels` added to its pending deletes, stamped with `c`'s
@@ -2708,13 +2673,13 @@ class BranchCatalog(
     * MERGE source-only row). `target` and `source` read a column of the
     * row's two sides: `t.x` and `s.x` over a MERGE join, `x` over a bare
     * scan. */
-  private def withOutcomes[T](table: String, branch: String, cur: Snapshot,
+  private def withOutcomes[T](cur: Snapshot, props: Map[String, String],
       candidates: DataFrame, arms: Seq[Arm],
       target: String => Column = org.apache.spark.sql.functions.col,
       source: String => Column = org.apache.spark.sql.functions.col,
       keepUnfired: Column = org.apache.spark.sql.functions.lit(true))(
       body: Outcomes => T): T = {
-    val o = new Outcomes(table, branch, cur, candidates, arms, target, source, keepUnfired)
+    val o = new Outcomes(cur, props, candidates, arms, target, source, keepUnfired)
     try body(o) finally { o.rows.unpersist(); () }
   }
 
@@ -2731,7 +2696,7 @@ class BranchCatalog(
     * SETs the column or the row is an insert) and CHECK constraints
     * enforced ([[constraintGuard]]). Rows carried through are exempt from
     * both guards. */
-  private final class Outcomes(table: String, branch: String, cur: Snapshot,
+  private final class Outcomes(cur: Snapshot, props: Map[String, String],
       candidates: DataFrame, arms: Seq[Arm], target: String => Column,
       source: String => Column, keepUnfired: Column) {
     import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
@@ -2787,7 +2752,7 @@ class BranchCatalog(
         arms.indices.filter(arms(_).set.contains(c)).foldLeft(isI)((e, i) => e || arm === i)
       val out = rows.filter(keep).select((values ++ lineage :+ arm).toIndexedSeq: _*)
       constraintGuard(generatedGuard(out, cur, schema, wrote, explicit),
-        tableProperties(table, branch), Some(wrote)).drop(armCol)
+        props, Some(wrote)).drop(armCol)
     }
   }
 
@@ -2961,15 +2926,9 @@ class BranchCatalog(
     val tableCols = StructType.fromDDL(cur.schemaDdl).fieldNames.toSet
     keys.schema.fieldNames.foreach(c => require(tableCols.contains(c),
       s"delete key column $c is not a column of $table"))
-    val delFiles = writeDataFiles(table, keys.distinct(), Map.empty)
-    val tschema = StructType.fromDDL(cur.schemaDdl)
-    // the commit sequence pins the covered manifest set: the delete
-    // applies to data committed BEFORE it, never to later appends
-    val delManifest = writeManifest(table, delFiles, tschema)
-      .copy(asOf = Some(cur.id), keyCols = keys.schema.fieldNames.toSeq)
+    val delManifest = tombstone(table, cur, keys.distinct(), keys.schema.fieldNames.toSeq)
     commitTable(table, branch, Some(cur), "MOR delete") { (_, _) =>
-      Some(Change(SnapshotOp.DeleteMor, edit = c =>
-        c.copy(deleteManifests = c.deleteManifests :+ delManifest.copy(seq = c.seq))))
+      Some(Change(SnapshotOp.DeleteMor, edit = withDeletes(_, delManifest)))
     }
   }
 
@@ -2987,10 +2946,12 @@ class BranchCatalog(
     * naming a column the new schema lacks refuses the replace). */
   def replaceTable(table: String, df: DataFrame, branch: String = "main",
       specs: Seq[PartitionSpec] = Nil): Snapshot = {
-    val curId = snapshotIdOf(table, branch).getOrElse(sys.error(
-      s"no table $table on $branch — REPLACE needs an existing table (use create)"))
-    val cur = loadSnapshot(table, curId)
-    tableProperties(table, branch).foreach { case (k, v) =>
+    val (cur, props) = writeState(table, branch) match {
+      case (Some(head), props) => (head, props)
+      case _ => sys.error(
+        s"no table $table on $branch — REPLACE needs an existing table (use create)")
+    }
+    props.foreach { case (k, v) =>
       if (k.startsWith(BranchCatalog.ConstraintPrefix))
         spark.sessionState.sqlParser.parseExpression(v).collect {
           case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
@@ -3003,7 +2964,7 @@ class BranchCatalog(
     // same guard for the declared write sort order: properties survive the
     // replace, and a stale sort column would brick every later append
     // (writeOrderOf refuses unknown columns at write time)
-    tableProperties(table, branch).get(BranchCatalog.WriteOrderKey).foreach { v =>
+    props.get(BranchCatalog.WriteOrderKey).foreach { v =>
       v.split(",").map(_.trim).filter(_.nonEmpty).foreach(c =>
         require(df.schema.fieldNames.contains(c),
           s"REPLACE would orphan ${BranchCatalog.WriteOrderKey} (sort column $c " +
@@ -3014,9 +2975,9 @@ class BranchCatalog(
       PartitionSpec.SpecField(sp, i, active = true) }
     specs.foreach(sp => require(df.schema.fieldNames.contains(sp.column),
       s"partition column ${sp.column} not in the replacement schema"))
-    val checked = constraintGuard(df, tableProperties(table, branch))
+    val checked = constraintGuard(df, props)
     val manifest = writeManifest(table,
-      writeTableFiles(table, checked, fields, ids = evo.fieldIds), df.schema)
+      writeFiles(table, checked, fields, ids = evo.fieldIds), df.schema)
     // lineage-enabled tables keep tracking: every replaced row is an
     // INSERT and draws a fresh id (the replaced rows' ids retire with
     // their snapshot — reachable via time travel, never reused)
@@ -3035,12 +2996,12 @@ class BranchCatalog(
     * are cleared (everything they covered is gone). Metadata cost is the
     * same O(batch) as [[append]]. */
   def overwrite(table: String, df: DataFrame, branch: String = "main"): Snapshot = {
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     val aligned =
       if (cur.schemaDdl.nonEmpty) alignToSchema(df, StructType.fromDDL(cur.schemaDdl),
-        table, branch, Some(cur.evo), tableProperties(table, branch))
+        table, branch, Some(cur.evo), props)
       else df
-    val manifest = writeManifest(table, writeTableFiles(table, aligned,
+    val manifest = writeManifest(table, writeFiles(table, aligned,
       specsOf(cur.partitionSpec), ids = cur.evo.fieldIds),
       aligned.schema)
     commitTable(table, branch, Some(cur), "overwrite") { (_, _) =>
@@ -3120,7 +3081,9 @@ class BranchCatalog(
   private[wap] case class StagedTable(
       schemaDdl: String, appends: Vector[ManifestRef], deletes: Vector[ManifestRef],
       partitionSpec: Option[String] = None,
-      evo: SchemaEvo = SchemaEvo())
+      evo: SchemaEvo = SchemaEvo(),
+      /** The table's properties, read with the head it stages against. */
+      props: Map[String, String] = Map.empty)
 
   /** The staging handle [[transaction]] passes to its body. Staging
     * writes files and manifests eagerly; NOTHING is visible to any reader
@@ -3132,8 +3095,8 @@ class BranchCatalog(
 
     private def entry(table: String): StagedTable =
       byTable.getOrElseUpdate(table, {
-        val head = headOf(table, branch)
-        StagedTable(head.schemaDdl, Vector.empty, Vector.empty, head.partitionSpec, head.evo)
+        val (head, props) = headState(table, branch)
+        StagedTable(head.schemaDdl, Vector.empty, Vector.empty, head.partitionSpec, head.evo, props)
       })
 
     /** Stage an append (same alignment + partition routing as
@@ -3142,9 +3105,9 @@ class BranchCatalog(
     def append(table: String, df: DataFrame): Unit = {
       val st = entry(table)
       val aligned = alignToSchema(df, StructType.fromDDL(st.schemaDdl), table, branch,
-        Some(st.evo), tableProperties(table, branch))
+        Some(st.evo), st.props)
       val manifest = writeManifest(table,
-        writeTableFiles(table, aligned, specsOf(st.partitionSpec),
+        writeFiles(table, aligned, specsOf(st.partitionSpec),
           ids = st.evo.fieldIds),
         aligned.schema)
       byTable(table) = st.copy(appends = st.appends :+ manifest)
@@ -3159,10 +3122,10 @@ class BranchCatalog(
       val cols = StructType.fromDDL(st.schemaDdl).fieldNames.toSet
       keys.schema.fieldNames.foreach(c => require(cols.contains(c),
         s"delete key column $c is not a column of $table"))
-      val manifest = writeManifest(table,
-        writeDataFiles(table, keys.distinct(), Map.empty),
-        StructType.fromDDL(st.schemaDdl)).copy(keyCols = keys.schema.fieldNames.toSeq)
-      byTable(table) = st.copy(deletes = st.deletes :+ manifest)
+      val files = writeFiles(table, keys.distinct())
+      // no keys, no tombstone (as for deleteKeysMOR)
+      if (files.nonEmpty) byTable(table) = st.copy(deletes = st.deletes :+ writeManifest(table,
+        files, StructType.fromDDL(st.schemaDdl)).copy(keyCols = keys.schema.fieldNames.toSeq))
     }
 
     private[wap] def staged(): Seq[(String, StagedTable)] = byTable.toSeq
@@ -5650,7 +5613,7 @@ class BranchCatalog(
         PartitionSpec.SpecField(sp, i, active = true) }
     }
     val specFmt = headFmt.getOrElse(PartitionSpec.formatMulti(specs))
-    val newFiles = writePartitionedDataFiles(table, aligned, fields,
+    val newFiles = writeFiles(table, aligned, fields,
       ids = head.map(_.evo.fieldIds).getOrElse(Map.empty),
       advisoryOrder = head.map(_ => writeOrderOf(table, props, aligned.schema))
         .getOrElse(Nil))
@@ -5822,7 +5785,7 @@ class BranchCatalog(
       table: String, cond: Column, set: Map[String, Column],
       branch: String = "main"): UpdateResult = {
     require(set.nonEmpty, "updateWherePositional needs at least one SET column")
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
       s"$table@$branch has pending EQUALITY tombstones — materialize with " +
         "compactDataFiles before positional updates (one delete representation at a time)")
@@ -5836,7 +5799,7 @@ class BranchCatalog(
     // ONE read of the marked files' CURRENT rows (a version a pending
     // sidecar suppressed is not current — its replacement, if any, sits
     // in a later file this scan also covers)
-    withOutcomes(table, branch, cur, currentRows(cur, markFiles),
+    withOutcomes(cur, props, currentRows(cur, markFiles),
         Seq(Arm(cond, Arm.Update, set))) { o =>
       writeSidecar(table, cur, o.marks) match {
         case None => UpdateResult(cur, 0L, 0L, totalFiles)
@@ -5860,7 +5823,7 @@ class BranchCatalog(
       table: String, cond: Column, set: Map[String, Column],
       branch: String = "main"): UpdateResult = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (c <- set.keys)
       require(schema.fieldNames.contains(c), s"SET column $c is not in ${schema.toDDL}")
@@ -5869,7 +5832,7 @@ class BranchCatalog(
     val totalFiles = cur.manifests.map(_.fileCount).sum
     if (affectedFiles.isEmpty)
       return UpdateResult(cur, 0L, 0L, totalFiles)
-    withOutcomes(table, branch, cur, rewriteRows(cur, picked),
+    withOutcomes(cur, props, rewriteRows(cur, picked),
         Seq(Arm(cond, Arm.Update, set))) { o =>
       val (rowsUpdated, _, _) = o.counts
       val committed = commitRewrite(table, branch, cur, SnapshotOp.Update, "update",
@@ -5924,7 +5887,7 @@ class BranchCatalog(
     * and a null-keyed source row is NOT MATCHED (SQL MERGE semantics) —
     * with `clauses` as its arms. A row is exactly one of matched,
     * target-only or source-only, so the clause families never compete. */
-  private def withMergeOutcomes[T](table: String, branch: String, cur: Snapshot,
+  private def withMergeOutcomes[T](cur: Snapshot, props: Map[String, String],
       targetRows: DataFrame, aligned: DataFrame, keys: Seq[String],
       clauses: Seq[MergeClause])(body: Outcomes => T): T = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -5932,7 +5895,7 @@ class BranchCatalog(
       .join(aligned.withColumn("__s_hit", lit(true)).alias("s"),
         keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
     val (t, s) = (col("t.__t_hit").isNotNull, col("s.__s_hit").isNotNull)
-    withOutcomes(table, branch, cur, joined, mergeArms(clauses, t && s, !t && s, t && !s),
+    withOutcomes(cur, props, joined, mergeArms(clauses, t && s, !t && s, t && !s),
       c => col(s"t.$c"), c => col(s"s.$c"), keepUnfired = t)(body)
   }
 
@@ -6030,13 +5993,12 @@ class BranchCatalog(
     import org.apache.spark.sql.functions.{col => fcol, lit}
     require(keys.nonEmpty, "upsert needs at least one key column")
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (k <- keys)
       require(schema.fieldNames.contains(k), s"key column $k is not in ${schema.toDDL}")
     val totalFiles = cur.manifests.map(_.fileCount).sum
-    val aligned = alignToSchema(source, schema, table, branch,
-      Some(cur.evo), tableProperties(table, branch))
+    val aligned = alignToSchema(source, schema, table, branch, Some(cur.evo), props)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (aligned.isEmpty) return UpsertResult(cur, 0L, 0L, 0L, totalFiles)
@@ -6110,7 +6072,7 @@ class BranchCatalog(
     if (schemaEvolution) evolveSchemaForSource(table, source.schema, branch)
     require(clauses.count(_.isInstanceOf[MergeClause.NotMatchedInsert]) <= 1,
       "at most one WHEN NOT MATCHED clause")
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     val schema = StructType.fromDDL(cur.schemaDdl)
     for (k <- keys)
       require(schema.fieldNames.contains(k), s"key column $k is not in ${schema.toDDL}")
@@ -6177,7 +6139,7 @@ class BranchCatalog(
         else carry(table, cur, picked.zip(bsPicked).map { case (p, b) =>
           Picked(p.m, if (p.files.nonEmpty) p.files else b.files, p.hit ++ b.hit) })
 
-      withMergeOutcomes(table, branch, cur, rewriteRows(cur, picked), aligned, keys, clauses) { o =>
+      withMergeOutcomes(cur, props, rewriteRows(cur, picked), aligned, keys, clauses) { o =>
         val (nUpd, nDel, nIns) = o.counts
         val rewritten = writeRows(table, cur, o.kept)
         // join-free by-source tier: these files provably hold no source
@@ -6185,7 +6147,7 @@ class BranchCatalog(
         // over the by-source clauses straight on the file scan
         val (bsRewritten, nBsUpd, nBsDel) =
           if (bsFiles.isEmpty) (Seq.empty[DataFileMeta], 0L, 0L)
-          else withOutcomes(table, branch, cur, rewriteRows(cur, bsPicked),
+          else withOutcomes(cur, props, rewriteRows(cur, bsPicked),
               mergeArms(bySource, lit(false), lit(false), lit(true), stripTargetAlias)) { bs =>
             val (u, d, _) = bs.counts
             (writeRows(table, cur, bs.kept), u, d)
@@ -6241,7 +6203,7 @@ class BranchCatalog(
       "NOT MATCHED BY SOURCE touches every target row outside the source — " +
         "positional encoding would be O(table); use mergeInto (copy-on-write, " +
         "with metadata-only by-source tiers) for this shape")
-    val cur = headOf(table, branch)
+    val (cur, props) = headState(table, branch)
     require(cur.deleteManifests.forall(_.posDelete),
       s"$table@$branch has pending EQUALITY tombstones — materialize with " +
         "compactDataFiles before positional merges (one delete representation at a time)")
@@ -6261,7 +6223,7 @@ class BranchCatalog(
       // and decoded row ids; a matched row no clause fires on (or any
       // target-only row) simply STAYS in its file — the zero-cost case
       // copy-on-write cannot have
-      withMergeOutcomes(table, branch, cur, currentRows(cur, markFiles),
+      withMergeOutcomes(cur, props, currentRows(cur, markFiles),
           aligned, keys, clauses) { o =>
         val (nUpd, nDel, nIns) = o.counts
         if (nUpd + nDel + nIns == 0L) MergeIntoResult(cur, 0L, 0L, 0L, 0L, totalFiles)
@@ -6372,8 +6334,8 @@ class BranchCatalog(
     // SNAPSHOTS keep their own registry for time travel)
     rewriteWhole(table, branch, SnapshotOp.RewritePartition, "partition rewrite",
       _.copy(partitionSpec = Some(PartitionSpec.formatMulti(specs)))) { (cur, rows) =>
-      writeLive(table, rows, specs.zipWithIndex.map { case (sp, i) =>
-        PartitionSpec.SpecField(sp, i, active = true) }, cur.evo.fieldIds)
+      writeFiles(table, rows, specs.zipWithIndex.map { case (sp, i) =>
+        PartitionSpec.SpecField(sp, i, active = true) }, ids = cur.evo.fieldIds)
     }
   }
 
@@ -7431,7 +7393,7 @@ class BranchCatalog(
     val fresh: Set[String] = olderThanMillis match {
       case None => Set.empty
       case Some(cut) => snapFiles.flatMap { p =>
-        val s = Serialization.read[Snapshot](readString(p))
+        val s = readSnapshot(p)
         if (s.committedAtMillis >= cut) Some(s.id) else None
       }.toSet
     }
@@ -7444,7 +7406,7 @@ class BranchCatalog(
     while (!stable) {
       val anchors = snapFiles
         .filter(p => live.contains(p.getName.stripPrefix("snap-").stripSuffix(".json")))
-        .map(p => Serialization.read[Snapshot](readString(p)))
+        .map(p => readSnapshot(p))
         .flatMap(_.deleteManifests.flatMap(_.asOf))
         .toSet
       stable = anchors.subsetOf(live)
@@ -7453,7 +7415,7 @@ class BranchCatalog(
     val (keepSnaps, dropSnaps) = snapFiles.partition { p =>
       live.contains(p.getName.stripPrefix("snap-").stripSuffix(".json"))
     }
-    val liveSnapshots = keepSnaps.map(p => Serialization.read[Snapshot](readString(p)))
+    val liveSnapshots = keepSnaps.map(p => readSnapshot(p))
     // delete manifests and their key files are references like any other
     // — orphan GC must not reclaim a live snapshot's tombstones
     val liveManifestRefs = liveSnapshots.flatMap(s => s.manifests ++ s.deleteManifests)
@@ -7528,7 +7490,7 @@ class BranchCatalog(
 
     val manifestPaths = fs.listStatus(metaDir).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("snap-"))
-      .map(p => Serialization.read[Snapshot](readString(p)))
+      .map(p => readSnapshot(p))
       .flatMap(s => (s.manifests ++ s.deleteManifests).map(_.path))
       .distinct
     val totalRefs = manifestPaths.size
@@ -7600,6 +7562,34 @@ object BranchCatalog {
       })
       case other => other
     })
+  }
+
+  /** The on-disk bytes of a snapshot document: its JSON
+    * ([[snapshotJson]]), gzip-compressed. A snapshot inlines every
+    * manifest ref, so its document grows with the table's manifest count
+    * and is most of a table's metadata bytes; the refs of one table
+    * repeat the same column names and stat keys, which gzip folds about
+    * 14x. The file keeps its `snap-<id>.json` name. */
+  private[wap] def snapshotBytes(s: Snapshot): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(out)
+    try gz.write(snapshotJson(s).getBytes(StandardCharsets.UTF_8)) finally gz.close()
+    out.toByteArray
+  }
+
+  /** The snapshot of a document's bytes, gzip-compressed
+    * ([[snapshotBytes]]) or plain JSON (documents written before
+    * compression): the gzip magic bytes tell them apart, since a JSON
+    * document starts with `{`. */
+  private[wap] def parseSnapshot(bytes: Array[Byte]): Snapshot = {
+    implicit val fmts: Formats = DefaultFormats
+    val gzip = bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b
+    if (!gzip) Serialization.read[Snapshot](new String(bytes, StandardCharsets.UTF_8))
+    else {
+      val in = new java.io.InputStreamReader(new java.util.zip.GZIPInputStream(
+        new java.io.ByteArrayInputStream(bytes)), StandardCharsets.UTF_8)
+      try Serialization.read[Snapshot](in) finally in.close()
+    }
   }
 
   /** The JSON of each defaulted [[ManifestRef]] field, by name. */
@@ -7753,11 +7743,88 @@ object BranchCatalog {
   private[wap] def txnKey(root: String, name: String): (String, String) =
     (new org.apache.hadoop.fs.Path(root).toUri.getPath, name)
 
-  /** Footer-stats extraction, shared by the write paths (driver-side,
-    * O(files-per-commit)) and [[BranchCatalog.addDataFiles]]'s
-    * DISTRIBUTED import (executor-side, one footer per task element):
-    * row count and exact per-column min/max/null-count statistics folded
-    * over the file's row groups — metadata only, no data pages read. */
+  /** One task of [[BranchCatalog.writeFiles]] (executor-side): writes
+    * its rows to files under `dir` and returns their metadata, read from
+    * each file's footer right after the task closes it. A file is opened
+    * at the first row of a value group (no rows, no file); with
+    * partition `keys` the rows end in one `__pv<i>` column per key,
+    * arrive grouped by them, and are projected to their `data` columns
+    * before they are written. A file rolls over after `maxRecords` rows
+    * when that is positive (`spark.sql.files.maxRecordsPerFile`, as a
+    * `df.write` honours it). A failed attempt closes and deletes its
+    * files; the attempt number in each name keeps a retry from colliding
+    * with them. */
+  private[wap] final class FileWriteTask(
+      writers: org.apache.spark.sql.graft.ParquetStageWriterFactory,
+      dir: String, writeId: String, data: StructType, keys: Seq[String], maxRecords: Long)
+    extends ((org.apache.spark.TaskContext, Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+      Seq[DataFileMeta]) with Serializable {
+    def apply(ctx: org.apache.spark.TaskContext,
+        rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Seq[DataFileMeta] = {
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, escapePathName}
+      import org.apache.spark.unsafe.types.UTF8String
+      val done = scala.collection.mutable.ArrayBuffer.empty[(Path, Map[String, String])]
+      var open: org.apache.spark.sql.graft.ParquetStageWriter = null
+      var group: Seq[UTF8String] = Nil
+      var inFile = 0L
+      val dataCols = data.length
+      val project =
+        if (keys.isEmpty) null
+        else UnsafeProjection.create(data.fields.toSeq.zipWithIndex.map { case (f, i) =>
+          BoundReference(i, f.dataType, f.nullable): Expression })
+      def close(): Unit = if (open != null) { open.close(); open = null }
+      def start(values: Seq[UTF8String]): Unit = {
+        val levels = values.zipWithIndex.map { case (v, i) =>
+          s"__pv$i=" + (if (v == null) DEFAULT_PARTITION_NAME else escapePathName(v.toString))
+        }
+        val name = f"part-${ctx.partitionId}%05d-$writeId-${ctx.attemptNumber}.c${done.size}%03d" +
+          writers.extension
+        val path = new Path((dir +: levels :+ name).mkString("/"))
+        done += path -> keys.zip(values).collect {
+          case (k, v) if v != null => k -> PathSafeEscape.unescape(v.toString)
+        }.toMap
+        open = writers.create(path.toString)
+      }
+      try {
+        rows.foreach { row =>
+          val out =
+            if (keys.isEmpty) row
+            else {
+              val values = keys.indices.map(i =>
+                if (row.isNullAt(dataCols + i)) null else row.getUTF8String(dataCols + i))
+              if (open == null || values != group) {
+                close()
+                group = values.map(v => if (v == null) null else v.clone())
+              }
+              project(row)
+            }
+          if (open == null || inFile == maxRecords) { close(); start(group); inFile = 0L }
+          open.write(out)
+          inFile += 1
+        }
+        close()
+      } catch { case t: Throwable =>
+        try close() catch { case _: Exception => () }
+        done.foreach { case (p, _) =>
+          try { p.getFileSystem(writers.hadoopConf).delete(p, false); () }
+          catch { case _: Exception => () }
+        }
+        throw t
+      }
+      val metas = done.toSeq.map { case (p, partition) =>
+        footerMetaOf(p.getFileSystem(writers.hadoopConf).getFileStatus(p), writers.hadoopConf)
+          .copy(partition = partition)
+      }
+      org.apache.spark.sql.graft.Bridge.reportOutput(metas.map(_.bytes).sum, metas.map(_.rows).sum)
+      metas
+    }
+  }
+
+  /** Footer-stats extraction (executor-side): for the data-file writer's
+    * own files ([[FileWriteTask]]) and [[BranchCatalog.addDataFiles]]'s
+    * distributed import (one footer per task element). Row count and
+    * exact per-column min/max/null-count statistics folded over the
+    * file's row groups — metadata only, no data pages read. */
   private[wap] def footerMetaOf(
       st: org.apache.hadoop.fs.FileStatus,
       conf: org.apache.hadoop.conf.Configuration): DataFileMeta = {

@@ -126,23 +126,96 @@ object Bridge {
     }
   }
 
-  /** Executor-side parquet STAGE writer factory: Spark's own parquet
+  /** Executor-side parquet writer factory: Spark's own parquet
     * `OutputWriter` (ParquetFileFormat.prepareWrite is `private[sql]`,
-    * hence this bridge), serializable for shipping inside a
-    * [[org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory]].
-    * This is the writer FileFormatWriter tasks use — proper footers (so
-    * the catalog's stats reader works on staged files), session codec. */
+    * hence this bridge), serializable for shipping to write tasks — the
+    * streaming sink's staged files and every catalog data file. This is
+    * the writer FileFormatWriter tasks use: proper footers, the session
+    * codec, field ids. `prepareWrite` runs against an EMPTY conf, so the
+    * factory carries only the few entries it sets for this write (the
+    * row schema, codec, timestamp flags); the session conf itself
+    * travels once, as [[sharedHadoopConf]]. */
   def parquetStageWriterFactory(
       spark: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType): ParquetStageWriterFactory = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      classic.sessionState.newHadoopConf())
+      new org.apache.hadoop.conf.Configuration(false))
     val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(classic, job, Map.empty, schema)
-    new ParquetStageWriterFactory(factory, schema,
-      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+    val entries = scala.jdk.CollectionConverters.IteratorHasAsScala(
+      job.getConfiguration.iterator()).asScala.map(e => e.getKey -> e.getValue).toMap
+    val extension = factory.getFileExtension(
+      new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+    new ParquetStageWriterFactory(factory, schema, sharedHadoopConf(spark), entries, extension)
   }
+
+  private final class SharedConf(
+      val sc: org.apache.spark.SparkContext,
+      val entries: java.util.Map[String, String],
+      val bc: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration])
+  private var shared: SharedConf = _
+
+  /** The session's Hadoop conf as ONE broadcast that every graft
+    * executor closure shares (the data-file writer, the streaming sink's
+    * stage writer, the CDC reader). Serialized, the conf is ~110 KB, and
+    * a closure or factory that holds it directly pays its serialization
+    * in every job. The broadcast is reused while the conf's entries stay
+    * equal to the ones it was built from; when they change (a new
+    * SparkContext, a `spark.conf.set`, a Hadoop conf edit) a fresh one
+    * replaces it, and the old one is left to Spark's ContextCleaner,
+    * which removes it once no in-flight task can still hold it. */
+  def sharedHadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = classic.sessionState.newHadoopConf()
+    val entries = new java.util.HashMap[String, String]()
+    conf.iterator().forEachRemaining(e => { entries.put(e.getKey, e.getValue); () })
+    synchronized {
+      val s = shared
+      if (s != null && (s.sc eq classic.sparkContext) && !s.sc.isStopped &&
+          s.entries.equals(entries)) s.bc
+      else {
+        val bc = classic.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(conf))
+        shared = new SharedConf(classic.sparkContext, entries, bc)
+        bc
+      }
+    }
+  }
+
+  /** Runs `task` over every partition of `df`'s physical rows in ONE
+    * Spark job, inside a new SQL execution (as a `df.write` would be,
+    * so SQL listeners and conf propagation see it); returns the tasks'
+    * results in partition order. The rows are Spark's internal ones,
+    * possibly reused between `next()` calls. */
+  def runOnRows[T: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame)(
+      task: (org.apache.spark.TaskContext,
+        Iterator[org.apache.spark.sql.catalyst.InternalRow]) => T): Array[T] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("graft data-file write")) {
+      qe.sparkSession.sparkContext.runJob(qe.toRdd, task)
+    }
+  }
+
+  /** The schema of `df`'s optimized plan output: the frame's columns
+    * with the nullability the optimizer proved (e.g. a folded cast), as
+    * Spark's file writer declares them. */
+  def optimizedSchema(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan
+        .output.map(a => org.apache.spark.sql.types.StructField(
+          a.name, a.dataType, a.nullable, a.metadata)))
+
+  /** A write task's output metrics (executor-side), as Spark's
+    * `BasicWriteTaskStatsTracker` reports them for a `df.write`. */
+  def reportOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { ctx =>
+      val m = ctx.taskMetrics().outputMetrics
+      m.setBytesWritten(bytes)
+      m.setRecordsWritten(records)
+    }
 
   /** A DataFrame over an already-analyzed logical plan
     * (`Dataset.ofRows` is `private[sql]`) — lets eager DML commands
@@ -184,16 +257,6 @@ object Bridge {
         .invoke(b).asInstanceOf[scala.collection.mutable.HashMap[String, String]]
         .get(key)
     }.toOption.flatten
-
-  /** The session's Hadoop conf, serializable for shipping inside DSv2
-    * reader factories whose executors must stat files themselves (the
-    * CDC sidecar reader resolves marked data-file lengths on the
-    * executor — the driver never reads sidecar contents). */
-  def serializableHadoopConf(
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.util.SerializableConfiguration =
-    new org.apache.spark.util.SerializableConfiguration(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.newHadoopConfWithOptions(Map.empty))
 
   /** Spark-visible schema of a parquet footer (executor-safe): the
     * embedded Spark row metadata when the file was written by Spark,
@@ -247,15 +310,25 @@ object Bridge {
 class ParquetStageWriterFactory private[graft] (
     factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     schema: org.apache.spark.sql.types.StructType,
-    conf: org.apache.spark.util.SerializableConfiguration) extends Serializable {
-  def create(path: String): ParquetStageWriter = {
-    val tac = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf.value, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    new ParquetStageWriter(factory.newInstance(path, schema, tac))
+    shared: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
+    entries: Map[String, String],
+    /** The file-name suffix Spark gives this write's files
+      * (`.snappy.parquet` under the default codec). */
+    val extension: String) extends Serializable {
+  /** The write's Hadoop conf: the shared session conf plus this write's
+    * entries, built once per deserialized factory (once per task). */
+  @transient private lazy val conf: org.apache.hadoop.mapred.JobConf = {
+    val c = new org.apache.hadoop.mapred.JobConf(shared.value.value)
+    entries.foreach { case (k, v) => c.set(k, v) }
+    c
   }
-  /** The shipped Hadoop conf — lets executor-side cleanup resolve the
-    * same filesystem the writer used. */
-  def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value
+  def create(path: String): ParquetStageWriter =
+    new ParquetStageWriter(factory.newInstance(path, schema,
+      new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        conf, new org.apache.hadoop.mapreduce.TaskAttemptID())))
+  /** The write's Hadoop conf — lets executor-side code resolve the same
+    * filesystem the writer used (footer read-back, cleanup). */
+  def hadoopConf: org.apache.hadoop.conf.Configuration = conf
 }
 
 /** One open staged parquet file (executor-side). */

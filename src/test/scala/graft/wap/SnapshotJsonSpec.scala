@@ -11,7 +11,8 @@ import graft.SparkSpecBase
 
 /** Snapshot documents leave out every [[ManifestRef]] field equal to its
   * constructor default, and json4s fills it back on read: a document
-  * written in full and its trimmed form parse to the same snapshot. */
+  * written in full and its trimmed form parse to the same snapshot. The
+  * document is stored gzip-compressed, and a plain one still loads. */
 class SnapshotJsonSpec extends SparkSpecBase {
   private implicit val fmts: Formats = DefaultFormats
 
@@ -34,10 +35,46 @@ class SnapshotJsonSpec extends SparkSpecBase {
     assert(trimmed.length < full.length)
     Seq("pvLower", "pvUpper", "posDelete", "firstRowId").foreach(f =>
       assert(full.contains(s""""$f"""") && !trimmed.contains(s""""$f""""), f))
-    // the committed document on disk is the trimmed form
-    val onDisk = new String(Files.readAllBytes(
-      Paths.get(root, "tables", "t", "meta", s"snap-${snap.id}.json")), StandardCharsets.UTF_8)
+    // the committed document on disk is the trimmed form (gzip-compressed)
+    val onDisk = new String(gunzip(Files.readAllBytes(
+      Paths.get(root, "tables", "t", "meta", s"snap-${snap.id}.json"))), StandardCharsets.UTF_8)
     assert(onDisk == trimmed)
+  }
+
+  private def gunzip(bytes: Array[Byte]): Array[Byte] = {
+    val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
+    try in.readAllBytes() finally in.close()
+  }
+
+  test("a plain snapshot document written before compression still loads") {
+    val root = Files.createTempDirectory("snap-plain").toString
+    val cat = new BranchCatalog(spark, root)
+    val rows = spark.range(0, 10).select(col("id"), (col("id") % 3).as("v"))
+    cat.createTableIfNotExists("t", rows.schema)
+    cat.append("t", rows)
+    cat.deleteKeysMOR("t", rows.filter(col("id") === 3L).select("id"))
+    val head = cat.snapshotIdOf("t").get
+    val meta = Paths.get(root, "tables", "t", "meta")
+    // rewrite every snapshot document in the plain form of earlier
+    // versions, then read the table through a fresh catalog
+    val snaps = Files.list(meta).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("snap-"))
+    assert(snaps.nonEmpty)
+    snaps.foreach { p =>
+      val gz = Files.readAllBytes(p)
+      assert((gz(0) & 0xff) == 0x1f && (gz(1) & 0xff) == 0x8b, s"$p is not gzip")
+      Files.write(p, gunzip(gz))
+    }
+    BranchCatalog.snapCache.synchronized {
+      BranchCatalog.snapCache.keySet.removeIf(_.contains(root)) }
+    val fresh = new BranchCatalog(spark, root)
+    val snap = fresh.snapshotMeta("t", head)
+    assert(snap.manifests.size == 1 && snap.deleteManifests.size == 1)
+    assert(fresh.scan("t").count() == 9L)
+    // expiry and orphan sweep parse the same documents
+    fresh.expireSnapshots("t", retainLast = 1)
+    assert(fresh.removeOrphanFiles("t", olderThanMillis = System.currentTimeMillis()).filesDeleted == 0)
+    assert(fresh.scan("t").count() == 9L)
   }
 
   test("a manifest ref with no field at its default round-trips") {
