@@ -1101,7 +1101,7 @@ class BranchCatalog(
       .take(data.schema.length))
     val task = new BranchCatalog.FileWriteTask(
       org.apache.spark.sql.graft.Bridge.parquetStageWriterFactory(spark, schema),
-      dir.toString, UUID.randomUUID().toString, schema, active.map(_.key),
+      dir.toString, schema, active.map(_.key),
       spark.sessionState.conf.maxRecordsPerFile)
     org.apache.spark.sql.graft.Bridge.runOnRows(arranged)(task).toSeq.flatten
   }
@@ -1625,11 +1625,13 @@ class BranchCatalog(
       b.flatMap(_.tableProps.get(table)).getOrElse(Map.empty))
   }
 
-  /** [[writeState]] of a table that must exist on `branch`. */
-  private def headState(table: String, branch: String): (Snapshot, Map[String, String]) =
+  /** [[writeState]] of a table that must exist on `branch`; `hint`
+    * ends the error when it does not. */
+  private def headState(table: String, branch: String,
+      hint: String = ""): (Snapshot, Map[String, String]) =
     writeState(table, branch) match {
       case (Some(head), props) => (head, props)
-      case _ => sys.error(s"no table $table on $branch")
+      case _ => sys.error(s"no table $table on $branch$hint")
     }
 
   /** reference app.py:178-199 append_rows_to_table_in_branch: write the
@@ -2946,11 +2948,8 @@ class BranchCatalog(
     * naming a column the new schema lacks refuses the replace). */
   def replaceTable(table: String, df: DataFrame, branch: String = "main",
       specs: Seq[PartitionSpec] = Nil): Snapshot = {
-    val (cur, props) = writeState(table, branch) match {
-      case (Some(head), props) => (head, props)
-      case _ => sys.error(
-        s"no table $table on $branch — REPLACE needs an existing table (use create)")
-    }
+    val (cur, props) = headState(table, branch,
+      " — REPLACE needs an existing table (use create)")
     props.foreach { case (k, v) =>
       if (k.startsWith(BranchCatalog.ConstraintPrefix))
         spark.sessionState.sqlParser.parseExpression(v).collect {
@@ -3083,7 +3082,7 @@ class BranchCatalog(
       partitionSpec: Option[String] = None,
       evo: SchemaEvo = SchemaEvo(),
       /** The table's properties, read with the head it stages against. */
-      props: Map[String, String] = Map.empty)
+      props: Map[String, String])
 
   /** The staging handle [[transaction]] passes to its body. Staging
     * writes files and manifests eagerly; NOTHING is visible to any reader
@@ -7751,12 +7750,15 @@ object BranchCatalog {
     * arrive grouped by them, and are projected to their `data` columns
     * before they are written. A file rolls over after `maxRecords` rows
     * when that is positive (`spark.sql.files.maxRecordsPerFile`, as a
-    * `df.write` honours it). A failed attempt closes and deletes its
-    * files; the attempt number in each name keeps a retry from colliding
-    * with them. */
+    * `df.write` honours it). A failed attempt, its footer read-back
+    * included, closes and deletes the files it created. Each name holds
+    * the task attempt id, unique in the Spark application (the directory
+    * is unique per write): a retried attempt and a zombie of an earlier
+    * stage attempt, which share the partition id and may share the
+    * attempt number, never write or delete each other's files. */
   private[wap] final class FileWriteTask(
       writers: org.apache.spark.sql.graft.ParquetStageWriterFactory,
-      dir: String, writeId: String, data: StructType, keys: Seq[String], maxRecords: Long)
+      dir: String, data: StructType, keys: Seq[String], maxRecords: Long)
     extends ((org.apache.spark.TaskContext, Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
       Seq[DataFileMeta]) with Serializable {
     def apply(ctx: org.apache.spark.TaskContext,
@@ -7777,13 +7779,13 @@ object BranchCatalog {
         val levels = values.zipWithIndex.map { case (v, i) =>
           s"__pv$i=" + (if (v == null) DEFAULT_PARTITION_NAME else escapePathName(v.toString))
         }
-        val name = f"part-${ctx.partitionId}%05d-$writeId-${ctx.attemptNumber}.c${done.size}%03d" +
+        val name = f"part-${ctx.partitionId}%05d-${ctx.taskAttemptId}.c${done.size}%03d" +
           writers.extension
         val path = new Path((dir +: levels :+ name).mkString("/"))
+        open = writers.create(path.toString)
         done += path -> keys.zip(values).collect {
           case (k, v) if v != null => k -> PathSafeEscape.unescape(v.toString)
         }.toMap
-        open = writers.create(path.toString)
       }
       try {
         rows.foreach { row =>
@@ -7803,6 +7805,12 @@ object BranchCatalog {
           inFile += 1
         }
         close()
+        val metas = done.toSeq.map { case (p, partition) =>
+          footerMetaOf(p.getFileSystem(writers.hadoopConf).getFileStatus(p), writers.hadoopConf)
+            .copy(partition = partition)
+        }
+        org.apache.spark.sql.graft.Bridge.reportOutput(metas.map(_.bytes).sum, metas.map(_.rows).sum)
+        metas
       } catch { case t: Throwable =>
         try close() catch { case _: Exception => () }
         done.foreach { case (p, _) =>
@@ -7811,12 +7819,6 @@ object BranchCatalog {
         }
         throw t
       }
-      val metas = done.toSeq.map { case (p, partition) =>
-        footerMetaOf(p.getFileSystem(writers.hadoopConf).getFileStatus(p), writers.hadoopConf)
-          .copy(partition = partition)
-      }
-      org.apache.spark.sql.graft.Bridge.reportOutput(metas.map(_.bytes).sum, metas.map(_.rows).sum)
-      metas
     }
   }
 

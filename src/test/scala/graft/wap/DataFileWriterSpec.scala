@@ -241,6 +241,24 @@ class DataFileWriterSpec extends SparkSpecBase {
     assert(cat.scan("t").count() == 20L)
   }
 
+  test("two attempts of one partition write distinct files: names carry the task attempt id") {
+    val tmp = new Path(Files.createTempDirectory("writer-attempts").toString)
+    val dir = tmp.getFileSystem(conf).makeQualified(tmp).toString
+    val df = spark.range(0, 10, 1, 1).toDF("id")
+    val schema = Bridge.optimizedSchema(df)
+    val task = new BranchCatalog.FileWriteTask(
+      Bridge.parquetStageWriterFactory(spark, schema), dir, schema, Nil, 0L)
+    // each job runs partition 0 at attempt number 0, as a zombie attempt
+    // and the attempt of a resubmitted stage both do
+    val first = Bridge.runOnRows(df)(task).toSeq.flatten
+    val second = Bridge.runOnRows(df)(task).toSeq.flatten
+    assert(first.size == 1 && second.size == 1)
+    assert(first.head.path != second.head.path)
+    assert(filesUnder(dir).filterNot(p => new Path(p).getName.startsWith(".")).toSet ==
+      Set(first.head.path, second.head.path))
+    (first ++ second).foreach(m => assert(reread(m.path) == m))
+  }
+
   test("the write reports its output bytes and records as task metrics") {
     val (cat, _) = freshCat("writer-metrics")
     val df = spark.range(0, 500, 1, 2).select(col("id"), (col("id") % 11).as("v"))
